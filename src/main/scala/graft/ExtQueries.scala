@@ -1033,7 +1033,7 @@ object ExtQueries {
     "embed_stored_recall_curve" -> ((s, d) => {
       val e = emb(s, d)
       val dir = ivfCurveDir
-      Sink.writeIvfIndex(e, dir, 8, 2, corpusKey = Some(d))
+      Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(8), 2, corpusKey = Some(d))
       val bf = Similarity.bruteForceTopK(e, 10, 3)
         .select(col("qid"), col("vec_id")).withColumn("hit", lit(1L))
       val runs = Seq(1, 2, 4).map { np =>
@@ -1265,7 +1265,7 @@ object ExtQueries {
     "embed_ivf_append_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfAppendDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), dir)
       Sink.searchIvfIndex(s, all, dir, 10, 3)
@@ -1281,7 +1281,7 @@ object ExtQueries {
     "embed_ivf_delete_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfDeleteDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), dir)
       Sink.deleteFromIvfIndex(s, dir,
@@ -1297,8 +1297,8 @@ object ExtQueries {
     "embed_ivfpq_stored_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqDir
-      Sink.writeIvfPqIndex(all, dir, 8, 2, 4, 16, 8, corpusKey = Some(d))
-      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10, 4, 16)
+      Sink.writeIvfIndex(all, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2, corpusKey = Some(d))
+      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10)
     }),
     // incremental maintenance of the compressed tier: train+store the
     // IVF-PQ index on the first 400 vectors, fold the rest in against
@@ -1308,10 +1308,10 @@ object ExtQueries {
     "embed_ivfpq_append_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqAppendDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400), dir, 8, 2, 4, 16, 8,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
-      Sink.appendToIvfPqIndex(all.filter(col("vec_id") >= 400), dir, 4, 16)
-      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10, 4, 16)
+      Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), dir)
+      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10)
     }),
     // the delete stage on the COMPRESSED tier: tombstoned ids are
     // masked before ADC candidate ranking (the anti-join sits on the
@@ -1322,12 +1322,12 @@ object ExtQueries {
     "embed_ivfpq_delete_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqDeleteDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400), dir, 8, 2, 4, 16, 8,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
-      Sink.appendToIvfPqIndex(all.filter(col("vec_id") >= 400), dir, 4, 16)
+      Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), dir)
       Sink.deleteFromIvfIndex(s, dir,
         all.filter(pmod(col("vec_id"), lit(17L)) === 3).select("vec_id"))
-      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10, 4, 16)
+      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10)
     }),
     // code-level drift pre-flight for the compressed tier: per
     // (subspace, code), stored vs incoming populations (incoming
@@ -1337,12 +1337,12 @@ object ExtQueries {
     "embed_ivfpq_code_drift" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqDriftDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400), dir, 8, 2, 4, 16, 8,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       Sink.ivfPqCodeDrift(s, all.filter(col("vec_id") >= 400), dir, 4, 16)
     }),
     // drop-at-a-time ingestion into the COMPRESSED tier: three
-    // micro-batches fold through appendToIvfPqIndex (frozen centroids
+    // micro-batches fold through appendToIvfIndex (frozen centroids
     // + codebooks). Shares embed_ivfpq_append_search's oracle
     // verbatim — hash-green proves streamed ingestion ≡ one-shot
     // append (codes, like cells, are order-invariant against frozen
@@ -1350,17 +1350,17 @@ object ExtQueries {
     "stream_ivfpq_append_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqStreamDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400),
-        s"$dir/index", 8, 2, 4, 16, 8, corpusKey = Some(d + "#pqbase400"))
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400),
+        s"$dir/index", Sink.Pq(4, 16, 8), Sink.Cells(8), 2, corpusKey = Some(d + "#pqbase400"))
       val batch = all.filter(col("vec_id") >= 400)
       Seq(("a", 0), ("b", 1), ("c", 2)).foreach { case (tag, r) =>
         batch.filter(pmod(col("vec_id"), lit(3)) === r)
           .select("vec_id", "embedding").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
-      graft.streaming.IvfStream.runPqAppendReplay(
+      graft.streaming.IvfStream.runAppendReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt")
-      Sink.searchIvfPqIndex(s, all, s"$dir/index", 10, 3, 10, 4, 16)
+      Sink.searchIvfPqIndex(s, all, s"$dir/index", 10, 3, 10)
     }),
     // drift-AWARE maintained PQ ingestion — the compressed tier's
     // control loop: per drop, manifest-geometry maintain decision
@@ -1370,8 +1370,8 @@ object ExtQueries {
     "stream_ivfpq_maintain_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqMaintainStreamDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400),
-        s"$dir/index", 8, 2, 4, 16, 8, corpusKey = Some(d + "#pqbase400"))
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400),
+        s"$dir/index", Sink.Pq(4, 16, 8), Sink.Cells(8), 2, corpusKey = Some(d + "#pqbase400"))
       val batch = all.filter(col("vec_id") >= 400)
       Seq(("a", 0), ("b", 1), ("c", 2)).foreach { case (tag, r) =>
         batch.filter(pmod(col("vec_id"), lit(3)) === r)
@@ -1385,12 +1385,12 @@ object ExtQueries {
       // drop this size, which the raw 0.25 rule mistook for drift
       // (this query originally needed a hand-raised threshold — the
       // calibration removed the hack). Retrain path: IvfAppendSpec.
-      graft.streaming.IvfStream.runPqMaintainReplay(
+      graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
-      Sink.searchIvfPqIndex(s, all, s"$dir/index", 10, 3, 10, 4, 16)
+      Sink.searchIvfPqIndex(s, all, s"$dir/index", 10, 3, 10)
     }),
     // the int8 tier's maintained ingestion end-to-end: three balanced
-    // drops stream through runSq8MaintainReplay — each micro-batch
+    // drops stream through runMaintainReplay — each micro-batch
     // takes the full maintain decision (coarse PSI pre-flight → append;
     // compaction on the file cadence; no code-PSI term because the
     // per-vector max-abs scheme has no codebook to drift) — then the
@@ -1400,8 +1400,8 @@ object ExtQueries {
     "stream_ivfsq8_maintain_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfSq8MaintainStreamDir
-      Sink.writeIvfSq8Index(all.filter(col("vec_id") < 400), s"$dir/index",
-        8, 2, corpusKey = Some(d + "#pqbase400"))
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index",
+        Sink.Sq8, Sink.Cells(8), 2, corpusKey = Some(d + "#pqbase400"))
       val batch = all.filter(col("vec_id") >= 400)
       Seq(("a", 0), ("b", 1), ("c", 2)).foreach { case (tag, r) =>
         batch.filter(pmod(col("vec_id"), lit(3)) === r)
@@ -1409,7 +1409,7 @@ object ExtQueries {
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
       graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
-      graft.streaming.IvfStream.runSq8MaintainReplay(
+      graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
       Sink.searchIvfSq8Index(s, all, s"$dir/index", 10, 3, nprobe = 2)
     }),
@@ -1424,8 +1424,8 @@ object ExtQueries {
     "stream_ivfsq8_maintain_sized_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfSq8MaintainSizedStreamDir
-      Sink.writeIvfSq8IndexSized(all.filter(col("vec_id") < 400),
-        s"$dir/index", targetCellSize = 64, iters = 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400),
+        s"$dir/index", Sink.Sq8, Sink.CellSize(64), iters = 2,
         corpusKey = Some(d + "#sq8sized400"))
       val batch = all.filter(col("vec_id") >= 400)
       Seq(("a", 0), ("b", 1), ("c", 2)).foreach { case (tag, r) =>
@@ -1434,7 +1434,7 @@ object ExtQueries {
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
       graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
-      graft.streaming.IvfStream.runSq8MaintainReplay(
+      graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
       Sink.searchIvfSq8Index(s, all, s"$dir/index", 10, 3, nprobe = 2)
     }),
@@ -1445,7 +1445,7 @@ object ExtQueries {
     "embed_ivf_append_drift" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfDriftDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       Sink.ivfAppendDrift(s, all.filter(col("vec_id") >= 400), dir)
     }),
@@ -1458,7 +1458,7 @@ object ExtQueries {
     "ivf_maintain_append" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfMaintainAppendDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       Sink.maintainIvfIndex(s, all.filter(col("vec_id") >= 400), dir)
         .select("action", "psi", "retrain_due", "n_stored_before",
@@ -1472,7 +1472,7 @@ object ExtQueries {
     "ivf_maintain_retrain" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfMaintainRetrainDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       val cent = Sink.loadIvfCentroids(s, dir)
       val batch = Similarity.assignWithCentroids(
@@ -1484,7 +1484,7 @@ object ExtQueries {
           "n_batch", "n_after", "compacted")
     }),
     // the maintain lifecycle on the PRODUCTION (fixed-cell-SIZE)
-    // layout: the int8 base index is built by writeIvfSq8IndexSized at
+    // layout: the int8 base index is built by writeIvfIndex(Sq8, CellSize(64)) at
     // target size 64 — cells = ceil(400/64) = 7, and the manifest
     // carries cells AND target_cell_size — then the natural >=400
     // batch takes the full maintain decision against the sized
@@ -1495,10 +1495,10 @@ object ExtQueries {
     "ivfsq8_maintain_append_sized" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfSq8MaintainSizedDir
-      Sink.writeIvfSq8IndexSized(all.filter(col("vec_id") < 400), dir,
-        targetCellSize = 64, iters = 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir,
+        Sink.Sq8, Sink.CellSize(64), iters = 2,
         corpusKey = Some(d + "#sq8sized400"))
-      Sink.maintainIvfSq8Index(s, all.filter(col("vec_id") >= 400), dir)
+      Sink.maintainIvfIndex(s, all.filter(col("vec_id") >= 400), dir)
         .select("action", "psi", "retrain_due", "n_stored_before",
           "n_batch", "n_after", "compacted")
     }),
@@ -1511,8 +1511,8 @@ object ExtQueries {
     "ivf_maintain_append_sized" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfMaintainSizedDir
-      Sink.writeIvfIndexSized(all.filter(col("vec_id") < 400), dir,
-        targetCellSize = 64, iters = 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir,
+        Sink.Flat, Sink.CellSize(64), iters = 2,
         corpusKey = Some(d + "#ivfsized400"))
       Sink.maintainIvfIndex(s, all.filter(col("vec_id") >= 400), dir)
         .select("action", "psi", "retrain_due", "n_stored_before",
@@ -1520,17 +1520,17 @@ object ExtQueries {
     }),
     // and on the COMPRESSED tier: the sized geometry applies to the
     // coarse quantizer only (the PQ codebook is subspace-shaped, not
-    // corpus-shaped — writeIvfPqIndexSized's contract), so the oracle
+    // corpus-shaped — the Pq codec contract), so the oracle
     // is maintainPqLogOracle with the coarse k derived from the base
     // count while the per-subspace code chains keep their fixture
     // geometry. SIDE EFFECT: temp index dir.
     "ivfpq_maintain_append_sized" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqMaintainSizedDir
-      Sink.writeIvfPqIndexSized(all.filter(col("vec_id") < 400), dir,
-        targetCellSize = 64, iters = 2, m = 4, subDim = 16, k = 8,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir,
+        Sink.Pq(4, 16, 8), Sink.CellSize(64), iters = 2,
         corpusKey = Some(d + "#pqsized400"))
-      Sink.maintainIvfPqIndex(s, all.filter(col("vec_id") >= 400), dir)
+      Sink.maintainIvfIndex(s, all.filter(col("vec_id") >= 400), dir)
         .select("action", "psi_coarse", "psi_code_max", "retrain_due",
           "n_stored_before", "n_batch", "n_after", "compacted")
     }),
@@ -1546,7 +1546,8 @@ object ExtQueries {
     "stream_ivf_maintain_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfMaintainStreamDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index", 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index",
+        Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       val batch = all.filter(col("vec_id") >= 400)
       Seq(("a", 0), ("b", 1), ("c", 2)).foreach { case (tag, r) =>
@@ -1568,9 +1569,9 @@ object ExtQueries {
     "ivfpq_maintain_append" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqMaintainAppendDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400), dir, 8, 2, 4, 16, 8,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
-      Sink.maintainIvfPqIndex(s, all.filter(col("vec_id") >= 400), dir)
+      Sink.maintainIvfIndex(s, all.filter(col("vec_id") >= 400), dir)
         .select("action", "psi_coarse", "psi_code_max", "retrain_due",
           "n_stored_before", "n_batch", "n_after", "compacted")
     }),
@@ -1581,14 +1582,14 @@ object ExtQueries {
     "ivfpq_maintain_retrain" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfPqMaintainRetrainDir
-      Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400), dir, 8, 2, 4, 16, 8,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       val cent = Sink.loadIvfCentroids(s, dir)
       val batch = Similarity.assignWithCentroids(
           all.filter(col("vec_id") >= 400), cent)
         .filter(col("cell") < 4).select("vec_id")
         .join(all, "vec_id").select("vec_id", "embedding")
-      Sink.maintainIvfPqIndex(s, batch, dir)
+      Sink.maintainIvfIndex(s, batch, dir)
         .select("action", "psi_coarse", "psi_code_max", "retrain_due",
           "n_stored_before", "n_batch", "n_after", "compacted")
     }),
@@ -1602,7 +1603,8 @@ object ExtQueries {
     "stream_ivf_append_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfStreamDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index", 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index",
+        Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       val batch = all.filter(col("vec_id") >= 400)
       Seq(("a", 0), ("b", 1), ("c", 2)).foreach { case (tag, r) =>
@@ -1625,7 +1627,8 @@ object ExtQueries {
     "stream_ivf_delete_replay" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfCdcDir
-      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index", 8, 2,
+      Sink.writeIvfIndex(all.filter(col("vec_id") < 400), s"$dir/index",
+        Sink.Flat, Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       val adds = all.filter(col("vec_id") >= 400)
         .select(col("vec_id"), col("embedding"), lit("add").as("op"))
@@ -1665,7 +1668,7 @@ object ExtQueries {
     "embed_ivf_sq8_stored_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfSq8Dir
-      Sink.writeIvfSq8Index(all, dir, 8, 2, corpusKey = Some(d))
+      Sink.writeIvfIndex(all, dir, Sink.Sq8, Sink.Cells(8), 2, corpusKey = Some(d))
       Sink.searchIvfSq8Index(s, all, dir, 10, 3, nprobe = 2)
     }),
     // the SQ8 layout at a FIXED CELL SIZE (cells = ceil(N/64) — the
@@ -1677,7 +1680,7 @@ object ExtQueries {
     "embed_ivfsq8_sized_search" -> ((s, d) => {
       val all = emb(s, d)
       val dir = ivfSq8SizedDir
-      Sink.writeIvfSq8IndexSized(all, dir, targetCellSize = 64, iters = 2,
+      Sink.writeIvfIndex(all, dir, Sink.Sq8, Sink.CellSize(64), iters = 2,
         corpusKey = Some(d))
       Sink.searchIvfSq8Index(s, all, dir, 10, 3, nprobe = 2)
     }),
@@ -2323,7 +2326,7 @@ object ExtQueries {
         .select(col("doc_id").as("id"), col("rnk"))
       val e = emb(s, d)
       val dir = ivfRrfDir
-      Sink.writeIvfIndex(e, dir, 8, 2, corpusKey = Some(d))
+      Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(8), 2, corpusKey = Some(d))
       val sem = Sink.searchIvfIndex(s, e, dir, nQueries = 1, k = 20, nprobe = 2)
         .select(col("vec_id").as("id"), col("rnk"))
       Retrieval.rrfFuse(lex, sem, 10)
@@ -4267,7 +4270,7 @@ object ExtQueries {
   /** [[maintainLogOracle]] extended to the compressed tier: the coarse
     * PSI chain PLUS the per-subspace code PSI chain (the
     * ivfPqCodeDriftOracle mirror, `c`-suffixed CTE names), folded to
-    * the one-row log [[graft.operators.Sink.maintainIvfPqIndex]]
+    * the one-row log [[graft.operators.Sink.maintainIvfIndex]]
     * emits — either tripwire crossing 0.25 flips the branch.
     */
   private def maintainPqLogOracle(batchCte: String,
@@ -4511,7 +4514,7 @@ object ExtQueries {
     * codebooks train on vec_id < 400 only; EVERYTHING (base + the
     * appended batch) assigns/encodes against those stored artifacts —
     * exactly what the disk layout holds after
-    * [[graft.operators.Sink.appendToIvfPqIndex]] folds the batch in.
+    * [[graft.operators.Sink.appendToIvfIndex]] folds the batch in.
     */
   private lazy val ivfPqAppendOracle: String = {
     val bodies = (0 until 4).map(pqSubBodyBase(_, 8, 16, 10, 400)).mkString(",\n ")
@@ -5520,7 +5523,7 @@ object ExtQueries {
       "SELECT vec_id, cell FROM a2 WHERE vec_id >= 400 AND cell < 4"),
     // sized-layout maintenance: the same one-row log chain with k
     // DERIVED from the base count (ceil(N_base/64) — mirrors
-    // writeIvfSq8IndexSized's resolved geometry; the int8 payload
+    // the sized SQ8 write's resolved geometry; the int8 payload
     // encoding never enters the decision arithmetic)
     "ivfsq8_maintain_append_sized" -> maintainLogOracle(
       "SELECT vec_id, cell FROM a2 WHERE vec_id >= 400",

@@ -341,7 +341,8 @@ object ScaleProbe {
         if (only.isEmpty || only("ivf_stored_search")) {
           val dir = java.nio.file.Files
             .createTempDirectory("probe_ivfidx").toString
-          graft.operators.Sink.writeIvfIndex(emb, dir, cells = 8 * factor, iters = 2)
+          graft.operators.Sink.writeIvfIndex(emb, dir, graft.operators.Sink.Flat,
+            graft.operators.Sink.Cells(8 * factor), iters = 2)
           time("ivf_stored_search") {
             graft.operators.Sink.searchIvfIndex(spark, emb, dir, 10, 3)
           }
@@ -355,8 +356,8 @@ object ScaleProbe {
         if (only.isEmpty || only("ivfsq8_stored_search")) {
           val dir = java.nio.file.Files
             .createTempDirectory("probe_ivfsq8idx").toString
-          graft.operators.Sink.writeIvfSq8Index(emb, dir,
-            cells = 8 * factor, iters = 2)
+          graft.operators.Sink.writeIvfIndex(emb, dir,
+            graft.operators.Sink.Sq8, graft.operators.Sink.Cells(8 * factor), iters = 2)
           time("ivfsq8_stored_search") {
             graft.operators.Sink.searchIvfSq8Index(spark, emb, dir, 10, 3,
               nprobe = 2)
@@ -372,8 +373,8 @@ object ScaleProbe {
         if (only.isEmpty || only("ivfsq8_sized_search")) {
           val dir = java.nio.file.Files
             .createTempDirectory("probe_ivfsq8sized").toString
-          val nc = graft.operators.Sink.writeIvfSq8IndexSized(emb, dir,
-            targetCellSize = 250, iters = 2)
+          val nc = graft.operators.Sink.writeIvfIndex(emb, dir,
+            graft.operators.Sink.Sq8, graft.operators.Sink.CellSize(250), iters = 2)
           System.err.println(s"[probe] ivfsq8_sized cells=$nc")
           time("ivfsq8_sized_search") {
             graft.operators.Sink.searchIvfSq8Index(spark, emb, dir, 10, 3,
@@ -406,7 +407,7 @@ object ScaleProbe {
         val repl = expr("vec_id div 10000000")
         val half = math.max(1, factor / 2)
         Sink.writeIvfIndex(emb.filter(repl < half), dir,
-          cells = 8 * factor, iters = 2)
+          Sink.Flat, Sink.Cells(8 * factor), iters = 2)
         val fresh = timeRaw("ivf_aging_fresh_search") {
           Sink.searchIvfIndex(spark, emb, dir, 10, 3)
             .write.format("noop").mode("overwrite").save()
@@ -482,7 +483,7 @@ object ScaleProbe {
         import graft.operators.Sink
         val dir = java.nio.file.Files
           .createTempDirectory("probe_ivfmaint").toString
-        Sink.writeIvfIndex(emb, dir, cells = 80, iters = 2)
+        Sink.writeIvfIndex(emb, dir, Sink.Flat, Sink.Cells(80), iters = 2)
         // fixed-size SAME-DISTRIBUTION batch: every factor-th vec_id
         // picks ~2000/factor vectors from EVERY perturbed replica
         // (replica offsets are multiples of 1e7, ≡ 0 mod factor for
@@ -497,8 +498,7 @@ object ScaleProbe {
           .select((col("vec_id") + 2000000000L).as("vec_id"), col("embedding"))
           .localCheckpoint()
         val t0 = System.nanoTime()
-        val log = Sink.maintainIvfIndex(spark, batch, dir,
-          cells = 80).head()
+        val log = Sink.maintainIvfIndex(spark, batch, dir).head()
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(
           f"[probe] ivf_maintain_fixed_batch $dt%8.2f s " +
@@ -516,13 +516,13 @@ object ScaleProbe {
         import graft.operators.Sink
         val dir = java.nio.file.Files
           .createTempDirectory("probe_ivfpqmaint").toString
-        Sink.writeIvfPqIndex(emb, dir, cells = 80, iters = 2)
+        Sink.writeIvfIndex(emb, dir, Sink.Pq(), Sink.Cells(80), iters = 2)
         val batch = emb
           .filter(pmod(col("vec_id"), lit(factor.toLong)) === 0)
           .select((col("vec_id") + 2100000000L).as("vec_id"), col("embedding"))
           .localCheckpoint()
         val t0 = System.nanoTime()
-        val log = Sink.maintainIvfPqIndex(spark, batch, dir).head()
+        val log = Sink.maintainIvfIndex(spark, batch, dir).head()
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(
           f"[probe] ivfpq_maintain_fixed_batch $dt%8.2f s " +
@@ -541,7 +541,7 @@ object ScaleProbe {
         import graft.operators.Sink
         val dir = java.nio.file.Files
           .createTempDirectory("probe_ivfdel").toString
-        Sink.writeIvfIndex(emb, dir, cells = 80, iters = 2)
+        Sink.writeIvfIndex(emb, dir, Sink.Flat, Sink.Cells(80), iters = 2)
         def timeSearch(tag: String): Double = {
           val t0 = System.nanoTime()
           Sink.searchIvfIndex(spark, emb, dir, nQueries = 10, k = 3,
@@ -577,7 +577,7 @@ object ScaleProbe {
         import graft.operators.Sink
         val dir = java.nio.file.Files
           .createTempDirectory("probe_ivfmaintfb").toString
-        Sink.writeIvfIndex(emb, dir, cells = 80, iters = 2)
+        Sink.writeIvfIndex(emb, dir, Sink.Flat, Sink.Cells(80), iters = 2)
         val batch = emb
           .filter(pmod(col("vec_id"), lit(factor.toLong)) === 0)
           .select((col("vec_id") + 2200000000L).as("vec_id"), col("embedding"))
@@ -586,8 +586,7 @@ object ScaleProbe {
         try {
           sys.props("graft.maxDriverMapEntries") = "1"
           val t0 = System.nanoTime()
-          val log = Sink.maintainIvfIndex(spark, batch, dir,
-            cells = 80).head()
+          val log = Sink.maintainIvfIndex(spark, batch, dir).head()
           val dt = (System.nanoTime() - t0) / 1e9
           System.err.println(
             f"[probe] ivf_maintain_fallback $dt%8.2f s " +

@@ -184,84 +184,185 @@ object Sink {
     df.withColumn("errors", concat_ws(",", col("errors")))
       .write.mode("append").partitionBy("symbol").parquet(path)
 
+  /** The per-row payload a stored IVF index keeps beside each vector.
+    * The lifecycle — train, cell-partitioned write, append, maintain,
+    * probe — is one code path for every codec; a codec supplies only
+    * its manifest fields, its extra trained artifact (the PQ
+    * codebooks), its per-row layout columns and, for PQ, the code-drift
+    * tripwire. Append, maintain and search read the codec back from
+    * the index ([[storedGeometry]]), so only the write names it.
+    */
+  sealed trait IvfCodec {
+    /** The manifest `kind`. */
+    def kind: String
+    /** Assignment-table columns, in stored order. */
+    private[Sink] def columns: Seq[String]
+    private[Sink] def fields: Seq[(String, String)] = Nil
+    /** The layout columns over (vec_id, embedding, cell) rows, as
+      * narrow per-row expressions; `codebooks` (the stored or freshly
+      * trained PQ artifact) is only evaluated by [[Pq]].
+      */
+    private[Sink] def encode(rows: DataFrame, codebooks: => DataFrame): DataFrame = rows
+  }
+
+  /** Float vectors only — exact-cosine serving ([[searchIvfIndex]]). */
+  case object Flat extends IvfCodec {
+    val kind = "ivf"
+    private[Sink] val columns = Seq("vec_id", "embedding", "cell")
+  }
+
+  /** The int8 tier: per-vector max-abs codes from the ONE quantization
+    * scheme ([[Similarity.sq8Codes]], shared with the in-memory tier),
+    * so stored serving ([[searchIvfSq8Index]]) cannot diverge from
+    * [[Similarity.ivfSq8TopK]]. No trained artifact, so nothing to
+    * drift beyond the coarse cells.
+    */
+  case object Sq8 extends IvfCodec {
+    val kind = "ivfsq8"
+    private[Sink] val columns = Seq("vec_id", "q", "n2", "ma", "embedding", "cell")
+    override private[Sink] def encode(rows: DataFrame,
+        codebooks: => DataFrame): DataFrame = Similarity.withSq8Codes(rows)
+  }
+
+  /** The FAISS-style compressed tier: m subspaces of `subDim` dims, `k`
+    * codewords each. The codes and the raw vectors share the cell
+    * files, so the ADC candidate stage and the exact rerank of
+    * [[searchIvfPqIndex]] are two column projections of the same
+    * probed partitions. The codebook geometry is subspace-shaped, not
+    * corpus-shaped: a sized build resizes only the coarse cells.
+    */
+  final case class Pq(m: Int = 4, subDim: Int = 16, k: Int = 8) extends IvfCodec {
+    val kind = "ivfpq"
+    private[Sink] val columns = Seq("vec_id", "codes", "embedding", "cell")
+    override private[Sink] val fields =
+      Seq("m" -> m.toString, "subDim" -> subDim.toString, "k" -> k.toString)
+    override private[Sink] def encode(rows: DataFrame,
+        codebooks: => DataFrame): DataFrame =
+      rows.crossJoin(broadcast(pqSubsArray(codebooks)))
+        .withColumn("codes", pqCodesColumn(subDim))
+  }
+
+  /** Write-time cell geometry. A fixed cell COUNT makes per-cell
+    * population grow with the corpus (probe scans grow ∝ N); a fixed
+    * cell SIZE (cells = ⌈N/target⌉, [[sizedCells]]) keeps every probed
+    * partition constant-sized — the production rule. The manifest
+    * records `target_cell_size` for a sized build, and a maintenance
+    * RETRAIN then re-derives cells from the grown index instead of
+    * freezing the stored count (appends never resize).
+    */
+  sealed trait IvfCells
+  final case class Cells(n: Int) extends IvfCells
+  final case class CellSize(target: Int) extends IvfCells
+
   /** Persist a trained IVF index — the production "train once, store,
     * serve many" shape: the cell assignment lands PARTITIONED BY cell
-    * WITH the vectors co-located in the cell partitions (so a probe is
-    * a partition-pruned scan that already carries the embeddings — no
-    * join back against the corpus-sized embedding table at serve time)
-    * and the trained centroid table lands beside it. Serving never
-    * retrains: [[searchIvfIndex]] loads centroids (a cells-sized
-    * broadcast) and scans only the probed partitions.
+    * WITH the vectors and the codec's payload co-located in the cell
+    * partitions (so a probe is a partition-pruned scan that already
+    * carries everything it scores — no join back against the
+    * corpus-sized embedding table at serve time), the trained centroid
+    * table (plus the PQ codebooks) beside it, and ONE manifest write
+    * recording the geometry every later operation reads back. Serving
+    * never retrains. Returns the resolved cell count.
     *
     * The overwrite is forced to STATIC partition-overwrite semantics:
     * a retrain must replace the WHOLE assignment directory, or cells
     * absent from the new base would keep stale appended rows from the
     * previous index generation under a dynamic session default.
     */
-  def writeIvfIndex(emb: DataFrame, dir: String, cells: Int = 8,
-      iters: Int = 2, corpusKey: Option[String] = None): Unit = {
+  def writeIvfIndex(emb: DataFrame, dir: String, codec: IvfCodec,
+      cells: IvfCells = Cells(8), iters: Int = 2,
+      corpusKey: Option[String] = None): Int = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
     require(iters >= 2, "a stored IVF index needs trained centroids (iters >= 2)")
-    // training is once-per-corpus by design (the writeIvfPqIndex
-    // contract): with a corpusKey the quantizer comes from the session
-    // cache — shared with ivfTopK and every other index build on the
-    // same key — and a rebuild pays only the pivot and the writes. The
-    // cache OWNS those checkpoints; release them only on the keyless
-    // (train-fresh) path.
-    val cent = (corpusKey match {
-      case Some(ck) =>
-        Similarity.kmeansAssignCachedWithCentroids(emb, cells, iters, ck)._2
-      case None => Similarity.kmeansAssignInternal(emb, cells, iters)._2.get
-    })
-    // the cell is a NARROW per-row expression over the scan (argmin
-    // against the broadcast trained centroids — bit-identical to the
-    // cached assignment frame, which is itself the same argmin over the
-    // same final centroids): the write pays ONE exchange (the cell
-    // repartition below) instead of three (assignment shuffle + corpus
-    // join + repartition — guide §2.4).
-    // repartition by cell BEFORE the partitioned write: each task then
-    // holds whole cells and every cell lands as ONE file. Without it,
-    // every shuffle task writes a sliver into every cell directory —
-    // tasks × cells files, and at cells ∝ corpus the serve-time file
-    // listing dominates search (measured ×100 probe: 36.8 s → the
-    // one-file-per-cell layout serves the same probe in ~1 s).
-    // the model-sized centroid artifact is independent of the
-    // corpus-sized assignment write — overlap them (guide §2.6: submit
-    // independent jobs concurrently so the small job back-fills the
-    // big one's tail); the manifest still lands only after BOTH parts
-    // exist, so a reader never sees a manifest ahead of its content
-    val centF = scala.concurrent.Future {
+    val spark = emb.sparkSession
+    val (n, sizeField) = cells match {
+      case Cells(c) => (c, Nil)
+      case CellSize(sz) =>
+        (sizedCells(emb, sz, corpusKey), Seq("target_cell_size" -> sz.toString))
+    }
+    // training is once-per-corpus by design: with a corpusKey the
+    // quantizer (and the PQ codebooks) come from the session caches —
+    // shared with ivfTopK / the pq_* queries — and a rebuild pays only
+    // the writes. The caches OWN those checkpoints; release them only
+    // on the keyless (train-fresh) path.
+    def release(dfs: Seq[DataFrame]): Unit =
+      if (corpusKey.isEmpty) dfs.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
+    // the PQ codebooks and the coarse quantizer train on DISJOINT
+    // inputs (subvector slices vs full vectors) — run them
+    // concurrently; results are bit-identical to serial, and the
+    // codebook-free codecs train the quantizer on the calling thread
+    val pqF = Future {
+      codec match {
+        case Pq(m, subDim, k) => Some(Similarity.pqTrained(emb, m, subDim, k, iters, corpusKey))
+        case _ => None
+      }
+    }
+    def trainedPq(pq: Option[(DataFrame, DataFrame)]) =
+      pq.toSeq.flatMap { case (codes, cents) => Seq(codes, cents) }
+    // a failure on either training leg must not abandon the other
+    // leg's keyless checkpoints
+    val cent = try corpusKey match {
+      case Some(ck) => Similarity.kmeansAssignCachedWithCentroids(emb, n, iters, ck)._2
+      case None => Similarity.kmeansAssignInternal(emb, n, iters)._2.get
+    } catch { case t: Throwable =>
+      try release(trainedPq(Await.result(pqF, Duration.Inf)))
+      catch { case _: Throwable => () }
+      throw t
+    }
+    val pq = try Await.result(pqF, Duration.Inf)
+      catch { case t: Throwable => release(Seq(cent)); throw t }
+    val trained = trainedPq(pq)
+    // the model-sized artifacts are independent of the corpus-sized
+    // assignment write — overlap them (guide §2.6: the small job
+    // back-fills the big one's tail); the manifest still lands only
+    // after everything exists, so a reader never sees a manifest ahead
+    // of its content
+    val artF = Future {
       writeCentroidArtifact(cent, s"$dir/centroids")
-    }(scala.concurrent.ExecutionContext.global)
-    try {
-      withNearestCell(emb.select("vec_id", "embedding"), cent)
-        .select("vec_id", "embedding", "cell")
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$dir/assignment")
-    } finally scala.concurrent.Await.ready(
-      centF, scala.concurrent.duration.Duration.Inf)
-    centF.value.get.get // surface an artifact-write failure
-    writeIndexManifest(spark = emb.sparkSession, dir = dir,
-      fields = Seq("kind" -> "ivf", "cells" -> cells.toString))
+      pq.foreach { case (_, c) =>
+        writeCentroidArtifact(c.select("sub", "cell", "c"), s"$dir/pq_centroids")
+      }
+    }
+    // cell and payload are NARROW per-row expressions against the
+    // broadcast trained artifacts (bit-identical to the trained
+    // assignment — the same rounded-L2 argmin with cell tiebreak), so
+    // the write pays ONE exchange: the cell repartition (guide §2.4)
+    try cellLayout(
+        codec.encode(withNearestCell(emb.select("vec_id", "embedding"), cent),
+          pq.get._2).select(codec.columns.map(col): _*))
+      .mode("overwrite").option("partitionOverwriteMode", "static")
+      .parquet(s"$dir/assignment")
+    finally Await.ready(artF, Duration.Inf)
+    artF.value.get.get // surface an artifact-write failure
+    writeIndexManifest(spark, dir,
+      Seq("kind" -> codec.kind, "cells" -> n.toString) ++ codec.fields ++ sizeField)
     // a full (re)write is a new generation — tombstones against the
     // REPLACED rows must not mask the new content
-    clearTombstones(emb.sparkSession, dir)
-    if (corpusKey.isEmpty)
-      org.apache.spark.sql.GraftShims.uncheckpoint(cent)
+    clearTombstones(spark, dir)
+    release(cent +: trained)
+    n
   }
 
-  /** Fixed-cell-SIZE geometry: cells = ⌈N/targetCellSize⌉ — the
-    * production sizing rule for every IVF-family build. A fixed cell
-    * COUNT makes per-cell population grow with the corpus (probe scans
-    * grow ∝ N); a fixed cell SIZE keeps every probed partition
-    * constant-sized as the corpus grows, so serving cost is pinned by
-    * the geometry knob instead of the data. One column-pruned count on
-    * the keyless path; with a corpusKey, N comes from the shared
-    * per-corpus count cache ([[Similarity.corpusCount]]) — a keyed
-    * build whose corpus was already counted (a sized semdedup stage, a
-    * sibling sized build) derives its geometry without another scan.
+  /** The cell-partitioned layout writer: repartition by cell BEFORE the
+    * partitioned write, so each task holds whole cells and every cell
+    * (or, on append, every touched cell) lands as ONE file. Without
+    * it every shuffle task writes a sliver into every cell directory —
+    * tasks × cells files, and at cells ∝ corpus the serve-time file
+    * listing dominates search (measured ×100 probe: 36.8 s → the
+    * one-file-per-cell layout serves the same probe in ~1 s).
+    */
+  private def cellLayout(rows: DataFrame) =
+    rows.repartition(col("cell"))
+      .sortWithinPartitions("cell", "vec_id")
+      .write.partitionBy("cell")
+
+  /** Fixed-cell-SIZE geometry: cells = ⌈N/targetCellSize⌉ (see
+    * [[CellSize]]). One column-pruned count on the keyless path; with
+    * a corpusKey, N comes from the shared per-corpus count cache
+    * ([[Similarity.corpusCount]]) — a keyed build whose corpus was
+    * already counted derives its geometry without another scan.
     */
   def sizedCells(emb: DataFrame, targetCellSize: Int,
       corpusKey: Option[String] = None): Int = {
@@ -270,78 +371,16 @@ object Sink {
       Similarity.corpusCount(emb, corpusKey).toDouble / targetCellSize).toInt)
   }
 
-  /** [[writeIvfIndex]] at a fixed cell SIZE (cells = ⌈N/size⌉, see
-    * [[sizedCells]]). Returns the resolved cell count (it also lands in
-    * the manifest, the geometry every maintenance op reads back).
-    */
-  def writeIvfIndexSized(emb: DataFrame, dir: String,
-      targetCellSize: Int = 512, iters: Int = 2,
-      corpusKey: Option[String] = None): Int = {
-    val cells = sizedCells(emb, targetCellSize, corpusKey)
-    writeIvfIndex(emb, dir, cells, iters, corpusKey)
-    writeIndexManifest(emb.sparkSession, dir, Seq("kind" -> "ivf",
-      "cells" -> cells.toString,
-      "target_cell_size" -> targetCellSize.toString))
-    cells
-  }
-
-  /** [[writeIvfSq8Index]] at a fixed cell SIZE. */
-  def writeIvfSq8IndexSized(emb: DataFrame, dir: String,
-      targetCellSize: Int = 512, iters: Int = 2,
-      corpusKey: Option[String] = None): Int = {
-    val cells = sizedCells(emb, targetCellSize, corpusKey)
-    writeIvfSq8Index(emb, dir, cells, iters, corpusKey)
-    writeIndexManifest(emb.sparkSession, dir, Seq("kind" -> "ivfsq8",
-      "cells" -> cells.toString,
-      "target_cell_size" -> targetCellSize.toString))
-    cells
-  }
-
-  /** [[writeIvfPqIndex]] at a fixed cell SIZE (coarse tier only — the
-    * PQ codebook geometry m/subDim/k is subspace-shaped, not
-    * corpus-shaped).
-    */
-  def writeIvfPqIndexSized(emb: DataFrame, dir: String,
-      targetCellSize: Int = 512, iters: Int = 2,
-      m: Int = 4, subDim: Int = 16, k: Int = 8,
-      corpusKey: Option[String] = None): Int = {
-    val cells = sizedCells(emb, targetCellSize, corpusKey)
-    writeIvfPqIndex(emb, dir, cells, iters, m, subDim, k, corpusKey)
-    writeIndexManifest(emb.sparkSession, dir, Seq("kind" -> "ivfpq",
-      "cells" -> cells.toString, "m" -> m.toString,
-      "subDim" -> subDim.toString, "k" -> k.toString,
-      "target_cell_size" -> targetCellSize.toString))
-    cells
-  }
-
-  /** The sized layout's maintenance contract: when the manifest carries
-    * `target_cell_size` (the index was built by a `writeIvf*Sized`),
-    * a maintenance RETRAIN re-derives cells = ⌈N_union/size⌉ instead of
-    * freezing the stored cell count — the fixed-size invariant (cell
-    * population ≈ size, the linear-at-scale property) survives the
-    * index's own growth. Appends never resize (they fold into the
-    * frozen geometry); only the retrain branch, which rewrites the
-    * whole tree anyway, re-sizes.
-    */
-  private def manifestTargetCellSize(spark: SparkSession,
-      dir: String): Option[Int] =
-    readIndexManifest(spark, dir).flatMap(_.get("target_cell_size"))
-      .flatMap(_.toIntOption)
-
   /** Stored-artifact generation stamp: (max mtime, file count, total
     * bytes) of the data files under `path`, folded to one Long. A
     * retrain REWRITES the artifact files (new stamp); an append never
-    * touches them — so (dir, generation) keys a safe reuse of the
-    * loaded-and-pivoted frame across calls. One FS listing, no parquet
-    * opened.
+    * touches the trained artifacts. One FS listing, no parquet opened.
     *
     * The stamp alone is NOT collision-free: a retrain that rewrites the
     * same number of bytes within one mtime tick (second-granularity
-    * object stores) reproduces the old stamp. The cache key therefore
+    * object stores) reproduces the old stamp. [[genKey]] therefore
     * also folds in the manifest's `write_id` (a per-write nonce, see
-    * [[writeIndexManifest]]) — every full index write changes it, so a
-    * same-stamp rewrite still misses; appends never rewrite the
-    * manifest, so they keep reusing the loaded frame as before.
+    * [[writeIndexManifest]]) — every full index write changes it.
     */
   private def artifactGeneration(spark: SparkSession, path: String): Long = {
     var mt = 0L; var n = 0L; var bytes = 0L
@@ -370,40 +409,57 @@ object Sink {
     }
   }
 
-  /** Loaded stored-artifact cache: serving and maintenance call
-    * [[loadIvfCentroids]]/[[loadPqCentroids]] on EVERY operation (a
-    * drop-cadence maintenance replay reloads the same frozen artifacts
-    * a dozen times), and each load is a read + group + pivot job over
-    * an unchanged file set. Keyed by the artifact's generation stamp
-    * so a retrain (rewritten files) misses and reloads while appends
-    * (artifact untouched) reuse. Values are localCheckpoint'ed
-    * cells-sized frames; LRU-bounded, lifecycle-registered.
+  /** Cache key of the stored table at `path` (one level under its index
+    * dir): (session, path, [[artifactGeneration]], the index manifest's
+    * `write_id` — "" for a legacy index, which falls back to the stamp
+    * alone). Every per-index driver cache below keys on it, so each
+    * misses when its source table changes.
     */
-  private val artifactLoadCache =
-    new graft.BoundedLruCache[(SparkSession, String, Long, String), DataFrame](
-      maxEntries = 32,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
+  private type GenKey = (SparkSession, String, Long, String)
 
-  locally {
-    graft.SessionCaches.register(
-      evict = s => artifactLoadCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => artifactLoadCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  private def cachedArtifactLoad(spark: SparkSession, path: String)(
-      build: => DataFrame): DataFrame = {
+  private def genKey(spark: SparkSession, path: String): GenKey = {
     graft.SessionCaches.watch(spark)
-    // the artifact tables live one level under the index dir, whose
-    // manifest carries the per-write nonce ("" for legacy indexes —
-    // those fall back to the stamp alone, the pre-write_id behavior)
     val indexDir = new org.apache.hadoop.fs.Path(path).getParent.toString
     val writeId = readIndexManifest(spark, indexDir)
       .flatMap(_.get("write_id")).getOrElse("")
-    val key = (spark, path, artifactGeneration(spark, path), writeId)
+    (spark, path, artifactGeneration(spark, path), writeId)
+  }
+
+  /** A [[GenKey]]-keyed driver cache, LRU-bounded and registered with
+    * [[graft.SessionCaches]] for per-session eviction and the
+    * stopped-context sweep.
+    */
+  private def genCache[V](maxEntries: Int,
+      release: V => Unit = (_: V) => ()): graft.BoundedLruCache[GenKey, V] = {
+    val cache = new graft.BoundedLruCache[GenKey, V](maxEntries, release)
+    graft.SessionCaches.register(
+      evict = s => cache.removeIf(_._1 eq s,
+        releaseRemoved = !s.sparkContext.isStopped),
+      sweep = () => cache.removeIf(_._1.sparkContext.isStopped,
+        releaseRemoved = false))
+    cache
+  }
+
+  private def cachedByGen[V](cache: graft.BoundedLruCache[GenKey, V],
+      spark: SparkSession, path: String)(compute: => V): V = {
+    val key = genKey(spark, path)
+    cache.get(key).getOrElse(cache.putIfAbsent(key, compute))
+  }
+
+  /** Loaded stored-artifact cache: serving and maintenance call
+    * [[loadIvfCentroids]]/[[loadPqCentroids]] on EVERY operation (a
+    * drop-cadence maintenance replay reloads the same frozen artifacts
+    * a dozen times), and each load is a read over an unchanged file
+    * set. Values are localCheckpoint'ed model-sized frames.
+    */
+  private val artifactLoadCache = genCache[DataFrame](maxEntries = 32,
+    release = df =>
+      if (!df.sparkSession.sparkContext.isStopped)
+        org.apache.spark.sql.GraftShims.uncheckpoint(df))
+
+  private def cachedArtifactLoad(spark: SparkSession, path: String)(
+      build: => DataFrame): DataFrame = {
+    val key = genKey(spark, path)
     artifactLoadCache.get(key).getOrElse {
       val df = build.localCheckpoint()
       // once per artifact generation (cache misses only): an index
@@ -426,9 +482,9 @@ object Sink {
   /** Append the nearest-cell column as a NARROW per-row argmin over the
     * broadcast centroid table — the same rounded-L2 metric and cell
     * tiebreak as [[Similarity.assignWithCentroids]], without its
-    * aggregate + vec_id-join shape: index writes and plain appends
-    * derive the cell inside the scan projection instead of shuffling an
-    * assignment frame back onto the corpus (guide §2.4).
+    * aggregate + vec_id-join shape: writes and appends derive the cell
+    * inside the scan projection instead of shuffling an assignment
+    * frame back onto the vectors (guide §2.4).
     */
   private def withNearestCell(batch: DataFrame, cent: DataFrame): DataFrame =
     batch.crossJoin(broadcast(Similarity.centroidArray(cent)))
@@ -448,8 +504,7 @@ object Sink {
     * subspace, the lexicographic argmin of (rounded-L2 distance, code)
     * between the row's subvector slice and that subspace's codewords —
     * bit-identical to [[Similarity.assignWithCentroids]] applied
-    * per-subspace (the pqEncode/pqTrained scheme), as a narrow
-    * expression.
+    * per-subspace (the pqTrained scheme), as a narrow expression.
     */
   private def pqCodesColumn(subDim: Int): Column =
     transform(col("subs"), sa =>
@@ -463,105 +518,55 @@ object Sink {
 
   /** Persist a model-sized centroid/codebook frame PIVOTED — the
     * vector column stays an array<double>, exactly the shape every
-    * consumer broadcasts. The old layout exploded each vector into
-    * (key, i, x) rows at write and re-pivoted (groupBy + collect_list +
-    * array_sort — a shuffle job) on EVERY artifact-cache miss; parquet
-    * stores arrays natively, so the explode/pivot round trip bought
-    * nothing (guide §2.4: remove shuffles outright). coalesce(1): the
-    * frame is cells- or m×k-sized, one file cuts serve-time listing.
+    * consumer broadcasts, so a cache miss is a bare read (no
+    * explode/re-pivot shuffle). coalesce(1): the frame is cells- or
+    * m×k-sized, one file cuts serve-time listing.
     */
   private def writeCentroidArtifact(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
   /** Reassemble the stored centroid table: (cell, c: array<double>) —
     * a cells-sized frame, always broadcast by its consumers. Cached per
-    * artifact generation (see [[cachedArtifactLoad]]): repeated serving
-    * calls against an unchanged index skip the read entirely. Stored
-    * pivoted ([[writeCentroidArtifact]]) — the load is a bare read.
+    * artifact generation (see [[cachedArtifactLoad]]).
     */
   def loadIvfCentroids(spark: SparkSession, dir: String): DataFrame =
     cachedArtifactLoad(spark, s"$dir/centroids") {
       spark.read.parquet(s"$dir/centroids").select("cell", "c")
     }
 
-  /** Fold a new vector batch into a stored IVF index WITHOUT
-    * retraining: assign each new vector to its nearest STORED centroid
-    * (the training metric — rounded L2, cell tiebreak) and append the
-    * assignment into the cell-partitioned layout. This is the
-    * production maintenance path — append cost is one broadcast-join
-    * pass over the batch; [[searchIvfIndex]] serves the union
-    * immediately. Pair with [[ivfAppendDrift]] (run it BEFORE
-    * appending) to detect when the incoming distribution has drifted
-    * far enough from the trained one that a retrain is due — the same
-    * contract as [[graft.operators.Dedup.incrementalDedup]] on the
-    * text side.
+  /** Fold a new vector batch into a stored index of any codec WITHOUT
+    * retraining: each new vector takes its nearest STORED centroid (the
+    * training metric — rounded L2, cell tiebreak) and its payload from
+    * the STORED artifacts (PQ codes against the stored codebooks), and
+    * the rows append into the cell-partitioned layout, one new file per
+    * touched cell. Cost is one broadcast pass over the batch, never a
+    * Lloyd's rerun; the searches serve the union immediately. Pair with
+    * [[ivfAppendDrift]] (run it BEFORE appending) or use
+    * [[maintainIvfIndex]], which makes the retrain decision itself.
     *
     * vec_id is the index key: a batch carrying the same vec_id twice
     * (a re-delivered drop) appends ONCE — [[dedupBatch]] keeps one
-    * deterministic row per id, matching the drift pre-flight's counts
-    * (its assignment is already per-id). Duplicates against ALREADY
-    * STORED ids are the caller's contract (append-only ingest with
-    * fresh ids), as for any ANN index without a delete path.
+    * deterministic row per id. Duplicates against ALREADY STORED ids
+    * are the caller's contract (append-only ingest with fresh ids).
     */
   def appendToIvfIndex(newEmb: DataFrame, dir: String): Unit = {
     val spark = newEmb.sparkSession
-    requireIndexKind(spark, dir, "ivf", "appendToIvfIndex")
-    val uniq = dedupBatch(newEmb)
-    val cent = loadIvfCentroids(spark, dir)
-    appendAssignedIvf(uniq,
-      Similarity.assignWithCentroids(uniq, cent).select("vec_id", "cell"), dir)
+    recoverIvfIndex(spark, dir)
+    val codec = storedGeometry(spark, dir).codec
+    cellLayout(encodeBatch(spark, dir, codec, dedupBatch(newEmb)))
+      .mode("append").parquet(s"$dir/assignment")
   }
 
-  /** The write tail of [[appendToIvfIndex]] over a PRE-COMPUTED
-    * (deduped batch, assignment) pair — the maintain loop computes both
-    * once per drop (checkpointed, shared with the drift counts) instead
-    * of re-deduping and re-assigning inside the append.
+  /** A deduped batch in the stored layout: cell from the narrow
+    * nearest-cell projection over the STORED centroids, then the
+    * codec's payload columns against the STORED artifacts.
     */
-  private def appendAssignedIvf(uniq: DataFrame, assigned: DataFrame,
-      dir: String): Unit =
-    assigned
-      .join(uniq, "vec_id")
-      .select("vec_id", "embedding", "cell")
-      .repartition(col("cell")) // one appended file per touched cell
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assignment")
+  private def encodeBatch(spark: SparkSession, dir: String, codec: IvfCodec,
+      uniq: DataFrame): DataFrame =
+    codec.encode(withNearestCell(uniq, loadIvfCentroids(spark, dir)),
+        loadPqCentroids(spark, dir))
+      .select(codec.columns.map(col): _*)
 
-  /** Pre-flight drift check for [[appendToIvfIndex]]: per cell, the
-    * stored population vs the incoming batch's would-be population
-    * (assigned with the STORED centroids, no retrain), a smoothed PSI
-    * between the two cell-share distributions, and a retrain_due flag.
-    * Everything is cells-sized after the two grouped counts — the
-    * windows and the one-row total joins run over ≤ cells rows.
-    *
-    * The verdict is NULL-CALIBRATED: a finite batch drawn from the
-    * exact stored distribution still reads a nonzero smoothed PSI —
-    * its expectation is ≈ (cells − 1)·(1/t_new + 1/t_stored) (the
-    * chi-square-style null floor), which DOMINATES when cells ≫ batch
-    * (measured: a same-distribution 2020-vector batch against an
-    * 800-cell ×100 index reads PSI ≈ 0.4 with NO drift — the raw
-    * `psi > threshold` rule tripped a spurious 19-minute full retrain;
-    * at ×10 the floor predicts 0.043 and the batch read 0.034). The
-    * flag therefore fires on `psi > threshold + psi_null`, with
-    * `psi_null` emitted as a column so the calibration is auditable.
-    *
-    * PSI carrier mirrors [[Corpus.sourceDrift]]: per-cell term rounded
-    * to an 8dp DECIMAL so the sum is fold-order free, total rounded 6.
-    */
-  /** Stored-side per-cell PHYSICAL row counts, cached per artifact
-    * generation: the drift pre-flight needs them EVERY micro-batch,
-    * and a full `read.parquet(assignment).groupBy(cell).count()`
-    * re-lists and re-scans the whole cells-∝-N tree per drop — the
-    * dominant per-batch job of the maintain twins' replay storm. The
-    * value is a driver-side cells-sized map (bounded by the index
-    * geometry, never by data — the probed-cell-list collect
-    * discipline). Appends seed the NEXT generation arithmetically
-    * (pre-append counts + the batch's per-cell counts, both already
-    * in the drift frame — no new scan); retrains and compactions
-    * change the generation WITHOUT a seed, so the next maintain call
-    * rescans once. These are footer-equivalent physical counts —
-    * exactly what the drift frame counted before; tombstones stay
-    * invisible to it by design.
-    */
   /** Hard bound on the DRIVER-SIDE index maps ([[storedCellCounts]],
     * [[centroidCellIds]]): "geometry-bounded, not data-bounded" is only
     * a guarantee while the geometry itself fits the driver — in the
@@ -569,10 +574,9 @@ object Sink {
     * is ~1.5×10⁸ cells, past what a driver map should hold. Above this
     * bound the collects REFUSE (loud, actionable) and the maintain
     * pre-flight falls back to ONE distributed aggregate over the
-    * assignment per drop ([[maintainCore]]'s fallback branch —
-    * bit-identical verdict, index-proportional cost, the pre-cache
-    * behavior). Production IVF serves ≲10⁶-10⁷ cells, so the default
-    * (2²⁴ ≈ 1.7×10⁷ entries, a few hundred MB of boxed map at worst)
+    * assignment per drop ([[maintainIvfIndex]]'s fallback branch —
+    * bit-identical verdict, index-proportional cost). Production IVF
+    * serves ≲10⁶-10⁷ cells, so the default (2²⁴ ≈ 1.7×10⁷ entries)
     * never bites on a sane geometry; override via the
     * `graft.maxDriverMapEntries` system property (specs lower it to
     * pin the fallback).
@@ -590,118 +594,62 @@ object Sink {
         parsed.get
     }
 
-  /** The index's cell-count geometry — manifest first (free), else a
-    * generation-cached centroid count (one footer-only job per index
-    * generation). The tiny Long answer is what gates the driver-map
-    * collects above.
-    */
-  private val cellGeomCache =
-    new graft.BoundedLruCache[(SparkSession, String, Long, String), Long](
-      maxEntries = 64, release = _ => ())
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => cellGeomCache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => cellGeomCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  private[graft] def indexCellGeometry(spark: SparkSession,
-      dir: String): Long =
-    readIndexManifest(spark, dir).flatMap(_.get("cells"))
-      .flatMap(_.toLongOption).getOrElse {
-        graft.SessionCaches.watch(spark)
-        val writeId = readIndexManifest(spark, dir)
-          .flatMap(_.get("write_id")).getOrElse("")
-        val key = (spark, s"$dir/centroids",
-          artifactGeneration(spark, s"$dir/centroids"), writeId)
-        cellGeomCache.get(key).getOrElse(
-          cellGeomCache.putIfAbsent(key,
-            loadIvfCentroids(spark, dir).count()))
-      }
-
-  private def requireDriverMapFits(spark: SparkSession, dir: String,
-      what: String): Unit = {
-    val geom = indexCellGeometry(spark, dir)
-    require(geom <= maxDriverMapEntries,
-      s"$what: index at $dir has $geom cells > graft.maxDriverMapEntries" +
+  private def requireDriverMapFits(dir: String, cells: Long,
+      what: String): Unit =
+    require(cells <= maxDriverMapEntries,
+      s"$what: index at $dir has $cells cells > graft.maxDriverMapEntries" +
         s" (${maxDriverMapEntries}) — a driver-side cells-sized map would" +
-        " not fit; use the distributed pre-flight (maintain* falls back" +
-        " automatically) or raise the bound explicitly")
-  }
+        " not fit; use the distributed pre-flight (maintainIvfIndex falls" +
+        " back automatically) or raise the bound explicitly")
 
-  private val cellCountCache =
-    new graft.BoundedLruCache[(SparkSession, String, Long, String), Map[Long, Long]](
-      maxEntries = 32, release = _ => ())
+  /** Stored-side per-cell PHYSICAL row counts, cached per assignment
+    * generation: the drift pre-flight needs them EVERY micro-batch,
+    * and a full `read.parquet(assignment).groupBy(cell).count()`
+    * re-lists and re-scans the whole cells-∝-N tree per drop. The
+    * value is a driver-side cells-sized map (bounded by the index
+    * geometry, `cells`, never by data). Appends seed the NEXT
+    * generation arithmetically (pre-append counts + the batch's
+    * per-cell counts — no new scan); retrains and compactions change
+    * the generation WITHOUT a seed, so the next maintain call rescans
+    * once. Footer-equivalent physical counts: tombstones stay
+    * invisible to it by design.
+    */
+  private val cellCountCache = genCache[Map[Long, Long]](maxEntries = 32)
 
-  locally {
-    graft.SessionCaches.register(
-      evict = s => cellCountCache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => cellCountCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  private def assignGenKey(spark: SparkSession,
-      dir: String): (SparkSession, String, Long, String) = {
-    val writeId = readIndexManifest(spark, dir)
-      .flatMap(_.get("write_id")).getOrElse("")
-    (spark, dir, artifactGeneration(spark, s"$dir/assignment"), writeId)
-  }
-
-  private[graft] def storedCellCounts(spark: SparkSession,
-      dir: String): Map[Long, Long] = {
-    requireDriverMapFits(spark, dir, "storedCellCounts")
-    graft.SessionCaches.watch(spark)
-    val key = assignGenKey(spark, dir)
-    cellCountCache.get(key).getOrElse {
+  private[graft] def storedCellCounts(spark: SparkSession, dir: String,
+      cells: Long): Map[Long, Long] = {
+    requireDriverMapFits(dir, cells, "storedCellCounts")
+    cachedByGen(cellCountCache, spark, s"$dir/assignment") {
       // partition-column inference reads `cell=` path values as INT —
       // normalize to the centroid table's LONG before collecting
-      val m = spark.read.parquet(s"$dir/assignment")
+      spark.read.parquet(s"$dir/assignment")
         .groupBy(col("cell").cast("long").as("cell"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      cellCountCache.putIfAbsent(key, m)
     }
-  }
-
-  /** Seed the CURRENT generation's count entry (called right after an
-    * un-compacted append, when the post-append counts are known
-    * arithmetically).
-    */
-  private def seedCellCounts(spark: SparkSession, dir: String,
-      counts: Map[Long, Long]): Unit = {
-    cellCountCache.putIfAbsent(assignGenKey(spark, dir), counts)
-    ()
   }
 
   /** Centroid cell-id list, cached per centroids-artifact generation —
     * the drift verdict's grid, collected once per index generation
     * instead of once per micro-batch. Cells-sized.
     */
-  private val centroidCellCache =
-    new graft.BoundedLruCache[(SparkSession, String, Long, String), Seq[Long]](
-      maxEntries = 32, release = _ => ())
+  private val centroidCellCache = genCache[Seq[Long]](maxEntries = 32)
 
-  locally {
-    graft.SessionCaches.register(
-      evict = s => centroidCellCache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => centroidCellCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  private def centroidCellIds(spark: SparkSession, dir: String): Seq[Long] = {
-    requireDriverMapFits(spark, dir, "centroidCellIds")
-    graft.SessionCaches.watch(spark)
-    val writeId = readIndexManifest(spark, dir)
-      .flatMap(_.get("write_id")).getOrElse("")
-    val key = (spark, s"$dir/centroids",
-      artifactGeneration(spark, s"$dir/centroids"), writeId)
-    centroidCellCache.get(key).getOrElse {
-      val ids = loadIvfCentroids(spark, dir).select("cell")
+  private[graft] def centroidCellIds(spark: SparkSession, dir: String,
+      cells: Long): Seq[Long] = {
+    requireDriverMapFits(dir, cells, "centroidCellIds")
+    cachedByGen(centroidCellCache, spark, s"$dir/centroids") {
+      loadIvfCentroids(spark, dir).select("cell")
         .collect().map(_.getLong(0)).toSeq.sorted
-      centroidCellCache.putIfAbsent(key, ids)
     }
   }
+
+  /** Element-wise sum of two count maps — the arithmetic seed of a
+    * post-append generation.
+    */
+  private def addCounts[K](a: Map[K, Long], b: Map[K, Long]): Map[K, Long] =
+    (a.keySet ++ b.keySet).iterator
+      .map(c => c -> (a.getOrElse(c, 0L) + b.getOrElse(c, 0L))).toMap
 
   /** Driver-side twin of [[ivfAppendDrift]]'s verdict — the maintain
     * loop's per-micro-batch decision without the cells-sized DataFrame
@@ -759,11 +707,8 @@ object Sink {
     * reduced to ONE collected row (term sum as an exact scale-8
     * decimal, plus the three totals), finished with the shared
     * [[psiFromTermSum]]. Verdict is bit-identical to the driver-map
-    * path (Catalyst's Round on double is the same
-    * BigDecimal.valueOf(x).setScale(8, HALF_UP), the decimal sum is
-    * fold-order free, and long/long division casts to double in both
-    * engines — spec-pinned); cost is index-proportional per drop,
-    * which is exactly the trade the bound exists to make.
+    * path (spec-pinned); cost is index-proportional per drop, which is
+    * exactly the trade the bound exists to make.
     * Returns (psi, retrain_due, t_stored_physical).
     */
   private def driftVerdictDistributed(spark: SparkSession,
@@ -798,29 +743,43 @@ object Sink {
     (psi, due, row.getLong(2))
   }
 
-  /** Stored per-cell counts as a DATAFRAME: the generation-cached
-    * driver map rendered local when the geometry fits
-    * [[maxDriverMapEntries]], the raw distributed aggregate above it —
-    * so [[ivfAppendDrift]] works at ANY cell count.
+  /** Pre-flight drift check for [[appendToIvfIndex]]: per cell, the
+    * stored population vs the incoming batch's would-be population
+    * (assigned with the STORED centroids, no retrain), a smoothed PSI
+    * between the two cell-share distributions, and a retrain_due flag.
+    * Everything is cells-sized after the two grouped counts — the
+    * windows and the one-row total joins run over ≤ cells rows.
+    *
+    * The verdict is NULL-CALIBRATED: a finite batch drawn from the
+    * exact stored distribution still reads a nonzero smoothed PSI —
+    * its expectation is ≈ (cells − 1)·(1/t_new + 1/t_stored) (the
+    * chi-square-style null floor), which DOMINATES when cells ≫ batch
+    * (measured: a same-distribution 2020-vector batch against an
+    * 800-cell ×100 index reads PSI ≈ 0.4 with NO drift — the raw
+    * `psi > threshold` rule tripped a spurious 19-minute full retrain;
+    * at ×10 the floor predicts 0.043 and the batch read 0.034). The
+    * flag therefore fires on `psi > threshold + psi_null`, with
+    * `psi_null` emitted as a column so the calibration is auditable.
+    *
+    * PSI carrier mirrors [[Corpus.sourceDrift]]: per-cell term rounded
+    * to an 8dp DECIMAL so the sum is fold-order free, total rounded 6.
+    * The stored side is the generation-cached driver map when the
+    * geometry fits [[maxDriverMapEntries]], the raw distributed
+    * aggregate above it — so this works at ANY cell count.
     */
-  private def storedCellCountsDF(spark: SparkSession,
-      dir: String): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    if (indexCellGeometry(spark, dir) <= maxDriverMapEntries)
-      storedCellCounts(spark, dir).toSeq.toDF("cell", "n_stored")
-    else spark.read.parquet(s"$dir/assignment")
-      .groupBy(col("cell").cast("long").as("cell"))
-      .agg(count(lit(1)).as("n_stored"))
-  }
-
   def ivfAppendDrift(spark: SparkSession, batch: DataFrame, dir: String,
       threshold: Double = 0.25): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark2 = spark
     import spark2.implicits._
     val cent = loadIvfCentroids(spark, dir)
-    val stored = storedCellCountsDF(spark, dir)
+    val geomCells = storedGeometry(spark, dir).cells
+    val stored =
+      if (geomCells <= maxDriverMapEntries)
+        storedCellCounts(spark, dir, geomCells).toSeq.toDF("cell", "n_stored")
+      else spark.read.parquet(s"$dir/assignment")
+        .groupBy(col("cell").cast("long").as("cell"))
+        .agg(count(lit(1)).as("n_stored"))
     val incoming = Similarity.assignWithCentroids(batch, cent)
       .groupBy("cell").agg(count(lit(1)).as("n_new"))
     val cells = cent.select("cell")
@@ -849,124 +808,15 @@ object Sink {
       .orderBy("cell")
   }
 
-  /** Persist a trained IVF-PQ index — the FAISS-style memory-lean
-    * serving layout, all in ONE cell-partitioned table:
-    * (vec_id, codes: array<int>, embedding) partitioned by the coarse
-    * cell, plus the coarse centroids and the per-subspace PQ codebooks
-    * beside it. The columnar format makes the two serving tiers two
-    * PROJECTIONS of the same files: the ADC candidate stage reads only
-    * (vec_id, codes) — m small ints per vector, the 16-32× compressed
-    * tier — and the exact-rerank stage reads (vec_id, embedding) for
-    * the already-pruned candidates. Both stages scan only the probed
-    * cell partitions; nothing ever joins the corpus embedding table.
-    */
-  def writeIvfPqIndex(emb: DataFrame, dir: String, cells: Int = 8,
-      iters: Int = 2, m: Int = 4, subDim: Int = 16, k: Int = 8,
-      corpusKey: Option[String] = None): Unit = {
-    require(iters >= 2, "a stored IVF-PQ index needs trained centroids (iters >= 2)")
-    // training is once-per-corpus by design: with a corpusKey, the
-    // coarse quantizer and the PQ codebooks come from the session
-    // caches (shared with ivfTopK / the pq_* queries), and an index
-    // rebuild pays only the assignment pivot and the writes. The
-    // cache OWNS those checkpoints — release them only on the
-    // keyless (train-fresh) path.
-    // the coarse quantizer and the PQ codebooks train on DISJOINT
-    // inputs (full vectors vs subvector slices) — run the two
-    // trainings concurrently; on the cached path both return
-    // immediately and the overlap is free. Results are bit-identical
-    // to serial (the trainings share nothing).
-    val coarseF = scala.concurrent.Future {
-      corpusKey match {
-        case Some(ck) =>
-          Similarity.kmeansAssignCachedWithCentroids(emb, cells, iters, ck)
-        case None =>
-          val (a, cOpt) = Similarity.kmeansAssignInternal(emb, cells, iters)
-          (a, cOpt.get)
-      }
-    }(scala.concurrent.ExecutionContext.global)
-    // failure on either training leg must not abandon the other:
-    // the coarse Future keeps running after a pqTrained throw (burning
-    // jobs into a call the caller already saw fail) and whichever leg
-    // succeeded holds keyless checkpoints nothing would ever release
-    val (codes, pqCents) =
-      try Similarity.pqTrained(emb, m, subDim, k, iters, corpusKey)
-      catch { case t: Throwable =>
-        try {
-          val (_, cLeak) = scala.concurrent.Await.result(
-            coarseF, scala.concurrent.duration.Duration.Inf)
-          if (corpusKey.isEmpty)
-            org.apache.spark.sql.GraftShims.uncheckpoint(cLeak)
-        } catch { case _: Throwable => () }
-        throw t
-      }
-    val cent =
-      try scala.concurrent.Await.result(
-        coarseF, scala.concurrent.duration.Duration.Inf)._2
-      catch { case t: Throwable =>
-        if (corpusKey.isEmpty) {
-          org.apache.spark.sql.GraftShims.uncheckpoint(codes)
-          org.apache.spark.sql.GraftShims.uncheckpoint(pqCents)
-        }
-        throw t
-      }
-    // cell AND codes are narrow per-row argmins against the broadcast
-    // trained artifacts (bit-identical to the cached assignment/code
-    // frames — both are the same rounded-L2 argmin with cell tiebreak
-    // over the same final centroids/codebooks), so the layout is one
-    // projection over the scan + the cell repartition. The previous
-    // shape pivoted the (sub, vec_id, code) frame and shuffle-joined it
-    // plus the assignment back to the corpus by vec_id — three
-    // corpus-sized exchanges for values derivable in the projection
-    // (guide §2.4).
-    // both model-sized artifacts are independent of the corpus-sized
-    // assignment write — overlap them (guide §2.6; the writeIvfIndex
-    // pattern); the manifest still lands only after everything exists
-    val artF = scala.concurrent.Future {
-      writeCentroidArtifact(cent, s"$dir/centroids")
-      writeCentroidArtifact(pqCents.select("sub", "cell", "c"), s"$dir/pq_centroids")
-    }(scala.concurrent.ExecutionContext.global)
-    try {
-      withNearestCell(emb.select("vec_id", "embedding"), cent)
-        .crossJoin(broadcast(pqSubsArray(pqCents)))
-        .withColumn("codes", pqCodesColumn(subDim))
-        .select("vec_id", "codes", "embedding", "cell")
-        .repartition(col("cell")) // one file per cell (see writeIvfIndex)
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$dir/assignment")
-    } finally scala.concurrent.Await.ready(
-      artF, scala.concurrent.duration.Duration.Inf)
-    artF.value.get.get // surface an artifact-write failure
-    writeIndexManifest(spark = emb.sparkSession, dir = dir,
-      fields = Seq("kind" -> "ivfpq", "cells" -> cells.toString,
-        "m" -> m.toString, "subDim" -> subDim.toString, "k" -> k.toString))
-    // new generation — stale tombstones must not mask the new content
-    // (the writeIvfIndex contract)
-    clearTombstones(emb.sparkSession, dir)
-    if (corpusKey.isEmpty) {
-      org.apache.spark.sql.GraftShims.uncheckpoint(cent)
-      org.apache.spark.sql.GraftShims.uncheckpoint(codes)
-      org.apache.spark.sql.GraftShims.uncheckpoint(pqCents)
-    }
-  }
-
   /** Reassemble the stored PQ codebooks: (sub, cell, c: array<double>)
     * — an m×k-sized frame, always broadcast by its consumers. Cached
-    * per artifact generation like [[loadIvfCentroids]]; stored pivoted
-    * ([[writeCentroidArtifact]]), so the load is a bare read.
+    * per artifact generation like [[loadIvfCentroids]].
     */
   def loadPqCentroids(spark: SparkSession, dir: String): DataFrame =
     cachedArtifactLoad(spark, s"$dir/pq_centroids") {
       spark.read.parquet(s"$dir/pq_centroids").select("sub", "cell", "c")
     }
 
-  /** One-file index manifest: the geometry the index was written with
-    * ((kind, cells) for IVF; + (m, subDim, k) for IVF-PQ), persisted as
-    * a tiny JSON beside the assignment tree. Serving reads THIS instead
-    * of re-deriving geometry from the codebook table — one small-file
-    * FS read, zero Spark jobs on the hot path.
-    */
   /** Monotonic per-JVM component of the manifest write_id — nanoTime
     * alone can repeat across JVMs on coarse clocks; the pair (nanoTime,
     * counter) is unique per write from this JVM and collision-unlikely
@@ -974,24 +824,140 @@ object Sink {
     */
   private val manifestWriteCounter = new java.util.concurrent.atomic.AtomicLong()
 
+  /** One-file index manifest: the geometry the index was written with,
+    * persisted as a tiny flat JSON object beside the tables. Serving
+    * and maintenance read THIS instead of re-deriving geometry from
+    * the artifacts — one small-file FS read, zero Spark jobs.
+    *
+    * The file is written to a sibling temp name and renamed into place,
+    * so a crash mid-write leaves the previous manifest (or none), never
+    * a truncated one. Local and most object-store filesystems replace
+    * the target in the rename; one that refuses an existing target
+    * (HDFS) gets a delete first — a crash between the two leaves no
+    * manifest, which readers treat as a legacy index and derive the
+    * geometry from the stored artifacts.
+    */
   private[graft] def writeIndexManifest(spark: SparkSession, dir: String,
       fields: Seq[(String, String)]): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // every full index write gets a fresh nonce: the loaded-artifact
-    // cache folds it into its key, so a rewrite that happens to
+    // every full index write gets a fresh nonce: the generation-keyed
+    // caches fold it into their key, so a rewrite that happens to
     // reproduce the (mtime, count, bytes) generation stamp still misses
-    val all = fields :+
-      ("write_id" -> s"${System.nanoTime()}x${manifestWriteCounter.incrementAndGet()}")
-    val json = all.map { case (k, v) =>
-      // unquoted only for well-formed integers — the digit-or-dash
-      // heuristic emitted invalid JSON for "" and unquoted garbage for
-      // values like "1-2"
+    val writeId = s"${System.nanoTime()}x${manifestWriteCounter.incrementAndGet()}"
+    val json = (fields :+ ("write_id" -> writeId)).map { case (k, v) =>
+      // unquoted only for well-formed integers
       "\"" + k + "\":" + (if (v.matches("-?\\d+")) v else "\"" + v + "\"")
     }.mkString("{", ",", "}")
-    val out = fs.create(p, true)
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest.json.$writeId.tmp")
+    val out = fs.create(tmp, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, p)) {
+      fs.delete(p, false)
+      require(fs.rename(tmp, p),
+        s"writeIndexManifest: rename($tmp, $p) failed — the new manifest remains at $tmp")
+    }
   }
+
+  private val manifestPair = """"([A-Za-z_]+)":(-?\d+|"[^"]*")"""
+  private val manifestObject = s"""\\{(?:$manifestPair(?:,$manifestPair)*)?\\}""".r
+
+  /** Read back [[writeIndexManifest]]. None for a pre-manifest (legacy)
+    * index — callers derive geometry from the stored artifacts instead
+    * ([[storedGeometry]]). Anything that is not one complete flat JSON
+    * object fails loudly: a lenient read of a truncated file
+    * (`{"kind":"ivf","cells":1` cut from `"cells":16`) would silently
+    * hand maintenance the wrong geometry.
+    */
+  private[graft] def readIndexManifest(spark: SparkSession,
+      dir: String): Option[Map[String, String]] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+                 finally in.close()
+      if (!manifestObject.matches(json))
+        throw new IllegalStateException(s"corrupt index manifest at $p — " +
+          s"not one complete JSON object (truncated write?): '${json.take(200)}'")
+      Some(manifestPair.r.findAllMatchIn(json).map(mt =>
+        mt.group(1) -> mt.group(2).stripPrefix("\"").stripSuffix("\"")).toMap)
+    }
+  }
+
+  /** The geometry a stored IVF index was WRITTEN with: its codec (kind,
+    * plus m/subDim/k for PQ), its cell count, and `target_cell_size`
+    * for a sized build.
+    */
+  private[graft] final case class StoredGeometry(codec: IvfCodec, cells: Int,
+      targetCellSize: Option[Int])
+
+  /** Read [[StoredGeometry]] back from the index — the only source of
+    * geometry for append, maintain and search, so no caller can hold a
+    * stale one. Manifest first (one FS read, no Spark job); a legacy
+    * pre-manifest index derives every value from the stored artifacts
+    * (bounded aggregates over the cells- and m·k-sized tables; the
+    * codec from which artifacts and payload columns exist) instead of
+    * defaulting — a hardcoded default would silently retrain e.g. a
+    * 32-cell index down to 8 cells.
+    */
+  private[graft] def storedGeometry(spark: SparkSession,
+      dir: String): StoredGeometry = {
+    val mf = readIndexManifest(spark, dir).getOrElse(Map.empty)
+    val codec = mf.get("kind") match {
+      case Some(Flat.kind) => Flat
+      case Some(Sq8.kind) => Sq8
+      case Some("ivfpq") => storedPq(spark, dir, mf)
+      case Some(other) => throw new IllegalArgumentException(
+        s"index at $dir is kind '$other', not an IVF-family index — use " +
+          s"the ${indexFamily(other)} operator family")
+      case None =>
+        require(pathExists(spark, s"$dir/assignment"),
+          s"no IVF index at $dir (missing assignment table)")
+        if (pathExists(spark, s"$dir/pq_centroids")) storedPq(spark, dir, mf)
+        else if (spark.read.parquet(s"$dir/assignment").columns.contains("q")) Sq8
+        else Flat
+    }
+    val cells = mf.get("cells").map(_.toInt).getOrElse(
+      spark.read.parquet(s"$dir/centroids")
+        .agg(countDistinct(col("cell"))).head().getLong(0).toInt)
+    StoredGeometry(codec, cells, mf.get("target_cell_size").map(_.toInt))
+  }
+
+  /** PQ codebook geometry: manifest fields when present, else derived
+    * from the stored codebooks (m = distinct subspaces, k = codewords
+    * per subspace, subDim = codeword width). Either way a missing or
+    * empty codebook table fails loudly: an empty broadcast codebook
+    * makes every downstream join silently drop all rows.
+    */
+  private def storedPq(spark: SparkSession, dir: String,
+      mf: Map[String, String]): Pq = {
+    // FS metadata check first — keeps the manifest path job-free
+    require(countDataFiles(spark, s"$dir/pq_centroids") > 0,
+      s"no PQ codebooks found at $dir — the pq_centroids table has no " +
+        "data files (partial restore?)")
+    if (Seq("m", "subDim", "k").forall(mf.contains))
+      Pq(mf("m").toInt, mf("subDim").toInt, mf("k").toInt)
+    else {
+      val g = spark.read.parquet(s"$dir/pq_centroids")
+        .agg(countDistinct(col("sub")).as("m"),
+          countDistinct(col("cell")).as("k"),
+          max(size(col("c"))).cast("long").as("subDim")).head()
+      require(g.getLong(0) > 0,
+        s"no PQ codebooks found at $dir — the pq_centroids table is empty")
+      Pq(g.getLong(0).toInt, g.getLong(2).toInt, g.getLong(1).toInt)
+    }
+  }
+
+  /** The stored PQ codec, or a loud kind error naming the right family. */
+  private def storedPqCodec(spark: SparkSession, dir: String,
+      label: String): Pq =
+    storedGeometry(spark, dir).codec match {
+      case pq: Pq => pq
+      case c => throw new IllegalArgumentException(
+        kindMismatch(label, dir, c.kind, "ivfpq"))
+    }
 
   /** Tombstone-delete from a stored index (either layout — deletion is
     * assignment-level): the ids land as one tiny id-only parquet file
@@ -1079,106 +1045,42 @@ object Sink {
     newEmb.select("vec_id", "embedding")
       .groupBy("vec_id").agg(min("embedding").as("embedding"))
 
-  /** Fail loudly when an operator is pointed at an index of the other
-    * layout: `maintainIvfIndex` on an IVF-PQ tree would retrain it into
-    * a plain-IVF tree (destroying the codebooks) or append rows with no
-    * codes column (silently invisible to ADC serving). Kind is checked
-    * whenever the manifest records it; a legacy pre-manifest index has
-    * no kind to check (its callers own the layout, as before).
+  /** Operator family serving an index kind (for kind-mismatch errors). */
+  private def indexFamily(kind: String): String = kind match {
+    case "ivfpq" => "IVF-PQ"
+    case "ivfsq8" => "IVF-SQ8"
+    case "dedup_text" => "dedup-index"
+    case "bpe_tokenizer" => "BPE-tokenizer"
+    case _ => "IVF"
+  }
+
+  private def kindMismatch(label: String, dir: String, kind: String,
+      expected: String): String =
+    s"$label: index at $dir is kind '$kind', not '$expected' — use the " +
+      s"${indexFamily(kind)} operator family"
+
+  /** Fail loudly when an operator is pointed at an index of another
+    * layout. Kind is checked whenever the manifest records it; a legacy
+    * pre-manifest index has no kind to check.
     */
   private def requireIndexKind(spark: SparkSession, dir: String,
       expected: String, label: String): Unit =
     readIndexManifest(spark, dir).flatMap(_.get("kind")).foreach { kind =>
-      require(kind == expected,
-        s"$label: index at $dir is kind '$kind', not '$expected' — use " +
-          s"the ${kind match {
-            case "ivfpq" => "IVF-PQ"
-            case "ivfsq8" => "IVF-SQ8"
-            case "dedup_text" => "dedup-index"
-            case "bpe_tokenizer" => "BPE-tokenizer"
-            case _ => "IVF"
-          }} operator family")
+      require(kind == expected, kindMismatch(label, dir, kind, expected))
     }
-
-  /** Read back [[writeIndexManifest]]. None for a pre-manifest (legacy)
-    * index — callers fall back to deriving geometry from the stored
-    * codebooks.
-    */
-  private[graft] def readIndexManifest(spark: SparkSession,
-      dir: String): Option[Map[String, String]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val kv = """"([A-Za-z_]+)":"?([^",}]+)"?""".r
-      Some(kv.findAllMatchIn(json).map(mt => mt.group(1) -> mt.group(2)).toMap)
-    }
-  }
-
-  /** Require the caller-supplied PQ geometry to match the STORED index:
-    * manifest fast path (one FS read, no Spark job — the path every
-    * index written since the manifest landed takes), codebook-aggregate
-    * fallback for legacy indexes. A mismatch would otherwise silently
-    * produce garbage instead of an error — `slice()` past the embedding
-    * end yields short subvectors and `zip_with` pads the other side
-    * with nulls, so wrong-geometry codes/scores still "compute".
-    */
-  private[graft] def checkPqGeometry(spark: SparkSession, dir: String,
-      pqc: => DataFrame, m: Int, subDim: Int): Unit =
-    readIndexManifest(spark, dir) match {
-      case Some(mf) if mf.contains("m") && mf.contains("subDim") =>
-        val (sm, sd) = (mf("m").toInt, mf("subDim").toInt)
-        require(sm == m && sd == subDim,
-          s"stored PQ geometry (m=$sm, subDim=$sd) does not match " +
-            s"caller-supplied (m=$m, subDim=$subDim) — pass the values " +
-            "the index was written with")
-        // the manifest fast path must not LOSE the loud failure on a
-        // missing codebook table (partial restore, failed rewrite): an
-        // empty broadcast codebook makes every downstream join silently
-        // drop all rows. FS metadata check only — still no Spark job.
-        require(pathExists(spark, s"$dir/pq_centroids") &&
-            countDataFiles(spark, s"$dir/pq_centroids") > 0,
-          s"index at $dir carries a manifest but no PQ codebook data " +
-            "files — the pq_centroids table is missing or empty " +
-            "(partial restore?)")
-      case _ => requirePqGeometry(pqc, m, subDim)
-    }
-
-  /** Legacy-index geometry check: m = distinct subspace count, subDim =
-    * codeword width, derived from the stored codebooks (m×k rows — the
-    * one-row aggregate is cheap, but it IS a Spark job; manifest-bearing
-    * indexes skip it via [[checkPqGeometry]]).
-    */
-  private def requirePqGeometry(pqc: DataFrame, m: Int, subDim: Int): Unit = {
-    val r = pqc.agg(
-      countDistinct(col("sub")).as("m"),
-      min(size(col("c"))).as("sd_min"),
-      max(size(col("c"))).as("sd_max")).head()
-    // min/size aggregates return NULL over an empty frame — unboxing
-    // that would raise an opaque NPE instead of the diagnostic
-    require(!r.isNullAt(1) && !r.isNullAt(2),
-      "no PQ codebooks found — the pq_centroids table is empty or missing")
-    val (sm, sdMin, sdMax) = (r.getLong(0).toInt, r.getInt(1), r.getInt(2))
-    require(sm == m && sdMin == subDim && sdMax == subDim,
-      s"stored PQ geometry (m=$sm, subDim=$sdMin..$sdMax) does not match " +
-        s"caller-supplied (m=$m, subDim=$subDim) — pass the values the " +
-        "index was written with")
-  }
 
   /** Compact a stored index's assignment layout back to ONE file per
-    * cell. Every [[appendToIvfIndex]]/[[appendToIvfPqIndex]] batch
-    * adds one file per touched cell, so a continuously-fed index
+    * cell. Every [[appendToIvfIndex]] batch adds one file per touched
+    * cell, so a continuously-fed index
     * accumulates files linearly in batch count — and probe cost grows
     * with file count (open/footer per file), not data. Compaction is
     * the standard maintenance move: one shuffle by cell, rewrite via
     * temp-and-swap (reading and overwriting the same path in one job
-    * would corrupt it), schema-agnostic so the same op serves the IVF
-    * and IVF-PQ layouts. Run it on the [[ivfAppendDrift]] cadence.
+    * would corrupt it), schema-agnostic so the same op serves every
+    * codec's layout. Run it on the [[ivfAppendDrift]] cadence.
     */
   def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
+    recoverIvfIndex(spark, dir)
     val tmp = s"$dir/assignment__compact"
     // the full rewrite is the purge point for tombstoned rows — the
     // anti-join rides a pass that was already rewriting every row.
@@ -1198,12 +1100,8 @@ object Sink {
       else src.join(
         broadcast(spark.read.parquet(tombFiles: _*).select("vec_id").distinct()),
         Seq("vec_id"), "left_anti")
-    masked
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell").parquet(tmp)
+    cellLayout(masked).mode("overwrite")
+      .option("partitionOverwriteMode", "static").parquet(tmp)
     // Swap order matters on a LIVE index (compaction runs on the
     // append cadence, concurrent with serving): rename the old tree
     // ASIDE, rename the compacted tree into place, THEN delete the old
@@ -1236,16 +1134,17 @@ object Sink {
     * succeeded would let the delete(old) destroy the only remaining
     * copy. On a forward-rename failure the old tree is rolled back
     * into place before raising; a crash mid-swap leaves either the
-    * old tree recoverable at __old or the new one already live,
-    * never neither. FS resolves from dst's own URI (s3a://, hdfs://
-    * swap against the right store, not the default FS).
+    * old tree at __old (rolled back by [[recoverSwap]] on the next
+    * lifecycle call) or the new one already live, never neither. FS
+    * resolves from dst's own URI (s3a://, hdfs:// swap against the
+    * right store, not the default FS).
     */
   private def checkedSwap(spark: SparkSession, tmp: String, dst0: String,
       label: String): Unit = {
     val dst = new org.apache.hadoop.fs.Path(dst0)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(dst0 + "__old")
-    fs.delete(old, true) // leftover from a crashed prior swap
+    recoverSwap(spark, dst0)
     require(fs.rename(dst, old),
       s"$label: rename($dst, $old) failed — target left untouched")
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
@@ -1258,6 +1157,34 @@ object Sink {
     }
     fs.delete(old, true) // both renames confirmed — old copy is redundant
     ()
+  }
+
+  /** Finish or undo a [[checkedSwap]] a crash interrupted. A crash
+    * after rename(dst → __old) and before rename(tmp → dst) leaves
+    * __old as the ONLY copy: roll it back into place. A leftover __old
+    * beside a live dst is redundant (both renames completed) and dies.
+    */
+  private def recoverSwap(spark: SparkSession, dst0: String): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(dst0)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new org.apache.hadoop.fs.Path(dst0 + "__old")
+    if (fs.exists(old)) {
+      if (fs.exists(dst)) fs.delete(old, true): Unit
+      else require(fs.rename(old, dst),
+        s"recoverSwap: rename($old, $dst) failed — recover manually from $old")
+    }
+  }
+
+  /** Roll back the two swaps the IVF lifecycle makes — the whole index
+    * dir (maintenance retrain) and its assignment table (compaction).
+    * Called by the mutating entry points before they read the index;
+    * maintenance is single-writer, so no swap is in flight there.
+    * Readers never recover: a search racing a live swap must not
+    * rename trees under it.
+    */
+  private def recoverIvfIndex(spark: SparkSession, dir: String): Unit = {
+    recoverSwap(spark, dir)
+    recoverSwap(spark, s"$dir/assignment")
   }
 
   /** Per-cell data-file counts from one recursive FS listing — the
@@ -1293,6 +1220,7 @@ object Sink {
     */
   def compactIvfIndexSelective(spark: SparkSession, dir: String,
       minFilesPerCell: Int = 2, fullRewriteAbove: Double = 0.4): Int = {
+    recoverIvfIndex(spark, dir)
     val assignPath = s"$dir/assignment"
     val counts = cellFileCounts(spark, assignPath)
     val fragmented = counts
@@ -1317,12 +1245,8 @@ object Sink {
     val slice = spark.read.parquet(assignPath)
       .filter(col("cell").isin(fragmented: _*))
       .localCheckpoint()
-    slice
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(assignPath)
+    cellLayout(slice).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(assignPath)
     org.apache.spark.sql.GraftShims.uncheckpoint(slice)
     fragmented.size
   }
@@ -1339,124 +1263,84 @@ object Sink {
   }
 
   /** The composed index-maintenance operator — the production "a new
-    * batch arrived" decision in ONE call:
-    *  1. drift-check the batch against the stored index
-    *     ([[ivfAppendDrift]], batch assigned with the FROZEN
-    *     centroids);
-    *  2. if the PSI crosses `threshold` → RETRAIN on stored ∪ batch.
+    * batch arrived" decision in ONE call, for every codec:
+    *  1. drift-check the batch against the stored index (cell PSI,
+    *     [[ivfAppendDrift]]'s verdict, batch assigned with the FROZEN
+    *     centroids; for PQ also the per-subspace code PSI,
+    *     [[ivfPqCodeDrift]]'s, which catches subvector shift the
+    *     coarse PSI can't see);
+    *  2. if either crosses `threshold` → RETRAIN on stored ∪ batch.
     *     The new index is built into a sibling tree while the stored
     *     vectors stream out of the old one (never read-and-overwritten
-    *     in one job), then swapped in with the [[compactIvfIndex]]
-    *     checked-rename discipline — a crash mid-swap leaves either
-    *     the old index recoverable or the new one live, never neither;
-    *  3. else → APPEND against the frozen centroids
+    *     in one job), then swapped in with the checked-rename
+    *     discipline — a crash mid-swap leaves either the old index
+    *     recoverable or the new one live, never neither;
+    *  3. else → APPEND against the frozen artifacts
     *     ([[appendToIvfIndex]]) and, once the accumulated append
-    *     slivers exceed `compactFilesPerCell` files per cell, fold the
-    *     layout back to one file per cell ([[compactIvfIndex]]).
-    * Cell count for the retrain comes from the index's own manifest
-    * (the geometry it was WRITTEN with), not the caller — `cells` is
-    * only the pre-manifest-index fallback.
+    *     slivers reach `compactFilesPerCell` files per cell, fold the
+    *     fragmented cells back to one file each
+    *     ([[compactIvfIndexSelective]]).
+    * Codec and geometry come from the index itself ([[storedGeometry]]
+    * — the values it was WRITTEN with); a sized index re-derives its
+    * cell count from the union on retrain.
     *
     * Returns a ONE-ROW decision log — branch taken, PSI, row/file
     * counts before and after — so maintenance runs are auditable with
-    * a plain query over their collected logs.
+    * a plain query over their collected logs. A PQ index logs
+    * `psi_coarse` and `psi_code_max` where the others log `psi`.
     */
   def maintainIvfIndex(spark: SparkSession, batch: DataFrame, dir: String,
-      threshold: Double = 0.25, cells: Int = 8, iters: Int = 2,
+      threshold: Double = 0.25, iters: Int = 2,
       compactFilesPerCell: Int = 4): DataFrame = {
     import spark.implicits._
-    requireIndexKind(spark, dir, "ivf", "maintainIvfIndex")
-    val storedCells = readIndexManifest(spark, dir)
-      .flatMap(_.get("cells")).map(_.toInt)
-    val o = maintainCore(spark, batch, dir, threshold, compactFilesPerCell,
-      extraDue = false,
-      cadenceCells = storedCells.getOrElse(
-        spark.read.parquet(s"$dir/centroids").select("cell")
-          .distinct().count().toInt),
-      retrainWrite = (union, tmp) => manifestTargetCellSize(spark, dir) match {
-        // a SIZED index re-derives cells from the union (the fixed-size
-        // invariant survives the index's own growth); a probe-layout
-        // index keeps its stored cell count
-        case Some(sz) => writeIvfIndexSized(union, tmp, sz, iters); ()
-        case None => writeIvfIndex(union, tmp, storedCells.getOrElse(cells), iters)
-      },
-      append = (u, a) => appendAssignedIvf(u, a, dir),
-      label = "maintainIvfIndex")
-    Seq((o.action, o.psi, o.due, o.nStored, o.nBatch, o.nAfter,
-        o.filesBefore, o.filesAfter, o.compacted))
-      .toDF("action", "psi", "retrain_due", "n_stored_before", "n_batch",
-        "n_after", "files_before", "files_after", "compacted")
-  }
-
-  private case class MaintainOutcome(action: String, psi: Double,
-      due: Boolean, nStored: Long, nBatch: Long, nAfter: Long,
-      filesBefore: Int, filesAfter: Int, compacted: Boolean)
-
-  /** The branch-and-log skeleton shared by [[maintainIvfIndex]] and
-    * [[maintainIvfPqIndex]] — ONE implementation of the decision loop
-    * so the two tiers' logs cannot drift apart. Tier-specific parts
-    * come in as values: the extra drift tripwire (the PQ code PSI),
-    * the cadence cell count, and the two writers.
-    */
-  private def maintainCore(spark: SparkSession, batch: DataFrame,
-      dir: String, threshold: Double, compactFilesPerCell: Int,
-      extraDue: Boolean, cadenceCells: => Int,
-      retrainWrite: (DataFrame, String) => Unit,
-      append: (DataFrame, DataFrame) => Unit, label: String): MaintainOutcome = {
+    recoverIvfIndex(spark, dir)
+    val g = storedGeometry(spark, dir)
     val assignPath = s"$dir/assignment"
+    // dedupe + cell + encode the batch ONCE per drop (checkpointed,
+    // batch-sized): the drift counts, the tombstone audit and the
+    // append/retrain writer all read it
+    val rows = encodeBatch(spark, dir, g.codec, dedupBatch(batch)).localCheckpoint()
+    val uniq = rows.select("vec_id", "embedding")
+    // (incomingMap is BATCH-cells-sized — bounded by the micro-batch,
+    // never the index — so it is collected on both branches below)
+    val incomingMap = rows.groupBy("cell").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // DRIVER-SIDE drift verdict: the stored per-cell counts and the
     // centroid grid are generation-cached driver maps, so the whole
-    // pre-flight costs ONE batch pass — instead of the cells-sized
-    // DataFrame chain (multi-join + window + broadcast: a dozen tiny
-    // driver jobs per drop, the replay storm's dominant fixed cost).
-    // driftVerdictDriverSide reproduces ivfAppendDrift's arithmetic
-    // bit-for-bit (spec-pinned), so the decision log's oracle hashes
-    // are unchanged. The deduped batch and its assignment are
-    // checkpointed ONCE and shared by the drift counts, the tombstone
-    // audit, and the append/retrain writer — previously every append
-    // re-deduped and re-assigned the batch the drift had just scored.
-    // (incomingMap is BATCH-cells-sized — bounded by the micro-batch,
-    // never the index — so it is collected on both branches below.)
-    //
-    // GEOMETRY GUARD: the driver maps hold one entry per cell, so they
-    // are only legal while cells ≤ maxDriverMapEntries. Above the bound
-    // the pre-flight takes the distributed branch — one aggregate over
-    // the assignment per drop (bit-identical verdict via the shared
-    // psiFromTermSum), index-proportional cost, and no generation
-    // seeding (there is no map to seed).
-    val cent = loadIvfCentroids(spark, dir)
-    val driverMapsFit = indexCellGeometry(spark, dir) <= maxDriverMapEntries
-    val uniq = dedupBatch(batch).localCheckpoint()
-    val assignedBatch = Similarity.assignWithCentroids(uniq, cent)
-      .select("vec_id", "cell").localCheckpoint()
-    val incomingMap = assignedBatch
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // pre-flight costs ONE batch pass instead of the cells-sized
+    // DataFrame chain. GEOMETRY GUARD: the maps hold one entry per
+    // cell, so above maxDriverMapEntries the pre-flight takes the
+    // distributed branch — one aggregate over the assignment per drop
+    // (bit-identical verdict via the shared psiFromTermSum) and no
+    // generation seeding (there is no map to seed).
     val (psi, coarseDue, tStoredPhys, storedMapOpt) =
-      if (driverMapsFit) {
-        val gridCells = centroidCellIds(spark, dir)
-        val storedMap = storedCellCounts(spark, dir)
+      if (g.cells <= maxDriverMapEntries) {
+        val gridCells = centroidCellIds(spark, dir, g.cells)
+        val storedMap = storedCellCounts(spark, dir, g.cells)
         val (p, _, d) =
           driftVerdictDriverSide(gridCells, storedMap, incomingMap, threshold)
         (p, d, gridCells.iterator.map(storedMap.getOrElse(_, 0L)).sum,
           Some(storedMap))
       } else {
-        val (p, d, tS) = driftVerdictDistributed(spark, cent, assignPath,
-          incomingMap, threshold)
+        val (p, d, tS) = driftVerdictDistributed(spark,
+          loadIvfCentroids(spark, dir), assignPath, incomingMap, threshold)
         (p, d, tS, None)
       }
-    // LIVE counts for the log: the drift frame counts physical rows
-    // (footer-only by design — it cannot see tombstones). Only while
+    val code = g.codec match {
+      case pq: Pq => Some(pqCodeVerdict(spark, dir, rows, pq.m, threshold))
+      case _ => None
+    }
+    // LIVE counts for the log: the drift counts are physical rows
+    // (footer-only by design — they cannot see tombstones). Only while
     // deletes are pending, make the audit EXACT: subtract the MASKED
     // PHYSICAL rows (plain inner join against the tiny distinct
     // tombstone set — no distinct on the assignment side, because a
     // tombstoned id that was later re-appended has TWO masked physical
     // rows and both must come off the physical n_stored), and count the
-    // batch's live ids with a batch-sized anti-join. Tombstoned ids the
-    // index never held (out-of-order CDC deletes) simply match nothing.
-    // Zero extra jobs when no delete ever happened. Both branches then
-    // land on the same n_after = live stored + live batch: the append
-    // masks at serve time, the retrain purges.
+    // batch's live ids with a batch-sized anti-join. Zero extra jobs
+    // when no delete ever happened. Both branches then land on the same
+    // n_after = live stored + live batch: the append masks at serve
+    // time, the retrain purges.
     val nBatch = incomingMap.valuesIterator.sum // as delivered (per id)
     val (nTombLive, nBatchLive) = tombstones(spark, dir) match {
       case None => (0L, nBatch)
@@ -1468,8 +1352,7 @@ object Sink {
         (tl, bl)
     }
     val nStored = tStoredPhys - nTombLive
-    val touched = incomingMap.size // every entry counts ≥ 1 batch row
-    val due = coarseDue || extraDue
+    val due = coarseDue || code.exists(_.due)
     val filesBefore = countDataFiles(spark, assignPath)
     var compacted = false
     val (action, filesAfter) = if (due) {
@@ -1482,204 +1365,120 @@ object Sink {
       val tmp = dir + "__retrain"
       // the writer materializes the union INTO the sibling tree —
       // every read of the old assignment completes before the swap
-      retrainWrite(union, tmp)
+      writeIvfIndex(union, tmp, g.codec,
+        g.targetCellSize.fold[IvfCells](Cells(g.cells))(CellSize), iters)
       // the swap replaces the WHOLE index dir: the tombstones die with
-      // the old tree (the rebuilt one starts clean — both union sides
-      // were masked above). NOTE the single-writer contract: a delete
-      // landing DURING the retrain window is lost with the old tree;
+      // the old tree. NOTE the single-writer contract: a delete landing
+      // DURING the retrain window is lost with the old tree;
       // maintenance is a single-writer operation, unlike
       // compactIvfIndex whose cleanup is pinned to the file set it
       // consumed and therefore tolerates concurrent deletes.
-      checkedSwap(spark, tmp, dir, label)
+      checkedSwap(spark, tmp, dir, "maintainIvfIndex")
       ("retrain", countDataFiles(spark, assignPath))
     } else {
-      append(uniq, assignedBatch)
+      cellLayout(rows).mode("append").parquet(assignPath)
       // one appended file per touched cell (the append layout
       // invariant) — DERIVE the post-append count instead of
-      // re-listing the whole tree twice; only a compaction (which
-      // rewrites an unknown file set) re-lists for the log
-      val appended = filesBefore + touched
-      if (appended >= compactFilesPerCell * cadenceCells) {
-        // SELECTIVE: only fragmented cells rewrite — cost ∝ the
-        // appended slivers, never the whole index
+      // re-listing the whole tree; only a compaction (which rewrites
+      // an unknown file set) re-lists for the log
+      val appended = filesBefore + incomingMap.size
+      if (appended >= compactFilesPerCell * g.cells) {
         compactIvfIndexSelective(spark, dir, minFilesPerCell = 2)
         compacted = true
         ("append", countDataFiles(spark, assignPath))
       } else {
-        // seed the post-append generation's stored-count cache
+        // seed the post-append generation's count caches
         // arithmetically — both sides are already driver maps, so the
-        // NEXT drop's pre-flight skips the whole-index count scan.
-        // (A compaction above rewrote physical rows — its generation is
-        // left unseeded and the next pre-flight rescans once. On the
-        // over-bound distributed branch there is no map to seed.)
-        storedMapOpt.foreach { storedMap =>
-          seedCellCounts(spark, dir,
-            (storedMap.keySet ++ incomingMap.keySet).iterator.map(c =>
-              c -> (storedMap.getOrElse(c, 0L) + incomingMap.getOrElse(c, 0L)))
-              .toMap)
-        }
+        // NEXT drop's pre-flight skips the whole-index scans. (A
+        // compaction above rewrote physical rows — its generation is
+        // left unseeded and the next pre-flight rescans once.)
+        storedMapOpt.foreach(m =>
+          cellCountCache.putIfAbsent(genKey(spark, assignPath),
+            addCounts(m, incomingMap)))
+        code.foreach(c =>
+          codeCountCache.putIfAbsent(genKey(spark, assignPath),
+            addCounts(c.stored, c.incoming)))
         ("append", appended)
       }
     }
-    // the per-drop checkpoints are fully consumed (the append/retrain
-    // writes completed above) — release their blocks before returning
-    org.apache.spark.sql.GraftShims.uncheckpoint(assignedBatch)
-    org.apache.spark.sql.GraftShims.uncheckpoint(uniq)
+    // the per-drop checkpoint is fully consumed (the append/retrain
+    // write completed above) — release its blocks before returning
+    org.apache.spark.sql.GraftShims.uncheckpoint(rows)
     // both branches add exactly the batch's LIVE rows (append is a
     // union masked at serve time; retrain trains on the masked
     // stored ∪ batch) — no post-action table count
-    MaintainOutcome(action, psi, due, nStored, nBatch, nStored + nBatchLive,
-      filesBefore, filesAfter, compacted)
+    val log = Seq((action, psi, code.fold(0.0)(_.psiMax), due, nStored,
+        nBatch, nStored + nBatchLive, filesBefore, filesAfter, compacted))
+      .toDF("action", "psi", "psi_code_max", "retrain_due", "n_stored_before",
+        "n_batch", "n_after", "files_before", "files_after", "compacted")
+    if (code.isDefined) log.withColumnRenamed("psi", "psi_coarse")
+    else log.drop("psi_code_max")
   }
 
-  /** [[maintainIvfIndex]] for the COMPRESSED tier — and the first
-    * operator whose geometry comes wholly from the index itself: cells
-    * / m / subDim / k are read from the manifest (the values the index
-    * was WRITTEN with), so the maintenance caller can't hold a stale
-    * geometry. Two drift tripwires gate the branch:
-    * coarse cell populations ([[ivfAppendDrift]]) AND per-subspace
-    * code populations ([[ivfPqCodeDrift]] — catches subvector shift
-    * the coarse PSI can't see); EITHER crossing `threshold` retrains
-    * both tiers on stored ∪ batch (sibling-tree build +
-    * checked-rename swap), otherwise the batch appends against the
-    * frozen artifacts with the same file-count compaction cadence.
-    * One-row decision log carries both PSIs.
+  /** The PQ code tripwire over one maintained drop: max per-subspace
+    * PSI, whether any subspace is due, and the two count maps the
+    * post-append seed adds up.
     */
-  def maintainIvfPqIndex(spark: SparkSession, batch: DataFrame, dir: String,
-      threshold: Double = 0.25, iters: Int = 2,
-      compactFilesPerCell: Int = 4): DataFrame = {
-    import spark.implicits._
-    requireIndexKind(spark, dir, "ivfpq", "maintainIvfPqIndex")
-    val (cells, m, subDim, k) = readIndexManifest(spark, dir) match {
-      case Some(f) if Seq("cells", "m", "subDim", "k").forall(f.contains) =>
-        (f("cells").toInt, f("m").toInt, f("subDim").toInt, f("k").toInt)
-      case _ =>
-        // legacy pre-manifest index: derive the WRITTEN geometry from
-        // the stored artifacts (two bounded aggregates — cells and
-        // m·k rows, subDim from the pivoted vector width). Hardcoded
-        // defaults here would silently retrain e.g. a 32-cell index
-        // down to 8 cells.
-        val g = spark.read.parquet(s"$dir/pq_centroids")
-          .agg(countDistinct(col("sub")).as("m"),
-            countDistinct(col("cell")).as("k"),
-            max(size(col("c"))).cast("long").as("subDim")).head()
-        require(g.getLong(0) > 0,
-          s"no PQ codebooks found at $dir — the pq_centroids table is " +
-            "empty; not an IVF-PQ index?")
-        val nc = spark.read.parquet(s"$dir/centroids")
-          .agg(countDistinct(col("cell"))).head().getLong(0).toInt
-        (nc, g.getLong(0).toInt, g.getLong(2).toInt, g.getLong(1).toInt)
-    }
-    // DRIVER-SIDE code verdict (the coarse twin's discipline): stored
-    // per-(sub, code) counts and the codebook grid are generation-
-    // cached maps; the batch's encoding is ONE collected job. The
-    // per-sub PSI formula is [[driftVerdictDriverSide]] verbatim with
-    // the sub's code set as the grid (k_sub plays n_cells) —
-    // bit-identical to ivfPqCodeDrift's window form (spec-pinned).
-    val pqc = loadPqCentroids(spark, dir)
-    checkPqGeometry(spark, dir, pqc, m, subDim)
+  private final case class CodeVerdict(psiMax: Double, due: Boolean,
+      stored: Map[(Int, Long), Long], incoming: Map[(Int, Long), Long])
+
+  /** DRIVER-SIDE code verdict (the coarse verdict's discipline): stored
+    * per-(sub, code) counts and the codebook grid are generation-
+    * cached maps; the batch's codes (already encoded in `rows`) cost
+    * ONE collected job. The per-sub PSI is [[driftVerdictDriverSide]]
+    * verbatim with the sub's code set as the grid (k_sub plays
+    * n_cells) — bit-identical to [[ivfPqCodeDrift]]'s window form.
+    */
+  private def pqCodeVerdict(spark: SparkSession, dir: String, rows: DataFrame,
+      m: Int, threshold: Double): CodeVerdict = {
     val codeGrid = pqCodeGrid(spark, dir)
-    val storedCode = storedCodeCounts(spark, dir)
-    // dedupe + encode ONCE per drop: the checkpointed per-id codes feed
-    // the drift counts here AND the append write below (previously the
-    // append re-encoded the batch the drift had just scored)
-    val uniq = dedupBatch(batch).localCheckpoint()
-    val codesPerId = pqEncode(uniq, pqc, m, subDim).localCheckpoint()
-    val incomingCode = codesPerId
+    val stored = storedCodeCounts(spark, dir)
+    val incoming = rows.select(posexplode(col("codes")).as(Seq("sub", "code")))
       .groupBy("sub", "code").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val subVerdicts = (0 until m).map { s0 =>
       driftVerdictDriverSide(codeGrid.getOrElse(s0, Seq.empty),
-        storedCode.collect { case ((s, c), n) if s == s0 => c -> n },
-        incomingCode.collect { case ((s, c), n) if s == s0 => c -> n },
+        stored.collect { case ((s, c), n) if s == s0 => c -> n },
+        incoming.collect { case ((s, c), n) if s == s0 => c -> n },
         threshold)
     }
-    val psiCodeMax = subVerdicts.map(_._1).max
-    val codeDue = subVerdicts.exists(_._3) // null-calibrated per sub
-    val o = maintainCore(spark, uniq, dir, threshold, compactFilesPerCell,
-      extraDue = codeDue,
-      cadenceCells = cells,
-      retrainWrite = (union, tmp) => manifestTargetCellSize(spark, dir) match {
-        case Some(sz) =>
-          writeIvfPqIndexSized(union, tmp, sz, iters, m, subDim, k); ()
-        case None => writeIvfPqIndex(union, tmp, cells, iters, m, subDim, k)
-      },
-      append = (u, a) => appendAssignedPq(u, a, codesPerId, dir),
-      label = "maintainIvfPqIndex")
-    // both per-drop checkpoints are fully consumed by maintainCore
-    org.apache.spark.sql.GraftShims.uncheckpoint(codesPerId)
-    org.apache.spark.sql.GraftShims.uncheckpoint(uniq)
-    if (o.action == "append" && !o.compacted)
-      seedCodeCounts(spark, dir,
-        (storedCode.keySet ++ incomingCode.keySet).iterator.map(kk =>
-          kk -> (storedCode.getOrElse(kk, 0L) + incomingCode.getOrElse(kk, 0L)))
-          .toMap)
-    Seq((o.action, o.psi, psiCodeMax, o.due, o.nStored, o.nBatch, o.nAfter,
-        o.filesBefore, o.filesAfter, o.compacted))
-      .toDF("action", "psi_coarse", "psi_code_max", "retrain_due",
-        "n_stored_before", "n_batch", "n_after",
-        "files_before", "files_after", "compacted")
+    // null-calibrated per sub
+    CodeVerdict(subVerdicts.map(_._1).max, subVerdicts.exists(_._3),
+      stored, incoming)
   }
 
-  /** Fold a new vector batch into a stored IVF-PQ index WITHOUT
-    * retraining — the [[appendToIvfIndex]] contract extended to the
-    * compressed tier: the batch coarse-assigns against the STORED
-    * centroids AND encodes against the STORED per-subspace codebooks
-    * (both broadcast), then appends into the cell-partitioned layout
-    * (one new file per touched cell). Cost is two broadcast passes
-    * over the batch, never a Lloyd's rerun; [[searchIvfPqIndex]]
-    * serves the union immediately. Pair with [[ivfAppendDrift]] as
-    * the retrain tripwire — it reads the same assignment layout.
+  /** [[cellCountCache]]'s compressed-tier sibling: per-(subspace, code)
+    * PHYSICAL populations of a stored IVF-PQ assignment, cached per
+    * generation and seeded arithmetically after un-compacted appends —
+    * the code-drift pre-flight otherwise re-explodes the whole codes
+    * column per drop. m×k-sized driver map.
     */
-  def appendToIvfPqIndex(newEmb: DataFrame, dir: String,
-      m: Int = 4, subDim: Int = 16): Unit = {
-    val spark = newEmb.sparkSession
-    requireIndexKind(spark, dir, "ivfpq", "appendToIvfPqIndex")
-    // dedupe FIRST (the appendToIvfIndex key contract) — here a
-    // duplicated vec_id would additionally corrupt the codes column:
-    // collect_list over two rows per id yields a 2m-long codes array
-    val uniq = dedupBatch(newEmb)
-    val cent = loadIvfCentroids(spark, dir)
-    val pqc = loadPqCentroids(spark, dir)
-    checkPqGeometry(spark, dir, pqc, m, subDim)
-    appendAssignedPq(uniq,
-      Similarity.assignWithCentroids(uniq, cent).select("vec_id", "cell"),
-      pqEncode(uniq, pqc, m, subDim), dir)
-  }
+  private val codeCountCache = genCache[Map[(Int, Long), Long]](maxEntries = 32)
 
-  /** Per-id PQ encoding of a (deduped) batch against the STORED
-    * codebooks: (sub, vec_id, code) — shared by the append write and
-    * the maintain loop's code-drift counts, so a maintained drop
-    * encodes ONCE.
+  private[graft] def storedCodeCounts(spark: SparkSession,
+      dir: String): Map[(Int, Long), Long] =
+    cachedByGen(codeCountCache, spark, s"$dir/assignment") {
+      spark.read.parquet(s"$dir/assignment")
+        .select(posexplode(col("codes")).as(Seq("sub", "code")))
+        .groupBy("sub", "code").agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    }
+
+  /** Per-subspace codebook grids (sub → its code ids), cached per
+    * pq_centroids generation — [[centroidCellIds]]'s compressed-tier
+    * sibling, m×k-sized.
     */
-  private def pqEncode(uniq: DataFrame, pqc: DataFrame,
-      m: Int, subDim: Int): DataFrame =
-    (0 until m).map { s0 =>
-      val sub = uniq.select(col("vec_id"),
-        slice(col("embedding"), s0 * subDim + 1, subDim).as("embedding"))
-      Similarity.assignWithCentroids(sub,
-          pqc.filter(col("sub") === s0).select("cell", "c"))
-        .select(lit(s0).as("sub"), col("vec_id"), col("cell").as("code"))
-    }.reduce(_ unionByName _)
+  private val pqGridCache = genCache[Map[Int, Seq[Long]]](maxEntries = 32)
 
-  /** [[appendAssignedIvf]]'s PQ twin over pre-computed (uniq, coarse
-    * assignment, per-id codes).
-    */
-  private def appendAssignedPq(uniq: DataFrame, assigned: DataFrame,
-      codesPerId: DataFrame, dir: String): Unit = {
-    val codeArr = codesPerId.groupBy("vec_id")
-      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("ps"))
-      .select(col("vec_id"), expr("transform(ps, p -> p.code)").as("codes"))
-    assigned
-      .join(codeArr, "vec_id")
-      .join(uniq, "vec_id")
-      .select("vec_id", "codes", "embedding", "cell")
-      .repartition(col("cell")) // one appended file per touched cell
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assignment")
-  }
+  private[graft] def pqCodeGrid(spark: SparkSession,
+      dir: String): Map[Int, Seq[Long]] =
+    cachedByGen(pqGridCache, spark, s"$dir/pq_centroids") {
+      loadPqCentroids(spark, dir).select("sub", "cell")
+        .collect().map(r => r.getInt(0) -> r.getLong(1))
+        .groupBy(_._1).map { case (s, cs) => s -> cs.map(_._2).toSeq.sorted }
+    }
 
-  /** Code-level drift pre-flight for [[appendToIvfPqIndex]] — the
+  /** Code-level drift pre-flight for a PQ [[appendToIvfIndex]] — the
     * compressed-tier sibling of [[ivfAppendDrift]]: per (subspace,
     * code), the stored population vs the incoming batch's would-be
     * population (encoded with the STORED codebooks, no retrain), a
@@ -1690,78 +1489,20 @@ object Sink {
     * vectors live. Everything after the two grouped counts is
     * m×k-sized; the PSI carrier mirrors [[ivfAppendDrift]].
     */
-  /** [[cellCountCache]]'s compressed-tier sibling: per-(subspace, code)
-    * PHYSICAL populations of a stored IVF-PQ assignment, cached per
-    * generation and seeded arithmetically after un-compacted appends —
-    * the code-drift pre-flight otherwise re-explodes the whole codes
-    * column per drop. m×k-sized driver map.
-    */
-  private val codeCountCache =
-    new graft.BoundedLruCache[(SparkSession, String, Long, String), Map[(Int, Long), Long]](
-      maxEntries = 32, release = _ => ())
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => codeCountCache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => codeCountCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  private def storedCodeCounts(spark: SparkSession,
-      dir: String): Map[(Int, Long), Long] = {
-    graft.SessionCaches.watch(spark)
-    val key = assignGenKey(spark, dir)
-    codeCountCache.get(key).getOrElse {
-      val m = spark.read.parquet(s"$dir/assignment")
-        .select(posexplode(col("codes")).as(Seq("sub", "code")))
-        .groupBy("sub", "code").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      codeCountCache.putIfAbsent(key, m)
-    }
-  }
-
-  private def seedCodeCounts(spark: SparkSession, dir: String,
-      counts: Map[(Int, Long), Long]): Unit = {
-    codeCountCache.putIfAbsent(assignGenKey(spark, dir), counts)
-    ()
-  }
-
-  /** Per-subspace codebook grids (sub → its code ids), cached per
-    * pq_centroids generation — [[centroidCellIds]]'s compressed-tier
-    * sibling, m×k-sized.
-    */
-  private val pqGridCache =
-    new graft.BoundedLruCache[(SparkSession, String, Long, String), Map[Int, Seq[Long]]](
-      maxEntries = 32, release = _ => ())
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => pqGridCache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => pqGridCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  private def pqCodeGrid(spark: SparkSession, dir: String): Map[Int, Seq[Long]] = {
-    graft.SessionCaches.watch(spark)
-    val writeId = readIndexManifest(spark, dir)
-      .flatMap(_.get("write_id")).getOrElse("")
-    val key = (spark, s"$dir/pq_centroids",
-      artifactGeneration(spark, s"$dir/pq_centroids"), writeId)
-    pqGridCache.get(key).getOrElse {
-      val g = loadPqCentroids(spark, dir).select("sub", "cell")
-        .collect().map(r => r.getInt(0) -> r.getLong(1))
-        .groupBy(_._1).map { case (s, cs) => s -> cs.map(_._2).toSeq.sorted }
-      pqGridCache.putIfAbsent(key, g)
-    }
-  }
-
   def ivfPqCodeDrift(spark: SparkSession, batch: DataFrame, dir: String,
       m: Int = 4, subDim: Int = 16, threshold: Double = 0.25): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark2 = spark
     import spark2.implicits._
+    // a caller geometry that disagrees with the stored codebooks would
+    // silently score garbage (`slice()` past the embedding end yields
+    // short subvectors) — fail loudly instead
+    val Pq(sm, sd, _) = storedPqCodec(spark, dir, "ivfPqCodeDrift")
+    require(sm == m && sd == subDim,
+      s"stored PQ geometry (m=$sm, subDim=$sd) does " +
+        s"not match caller-supplied (m=$m, subDim=$subDim) — pass the " +
+        "values the index was written with")
     val pqc = loadPqCentroids(spark, dir)
-    checkPqGeometry(spark, dir, pqc, m, subDim)
     val stored = storedCodeCounts(spark, dir).toSeq
       .map { case ((s, c), n) => (s, c, n) }
       .toDF("sub", "code", "n_stored")
@@ -1803,264 +1544,37 @@ object Sink {
       .orderBy("sub", "code")
   }
 
-  /** Two-stage search over a stored IVF-PQ index ([[writeIvfPqIndex]]):
-    * (1) probe — queries rank the stored coarse centroids, each
-    * probing its `nprobe` nearest cells (the serving-time recall
-    * knob, same contract as [[searchIvfIndex]]);
-    * (2) ADC — each query builds its m×k lookup table against the
-    * stored codebooks (broadcast both ways), and every vector in the
-    * probed cells is scored as the exact DECIMAL sum of its m table
-    * entries, reading ONLY the codes column of the pruned partitions;
-    * (3) rerank — the top `cand` per query re-score by exact cosine
-    * against the embedding column of the same pruned partitions
-    * (broadcast candidate list). The corpus embedding table is never
-    * scanned beyond the nQueries query rows, and the full-width
-    * embedding column is only decoded for candidates' cells.
+  /** The probe stage every stored search shares: the nQueries query
+    * rows rank the STORED centroids (rounded L2, cell tiebreak — the
+    * training metric), each keeps its `nprobe` nearest cells, and the
+    * probe list is collected — ≤ nQueries×nprobe rows, bounded by the
+    * query batch, never by data. The collected rows serve twice: as
+    * the literal probed-cell list [[readProbedCells]] turns into a
+    * per-subdirectory read (Spark's dynamic partition pruning
+    * degenerates to `dynamicpruningexpression(true)` on this join
+    * shape, which would silently scan EVERY cell), and as a local
+    * (qid, cell, pn) relation the serving join broadcasts, instead of
+    * recomputing the probe ranking inside the broadcast build. Returns
+    * that relation and the tombstone-masked scan of the probed cells.
     */
-  def searchIvfPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
-      nQueries: Int = 10, k: Int = 3, cand: Int = 10,
-      m: Int = 4, subDim: Int = 16, nprobe: Int = 1): DataFrame = {
+  private def probeStoredCells(spark: SparkSession, emb: DataFrame, dir: String,
+      nQueries: Int, nprobe: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cent = loadIvfCentroids(spark, dir)
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        Similarity.toDouble(col("embedding")).as("qv"))
-    val pw = Window.partitionBy("qid").orderBy(col("pd"), col("cell"))
-    val probes = q.select("qid", "qv").crossJoin(broadcast(cent))
-      .withColumn("pd", Similarity.l2sq(col("qv"), col("c")))
-      .withColumn("pn", row_number().over(pw))
-      .filter(col("pn") <= nprobe)
-      .select("qid", "cell")
-    // per-query ADC lookup tables: nQueries × m × k rows — tiny
-    val pqc = loadPqCentroids(spark, dir)
-    checkPqGeometry(spark, dir, pqc, m, subDim)
-    val qsub = (0 until m).map { s0 =>
-      q.select(col("qid"),
-        lit(s0).as("sub"),
-        Similarity.toDouble(slice(col("qe"), s0 * subDim + 1, subDim)).as("qsv"))
-    }.reduce(_ unionByName _)
-    val lut = qsub.join(pqc, "sub")
-      .select(col("qid"), col("sub"), col("cell").as("code"),
-        Similarity.l2sq(col("qsv"), col("c")).as("dist"))
-    // probed-subdirectory read from the bounded probe list — DPP
-    // degenerates on this join shape (see searchIvfIndex), and both
-    // serving stages must scan (and LIST) only the probed cells.
-    // The collected rows double as the serving join's local relation
-    // (the searchIvfIndex one-probe-computation note).
     import spark.implicits._
-    val probeRows = probes.select("qid", "cell").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val probesLocal = probeRows.toDF("qid", "cell")
-    val probedCells = probeRows.map(_._2).distinct
-    val assignment = maskTombstones(spark, dir,
-      readProbedCells(spark, s"$dir/assignment", probedCells))
-    // stage 2: codes-only projection of the probed cells; the ADC sum
-    // is exact DECIMAL so ranking never touches a folded double
-    val adc = assignment.select("vec_id", "codes", "cell")
-      .join(broadcast(probesLocal), "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
-      .join(broadcast(lut), Seq("qid", "sub", "code"))
-      .groupBy("qid", "vec_id")
-      .agg(sum(col("dist").cast("decimal(18,6)")).as("adist"))
-    val cw = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
-    val candidates = adc.withColumn("crnk", row_number().over(cw))
-      .filter(col("crnk") <= cand)
-      .select("qid", "vec_id")
-    // stage 3: exact rerank from the co-located vectors, broadcast on
-    // the (nQueries × cand)-sized candidate list
-    val rer = assignment.select("vec_id", "embedding")
-      .join(broadcast(candidates.join(q.select("qid", "qe"), "qid")), "vec_id")
-      .withColumn("cos", Similarity.cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
-
-  /** Search a stored IVF index: queries rank the STORED centroids
-    * (rounded L2, cell tiebreak — the training metric), each probing
-    * its `nprobe` nearest cells, then score the assignment scan
-    * FILTERED to the probed cells. The vectors live IN the cell
-    * partitions ([[writeIvfIndex]] co-locates them), so a probe never
-    * joins the corpus-sized embedding table — the only scan of `emb`
-    * is the nQueries-bounded query side. `nprobe` is the serving-time
-    * recall knob, the stored twin of
-    * [[Similarity.ivfMultiProbeTopK]]'s: result-identical to the
-    * in-memory multiprobe at the same nprobe (spec-proven), nprobe=1
-    * reduces to [[Similarity.ivfTopK]]. The probed-cell literal
-    * filter is a ≤ nQueries×nprobe list — still bounded by the query
-    * batch, never by data.
-    */
-  /** Persist a trained IVF-SQ8 index — the int8 serving tier
-    * ([[Similarity.sq8TopK]]'s scheme) under the IVF layout: ONE
-    * cell-partitioned assignment table
-    * (vec_id, q: array<int>, n2, ma, embedding) plus the coarse
-    * centroids beside it. The columnar format makes the quantized scan
-    * a PROJECTION: serving reads only (vec_id, q, n2) of the probed
-    * cells — the 4×-smaller tier — while the embedding column stays
-    * co-located for exact rerank and for maintenance retrains. Codes
-    * come from the ONE quantization scheme ([[Similarity.sq8Codes]],
-    * shared with the in-memory tier and the export), so stored serving
-    * cannot diverge from [[Similarity.ivfSq8TopK]].
-    */
-  def writeIvfSq8Index(emb: DataFrame, dir: String, cells: Int = 8,
-      iters: Int = 2, corpusKey: Option[String] = None): Unit = {
-    require(iters >= 2, "a stored IVF-SQ8 index needs trained centroids (iters >= 2)")
-    val cent = (corpusKey match {
-      case Some(ck) =>
-        Similarity.kmeansAssignCachedWithCentroids(emb, cells, iters, ck)._2
-      case None => Similarity.kmeansAssignInternal(emb, cells, iters)._2.get
-    })
-    // cell + SQ8 codes are BOTH narrow per-row expressions (argmin over
-    // the broadcast centroids / per-vector max-abs quantization), so
-    // the whole layout is one projection over the scan + the cell
-    // repartition — the previous two vec_id shuffle-joins bought
-    // nothing (guide §2.4; see writeIvfIndex)
-    // overlap the model-sized artifact with the corpus-sized
-    // assignment write (guide §2.6; the writeIvfIndex pattern)
-    val centF = scala.concurrent.Future {
-      writeCentroidArtifact(cent, s"$dir/centroids")
-    }(scala.concurrent.ExecutionContext.global)
-    try {
-      withNearestCell(Similarity.withSq8Codes(emb.select("vec_id", "embedding")), cent)
-        .select("vec_id", "q", "n2", "ma", "embedding", "cell")
-        .repartition(col("cell")) // one file per cell (see writeIvfIndex)
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell").parquet(s"$dir/assignment")
-    } finally scala.concurrent.Await.ready(
-      centF, scala.concurrent.duration.Duration.Inf)
-    centF.value.get.get // surface an artifact-write failure
-    writeIndexManifest(spark = emb.sparkSession, dir = dir,
-      fields = Seq("kind" -> "ivfsq8", "cells" -> cells.toString))
-    // a full (re)write is a new generation — stale tombstones must not
-    // mask the new content (the writeIvfIndex contract)
-    clearTombstones(emb.sparkSession, dir)
-    if (corpusKey.isEmpty)
-      org.apache.spark.sql.GraftShims.uncheckpoint(cent)
-  }
-
-  /** Fold a new vector batch into a stored IVF-SQ8 index WITHOUT
-    * retraining: coarse-assign against the STORED centroids and
-    * quantize with the per-vector max-abs scheme (no codebook to go
-    * stale — unlike PQ, SQ8 appends never need code-drift tripwires
-    * beyond the coarse PSI). One broadcast pass over the batch, one
-    * appended file per touched cell.
-    */
-  def appendToIvfSq8Index(newEmb: DataFrame, dir: String): Unit = {
-    val spark = newEmb.sparkSession
-    requireIndexKind(spark, dir, "ivfsq8", "appendToIvfSq8Index")
-    val uniq = dedupBatch(newEmb)
-    val cent = loadIvfCentroids(spark, dir)
-    appendAssignedSq8(uniq,
-      Similarity.assignWithCentroids(uniq, cent).select("vec_id", "cell"), dir)
-  }
-
-  /** [[appendAssignedIvf]]'s SQ8 twin: quantize + write over the
-    * pre-computed pair (the per-vector max-abs codes need no stored
-    * artifact, so only the assignment is shared).
-    */
-  private def appendAssignedSq8(uniq: DataFrame, assigned: DataFrame,
-      dir: String): Unit =
-    assigned
-      .join(Similarity.sq8Codes(uniq), "vec_id")
-      .join(uniq, "vec_id")
-      .select("vec_id", "q", "n2", "ma", "embedding", "cell")
-      .repartition(col("cell")) // one appended file per touched cell
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/assignment")
-
-  /** Search a stored IVF-SQ8 index: queries rank the STORED centroids
-    * (rounded L2, cell tiebreak — the training metric), each probing
-    * its `nprobe` nearest cells, then the int8 codes of ONLY those
-    * cell partitions score against the on-the-fly-quantized query
-    * codes — exact 64-bit integer sums under one rounded IEEE tree,
-    * the [[Similarity.ivfSq8TopK]] math verbatim, so stored serving is
-    * result-identical to the in-memory tier at the same nprobe
-    * (spec-proven; the two share one oracle). The scan projects
-    * (vec_id, q, n2) — the embedding column of the index is never
-    * read; the only scan of `emb` is the nQueries-bounded query side.
-    */
-  def searchIvfSq8Index(spark: SparkSession, emb: DataFrame, dir: String,
-      nQueries: Int = 10, k: Int = 3, nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    requireIndexKind(spark, dir, "ivfsq8", "searchIvfSq8Index")
-    val cent = loadIvfCentroids(spark, dir)
-    val qRows = emb.filter(col("vec_id") < nQueries)
-    val q = qRows.select(col("vec_id").as("qid"),
-      Similarity.toDouble(col("embedding")).as("qv"))
-    val qCodes = Similarity.sq8Codes(qRows)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
     val pw = Window.partitionBy("qid").orderBy(col("pd"), col("cell"))
-    val probes = q.crossJoin(broadcast(cent))
+    val probeRows = emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"),
+        Similarity.toDouble(col("embedding")).as("qv"))
+      .crossJoin(broadcast(loadIvfCentroids(spark, dir)))
       .withColumn("pd", Similarity.l2sq(col("qv"), col("c")))
       .withColumn("pn", row_number().over(pw))
       .filter(col("pn") <= nprobe)
       .select("qid", "cell", "pn")
-    // literal partition filter from the bounded probe list (the
-    // searchIvfIndex contract — DPP degenerates on this join shape);
-    // the collected rows double as the serving join's local relation
-    import spark.implicits._
-    val probeRows = probes.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val probesLocal = probeRows.toDF("qid", "cell", "pn")
-    val probedCells = probeRows.map(_._2).distinct
-    val assignment = maskTombstones(spark, dir,
-      readProbedCells(spark, s"$dir/assignment", probedCells)
-        .select("vec_id", "q", "n2", "cell"))
-    val dotInt = aggregate(
-      zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val scored = assignment
-      .join(broadcast(probesLocal.join(qCodes, "qid")), "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .withColumn("qcos",
-        when(col("qn2") === 0L || col("n2") === 0L, lit(null).cast("double"))
-          .otherwise(round(dotInt.cast("double") /
-            (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0)))
-    val w = Window.partitionBy("qid").orderBy(desc("qcos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
-      .orderBy("qid", "rnk")
-  }
-
-  /** [[maintainIvfIndex]] for the SQ8 tier: same drift-gated
-    * branch-and-log skeleton ([[maintainCore]]), with the retrain
-    * rebuilding the int8 layout via [[writeIvfSq8Index]] and appends
-    * folding in via [[appendToIvfSq8Index]]. Only the coarse PSI gates
-    * the branch — the per-vector max-abs scheme has no trained
-    * codebook to drift (the PQ code-PSI tripwire has no SQ8 analogue).
-    * Geometry (cells) comes from the manifest, the values the index
-    * was WRITTEN with.
-    */
-  def maintainIvfSq8Index(spark: SparkSession, batch: DataFrame, dir: String,
-      threshold: Double = 0.25, iters: Int = 2,
-      compactFilesPerCell: Int = 4): DataFrame = {
-    import spark.implicits._
-    requireIndexKind(spark, dir, "ivfsq8", "maintainIvfSq8Index")
-    val storedCells = readIndexManifest(spark, dir)
-      .flatMap(_.get("cells")).map(_.toInt)
-    val o = maintainCore(spark, batch, dir, threshold, compactFilesPerCell,
-      extraDue = false,
-      cadenceCells = storedCells.getOrElse(
-        spark.read.parquet(s"$dir/centroids").select("cell")
-          .distinct().count().toInt),
-      retrainWrite = (union, tmp) => manifestTargetCellSize(spark, dir) match {
-        case Some(sz) => writeIvfSq8IndexSized(union, tmp, sz, iters); ()
-        case None => writeIvfSq8Index(union, tmp, storedCells.getOrElse(8), iters)
-      },
-      append = (u, a) => appendAssignedSq8(u, a, dir),
-      label = "maintainIvfSq8Index")
-    Seq((o.action, o.psi, o.due, o.nStored, o.nBatch, o.nAfter,
-        o.filesBefore, o.filesAfter, o.compacted))
-      .toDF("action", "psi", "retrain_due", "n_stored_before", "n_batch",
-        "n_after", "files_before", "files_after", "compacted")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    (probeRows.toDF("qid", "cell", "pn"),
+      maskTombstones(spark, dir, readProbedCells(spark, s"$dir/assignment",
+        probeRows.map(_._2).distinct)))
   }
 
   /** Read ONLY the probed cell partitions of an assignment layout, as
@@ -2090,44 +1604,24 @@ object Sink {
       spark.read.option("basePath", assignPath).parquet(paths: _*)
   }
 
+  /** Search a stored IVF index by exact cosine over the probed cells'
+    * co-located vectors ([[probeStoredCells]]) — a probe never joins
+    * the corpus-sized embedding table; the only scan of `emb` is the
+    * nQueries-bounded query side. `nprobe` is the serving-time recall
+    * knob, the stored twin of [[Similarity.ivfMultiProbeTopK]]'s:
+    * result-identical to the in-memory multiprobe at the same nprobe
+    * (spec-proven), nprobe=1 reduces to [[Similarity.ivfTopK]].
+    */
   def searchIvfIndex(spark: SparkSession, emb: DataFrame, dir: String,
       nQueries: Int = 10, k: Int = 3, nprobe: Int = 1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cent = loadIvfCentroids(spark, dir)
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("qv"))
-    val pw = Window.partitionBy("qid").orderBy(col("pd"), col("cell"))
-    val probes = q.select("qid", "qv").crossJoin(broadcast(cent))
-      .withColumn("pd", Similarity.l2sq(col("qv"), col("c")))
-      .withColumn("pn", row_number().over(pw))
-      .filter(col("pn") <= nprobe)
-      .select("qid", "cell")
-    // ≤ nQueries (qid, cell, qe) rows — THE broadcast side: the
+    val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
+    // ≤ nQueries×nprobe (qid, cell, qe) rows — THE broadcast side: the
     // cell-partitioned index scan streams against it (hash join), so
-    // the big side never shuffles and the corpus embedding table is
-    // never joined. The probed-cell list is collected to the driver
-    // (bounded by nQueries, never by data — the upsertPartitioned
-    // precedent) and applied as a LITERAL partition filter: Spark's
-    // dynamic partition pruning degenerates to
-    // `dynamicpruningexpression(true)` on this join shape (verified
-    // on the executed plan), which would silently scan EVERY cell.
-    // ONE probe computation: the probed-cell literal filter already
-    // collects the (bounded, ≤ nQueries×nprobe) probe list — reuse
-    // those rows as a local relation for the serving join instead of
-    // recomputing the probe ranking (query-side parquet scan +
-    // centroid broadcast + window) a second time inside the
-    // broadcast-build. Collected rows are deterministic, so the join
-    // input is identical.
-    import spark.implicits._
-    val probeRows = probes.select("qid", "cell").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val probesLocal = probeRows.toDF("qid", "cell")
-    val cand = probesLocal.join(q.select("qid", "qe"), "qid")
-    val probedCells = probeRows.map(_._2).distinct
-    val assignment = maskTombstones(spark, dir,
-      readProbedCells(spark, s"$dir/assignment", probedCells))
+    // the big side never shuffles
+    val cand = probes.select("qid", "cell")
+      .join(emb.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe")), "qid")
     val scored = assignment
       .join(broadcast(cand), "cell")
       .filter(col("qid") =!= col("vec_id"))
@@ -2136,6 +1630,93 @@ object Sink {
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select("qid", "cell", "rnk", "vec_id", "cos")
+      .orderBy("qid", "rnk")
+  }
+
+  /** Two-stage search over a stored IVF-PQ index, its codebook
+    * geometry read from the index: (1) probe ([[probeStoredCells]]);
+    * (2) ADC — each query builds its m×k lookup table against the
+    * stored codebooks (broadcast both ways), and every vector in the
+    * probed cells is scored as the exact DECIMAL sum of its m table
+    * entries, reading ONLY the codes column of the pruned partitions;
+    * (3) rerank — the top `cand` per query re-score by exact cosine
+    * against the embedding column of the same pruned partitions
+    * (broadcast candidate list). The full-width embedding column is
+    * only decoded for candidates' cells.
+    */
+  def searchIvfPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
+      nQueries: Int = 10, k: Int = 3, cand: Int = 10,
+      nprobe: Int = 1): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val Pq(m, subDim, _) = storedPqCodec(spark, dir, "searchIvfPqIndex")
+    val q = emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    // per-query ADC lookup tables: nQueries × m × k rows — tiny
+    val pqc = loadPqCentroids(spark, dir)
+    val qsub = (0 until m).map { s0 =>
+      q.select(col("qid"),
+        lit(s0).as("sub"),
+        Similarity.toDouble(slice(col("qe"), s0 * subDim + 1, subDim)).as("qsv"))
+    }.reduce(_ unionByName _)
+    val lut = qsub.join(pqc, "sub")
+      .select(col("qid"), col("sub"), col("cell").as("code"),
+        Similarity.l2sq(col("qsv"), col("c")).as("dist"))
+    val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
+    // stage 2: codes-only projection of the probed cells; the ADC sum
+    // is exact DECIMAL so ranking never touches a folded double
+    val adc = assignment.select("vec_id", "codes", "cell")
+      .join(broadcast(probes.select("qid", "cell")), "cell")
+      .filter(col("qid") =!= col("vec_id"))
+      .select(col("qid"), col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
+      .join(broadcast(lut), Seq("qid", "sub", "code"))
+      .groupBy("qid", "vec_id")
+      .agg(sum(col("dist").cast("decimal(18,6)")).as("adist"))
+    val cw = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
+    val candidates = adc.withColumn("crnk", row_number().over(cw))
+      .filter(col("crnk") <= cand)
+      .select("qid", "vec_id")
+    // stage 3: exact rerank from the co-located vectors, broadcast on
+    // the (nQueries × cand)-sized candidate list
+    val rer = assignment.select("vec_id", "embedding")
+      .join(broadcast(candidates.join(q, "qid")), "vec_id")
+      .withColumn("cos", Similarity.cosine(col("qe"), col("embedding")))
+    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
+    rer.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select("qid", "rnk", "vec_id", "cos")
+      .orderBy("qid", "rnk")
+  }
+
+  /** Search a stored IVF-SQ8 index: the int8 codes of ONLY the probed
+    * cell partitions ([[probeStoredCells]]) score against the
+    * on-the-fly-quantized query codes — exact 64-bit integer sums
+    * under one rounded IEEE tree, the [[Similarity.ivfSq8TopK]] math
+    * verbatim, so stored serving is result-identical to the in-memory
+    * tier at the same nprobe (spec-proven; the two share one oracle).
+    * The scan projects (vec_id, q, n2) — the embedding column of the
+    * index is never read.
+    */
+  def searchIvfSq8Index(spark: SparkSession, emb: DataFrame, dir: String,
+      nQueries: Int = 10, k: Int = 3, nprobe: Int = 2): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    requireIndexKind(spark, dir, Sq8.kind, "searchIvfSq8Index")
+    val qCodes = Similarity.sq8Codes(emb.filter(col("vec_id") < nQueries))
+      .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
+    val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
+    val dotInt = aggregate(
+      zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
+      lit(0L), (acc, x) => acc + x)
+    val scored = assignment.select("vec_id", "q", "n2", "cell")
+      .join(broadcast(probes.join(qCodes, "qid")), "cell")
+      .filter(col("qid") =!= col("vec_id"))
+      .withColumn("qcos",
+        when(col("qn2") === 0L || col("n2") === 0L, lit(null).cast("double"))
+          .otherwise(round(dotInt.cast("double") /
+            (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0)))
+    val w = Window.partitionBy("qid").orderBy(desc("qcos"), col("vec_id"))
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
       .orderBy("qid", "rnk")
   }
 

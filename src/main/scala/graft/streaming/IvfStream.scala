@@ -44,83 +44,36 @@ object IvfStream {
     Replay.deleteRecursively(path)
 
   /** Bounded replay: process every vector drop (one file per trigger),
-    * appending each micro-batch into the stored index at `indexDir`.
+    * appending each micro-batch into the stored index at `indexDir`
+    * through [[Sink.appendToIvfIndex]] — any codec: cells and payload
+    * (PQ codes included) depend only on the frozen stored artifacts,
+    * so the order-invariance argument holds for every layout.
     */
   def runAppendReplay(spark: SparkSession, dropGlob: String,
       indexDir: String, checkpointDir: String): Unit =
     replayWith(spark, dropGlob, checkpointDir)(
       (batch, _) => Sink.appendToIvfIndex(batch, indexDir))
 
-  /** The same drop-at-a-time ingestion into a stored IVF-PQ index:
-    * each micro-batch coarse-assigns AND PQ-encodes against the
-    * frozen stored artifacts ([[Sink.appendToIvfPqIndex]]) — the
-    * order-invariance argument carries over unchanged because codes,
-    * like cells, depend only on the stored codebooks.
-    */
-  def runPqAppendReplay(spark: SparkSession, dropGlob: String,
-      indexDir: String, checkpointDir: String): Unit =
-    replayWith(spark, dropGlob, checkpointDir)(
-      (batch, _) => Sink.appendToIvfPqIndex(batch, indexDir))
-
   /** Drift-AWARE streaming maintenance — the full production control
-    * loop on the drop cadence: each micro-batch takes the composed
-    * [[Sink.maintainIvfIndex]] decision (PSI pre-flight → append
-    * against the frozen centroids, OR retrain on stored ∪ batch when
-    * the batch has drifted; compaction when the file-count cadence
-    * hits) and its one-row decision log lands in an append-only
-    * parquet log at `logDir`, stamped with the micro-batch ordinal —
-    * maintenance becomes a QUERYABLE audit table, not a side effect.
-    * When no batch drifts, the served index is bit-identical to a
-    * one-shot append of all drops (the [[runAppendReplay]]
-    * order-invariance argument, compaction-safe by the compact spec);
-    * a drifted drop flips its batch to a retrain and subsequent drops
-    * fold into the NEW generation (IvfAppendSpec drives that path).
+    * loop on the drop cadence, for any codec: each micro-batch takes
+    * the composed [[Sink.maintainIvfIndex]] decision (PSI pre-flight —
+    * plus the code PSI on a PQ index → append against the frozen
+    * artifacts, OR retrain on stored ∪ batch when the batch has
+    * drifted; compaction when the file-count cadence hits) and its
+    * one-row decision log lands in an append-only parquet log at
+    * `logDir`, stamped with the micro-batch ordinal — maintenance
+    * becomes a QUERYABLE audit table, not a side effect. When no batch
+    * drifts, the served index is bit-identical to a one-shot append of
+    * all drops (the [[runAppendReplay]] order-invariance argument,
+    * compaction-safe by the compact spec); a drifted drop flips its
+    * batch to a retrain and subsequent drops fold into the NEW
+    * generation (IvfAppendSpec drives that path).
     */
   def runMaintainReplay(spark: SparkSession, dropGlob: String,
       indexDir: String, checkpointDir: String, logDir: String,
       threshold: Double = 0.25, compactFilesPerCell: Int = 4): Unit =
     replayWith(spark, dropGlob, checkpointDir) { (batch, id) =>
       Sink.maintainIvfIndex(spark, batch, indexDir,
-          threshold = threshold, compactFilesPerCell = compactFilesPerCell)
-        .withColumn(
-          "batch_id", org.apache.spark.sql.functions.lit(id))
-        .write.mode("append").parquet(logDir)
-    }
-
-  /** [[runMaintainReplay]] for the COMPRESSED tier: each micro-batch
-    * takes the [[Sink.maintainIvfPqIndex]] decision — geometry from
-    * the index's own manifest, coarse AND per-subspace code PSI as
-    * tripwires, append-or-retrain, compaction cadence — and logs one
-    * row per drop. Undrifted drops leave the served index identical
-    * to a one-shot PQ append (codes and cells depend only on the
-    * frozen stored artifacts), including across a mid-stream
-    * compaction.
-    */
-  def runPqMaintainReplay(spark: SparkSession, dropGlob: String,
-      indexDir: String, checkpointDir: String, logDir: String,
-      threshold: Double = 0.25, compactFilesPerCell: Int = 4): Unit =
-    replayWith(spark, dropGlob, checkpointDir) { (batch, id) =>
-      Sink.maintainIvfPqIndex(spark, batch, indexDir,
-          threshold = threshold, compactFilesPerCell = compactFilesPerCell)
-        .withColumn(
-          "batch_id", org.apache.spark.sql.functions.lit(id))
-        .write.mode("append").parquet(logDir)
-    }
-
-  /** [[runMaintainReplay]] for the int8 serving tier: each micro-batch
-    * takes the [[Sink.maintainIvfSq8Index]] decision — geometry from
-    * the index manifest, coarse-cell PSI as the tripwire (per-vector
-    * max-abs quantization has no codebook to drift, so there is no
-    * code-PSI term), append-or-retrain, compaction cadence — and logs
-    * one row per drop. Undrifted drops leave the served index identical
-    * to a one-shot SQ8 append (codes depend only on each vector's own
-    * max-abs, cells only on the frozen stored centroids).
-    */
-  def runSq8MaintainReplay(spark: SparkSession, dropGlob: String,
-      indexDir: String, checkpointDir: String, logDir: String,
-      threshold: Double = 0.25, compactFilesPerCell: Int = 4): Unit =
-    replayWith(spark, dropGlob, checkpointDir) { (batch, id) =>
-      Sink.maintainIvfSq8Index(spark, batch, indexDir,
           threshold = threshold, compactFilesPerCell = compactFilesPerCell)
         .withColumn(
           "batch_id", org.apache.spark.sql.functions.lit(id))

@@ -32,7 +32,7 @@ class IvfAppendSpec extends SparkSpec {
     val base = all.filter(col("vec_id") < 40)
     val batch = all.filter(col("vec_id") >= 40)
     val dir = Files.createTempDirectory("graft-ivfapp").toString
-    Sink.writeIvfIndex(base, dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(8), iters = 2)
     Sink.appendToIvfIndex(batch, dir)
     val stored = spark.read.parquet(s"$dir/assignment")
       .select(col("vec_id"), col("cell").cast("long"))
@@ -46,8 +46,8 @@ class IvfAppendSpec extends SparkSpec {
   test("appendToIvfPqIndex == assignment + encoding with the stored artifacts") {
     val all = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfpqapp").toString
-    Sink.writeIvfPqIndex(all.filter(col("vec_id") < 40), dir, 8, 2, 4, 16, 8)
-    Sink.appendToIvfPqIndex(all.filter(col("vec_id") >= 40), dir, 4, 16)
+    Sink.writeIvfIndex(all.filter(col("vec_id") < 40), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2)
+    Sink.appendToIvfIndex(all.filter(col("vec_id") >= 40), dir)
     val stored = spark.read.parquet(s"$dir/assignment")
     assert(stored.count() == all.count())
     // coarse cells across base + appended = direct assignment with the
@@ -80,10 +80,10 @@ class IvfAppendSpec extends SparkSpec {
     // the gate width)
     val all = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val appendDir = Files.createTempDirectory("graft-ivfapp2").toString
-    Sink.writeIvfIndex(all.filter(col("vec_id") < 400), appendDir, 8, 2)
+    Sink.writeIvfIndex(all.filter(col("vec_id") < 400), appendDir, Sink.Flat, Sink.Cells(8), 2)
     Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), appendDir)
     val freshDir = Files.createTempDirectory("graft-ivffresh").toString
-    Sink.writeIvfIndex(all, freshDir, 8, 2)
+    Sink.writeIvfIndex(all, freshDir, Sink.Flat, Sink.Cells(8), 2)
     val truth = Similarity.bruteForceTopK(all, 10, 3)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"))).toSet
     def recall(dir: String): Double = {
@@ -99,7 +99,7 @@ class IvfAppendSpec extends SparkSpec {
   test("streamed drop-at-a-time ingestion lands the identical index") {
     val all = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfstream").toString
-    Sink.writeIvfIndex(all.filter(col("vec_id") < 40), s"$dir/index", 8, 2)
+    Sink.writeIvfIndex(all.filter(col("vec_id") < 40), s"$dir/index", Sink.Flat, Sink.Cells(8), 2)
     val batch = all.filter(col("vec_id") >= 40)
     Seq(0, 1).foreach { r =>
       batch.filter(pmod(col("vec_id"), lit(2)) === r)
@@ -120,7 +120,7 @@ class IvfAppendSpec extends SparkSpec {
   test("code drift: a shifted subspace flags retrain for that subspace only") {
     val all = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val dir = Files.createTempDirectory("graft-pqdrift").toString
-    Sink.writeIvfPqIndex(all.filter(col("vec_id") < 400), dir, 8, 2, 4, 16, 8)
+    Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2)
     // batch whose FIRST subvector (dims 1-16) shifts by +10: its
     // sub-0 codes collapse onto the nearest stored codebook entry
     // while subspaces 1-3 keep the training distribution
@@ -144,7 +144,7 @@ class IvfAppendSpec extends SparkSpec {
   test("compactIvfIndex: one file per cell after appends, search unchanged") {
     val all = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfcompact").toString
-    Sink.writeIvfIndex(all.filter(col("vec_id") < 30), dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(all.filter(col("vec_id") < 30), dir, Sink.Flat, Sink.Cells(8), iters = 2)
     // three append batches: each leaves one file per touched cell
     (0 until 3).foreach { r =>
       Sink.appendToIvfIndex(
@@ -170,7 +170,7 @@ class IvfAppendSpec extends SparkSpec {
   test("maintainIvfIndex: balanced batches append then compact on cadence; skewed batch retrains") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-ivfmaint").toString + "/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
 
     // batch 1, balanced → APPEND branch: PSI under threshold, rows fold
     // in, file count grows (one sliver per touched cell), no compaction
@@ -217,7 +217,7 @@ class IvfAppendSpec extends SparkSpec {
   test("compactIvfIndexSelective rewrites ONLY fragmented cells; untouched cells byte-identical") {
     val all = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfselcomp").toString
-    Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), iters = 2)
     // fragment a SUBSET of cells: append only vectors whose
     // stored-centroid assignment lands in cells 0-2
     val cent = Sink.loadIvfCentroids(spark, dir)
@@ -275,11 +275,11 @@ class IvfAppendSpec extends SparkSpec {
   test("maintainIvfPqIndex: manifest-driven geometry, append and retrain branches") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-ivfpqmaint").toString + "/index"
-    Sink.writeIvfPqIndex(base, dir, cells = 2, iters = 2, m = 4, subDim = 16, k = 8)
+    Sink.writeIvfIndex(base, dir, Sink.Pq(4, 16, 8), Sink.Cells(2), iters = 2)
     // the operator reads cells/m/subDim/k from the manifest — no
     // geometry params in the call at all
     val b1 = twoClusters(100L until 110L, id => if (id % 2 == 0) 1 else -1)
-    val log1 = Sink.maintainIvfPqIndex(spark, b1, dir).head()
+    val log1 = Sink.maintainIvfIndex(spark, b1, dir).head()
     assert(log1.getAs[String]("action") == "append" &&
       !log1.getAs[Boolean]("retrain_due"),
       s"balanced batch must append: $log1")
@@ -292,7 +292,7 @@ class IvfAppendSpec extends SparkSpec {
     // skewed batch (all A-side) crosses the coarse tripwire → both
     // tiers retrain on stored ∪ batch; search serves the new generation
     val skew = twoClusters(200L until 210L, _ => 1)
-    val log2 = Sink.maintainIvfPqIndex(spark, skew, dir).head()
+    val log2 = Sink.maintainIvfIndex(spark, skew, dir).head()
     assert(log2.getAs[String]("action") == "retrain" &&
       log2.getAs[Boolean]("retrain_due"))
     assert(log2.getAs[Double]("psi_coarse") > 0.25)
@@ -306,7 +306,7 @@ class IvfAppendSpec extends SparkSpec {
   test("runMaintainReplay: per-drop decisions logged, drifted middle drop retrains mid-stream") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val root = Files.createTempDirectory("graft-maintstream").toString
-    Sink.writeIvfIndex(base, s"$root/index", cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, s"$root/index", Sink.Flat, Sink.Cells(2), iters = 2)
     // drop a: balanced → append; drop b: all A-side → RETRAIN
     // mid-stream; drop c: balanced → append into the NEW generation
     val drops = Seq(
@@ -341,7 +341,7 @@ class IvfAppendSpec extends SparkSpec {
   test("runSq8MaintainReplay: int8 tier decisions logged, drifted middle drop retrains mid-stream") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val root = Files.createTempDirectory("graft-sq8maintstream").toString
-    Sink.writeIvfSq8Index(base, s"$root/index", cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, s"$root/index", Sink.Sq8, Sink.Cells(2), iters = 2)
     val drops = Seq(
       "a" -> twoClusters(100L until 110L, id => if (id % 2 == 0) 1 else -1),
       "b" -> twoClusters(200L until 210L, _ => 1),
@@ -353,7 +353,7 @@ class IvfAppendSpec extends SparkSpec {
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
         .foreach(f => assert(f.toFile.setLastModified(1000000000000L + i * 60000L)))
     }
-    graft.streaming.IvfStream.runSq8MaintainReplay(
+    graft.streaming.IvfStream.runMaintainReplay(
       spark, s"$root/drops/drop=*", s"$root/index", s"$root/ckpt", s"$root/log")
     val log = spark.read.parquet(s"$root/log").orderBy("batch_id").collect()
     assert(log.map(_.getAs[String]("action")).toSeq ==
@@ -372,7 +372,7 @@ class IvfAppendSpec extends SparkSpec {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-ivfdrift").toString
     // cells=2 with seed vectors 0 (A-side) and 1 (B-side)
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     val balanced = twoClusters(100L until 110L, id => if (id % 2 == 0) 1 else -1)
     val skewed = twoClusters(200L until 210L, _ => 1) // all on the A side
     val ok = Sink.ivfAppendDrift(spark, balanced, dir).collect()
@@ -393,7 +393,7 @@ class IvfAppendSpec extends SparkSpec {
     // spurious 19-minute retrain); the verdict subtracts the floor.
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfnull").toString
-    Sink.writeIvfIndex(e.filter(col("vec_id") < 400), dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(e.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), iters = 2)
     // 10 vectors / 8 cells: DuckDB-mirrored fixture values — psi
     // 0.271941 (the raw 0.25 rule WOULD flag), floor 0.7175
     val tiny = e.filter(col("vec_id") >= 400 && col("vec_id") < 410)
@@ -418,47 +418,59 @@ class IvfAppendSpec extends SparkSpec {
   test("kind guard: cross-layout maintenance and appends fail loudly, index untouched") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val batch = twoClusters(100L until 110L, id => if (id % 2 == 0) 1 else -1)
+    // append and maintain take the layout from the index itself: a PQ
+    // tree stays a PQ tree (appended rows carry codes, codebooks kept)
     val dirPq = Files.createTempDirectory("graft-kindpq").toString + "/index"
-    Sink.writeIvfPqIndex(base, dirPq, cells = 2, iters = 2, m = 4, subDim = 16, k = 8)
-    // maintainIvfIndex on an IVF-PQ tree would retrain it into a
-    // plain-IVF tree (destroying the codebooks) or append rows with no
-    // codes column — the manifest kind must stop both
-    val e1 = intercept[IllegalArgumentException] {
-      Sink.maintainIvfIndex(spark, batch, dirPq) }
-    assert(e1.getMessage.contains("kind 'ivfpq'"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Sink.appendToIvfIndex(batch, dirPq) }
-    assert(e2.getMessage.contains("kind 'ivfpq'"), e2.getMessage)
-    // guard fired before any mutation
+    Sink.writeIvfIndex(base, dirPq, Sink.Pq(4, 16, 8), Sink.Cells(2), iters = 2)
+    Sink.appendToIvfIndex(batch, dirPq)
+    val stored = spark.read.parquet(s"$dirPq/assignment")
+    assert(stored.count() == 30 && stored.filter(col("codes").isNull).count() == 0)
     assert(spark.read.parquet(s"$dirPq/pq_centroids").count() > 0)
-    assert(spark.read.parquet(s"$dirPq/assignment").count() == 20)
+    // a non-IVF index is refused before any mutation
+    val dirText = Files.createTempDirectory("graft-kindtext").toString + "/index"
+    Sink.writeDedupIndex(spark.createDataFrame(Seq(
+      (0L, "the quick brown fox jumps over the lazy dog"))).toDF("doc_id", "text"),
+      dirText)
+    val e1 = intercept[IllegalArgumentException] {
+      Sink.maintainIvfIndex(spark, batch, dirText) }
+    assert(e1.getMessage.contains("kind 'dedup_text'"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Sink.appendToIvfIndex(batch, dirText) }
+    assert(e2.getMessage.contains("kind 'dedup_text'"), e2.getMessage)
+    assert(!new java.io.File(s"$dirText/assignment").exists())
+    // the PQ search refuses a layout without codes
     val dirIvf = Files.createTempDirectory("graft-kindivf").toString + "/index"
-    Sink.writeIvfIndex(base, dirIvf, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dirIvf, Sink.Flat, Sink.Cells(2), iters = 2)
     val e3 = intercept[IllegalArgumentException] {
-      Sink.maintainIvfPqIndex(spark, batch, dirIvf) }
+      Sink.searchIvfPqIndex(spark, base, dirIvf, 5, 3, 10) }
     assert(e3.getMessage.contains("kind 'ivf'"), e3.getMessage)
-    val e4 = intercept[IllegalArgumentException] {
-      Sink.appendToIvfPqIndex(batch, dirIvf) }
-    assert(e4.getMessage.contains("kind 'ivf'"), e4.getMessage)
   }
 
   test("legacy PQ index: maintenance derives the written geometry instead of defaulting") {
     val base = twoClusters(0L until 40L, id => if (id % 2 == 0) 1 else -1)
-    val dir = Files.createTempDirectory("graft-legacygeo").toString + "/index"
-    Sink.writeIvfPqIndex(base, dir, cells = 4, iters = 2, m = 4, subDim = 16, k = 8)
-    val cellsWritten = spark.read.parquet(s"$dir/centroids")
-      .select("cell").distinct().count()
-    // strip the manifest — the pre-manifest on-disk layout
-    assert(new java.io.File(s"$dir/_graft_manifest.json").delete())
-    // drifted batch → retrain: the rebuilt index must keep the WRITTEN
-    // cell count (a hardcoded default would silently collapse it)
-    val skew = twoClusters(200L until 220L, _ => 1)
-    val log = Sink.maintainIvfPqIndex(spark, skew, dir).head()
-    assert(log.getAs[String]("action") == "retrain", s"skew must retrain: $log")
-    val cellsAfter = spark.read.parquet(s"$dir/centroids")
-      .select("cell").distinct().count()
-    assert(cellsAfter == cellsWritten,
-      s"retrain must preserve the written cell count $cellsWritten, got $cellsAfter")
+    // the same rule for every codec: a 4-cell legacy index must not
+    // retrain to a default or caller-supplied 8
+    Seq(Sink.Pq(4, 16, 8), Sink.Flat, Sink.Sq8).foreach { codec =>
+      val dir = Files.createTempDirectory("graft-legacygeo").toString + "/index"
+      Sink.writeIvfIndex(base, dir, codec, Sink.Cells(4), iters = 2)
+      val cellsWritten = spark.read.parquet(s"$dir/centroids")
+        .select("cell").distinct().count()
+      val columnsWritten = spark.read.parquet(s"$dir/assignment").columns.toSeq
+      // strip the manifest — the pre-manifest on-disk layout
+      assert(new java.io.File(s"$dir/_graft_manifest.json").delete())
+      // drifted batch → retrain: the rebuilt index must keep the WRITTEN
+      // cell count and layout
+      val skew = twoClusters(200L until 220L, _ => 1)
+      val log = Sink.maintainIvfIndex(spark, skew, dir).head()
+      assert(log.getAs[String]("action") == "retrain",
+        s"${codec.kind}: skew must retrain: $log")
+      val cellsAfter = spark.read.parquet(s"$dir/centroids")
+        .select("cell").distinct().count()
+      assert(cellsAfter == cellsWritten, s"${codec.kind}: retrain must " +
+        s"preserve the written cell count $cellsWritten, got $cellsAfter")
+      assert(spark.read.parquet(s"$dir/assignment").columns.toSeq == columnsWritten,
+        s"${codec.kind}: retrain must keep the written layout")
+    }
   }
 
   test("tombstone delete: masked at serve, purged on full compaction, clean tombstones") {
@@ -466,7 +478,7 @@ class IvfAppendSpec extends SparkSpec {
     import spark2.implicits._
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-ivfdel").toString + "/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     val before = Sink.searchIvfIndex(spark, base, dir, nQueries = 4, k = 3)
       .collect()
     // delete two ids that WERE serving as neighbors
@@ -513,11 +525,11 @@ class IvfAppendSpec extends SparkSpec {
     import spark2.implicits._
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-pqdel").toString + "/index"
-    Sink.writeIvfPqIndex(e, dir, cells = 8, iters = 2, m = 4, subDim = 16, k = 8)
-    val before = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, 4, 16).collect()
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
+    val before = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10).collect()
     val dead = before.map(_.getAs[Long]("vec_id")).distinct.take(3)
     Sink.deleteFromIvfIndex(spark, dir, dead.toSeq.toDF("vec_id"))
-    val after = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, 4, 16).collect()
+    val after = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10).collect()
     assert(!after.exists(r => dead.contains(r.getAs[Long]("vec_id"))),
       s"tombstoned ids ${dead.toSeq} still served by the PQ path")
     assert(after.count(_.getAs[Long]("qid") == 0L) == 3,
@@ -530,7 +542,7 @@ class IvfAppendSpec extends SparkSpec {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val root = Files.createTempDirectory("graft-delguard").toString
     val dir = s"$root/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     // an empty delete must not write a schema-only tombstone file that
     // flips every future search onto the anti-join plan
     Sink.deleteFromIvfIndex(spark, dir, Seq.empty[Long].toDF("vec_id"))
@@ -564,7 +576,7 @@ class IvfAppendSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-cdc").toString
     // one-shot twin: append everything, then delete
     val oneDir = s"$root/oneshot"
-    Sink.writeIvfIndex(base, oneDir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, oneDir, Sink.Flat, Sink.Cells(2), iters = 2)
     val adds = twoClusters(100L until 110L, id => if (id % 2 == 0) 1 else -1)
     Sink.appendToIvfIndex(adds, oneDir)
     Sink.deleteFromIvfIndex(spark, oneDir, Seq(0L, 104L).toDF("vec_id"))
@@ -574,7 +586,7 @@ class IvfAppendSpec extends SparkSpec {
     // deletes id 104 before its add arrives — tombstone-wins makes the
     // order irrelevant
     val cdcDir = s"$root/cdc"
-    Sink.writeIvfIndex(base, cdcDir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, cdcDir, Sink.Flat, Sink.Cells(2), iters = 2)
     adds.filter(col("vec_id") < 105).withColumn("op", lit("add"))
       .coalesce(1).write.parquet(s"$root/drops/drop=a")
     Seq(0L, 104L).toDF("vec_id")
@@ -595,7 +607,7 @@ class IvfAppendSpec extends SparkSpec {
     import spark2.implicits._
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-ivfdelmaint").toString + "/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     // 999 was never in the index (an out-of-order CDC delete): the
     // audit must intersect tombstones with the stored ids, not just
     // count the tombstone table
@@ -623,7 +635,7 @@ class IvfAppendSpec extends SparkSpec {
     import spark2.implicits._
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-tombdup").toString + "/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     Sink.deleteFromIvfIndex(spark, dir, Seq(0L, 2L).toDF("vec_id"))
     // append-no-resurrect: id 0 re-delivered AFTER its delete — a
     // second physical row lands and BOTH stay masked (the
@@ -650,7 +662,7 @@ class IvfAppendSpec extends SparkSpec {
     import spark2.implicits._
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-tombrace").toString + "/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     // two delete calls → two tombstone files (deleteFromIvfIndex
     // appends one file per call)
     Sink.deleteFromIvfIndex(spark, dir, Seq(0L).toDF("vec_id"))
@@ -677,7 +689,7 @@ class IvfAppendSpec extends SparkSpec {
   test("a re-delivered vec_id appends once, and the decision log matches the table") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-dupid").toString + "/index"
-    Sink.writeIvfIndex(base, dir, cells = 2, iters = 2)
+    Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(2), iters = 2)
     // vec_id 100 delivered twice (a re-sent drop; the fixture derives
     // the embedding from the id, so the two rows are byte-identical —
     // the realistic duplicate)

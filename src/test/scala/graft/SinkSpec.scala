@@ -180,13 +180,13 @@ class SinkSpec extends SparkSpec {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")
     try {
-      Sink.writeIvfIndex(e, dir, cells = 8, iters = 2)
+      Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(8), iters = 2)
       val extra = e.select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
       Sink.appendToIvfIndex(extra, dir)
       assert(spark.read.parquet(s"$dir/assignment").count() == 2 * n)
       // generation 2: retrain on a 20-vector base — every generation-1
       // row (base AND appended) must be gone afterwards
-      Sink.writeIvfIndex(e.filter(col("vec_id") < 20), dir, cells = 8, iters = 2)
+      Sink.writeIvfIndex(e.filter(col("vec_id") < 20), dir, Sink.Flat, Sink.Cells(8), iters = 2)
       val back = spark.read.parquet(s"$dir/assignment")
       assert(back.count() == 20,
         s"stale rows from the previous index generation survived: ${back.count()}")
@@ -202,7 +202,7 @@ class SinkSpec extends SparkSpec {
   test("IVF-PQ index: co-located codes + vectors, two-stage search holds the PQ floor") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val dir = Files.createTempDirectory("graft-ivfpq").toString
-    Sink.writeIvfPqIndex(e, dir, cells = 8, iters = 2, m = 4, subDim = 16, k = 8)
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
     val back = spark.read.parquet(s"$dir/assignment")
     assert(back.columns.toSet == Set("vec_id", "codes", "embedding", "cell"))
     assert(back.count() == e.count())
@@ -211,7 +211,7 @@ class SinkSpec extends SparkSpec {
       "array_max(codes) AS hi", "array_min(codes) AS lo").collect()
     assert(codeStats.forall(r => r.getAs[Int]("m") == 4 &&
       r.getAs[Long]("hi") < 8 && r.getAs[Long]("lo") >= 0))
-    val got = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, 4, 16).collect()
+    val got = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10).collect()
     assert(got.length == 30)
     // recall gates: on the structure-free gaussian fixture nprobe=1
     // IVF-PQ with cand=10 must hold the PLAIN-PQ floor (the cell
@@ -232,7 +232,7 @@ class SinkSpec extends SparkSpec {
   test("stored-index search equals in-memory multiprobe at nprobe 2 and 4") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfmp").toString
-    Sink.writeIvfIndex(e, dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(8), iters = 2)
     Seq(2, 4).foreach { np =>
       val stored = Sink.searchIvfIndex(spark, e, dir, 10, 3, nprobe = np)
         .select("qid", "rnk", "vec_id", "cos")
@@ -251,7 +251,7 @@ class SinkSpec extends SparkSpec {
     import graft.operators.Similarity
 
     // full write: stored serving ≡ the in-memory composed tier
-    Sink.writeIvfSq8Index(e, dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(e, dir, Sink.Sq8, Sink.Cells(8), iters = 2)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
       .collect().map(_.toSeq).toSeq
@@ -261,8 +261,8 @@ class SinkSpec extends SparkSpec {
 
     // incremental build (base + append) serves every id
     val dir2 = Files.createTempDirectory("graft-ivfsq8a").toString
-    Sink.writeIvfSq8Index(e.filter(col("vec_id") < 250), dir2, 8, 2)
-    Sink.appendToIvfSq8Index(e.filter(col("vec_id") >= 250), dir2)
+    Sink.writeIvfIndex(e.filter(col("vec_id") < 250), dir2, Sink.Sq8, Sink.Cells(8), 2)
+    Sink.appendToIvfIndex(e.filter(col("vec_id") >= 250), dir2)
     val served = Sink.searchIvfSq8Index(spark, e, dir2, 10, 500, nprobe = 8)
       .select("vec_id").distinct().count()
     assert(served > 400, s"append path lost rows: $served ids served")
@@ -280,7 +280,7 @@ class SinkSpec extends SparkSpec {
     // log's action/threshold verdict says so; fresh ids then serve
     val batch = e.filter(col("vec_id") >= 240 && col("vec_id") < 260)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-    val log = Sink.maintainIvfSq8Index(spark, batch, dir, threshold = 5.0)
+    val log = Sink.maintainIvfIndex(spark, batch, dir, threshold = 5.0)
       .collect().head
     assert(log.getAs[String]("action") == "append",
       s"no-drift batch must append, got ${log.getAs[String]("action")}")
@@ -288,9 +288,9 @@ class SinkSpec extends SparkSpec {
       .filter(col("vec_id") >= 100000L).count()
     assert(afterMaintain > 0, "maintained batch invisible to serving")
 
-    // wrong-kind guard: the IVF operators must refuse this layout
+    // wrong-kind guard: the PQ search must refuse this layout
     val ex = intercept[IllegalArgumentException] {
-      Sink.appendToIvfIndex(batch, dir)
+      Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10)
     }
     assert(ex.getMessage.contains("ivfsq8"))
   }
@@ -299,10 +299,10 @@ class SinkSpec extends SparkSpec {
       "DataFrame form, same-distribution AND skewed batches") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-driftdrv").toString
-    Sink.writeIvfIndex(e.filter(col("vec_id") < 400), dir, 8, 2)
+    Sink.writeIvfIndex(e.filter(col("vec_id") < 400), dir, Sink.Flat, Sink.Cells(8), 2)
     val cent = Sink.loadIvfCentroids(spark, dir)
     val grid = cent.select("cell").collect().map(_.getLong(0)).toSeq.sorted
-    val storedMap = Sink.storedCellCounts(spark, dir)
+    val storedMap = Sink.storedCellCounts(spark, dir, 8)
     def check(batch: org.apache.spark.sql.DataFrame, thr: Double): Unit = {
       val df = Sink.ivfAppendDrift(spark, batch, dir, thr)
         .select("psi", "psi_null", "retrain_due").head()
@@ -352,8 +352,8 @@ class SinkSpec extends SparkSpec {
     // twin indexes: same inputs, same deterministic training
     val dirA = Files.createTempDirectory("graft-guardA").toString
     val dirB = Files.createTempDirectory("graft-guardB").toString
-    Sink.writeIvfIndex(base, dirA, 8, 2)
-    Sink.writeIvfIndex(base, dirB, 8, 2)
+    Sink.writeIvfIndex(base, dirA, Sink.Flat, Sink.Cells(8), 2)
+    Sink.writeIvfIndex(base, dirB, Sink.Flat, Sink.Cells(8), 2)
     // capture the drift frame BEFORE the maintain call appends to dirA
     val driftA = Sink.ivfAppendDrift(spark, batch, dirA).collect()
     val logA = Sink.maintainIvfIndex(spark, batch, dirA).collect().head
@@ -362,7 +362,7 @@ class SinkSpec extends SparkSpec {
       sys.props("graft.maxDriverMapEntries") = "1"
       // the collects refuse loudly instead of building an over-bound map
       val ex = intercept[IllegalArgumentException] {
-        Sink.storedCellCounts(spark, dirB)
+        Sink.storedCellCounts(spark, dirB, 8)
       }
       assert(ex.getMessage.contains("maxDriverMapEntries"))
       // the maintain lifecycle still runs — distributed pre-flight —
@@ -382,7 +382,7 @@ class SinkSpec extends SparkSpec {
       // bound — whole-frame equality against the under-bound twin.
       // (dirA was appended to above, so compare dirB against the
       // PRE-maintain drift frame captured from dirA.)
-      Sink.writeIvfIndex(base, dirB + "-drift", 8, 2)
+      Sink.writeIvfIndex(base, dirB + "-drift", Sink.Flat, Sink.Cells(8), 2)
       val driftB = Sink.ivfAppendDrift(spark, batch, dirB + "-drift").collect()
       assert(driftA.toSeq == driftB.toSeq,
         "distributed drift frame differs from the driver-map form")
@@ -405,9 +405,9 @@ class SinkSpec extends SparkSpec {
     val expectCells = math.ceil(n / 64.0).toInt
     val dirA = Files.createTempDirectory("graft-sq8sized").toString
     val dirB = Files.createTempDirectory("graft-sq8explicit").toString
-    val got = Sink.writeIvfSq8IndexSized(e, dirA, targetCellSize = s, iters = 2)
+    val got = Sink.writeIvfIndex(e, dirA, Sink.Sq8, Sink.CellSize(s), iters = 2)
     assert(got == expectCells, s"sized build resolved $got cells, want $expectCells")
-    Sink.writeIvfSq8Index(e, dirB, cells = expectCells, iters = 2)
+    Sink.writeIvfIndex(e, dirB, Sink.Sq8, Sink.Cells(expectCells), iters = 2)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
       .collect().map(_.toSeq).toSeq
@@ -419,7 +419,7 @@ class SinkSpec extends SparkSpec {
     assert(mf.exists(_.get("cells").contains(expectCells.toString)))
     // the sized IVF (float) build resolves the same geometry
     val dirC = Files.createTempDirectory("graft-ivfsized").toString
-    assert(Sink.writeIvfIndexSized(e, dirC, targetCellSize = s) == expectCells)
+    assert(Sink.writeIvfIndex(e, dirC, Sink.Flat, Sink.CellSize(s)) == expectCells)
     assert(Sink.searchIvfIndex(spark, e, dirC, 10, 3).count() == 30)
   }
 
@@ -429,7 +429,7 @@ class SinkSpec extends SparkSpec {
     val base = e.filter(col("vec_id") < 400)
     val dir = Files.createTempDirectory("graft-szmaint").toString
     val sz = 64
-    val cells0 = Sink.writeIvfSq8IndexSized(base, dir, targetCellSize = sz,
+    val cells0 = Sink.writeIvfIndex(base, dir, Sink.Sq8, Sink.CellSize(sz),
       iters = 2)
     assert(cells0 == math.ceil(400 / 64.0).toInt) // 7
     val mf0 = Sink.readIndexManifest(spark, dir)
@@ -437,7 +437,7 @@ class SinkSpec extends SparkSpec {
       "sized build must record target_cell_size in the manifest")
     // no-drift batch appends against the frozen sized geometry
     val batch = e.filter(col("vec_id") >= 400)
-    val log1 = Sink.maintainIvfSq8Index(spark, batch, dir).collect().head
+    val log1 = Sink.maintainIvfIndex(spark, batch, dir).collect().head
     assert(log1.getAs[String]("action") == "append")
     assert(Sink.readIndexManifest(spark, dir)
       .exists(_.get("cells").contains(cells0.toString)),
@@ -448,7 +448,7 @@ class SinkSpec extends SparkSpec {
     val nBatch2 = 40
     val batch2 = e.filter(col("vec_id") >= 400).limit(nBatch2)
       .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
-    val log2 = Sink.maintainIvfSq8Index(spark, batch2, dir,
+    val log2 = Sink.maintainIvfIndex(spark, batch2, dir,
       threshold = -1.0).collect().head
     assert(log2.getAs[String]("action") == "retrain")
     val nUnion = log2.getAs[Long]("n_after")
@@ -477,7 +477,7 @@ class SinkSpec extends SparkSpec {
     val sz = 64
 
     val dirF = Files.createTempDirectory("graft-szmaint-ivf").toString
-    assert(Sink.writeIvfIndexSized(base, dirF, targetCellSize = sz,
+    assert(Sink.writeIvfIndex(base, dirF, Sink.Flat, Sink.CellSize(sz),
       iters = 2) == 7)
     val logF = Sink.maintainIvfIndex(spark, batch, dirF,
       threshold = -1.0).collect().head
@@ -493,9 +493,9 @@ class SinkSpec extends SparkSpec {
     assert(Sink.searchIvfIndex(spark, e, dirF, 10, 3).count() == 30)
 
     val dirP = Files.createTempDirectory("graft-szmaint-pq").toString
-    assert(Sink.writeIvfPqIndexSized(base, dirP, targetCellSize = sz,
-      iters = 2, m = 4, subDim = 16, k = 8) == 7)
-    val logP = Sink.maintainIvfPqIndex(spark, batch, dirP,
+    assert(Sink.writeIvfIndex(base, dirP, Sink.Pq(4, 16, 8), Sink.CellSize(sz),
+      iters = 2) == 7)
+    val logP = Sink.maintainIvfIndex(spark, batch, dirP,
       threshold = -1.0).collect().head
     assert(logP.getAs[String]("action") == "retrain")
     val wantP = math.ceil(logP.getAs[Long]("n_after") / 64.0).toInt
@@ -510,18 +510,18 @@ class SinkSpec extends SparkSpec {
     assert(mfP.exists(m => m.get("m").contains("4") &&
       m.get("subDim").contains("16") && m.get("k").contains("8")),
       "sized resize must leave the PQ codebook geometry unchanged")
-    assert(Sink.searchIvfPqIndex(spark, e, dirP, 10, 3, 10, 4, 16,
+    assert(Sink.searchIvfPqIndex(spark, e, dirP, 10, 3, 10,
       nprobe = 3).count() == 30)
   }
 
   test("searchIvfPqIndex: nprobe=2 recall holds the nprobe=1 floor") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfpqnp").toString
-    Sink.writeIvfPqIndex(e, dir, cells = 8, iters = 2, m = 4, subDim = 16, k = 8)
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
     val truth = graft.operators.Similarity.bruteForceTopK(e, 10, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"))).toSet
     def recall(np: Int): Double = {
-      val mine = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, 4, 16, nprobe = np)
+      val mine = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, nprobe = np)
         .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"))).toSet
       mine.intersect(truth).size.toDouble / truth.size
     }
@@ -531,87 +531,195 @@ class SinkSpec extends SparkSpec {
         "cells must not lose true neighbors on this fixture")
   }
 
-  test("PQ geometry: manifest check fails loudly with zero Spark jobs; legacy fallback still catches") {
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = Files.createTempDirectory("graft-pqgeom").toString
-    Sink.writeIvfPqIndex(e, dir, cells = 8, iters = 2, m = 4, subDim = 16, k = 8)
-    val mf = Sink.readIndexManifest(spark, dir).get
-    assert(mf("kind") == "ivfpq" && mf("cells") == "8" &&
-      mf("m") == "4" && mf("subDim") == "16" && mf("k") == "8")
-    // wrong-geometry serving call dies with the diagnostic, not garbage
-    val ex = intercept[IllegalArgumentException] {
-      Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, m = 8, subDim = 8)
-    }
-    assert(ex.getMessage.contains("geometry"))
-    // the manifest path never launches a Spark job — serving pays one
-    // small-file read, not an aggregate over the codebook table
+  /** Spark jobs started while `body` runs (the listener bus is drained
+    * on both sides, so no event lands in the wrong count).
+    */
+  private def jobsOf(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    org.apache.spark.GraftListenerShims.flushListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
-      intercept[IllegalArgumentException] {
-        Sink.checkPqGeometry(spark, dir, Sink.loadPqCentroids(spark, dir), 8, 8)
-      }
-      Sink.checkPqGeometry(spark, dir, Sink.loadPqCentroids(spark, dir), 4, 16)
-      Thread.sleep(500) // listener bus is async; let any job event land
-      assert(jobs.get() == 0,
-        s"manifest-backed geometry check launched ${jobs.get()} Spark job(s)")
+      body
+      org.apache.spark.GraftListenerShims.flushListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // legacy (pre-manifest) index: the codebook-aggregate fallback
-    // still fails loudly on a mismatch...
+    jobs.get()
+  }
+
+  test("PQ geometry: manifest check fails loudly with zero Spark jobs; legacy fallback still catches") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val dir = Files.createTempDirectory("graft-pqgeom").toString
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
+    val mf = Sink.readIndexManifest(spark, dir).get
+    assert(mf("kind") == "ivfpq" && mf("cells") == "8" &&
+      mf("m") == "4" && mf("subDim") == "16" && mf("k") == "8")
+    val written = Sink.StoredGeometry(Sink.Pq(4, 16, 8), 8, None)
+    // the manifest path never launches a Spark job — serving pays one
+    // small-file read, not an aggregate over the codebook table
+    val jobs = jobsOf(assert(Sink.storedGeometry(spark, dir) == written))
+    assert(jobs == 0, s"manifest-backed geometry read launched $jobs Spark job(s)")
+    // legacy (pre-manifest) index: the same geometry derives from the
+    // stored artifacts
     assert(new java.io.File(s"$dir/_graft_manifest.json").delete())
-    val ex2 = intercept[IllegalArgumentException] {
-      Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, m = 8, subDim = 8)
-    }
-    assert(ex2.getMessage.contains("geometry"))
-    // ...and an empty/corrupt codebook table reports the clear
-    // diagnostic instead of an opaque NPE
-    val ex3 = intercept[IllegalArgumentException] {
-      Sink.checkPqGeometry(spark, dir,
-        Sink.loadPqCentroids(spark, dir).limit(0), 4, 16)
-    }
-    assert(ex3.getMessage.contains("no PQ codebooks"))
+    assert(Sink.storedGeometry(spark, dir) == written)
+    // ...and an empty codebook table reports the clear diagnostic
+    // instead of an opaque NPE or a silently empty broadcast
+    val pqPath = s"$dir/pq_centroids"
+    val schema = spark.read.parquet(pqPath).schema
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .write.mode("overwrite").parquet(pqPath)
+    val ex = intercept[IllegalArgumentException](Sink.storedGeometry(spark, dir))
+    assert(ex.getMessage.contains("no PQ codebooks"), ex.getMessage)
+    // a manifest-bearing index whose codebook table is gone fails just
+    // as loudly (partial restore)
+    Sink.writeIndexManifest(spark, dir, mf.toSeq.filter(_._1 != "write_id"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pqPath))
+    val ex2 = intercept[IllegalArgumentException](Sink.storedGeometry(spark, dir))
+    assert(ex2.getMessage.contains("no PQ codebooks"), ex2.getMessage)
   }
 
   test("artifact cache misses on a rewrite even when the generation stamp collides") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfstamp").toString
-    def centroidFiles() = new java.io.File(s"$dir/centroids").listFiles()
-      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    val tables = Seq("centroids", "pq_centroids", "assignment")
+    def dataFiles(t: String): Seq[java.io.File] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/$t")).iterator()
+        .asScala.map(_.toFile)
+        .filter(f => f.isFile && !f.getName.startsWith("_") &&
+          !f.getName.startsWith("."))
+        .toSeq
+    }
     // pin every data file to one fixed mtime so the (mtime, count,
     // bytes) stamp is REPRODUCIBLE across the rewrite below — the
     // second-granularity-object-store collision, forced deterministically
     val fixedMtime = 1000000000000L
-    def pinMtimes(): Unit = centroidFiles().foreach { f =>
+    def pinMtimes(): Unit = tables.flatMap(dataFiles).foreach { f =>
       assert(f.setLastModified(fixedMtime), s"setLastModified failed: $f")
     }
-    Sink.writeIvfIndex(e, dir, cells = 8, iters = 2)
+    def stamps() = tables.map(t =>
+      (dataFiles(t).length, dataFiles(t).map(_.length).sum))
+    // every generation-keyed cache, each through its own reader: the
+    // loaded artifacts, the stored cell and code counts, and the
+    // centroid and codebook grids
+    val caches: Seq[(String, () => AnyRef)] = Seq(
+      "loaded centroids" -> (() => Sink.loadIvfCentroids(spark, dir)),
+      "loaded codebooks" -> (() => Sink.loadPqCentroids(spark, dir)),
+      "cell counts" -> (() => Sink.storedCellCounts(spark, dir, 8)),
+      "centroid cells" -> (() => Sink.centroidCellIds(spark, dir, 8)),
+      "code counts" -> (() => Sink.storedCodeCounts(spark, dir)),
+      "codebook grid" -> (() => Sink.pqCodeGrid(spark, dir)))
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
     val id1 = Sink.readIndexManifest(spark, dir).flatMap(_.get("write_id"))
     pinMtimes()
-    val g1 = (centroidFiles().length, centroidFiles().map(_.length).sum)
-    val f1 = Sink.loadIvfCentroids(spark, dir)
-    assert(Sink.loadIvfCentroids(spark, dir) eq f1,
-      "unchanged index must hit the loaded-artifact cache")
+    val g1 = stamps()
+    val first = caches.map(_._2())
+    caches.zip(first).foreach { case ((name, read), v) =>
+      assert(read() eq v, s"$name: an unchanged index must hit the cache")
+    }
     // identical rewrite (deterministic training + layout): same file
     // count and bytes; mtimes re-pinned → the stamp alone COLLIDES
-    Sink.writeIvfIndex(e, dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
     val id2 = Sink.readIndexManifest(spark, dir).flatMap(_.get("write_id"))
     assert(id1 != id2, "every full index write must get a fresh write_id")
     pinMtimes()
-    val g2 = (centroidFiles().length, centroidFiles().map(_.length).sum)
-    assert(g1 == g2, s"collision precondition broke: $g1 vs $g2")
-    assert(Sink.loadIvfCentroids(spark, dir) ne f1,
-      "a rewrite with a colliding generation stamp must still miss the cache")
+    assert(stamps() == g1, s"collision precondition broke: $g1 vs ${stamps()}")
+    caches.zip(first).foreach { case ((name, read), v) =>
+      assert(read() ne v,
+        s"$name: a rewrite with a colliding generation stamp must still miss the cache")
+    }
+  }
+
+  test("job budget: each codec's write, append, maintain and search stay within their Spark job counts") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val base = e.filter(col("vec_id") < 400)
+    val batch1 = e.filter(col("vec_id") >= 400 && col("vec_id") < 450)
+    val batch2 = e.filter(col("vec_id") >= 450)
+    def search(codec: Sink.IvfCodec, dir: String) = codec match {
+      case Sink.Flat => Sink.searchIvfIndex(spark, e, dir, 10, 3)
+      case Sink.Sq8 => Sink.searchIvfSq8Index(spark, e, dir, 10, 3)
+      case _: Sink.Pq => Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10)
+    }
+    // (write, append, maintain on its append branch, search): the job
+    // counts of the per-codec functions this one lifecycle replaced —
+    // sharing the path, and the narrow nearest-cell append, must not
+    // add a job
+    val budgets = Seq(
+      Sink.Flat -> Seq(15, 8, 14, 10),
+      Sink.Sq8 -> Seq(15, 9, 15, 10),
+      Sink.Pq(4, 16, 8) -> Seq(77, 15, 34, 15))
+    budgets.foreach { case (codec, budget) =>
+      val dir = Files.createTempDirectory("graft-jobbudget").toString
+      val used = Seq(
+        jobsOf(Sink.writeIvfIndex(base, dir, codec, Sink.Cells(8), iters = 2)),
+        jobsOf(Sink.appendToIvfIndex(batch1, dir)),
+        jobsOf(assert(Sink.maintainIvfIndex(spark, batch2, dir, threshold = 1e9)
+          .head().getAs[String]("action") == "append")),
+        jobsOf(search(codec, dir).collect()))
+      Seq("write", "append", "maintain", "search").zip(used.zip(budget))
+        .foreach { case (step, (n, max)) =>
+          assert(n <= max, s"${codec.kind} $step ran $n Spark jobs, budget $max")
+        }
+    }
+  }
+
+  test("an interrupted rename-aside swap rolls back: compaction and a maintain retrain serve the original rows") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val base = e.filter(col("vec_id") < 400)
+    def ids(dir: String) = spark.read.parquet(s"$dir/assignment")
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    // crash inside compaction's swap, after rename(assignment →
+    // assignment__old): the parked tree is the only copy
+    val d1 = Files.createTempDirectory("graft-swapcompact").toString
+    Sink.writeIvfIndex(base, d1, Sink.Flat, Sink.Cells(8), iters = 2)
+    val served = Sink.searchIvfIndex(spark, e, d1, 10, 3).collect().map(_.toSeq).toSeq
+    assert(new java.io.File(s"$d1/assignment")
+      .renameTo(new java.io.File(s"$d1/assignment__old")))
+    Sink.compactIvfIndex(spark, d1)
+    assert(ids(d1) == (0L until 400L).toSet)
+    assert(Sink.searchIvfIndex(spark, e, d1, 10, 3).collect().map(_.toSeq).toSeq == served)
+    assert(!new java.io.File(s"$d1/assignment__old").exists())
+    // crash inside a maintenance retrain's swap, after rename(index →
+    // index__old): the next maintain must retrain on the ORIGINAL rows
+    val d2 = Files.createTempDirectory("graft-swapretrain").toString + "/index"
+    Sink.writeIvfIndex(base, d2, Sink.Flat, Sink.Cells(8), iters = 2)
+    assert(new java.io.File(d2).renameTo(new java.io.File(d2 + "__old")))
+    val batch = e.filter(col("vec_id") >= 400)
+    val log = Sink.maintainIvfIndex(spark, batch, d2, threshold = -1.0).head()
+    assert(log.getAs[String]("action") == "retrain", s"forced retrain: $log")
+    assert(ids(d2) == (0L until 500L).toSet)
+    assert(Sink.searchIvfIndex(spark, e, d2, 10, 3).count() == 30)
+    assert(!new java.io.File(d2 + "__old").exists())
+  }
+
+  test("a truncated index manifest fails loudly instead of reading back wrong geometry") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val dir = Files.createTempDirectory("graft-manifest").toString
+    Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(16), iters = 2)
+    // the write goes through a sibling temp file, renamed into place
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".tmp")))
+    val p = java.nio.file.Paths.get(s"$dir/_graft_manifest.json")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    assert(new String(Files.readAllBytes(p), utf8).startsWith(
+      "{\"kind\":\"ivf\",\"cells\":16,"))
+    // a write cut off inside the cells value: a lenient reader sees
+    // cells = 1 and would retrain / compact on the wrong geometry
+    Files.write(p, "{\"kind\":\"ivf\",\"cells\":1".getBytes(utf8))
+    new java.io.File(s"$dir/._graft_manifest.json.crc").delete()
+    val ex = intercept[IllegalStateException](Sink.readIndexManifest(spark, dir))
+    assert(ex.getMessage.contains("corrupt index manifest"), ex.getMessage)
+    intercept[IllegalStateException](
+      Sink.maintainIvfIndex(spark, e.filter(col("vec_id") < 10), dir))
   }
 
   test("IVF index round-trip: stored-index search equals in-memory single-probe") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfidx").toString
-    Sink.writeIvfIndex(e, dir, cells = 8, iters = 2)
+    Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(8), iters = 2)
     // cell-partitioned layout on disk: one directory per cell
     val cellDirs = new java.io.File(s"$dir/assignment").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
@@ -631,7 +739,7 @@ class SinkSpec extends SparkSpec {
     // manifest the next retrain re-derives its geometry from
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfsized-del").toString
-    Sink.writeIvfIndexSized(e, dir, targetCellSize = 64, iters = 2)
+    Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.CellSize(64), iters = 2)
     def manifest() = Sink.readIndexManifest(spark, dir).get
     assert(manifest().get("target_cell_size").contains("64"))
     val cellsBefore = manifest()("cells")
@@ -700,7 +808,7 @@ class SinkSpec extends SparkSpec {
     // kind guard: an IVF index dir must be refused loudly
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val ivfDir = Files.createTempDirectory("graft-dedupidx-ivf").toString
-    Sink.writeIvfIndex(e, ivfDir, cells = 4, iters = 2)
+    Sink.writeIvfIndex(e, ivfDir, Sink.Flat, Sink.Cells(4), iters = 2)
     val ex = intercept[IllegalArgumentException] {
       Sink.classifyWithDedupIndex(spark, dedupDocs(spark, dedupBatchRows), ivfDir)
     }
