@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds on
   * SPARK_GRAFT_SF_DIR. Queries are materialized through the noop sink —
   * count() would let Catalyst prune every computed column (a window
@@ -36,13 +34,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val qs = SparkEntry.queries
     val names = headline.filter(qs.contains) ++
@@ -122,7 +114,7 @@ object Bench {
     // artifact keeps only a 2000-char TAIL of stdout — r17's
     // full-precision line grew to 2150 chars and the driver recorded
     // "parsed": null for the whole round. The full-precision min/max/
-    // load maps still land in BENCH_FULL.json below.
+    // load maps still land in the SPARK_GRAFT_BENCH_OUT file below.
     def jmap4(f: ((Double, Double, Seq[Double])) => Double): String =
       results.map { case (k, v) => "\"" + k + "\":" + f"${f(v)}%.4f" }
         .mkString("{", ",", "}")
@@ -130,8 +122,8 @@ object Bench {
       "\"" + k + "\":" + ls.map(l => f"$l%.2f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = results.map(_._2._1).sum
-    // self-describing artifact: BENCH_FULL.json is overwritten by every
-    // run whether headline-only or full-surface, so the line itself
+    // self-describing artifact: the full-line file is overwritten by
+    // every run whether headline-only or full-surface, so the line itself
     // must carry the run mode, the query count, and a sweep id —
     // round-over-round tooling can then detect a surface change instead
     // of silently comparing a 23-query headline against a 313-query
@@ -146,22 +138,23 @@ object Bench {
     // stdout carries the compact contract line (same keys minus the
     // max/load diagnostics, seconds at 4dp) so the driver's 2000-char
     // stdout tail always contains one parseable JSON line for the
-    // headline surface; the full-fidelity line goes to BENCH_FULL.json
+    // headline surface; the full-fidelity line goes to the
+    // SPARK_GRAFT_BENCH_OUT file
     val stdoutLine = s"""{"metric":"total","value":${f"$total%.4f"},""" +
       s""""unit":"sec","mode":"$mode","n_queries":${names.size},""" +
       s""""sweep_id":"$sweepId","queries":${jmap4(_._1)},"sf":"$sfDir"}"""
     println(stdoutLine)
     // the driver's BENCH_r{N}.json keeps only a 2000-char tail of
     // stdout, which truncates the headline JSON into an unparseable
-    // fragment once the surface is large; mirror the FULL line to a
-    // stable file so round-over-round tooling can diff headline
-    // numbers without needing a separate BENCH_ALL sweep
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/BENCH_FULL.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-      line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $out: $e") }
+    // fragment once the surface is large; SPARK_GRAFT_BENCH_OUT names a
+    // file for the FULL line — only on request, so a run never
+    // overwrites a committed artifact as a side effect
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { out =>
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
+        line + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $out: $e") }
+    }
     spark.stop()
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.operators.{Indicators, Ingest, Merge, Quality, Sink, Summary}
+import graft.queries._
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, with DuckDB oracle SQL for every SQL-expressible one.
+  * Each query is declared once, as a [[QuerySpec]] beside its oracle, in
+  * its family object under `graft.queries`; `queries` and `oracleSql`
+  * are views of that one list.
   *
   * Determinism rules applied uniformly (so Spark parquet output and the
   * DuckDB oracle hash-match value-for-value):
@@ -27,29 +29,11 @@ import graft.operators.{Indicators, Ingest, Merge, Quality, Sink, Summary}
   */
 object SparkEntry {
 
-  /** Total order for aggregate-sized outputs (≤ ~10^4 rows) via a
-    * single-partition sort. A global `orderBy` range-partitions, and its
-    * boundary-sampling pass re-executes the whole subtree as an extra
-    * job — pure waste when the result is tiny. Upstream stages keep
-    * their parallelism (repartition shuffles *after* the aggregate);
-    * large outputs keep the scalable range sort.
-    */
-  private[graft] def sortSmall(df: DataFrame, cols: String*): DataFrame =
-    df.repartition(1).sortWithinPartitions(cols.head, cols.tail: _*)
-
-  /** One export directory per JVM, registered for exit cleanup. */
-  private lazy val csvExportDir: String =
-    TempDirs.create("graft_csv_export") + "/stocks_af"
-
-  private val cutoff98 = to_date(lit("1998-01-01"))
-  private val cutoffMid98 = to_date(lit("1998-07-01"))
-  private val cutoff99 = to_date(lit("1999-01-01"))
-
   /** Flagship query (driver smoke-checks rows>0 on sf0.001): the full E2
     * indicator battery over the derived stocks table — S3 scan, windows
     * W1–W12, EWM family W4–W7 — evaluated through the CHUNKED scale
     * path (keys × chunks parallelism; WindowChunksSpec proves it ≡
-    * [[Indicators.withAllIndicators]], and the population guard falls
+    * [[graft.operators.Indicators.withAllIndicators]], and the population guard falls
     * back to the exact plain plan wherever chunks run short, as the EWM
     * pass does at this tiny SF).
     */
@@ -57,719 +41,17 @@ object SparkEntry {
     graft.operators.WindowChunks
       .chunkedAllIndicators(Tables.stocks(spark, "/root/testdata/sf0.001"))
 
-  private def stocks(s: SparkSession, dir: String): DataFrame = Tables.stocks(s, dir)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ ExtQueries.queries
-
-  def oracleSql: Map[String, String] = coreOracleSql ++ ExtQueries.oracleSql
-
-  /** Reference-parity surface (SURVEY.md §2) over the derived stocks
-    * table; extensions live in [[ExtQueries]].
+  /** Every query in family order; building it fails on a name declared
+    * twice.
     */
-  private def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- core relation (S1/S5/P10/P11: derive + normalize the OHLCV table)
-    "stocks_derive" -> ((s, d) => stocks(s, d).orderBy("symbol", "date")),
+  private lazy val registry: Seq[QuerySpec] = QuerySpec.unique(
+    StockQueries.specs ++ RelationalQueries.specs ++ DedupQueries.specs ++
+      CorpusQueries.specs ++ SimilarityQueries.specs ++ IvfIndexQueries.specs ++
+      TextQueries.specs ++ EventQueries.specs)
 
-    // ---- scans / projections / filters (S3/S4, P1-P4, O1)
-    "scan_project_filter" -> ((s, d) =>
-      stocks(s, d)
-        .filter(col("symbol") === "AF" && col("date") >= cutoff98)
-        .select("date", "open", "high", "low", "close", "volume")
-        .orderBy("date")),
-    "filter_between" -> ((s, d) =>
-      stocks(s, d)
-        .filter(col("symbol") === "NO" &&
-          col("date").between(to_date(lit("1997-03-01")), to_date(lit("1997-09-30"))))
-        .orderBy("date")),
-    "filter_in" -> ((s, d) =>
-      stocks(s, d)
-        .filter(col("symbol").isin("AF", "NO", "RF") && col("volume") > 150 &&
-          col("adj_close").isNotNull)
-        .orderBy("symbol", "date")),
-    "period_slice" -> ((s, d) =>
-      Tables.periodSlice(stocks(s, d), "2001-01-01", 180)
-        .orderBy("symbol", "date")),
-    // S2 period strings: yfinance-style '6mo' calendar slice
-    "period_fetch" -> ((s, d) =>
-      Tables.periodSlice(stocks(s, d), "2001-01-01", "6mo")
-        .orderBy("symbol", "date")),
-    // §2.6 ⊘ set ops: dates where both AF and RO traded heavy, and
-    // AF-only heavy dates (INTERSECT / EXCEPT)
-    "set_ops_heavy_days" -> ((s, d) => {
-      def heavy(sym: String) = stocks(s, d)
-        .filter(col("symbol") === sym && col("volume") > 350)
-        .select("date").distinct()
-      heavy("AF").intersect(heavy("RO")).withColumn("op", lit("both"))
-        .unionByName(heavy("AF").except(heavy("RO")).withColumn("op", lit("af_only")))
-        .select("op", "date")
-        .orderBy("op", "date")
-    }),
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
-    // ---- aggregates (A1-A3, I1)
-    "distinct_symbols" -> ((s, d) =>
-      stocks(s, d).select("symbol").distinct().orderBy("symbol")),
-    "watermark_maxdate" -> ((s, d) => Merge.watermarks(stocks(s, d))),
-    "last_close" -> ((s, d) =>
-      stocks(s, d).groupBy("symbol")
-        .agg(max_by(col("close"), col("date")).as("last_close"))
-        .orderBy("symbol")),
-
-    // ---- windows (W1-W3, W8-W13, W15)
-    "sma" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("sma_5", round(Indicators.sma(5), 6))
-        .withColumn("sma_20", round(Indicators.sma(20), 6))
-        .withColumn("sma_50", round(Indicators.sma(50), 6))
-        .select("symbol", "date", "close", "sma_5", "sma_20", "sma_50")
-        .orderBy("symbol", "date")),
-    "ma_gated" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("ma_50", round(Indicators.maGated(50), 6))
-        .withColumn("ma_200", round(Indicators.maGated(200), 6))
-        .select("symbol", "date", "close", "ma_50", "ma_200")
-        .orderBy("symbol", "date")),
-    // the chunked (keys × year) window evaluation — the oracle is the
-    // PLAIN window SQL, so the hash match proves the carry-in plan is
-    // result-identical to the one-pass-per-key plan
-    "window_chunked_sma" -> ((s, d) =>
-      graft.operators.WindowChunks
-        .chunkedSmaGated(stocks(s, d), "symbol", "date", "close", 5, 50)
-        .select(col("symbol"), col("date"),
-          round(col("sma"), 6).as("sma_5"),
-          round(col("ma_gated"), 6).as("ma_50"))
-        .orderBy("symbol", "date")),
-    "window_chunked_rsi" -> ((s, d) =>
-      graft.operators.WindowChunks
-        .chunkedRsi(stocks(s, d), "symbol", "date", "close", 14)
-        .select(col("symbol"), col("date"), round(col("rsi"), 4).as("rsi"))
-        .orderBy("symbol", "date")),
-    "window_chunked_boll_vol" -> ((s, d) =>
-      graft.operators.WindowChunks
-        .chunkedBollVol(stocks(s, d), "symbol", "date", "close", 20, 30)
-        .select(col("symbol"), col("date"),
-          round(col("bb_middle"), 4).as("bb_middle"),
-          round(col("bb_upper"), 4).as("bb_upper"),
-          round(col("bb_lower"), 4).as("bb_lower"),
-          round(col("volatility_30d"), 4).as("volatility_30d"))
-        .orderBy("symbol", "date")),
-    // truncated-history carry (700 rows ≡ the oracle's own convolution
-    // bound) — agreement with the exact recursion is far below the
-    // round(2) used on both sides
-    "window_chunked_ema" -> ((s, d) =>
-      graft.operators.WindowChunks
-        .chunkedEmaMacd(stocks(s, d), "symbol", "date", "close")
-        .select(col("symbol"), col("date"),
-          round(col("ema_12"), 2).as("ema_12"),
-          round(col("ema_26"), 2).as("ema_26"),
-          round(col("macd"), 2).as("macd"),
-          round(col("macd_signal"), 2).as("macd_signal"),
-          round(col("macd_histogram"), 2).as("macd_histogram"))
-        .orderBy("symbol", "date")),
-    "volume_ma" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("volume_ma_20", round(Indicators.volumeMa(20), 6))
-        .select("symbol", "date", "volume", "volume_ma_20")
-        .orderBy("symbol", "date")),
-    "bollinger" -> ((s, d) => {
-      val bb = Indicators.bollinger(20)
-      stocks(s, d)
-        .withColumn("bb_middle", round(bb(0)._2, 4))
-        .withColumn("bb_upper", round(bb(1)._2, 4))
-        .withColumn("bb_lower", round(bb(2)._2, 4))
-        .select("symbol", "date", "close", "bb_middle", "bb_upper", "bb_lower")
-        .orderBy("symbol", "date")
-    }),
-    "lag_diff" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("close_diff", Indicators.diff)
-        .select("symbol", "date", "close", "close_diff")
-        .orderBy("symbol", "date")),
-    "daily_return" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("daily_return", round(Indicators.dailyReturn, 4))
-        .select("symbol", "date", "close", "daily_return")
-        .orderBy("symbol", "date")),
-    "volatility" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("dr", Indicators.dailyReturn)
-        .withColumn("volatility_30d", round(Indicators.volatility(30, col("dr")), 4))
-        .select("symbol", "date", "volatility_30d")
-        .orderBy("symbol", "date")),
-    "rsi" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("rsi", round(Indicators.rsi(14), 4))
-        .select("symbol", "date", "rsi")
-        .orderBy("symbol", "date")),
-    "normalize_base100" -> ((s, d) =>
-      stocks(s, d)
-        .withColumn("norm_close", round(Indicators.normalizeBase100, 4))
-        .select("symbol", "date", "norm_close")
-        .orderBy("symbol", "date")),
-    "threshold_classify" -> ((s, d) => {
-      val r = round(Indicators.rsi(14), 4)
-      stocks(s, d)
-        .withColumn("rsi", r)
-        .withColumn("signal", Indicators.rsiSignal(col("rsi")))
-        .select("symbol", "date", "rsi", "signal")
-        .orderBy("symbol", "date")
-    }),
-
-    // ---- E3 dashboard semantics: filter FIRST, then windows — MAs are
-    // computed on the filtered range, not full history (the reference
-    // caches the scan, slices in memory, then adds MAs:
-    // /root/reference/dashboard.py:24-38,64-65; SURVEY §3 E3)
-    "dashboard_range_ma" -> ((s, d) => {
-      val sliced = stocks(s, d)
-        .filter(col("symbol") === "RO" &&
-          col("date").between(to_date(lit("1996-01-01")), to_date(lit("1999-12-31"))))
-      sliced
-        .withColumn("ma_50", round(Indicators.maGated(50), 6))
-        .withColumn("ma_200", round(Indicators.maGated(200), 6))
-        .select("symbol", "date", "close", "ma_50", "ma_200")
-        .orderBy("date")
-    }),
-
-    // ---- EWM family (W4-W7; custom Catalyst aggregate). ema_macd is
-    // the full-precision surface, hash-matched bit-for-bit against a
-    // DuckDB RECURSIVE CTE that replays the exact adjust=True recursion
-    // (emaMacdExactOracle); ema_macd_checked rounds to 2 decimals and
-    // hash-matches an independent truncated-convolution oracle — two
-    // structurally different oracles cross-checking one implementation.
-    "ema_macd" -> ((s, d) =>
-      Indicators.withEmaMacd(stocks(s, d))
-        .select("symbol", "date", "close", "ema_12", "ema_26", "macd",
-          "macd_signal", "macd_histogram")
-        .orderBy("symbol", "date")),
-    "ema_macd_checked" -> ((s, d) =>
-      Indicators.withEmaMacd(stocks(s, d))
-        .select(col("symbol"), col("date"),
-          round(col("ema_12"), 2).as("ema_12"),
-          round(col("ema_26"), 2).as("ema_26"),
-          round(col("macd"), 2).as("macd"),
-          round(col("macd_signal"), 2).as("macd_signal"),
-          round(col("macd_histogram"), 2).as("macd_histogram"))
-        .orderBy("symbol", "date")),
-
-    // ---- data quality (Q1-Q5)
-    "quality_flags" -> ((s, d) =>
-      Quality.withVerdict(stocks(s, d))
-        .withColumn("issues", concat_ws(",", col("errors")))
-        .select("symbol", "date", "is_valid", "issues")
-        .orderBy("symbol", "date")),
-    "quality_rejects" -> ((s, d) =>
-      Quality.rejects(stocks(s, d))
-        .withColumn("issues", concat_ws(",", col("errors")))
-        .select("symbol", "date", "open", "close", "issues")
-        .orderBy("symbol", "date")),
-    "quality_histogram" -> ((s, d) =>
-      Quality.withVerdict(stocks(s, d))
-        .select(explode(col("errors")).as("issue"))
-        .groupBy("issue").agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), col("issue"))),
-    "quality_success_rate" -> ((s, d) => Quality.successRate(stocks(s, d))),
-    // P6: the missing-field short-circuit on a null-injected projection —
-    // rows with a null open report ONLY missing_open (value rules
-    // skipped, fetch_and_store.py:70-76), even where the negated close
-    // would otherwise flag invalid_close.
-    "quality_missing" -> ((s, d) => {
-      val frame = stocks(s, d)
-        .withColumn("open",
-          when(col("volume") % 7 === 0, lit(null).cast("double")).otherwise(col("open")))
-        .withColumn("close",
-          when(col("volume") % 11 === 0, -col("close")).otherwise(col("close")))
-      Quality.withVerdict(frame)
-        .withColumn("issues", concat_ws(",", col("errors")))
-        .select("symbol", "date", "is_valid", "issues")
-        .orderBy("symbol", "date")
-    }),
-
-    // the same injected frame, with the reference's value-interpolated
-    // reject messages (fetch_and_store.py:86-118) instead of slugs;
-    // rejects only
-    "quality_messages" -> ((s, d) => {
-      val frame = stocks(s, d)
-        .withColumn("open",
-          when(col("volume") % 7 === 0, lit(null).cast("double")).otherwise(col("open")))
-        .withColumn("close",
-          when(col("volume") % 11 === 0, -col("close")).otherwise(col("close")))
-      Quality.withMessages(frame)
-        .filter(!col("is_valid"))
-        .withColumn("issues", concat_ws("; ", col("errors")))
-        .select("symbol", "date", "issues")
-        .orderBy("symbol", "date")
-    }),
-
-    // ---- schema-adaptive ingest (P11/S1 edge): mangled yfinance-style
-    // names — padding, case, a ticker-prefixed flattened-MultiIndex
-    // column, an 'Adj Close' variant — plus a null price hitting the
-    // NaN/None→0 fill.
-    "ingest_adaptive" -> ((s, d) => {
-      val mangled = stocks(s, d).select(
-        col("symbol").as("Symbol"),
-        col("date").as(" Date "),
-        col("open").as("Open"),
-        col("high").as("HIGH"),
-        when(col("volume") % 5 === 0, lit(null).cast("double"))
-          .otherwise(col("low")).as("AF Low"),
-        col("close").as(" Close"),
-        col("adj_close").as("Adj Close"),
-        col("volume").as("Volume"))
-      Ingest.normalizeSchema(mangled).orderBy("symbol", "date")
-    }),
-
-    // ---- S7 CSV export: write the AF slice to CSV, read it back with
-    // the original schema — the oracle equality proves the round-trip
-    // is lossless (shortest-repr doubles re-parse exactly).
-    // SIDE EFFECT: invoking this query writes the export; the path is
-    // fixed per JVM (overwrite mode handles re-runs) so repeated
-    // invocations (Verify, Bench warmup) reuse one directory instead of
-    // leaking a temp dir each call.
-    "csv_export_roundtrip" -> ((s, d) => {
-      val out = csvExportDir
-      val slice = stocks(s, d).filter(col("symbol") === "AF")
-      Sink.exportCsv(slice, out)
-      Sink.readCsv(s, out, slice.schema).orderBy("date")
-    }),
-
-    // ---- merge / upsert (J1/J2, I3)
-    "merge_upsert" -> ((s, d) => {
-      val target = stocks(s, d)
-      val updates = target.filter(col("date") >= cutoffMid98)
-        .withColumn("open", col("open") * 1.02)
-        .withColumn("close", col("close") * 1.02)
-      Merge.upsert(target, updates).orderBy("symbol", "date")
-    }),
-    "merge_first_wins" -> ((s, d) => {
-      val target = stocks(s, d).filter(col("date") < cutoff99)
-      val inserts = stocks(s, d)
-        .withColumn("open", col("open") * 1.05)
-        .withColumn("close", col("close") * 1.05)
-      Merge.insertIgnore(target, inserts).orderBy("symbol", "date")
-    }),
-    "incremental_after_watermark" -> ((s, d) => {
-      val target = stocks(s, d).filter(col("date") < cutoff98)
-      Merge.incremental(stocks(s, d), Merge.watermarks(target))
-        .orderBy("symbol", "date")
-    }),
-    "continuity_check" -> ((s, d) => {
-      val oldB = stocks(s, d).filter(col("date") < cutoff98)
-      val newB = stocks(s, d).filter(col("date") >= cutoff98)
-        .withColumn("open", col("open") * 0.3)
-      Quality.continuity(oldB, newB)
-    }),
-
-    // ---- summary (A4-A10)
-    "perf_summary" -> ((s, d) => Summary.performance(stocks(s, d))),
-
-    // ---- comparison pivot (J3)
-    "compare_pivot" -> ((s, d) =>
-      sortSmall(
-        stocks(s, d)
-          .withColumn("norm", round(Indicators.normalizeBase100, 4))
-          .groupBy("date").pivot("symbol", Tables.symbols).agg(max(col("norm"))),
-        "date")))
-
-  private val S = Tables.stocksCte
-
-  private def coreOracleSql: Map[String, String] = Map(
-    "stocks_derive" -> s"$S SELECT * FROM stocks ORDER BY symbol, date",
-    "scan_project_filter" ->
-      s"""$S SELECT date, open, high, low, close, volume FROM stocks
-         | WHERE symbol = 'AF' AND date >= DATE '1998-01-01' ORDER BY date""".stripMargin,
-    "filter_between" ->
-      s"""$S SELECT * FROM stocks WHERE symbol = 'NO'
-         | AND date BETWEEN DATE '1997-03-01' AND DATE '1997-09-30' ORDER BY date""".stripMargin,
-    "filter_in" ->
-      s"""$S SELECT * FROM stocks WHERE symbol IN ('AF','NO','RF') AND volume > 150
-         | AND adj_close IS NOT NULL ORDER BY symbol, date""".stripMargin,
-    "period_slice" ->
-      s"""$S SELECT * FROM stocks
-         | WHERE date > DATE '2001-01-01' - 180 AND date <= DATE '2001-01-01'
-         | ORDER BY symbol, date""".stripMargin,
-    "period_fetch" ->
-      s"""$S SELECT * FROM stocks
-         | WHERE date > DATE '2001-01-01' - INTERVAL 6 MONTH AND date <= DATE '2001-01-01'
-         | ORDER BY symbol, date""".stripMargin,
-    "set_ops_heavy_days" ->
-      s"""$S, af AS (SELECT DISTINCT date FROM stocks WHERE symbol = 'AF' AND volume > 350),
-         | ro AS (SELECT DISTINCT date FROM stocks WHERE symbol = 'RO' AND volume > 350)
-         | SELECT 'both' AS op, date FROM (SELECT date FROM af INTERSECT SELECT date FROM ro)
-         | UNION ALL
-         | SELECT 'af_only', date FROM (SELECT date FROM af EXCEPT SELECT date FROM ro)
-         | ORDER BY op, date""".stripMargin,
-    "distinct_symbols" -> s"$S SELECT DISTINCT symbol FROM stocks ORDER BY symbol",
-    "watermark_maxdate" ->
-      s"$S SELECT symbol, max(date) AS last_date FROM stocks GROUP BY symbol ORDER BY symbol",
-    "last_close" ->
-      s"""$S SELECT s.symbol, s.close AS last_close FROM stocks s
-         | JOIN (SELECT symbol, max(date) AS d FROM stocks GROUP BY symbol) m
-         |   ON s.symbol = m.symbol AND s.date = m.d ORDER BY s.symbol""".stripMargin,
-    "sma" ->
-      s"""$S SELECT symbol, date, close,
-         | round(avg(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS sma_5,
-         | round(avg(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 19 PRECEDING AND CURRENT ROW), 6) AS sma_20,
-         | round(avg(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 49 PRECEDING AND CURRENT ROW), 6) AS sma_50
-         | FROM stocks ORDER BY symbol, date""".stripMargin,
-    "ma_gated" ->
-      s"""$S SELECT symbol, date, close,
-         | CASE WHEN count(*) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 49 PRECEDING AND CURRENT ROW) = 50
-         |      THEN round(avg(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 49 PRECEDING AND CURRENT ROW), 6) END AS ma_50,
-         | CASE WHEN count(*) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 199 PRECEDING AND CURRENT ROW) = 200
-         |      THEN round(avg(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 199 PRECEDING AND CURRENT ROW), 6) END AS ma_200
-         | FROM stocks ORDER BY symbol, date""".stripMargin,
-    "window_chunked_sma" ->
-      s"""$S SELECT symbol, date,
-         | round(avg(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS sma_5,
-         | CASE WHEN count(*) OVER w50 = 50
-         |      THEN round(avg(close) OVER w50, 6) END AS ma_50
-         | FROM stocks
-         | WINDOW w50 AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 49 PRECEDING AND CURRENT ROW)
-         | ORDER BY symbol, date""".stripMargin,
-    // the chunked twins are oracle'd against the PLAIN window SQL: the
-    // hash match proves the carry-in plan result-identical to the
-    // one-pass-per-key plan (rsi oracle reused verbatim; ema reuses the
-    // truncated-convolution oracle of ema_macd_checked)
-    "window_chunked_rsi" -> rsiOracle,
-    "window_chunked_boll_vol" ->
-      s"""$S, base AS (
-         |   SELECT symbol, date, close,
-         |     (close / lag(close, 1) OVER (PARTITION BY symbol ORDER BY date) - 1.0) * 100.0 AS dr
-         |   FROM stocks),
-         | g AS (
-         |   SELECT symbol, date,
-         |     CASE WHEN count(*) OVER w20 = 20 THEN avg(close) OVER w20 END AS mid,
-         |     CASE WHEN count(*) OVER w20 = 20 THEN stddev_samp(close) OVER w20 END AS sd,
-         |     CASE WHEN count(dr) OVER w30 = 30 THEN stddev_samp(dr) OVER w30 END AS vol
-         |   FROM base
-         |   WINDOW w20 AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 19 PRECEDING AND CURRENT ROW),
-         |          w30 AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 29 PRECEDING AND CURRENT ROW))
-         | SELECT symbol, date,
-         |   round(mid, 4) AS bb_middle,
-         |   round(mid + 2.0 * sd, 4) AS bb_upper,
-         |   round(mid - 2.0 * sd, 4) AS bb_lower,
-         |   round(vol, 4) AS volatility_30d
-         | FROM g ORDER BY symbol, date""".stripMargin,
-    "volume_ma" ->
-      s"""$S SELECT symbol, date, volume,
-         | round(avg(volume) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN 19 PRECEDING AND CURRENT ROW), 6) AS volume_ma_20
-         | FROM stocks ORDER BY symbol, date""".stripMargin,
-    "bollinger" ->
-      s"""$S SELECT symbol, date, close,
-         | round(mid, 4) AS bb_middle,
-         | round(mid + 2.0 * sd, 4) AS bb_upper,
-         | round(mid - 2.0 * sd, 4) AS bb_lower
-         | FROM (SELECT symbol, date, close,
-         |   CASE WHEN count(*) OVER w = 20 THEN avg(close) OVER w END AS mid,
-         |   CASE WHEN count(*) OVER w = 20 THEN stddev_samp(close) OVER w END AS sd
-         |   FROM stocks
-         |   WINDOW w AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
-         | ORDER BY symbol, date""".stripMargin,
-    "lag_diff" ->
-      s"""$S SELECT symbol, date, close,
-         | close - lag(close, 1) OVER (PARTITION BY symbol ORDER BY date) AS close_diff
-         | FROM stocks ORDER BY symbol, date""".stripMargin,
-    "daily_return" ->
-      s"""$S SELECT symbol, date, close,
-         | round((close / lag(close, 1) OVER (PARTITION BY symbol ORDER BY date) - 1.0) * 100.0, 4) AS daily_return
-         | FROM stocks ORDER BY symbol, date""".stripMargin,
-    "volatility" ->
-      s"""$S SELECT symbol, date,
-         | CASE WHEN count(dr) OVER w = 30 THEN round(stddev_samp(dr) OVER w, 4) END AS volatility_30d
-         | FROM (SELECT symbol, date,
-         |   (close / lag(close, 1) OVER (PARTITION BY symbol ORDER BY date) - 1.0) * 100.0 AS dr
-         |   FROM stocks)
-         | WINDOW w AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 29 PRECEDING AND CURRENT ROW)
-         | ORDER BY symbol, date""".stripMargin,
-    "rsi" -> rsiOracle,
-    "ema_macd" -> emaMacdExactOracle,
-    "ema_macd_checked" -> emaMacdCheckedOracle,
-    "window_chunked_ema" -> emaMacdCheckedOracle,
-    "dashboard_range_ma" ->
-      s"""$S, sliced AS (
-         |   SELECT symbol, date, close FROM stocks
-         |   WHERE symbol = 'RO' AND date BETWEEN DATE '1996-01-01' AND DATE '1999-12-31')
-         | SELECT symbol, date, close,
-         |   CASE WHEN count(*) OVER w50 = 50 THEN round(avg(close) OVER w50, 6) END AS ma_50,
-         |   CASE WHEN count(*) OVER w200 = 200 THEN round(avg(close) OVER w200, 6) END AS ma_200
-         | FROM sliced
-         | WINDOW w50 AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 49 PRECEDING AND CURRENT ROW),
-         |        w200 AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 199 PRECEDING AND CURRENT ROW)
-         | ORDER BY date""".stripMargin,
-    "normalize_base100" ->
-      s"""$S SELECT symbol, date,
-         | round(close / first_value(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100.0, 4) AS norm_close
-         | FROM stocks ORDER BY symbol, date""".stripMargin,
-    "threshold_classify" ->
-      s"""WITH r AS ($rsiOracle)
-         | SELECT symbol, date, rsi,
-         |   CASE WHEN rsi > 70 THEN 'Overbought'
-         |        WHEN rsi < 30 THEN 'Oversold'
-         |        ELSE 'Neutral' END AS signal
-         | FROM r ORDER BY symbol, date""".stripMargin,
-    "quality_flags" ->
-      s"""$S SELECT symbol, date, $qualityIssuesSql = '' AS is_valid,
-         | $qualityIssuesSql AS issues FROM stocks ORDER BY symbol, date""".stripMargin,
-    "quality_rejects" ->
-      s"""$S SELECT symbol, date, open, close, $qualityIssuesSql AS issues
-         | FROM stocks WHERE $qualityIssuesSql <> '' ORDER BY symbol, date""".stripMargin,
-    "quality_histogram" ->
-      s"""$S SELECT issue, n FROM (
-         |   SELECT 'invalid_open' AS issue, count(*) AS n FROM stocks WHERE open <= 0
-         |   UNION ALL SELECT 'invalid_high', count(*) FROM stocks WHERE high <= 0
-         |   UNION ALL SELECT 'invalid_low', count(*) FROM stocks WHERE low <= 0
-         |   UNION ALL SELECT 'invalid_close', count(*) FROM stocks WHERE close <= 0
-         |   UNION ALL SELECT 'negative_volume', count(*) FROM stocks WHERE volume < 0
-         |   UNION ALL SELECT 'high_lt_low', count(*) FROM stocks WHERE high < low
-         |   UNION ALL SELECT 'high_lt_open_close', count(*) FROM stocks WHERE high < greatest(open, close)
-         |   UNION ALL SELECT 'low_gt_open_close', count(*) FROM stocks WHERE low > least(open, close)
-         |   UNION ALL SELECT 'extreme_swing', count(*) FROM stocks WHERE abs(close - open) / open > 0.5
-         |   UNION ALL SELECT 'zero_volume_major', count(*) FROM stocks WHERE volume = 0 AND symbol IN ('AAPL','GOOGL','MSFT','AMZN','TSLA')
-         | ) WHERE n > 0 ORDER BY n DESC, issue""".stripMargin,
-    "quality_success_rate" ->
-      s"""$S SELECT symbol,
-         | CAST(sum(CASE WHEN $qualityIssuesSql = '' THEN 1 ELSE 0 END) AS BIGINT) AS valid_rows,
-         | count(*) AS total_rows,
-         | round(sum(CASE WHEN $qualityIssuesSql = '' THEN 1 ELSE 0 END) * 100.0 / count(*), 4) AS success_rate_pct
-         | FROM stocks GROUP BY symbol ORDER BY symbol""".stripMargin,
-    "quality_missing" ->
-      s"""$S, f AS (SELECT symbol, date,
-         |   CASE WHEN volume % 7 = 0 THEN NULL ELSE open END AS open,
-         |   high, low,
-         |   CASE WHEN volume % 11 = 0 THEN -close ELSE close END AS close,
-         |   volume FROM stocks)
-         | SELECT symbol, date,
-         |   CASE WHEN open IS NULL THEN FALSE ELSE $qualityIssuesSql = '' END AS is_valid,
-         |   CASE WHEN open IS NULL THEN 'missing_open' ELSE $qualityIssuesSql END AS issues
-         | FROM f ORDER BY symbol, date""".stripMargin,
-    "quality_messages" ->
-      s"""$S, f AS (SELECT symbol, date,
-         |   CASE WHEN volume % 7 = 0 THEN NULL ELSE open END AS open,
-         |   high, low,
-         |   CASE WHEN volume % 11 = 0 THEN -close ELSE close END AS close,
-         |   volume FROM stocks),
-         | m AS (SELECT symbol, date,
-         |   CASE WHEN open IS NULL THEN 'Missing Open'
-         |     ELSE concat_ws('; ',
-         |       CASE WHEN open <= 0 THEN 'Invalid open price: $$' || ${d2Sql("open")} END,
-         |       CASE WHEN high <= 0 THEN 'Invalid high price: $$' || ${d2Sql("high")} END,
-         |       CASE WHEN low <= 0 THEN 'Invalid low price: $$' || ${d2Sql("low")} END,
-         |       CASE WHEN close <= 0 THEN 'Invalid close price: $$' || ${d2Sql("close")} END,
-         |       CASE WHEN volume < 0 THEN 'Negative volume: ' || CAST(volume AS VARCHAR) END,
-         |       CASE WHEN high < low THEN 'High ($$' || ${d2Sql("high")} || ') < Low ($$' || ${d2Sql("low")} || ')' END,
-         |       CASE WHEN high < greatest(open, close) THEN 'High ($$' || ${d2Sql("high")} || ') < Open/Close max' END,
-         |       CASE WHEN low > least(open, close) THEN 'Low ($$' || ${d2Sql("low")} || ') > Open/Close min' END,
-         |       CASE WHEN abs(close - open) / open > 0.5 THEN 'Extreme price movement: ' ||
-         |         CASE WHEN (close - open) / open * 100.0 >= 0 THEN '+' ELSE '' END ||
-         |         CAST(CAST((close - open) / open * 100.0 AS DECIMAL(28,1)) AS VARCHAR) || '% in one day' END,
-         |       CASE WHEN volume = 0 AND symbol IN ('AAPL','GOOGL','MSFT','AMZN','TSLA')
-         |            THEN 'Zero volume for major stock on trading day' END)
-         |     END AS issues
-         |   FROM f)
-         | SELECT symbol, date, issues FROM m WHERE issues <> '' ORDER BY symbol, date""".stripMargin,
-    "ingest_adaptive" ->
-      s"""$S SELECT symbol, date, open, high,
-         | CASE WHEN volume % 5 = 0 THEN 0.0 ELSE low END AS low,
-         | close, adj_close, volume FROM stocks ORDER BY symbol, date""".stripMargin,
-    "csv_export_roundtrip" ->
-      s"""$S SELECT * FROM stocks WHERE symbol = 'AF' ORDER BY date""".stripMargin,
-    "merge_upsert" ->
-      s"""$S SELECT symbol, date,
-         | CASE WHEN date >= DATE '1998-07-01' THEN open * 1.02 ELSE open END AS open,
-         | high, low,
-         | CASE WHEN date >= DATE '1998-07-01' THEN close * 1.02 ELSE close END AS close,
-         | adj_close, volume FROM stocks ORDER BY symbol, date""".stripMargin,
-    "merge_first_wins" ->
-      s"""$S SELECT symbol, date,
-         | CASE WHEN date < DATE '1999-01-01' THEN open ELSE open * 1.05 END AS open,
-         | high, low,
-         | CASE WHEN date < DATE '1999-01-01' THEN close ELSE close * 1.05 END AS close,
-         | adj_close, volume FROM stocks ORDER BY symbol, date""".stripMargin,
-    "incremental_after_watermark" ->
-      s"""$S SELECT * FROM stocks WHERE date >= DATE '1998-01-01' ORDER BY symbol, date""".stripMargin,
-    "continuity_check" ->
-      s"""$S, lastold AS (
-         |   SELECT s.symbol, s.close AS last_close FROM stocks s
-         |   JOIN (SELECT symbol, max(date) AS d FROM stocks WHERE date < DATE '1998-01-01' GROUP BY symbol) m
-         |     ON s.symbol = m.symbol AND s.date = m.d),
-         | firstnew AS (
-         |   SELECT s.symbol, s.open * 0.3 AS first_open FROM stocks s
-         |   JOIN (SELECT symbol, min(date) AS d FROM stocks WHERE date >= DATE '1998-01-01' GROUP BY symbol) m
-         |     ON s.symbol = m.symbol AND s.date = m.d)
-         | SELECT o.symbol, o.last_close, n.first_open,
-         |   round(n.first_open / o.last_close, 4) AS ratio,
-         |   CASE WHEN round(n.first_open / o.last_close, 4) < 0.5
-         |          OR round(n.first_open / o.last_close, 4) > 2.0
-         |        THEN 'discontinuity' ELSE 'ok' END AS flag
-         | FROM lastold o JOIN firstnew n ON o.symbol = n.symbol ORDER BY o.symbol""".stripMargin,
-    "perf_summary" ->
-      s"""$S, ret AS (
-         |   SELECT symbol, date, close, high, low, volume,
-         |     (close / lag(close, 1) OVER (PARTITION BY symbol ORDER BY date) - 1.0) * 100.0 AS dr
-         |   FROM stocks)
-         | SELECT symbol,
-         |   count(*) AS trading_days,
-         |   max(high) AS period_high,
-         |   min(low) AS period_low,
-         |   min_by(close, date) AS first_close,
-         |   max_by(close, date) AS last_close,
-         |   round(avg(dr), 4) AS avg_daily_return,
-         |   round(stddev_samp(dr), 4) AS return_volatility,
-         |   max(volume) AS max_volume,
-         |   round((max_by(close, date) - min_by(close, date)) / min_by(close, date) * 100.0, 4) AS total_return_pct,
-         |   CASE WHEN stddev_samp(dr) > 0 THEN round(avg(dr) / stddev_samp(dr), 4) END AS sharpe
-         | FROM ret GROUP BY symbol ORDER BY symbol""".stripMargin,
-    "compare_pivot" ->
-      s"""$S, norm AS (
-         |   SELECT date, symbol,
-         |     round(close / first_value(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100.0, 4) AS n
-         |   FROM stocks)
-         | SELECT date,
-         |   max(CASE WHEN symbol = 'AF' THEN n END) AS "AF",
-         |   max(CASE WHEN symbol = 'AO' THEN n END) AS "AO",
-         |   max(CASE WHEN symbol = 'NF' THEN n END) AS "NF",
-         |   max(CASE WHEN symbol = 'NO' THEN n END) AS "NO",
-         |   max(CASE WHEN symbol = 'RF' THEN n END) AS "RF",
-         |   max(CASE WHEN symbol = 'RO' THEN n END) AS "RO"
-         | FROM norm GROUP BY date ORDER BY date""".stripMargin)
-
-  /** Fixed-decimal price rendering in DuckDB — mirrors Quality's
-    * decimal(18,4) cast (scale ≥ the derived prices' true decimal
-    * width, so neither engine ever rounds ON a boundary).
-    */
-  private def d2Sql(c: String): String = s"CAST(CAST($c AS DECIMAL(18,4)) AS VARCHAR)"
-
-  /** EWM adjust=True as a truncated convolution for the oracle:
-    * num_t = Σ_j d^j x_{t-j} over a window of `terms` rows (d^terms
-    * below double precision), den_t = (1-d^len)/(1-d) closed-form.
-    * Agrees with the exact recursion to ~1e-10 absolute — absorbed by
-    * the round(2) on both sides.
-    */
-  private def ewmConvSql(listCol: String, span: Int): String = {
-    val d = s"(1.0 - 2.0 / ${span + 1}.0)"
-    s"""(list_sum(list_transform(list_reverse($listCol), (x, i) -> x * pow($d, i - 1)))
-       | / ((1.0 - pow($d, len($listCol))) / (2.0 / ${span + 1}.0)))""".stripMargin.replace("\n", "")
-  }
-
-  /** Exact full-precision oracle for `ema_macd`: a DuckDB RECURSIVE CTE
-    * replaying the adjust=True recursion bit-for-bit.
-    *
-    * EwmMean's per-row update is `num' = x + d*num`, `den' = 1 + d*den`,
-    * output `num/den` — three IEEE double ops per state. The recursion
-    * here carries all three EWM states (span 12 and 26 over close, span
-    * 9 over the derived macd) per (symbol, row) and performs the SAME
-    * ops in the SAME order on the SAME inputs, so every intermediate
-    * double is bit-identical to the Spark aggregate's buffer. Constants
-    * go through CAST(n AS DOUBLE) so DuckDB can't route `2.0/13.0`
-    * through DECIMAL arithmetic; the seeds (x + d*0, 1 + d*0, x/1 - x/1)
-    * are algebraically exact in IEEE, so literal 0/1 seeds are safe.
-    *
-    * Iteration count = max rows per symbol (~2.5k at sf0.01) with a
-    * 6-row frontier per step — cheap for the oracle's one-shot run.
-    */
-  private lazy val emaMacdExactOracle: String = {
-    def d(span: Int) =
-      s"(CAST(1 AS DOUBLE) - CAST(2 AS DOUBLE) / CAST(${span + 1} AS DOUBLE))"
-    def ema12(p: String) = s"(o.close + ${d(12)} * $p.num12) / (CAST(1 AS DOUBLE) + ${d(12)} * $p.den12)"
-    def ema26(p: String) = s"(o.close + ${d(26)} * $p.num26) / (CAST(1 AS DOUBLE) + ${d(26)} * $p.den26)"
-    s"""${S.replaceFirst("WITH ", "WITH RECURSIVE ")}, ord AS (
-       |   SELECT symbol, date, close,
-       |     row_number() OVER (PARTITION BY symbol ORDER BY date) AS rn
-       |   FROM stocks),
-       | rec AS (
-       |   SELECT symbol, date, rn, close,
-       |     close AS num12, CAST(1 AS DOUBLE) AS den12,
-       |     close AS num26, CAST(1 AS DOUBLE) AS den26,
-       |     CAST(0 AS DOUBLE) AS macd,
-       |     CAST(0 AS DOUBLE) AS nums, CAST(1 AS DOUBLE) AS dens
-       |   FROM ord WHERE rn = 1
-       |   UNION ALL
-       |   SELECT o.symbol, o.date, o.rn, o.close,
-       |     o.close + ${d(12)} * r.num12 AS num12,
-       |     CAST(1 AS DOUBLE) + ${d(12)} * r.den12 AS den12,
-       |     o.close + ${d(26)} * r.num26 AS num26,
-       |     CAST(1 AS DOUBLE) + ${d(26)} * r.den26 AS den26,
-       |     ${ema12("r")} - ${ema26("r")} AS macd,
-       |     (${ema12("r")} - ${ema26("r")}) + ${d(9)} * r.nums AS nums,
-       |     CAST(1 AS DOUBLE) + ${d(9)} * r.dens AS dens
-       |   FROM rec r JOIN ord o ON o.symbol = r.symbol AND o.rn = r.rn + 1)
-       | SELECT symbol, date, close,
-       |   num12 / den12 AS ema_12,
-       |   num26 / den26 AS ema_26,
-       |   macd,
-       |   nums / dens AS macd_signal,
-       |   macd - nums / dens AS macd_histogram
-       | FROM rec ORDER BY symbol, date""".stripMargin
-  }
-
-  private lazy val emaMacdCheckedOracle: String =
-    s"""$S, wl AS (
-       |   SELECT symbol, date, close,
-       |     list(close) OVER (PARTITION BY symbol ORDER BY date
-       |       ROWS BETWEEN 699 PRECEDING AND CURRENT ROW) AS xs
-       |   FROM stocks),
-       | e AS (
-       |   SELECT symbol, date,
-       |     ${ewmConvSql("xs", 12)} AS ema12,
-       |     ${ewmConvSql("xs", 26)} AS ema26
-       |   FROM wl),
-       | m AS (SELECT symbol, date, ema12, ema26, ema12 - ema26 AS macd FROM e),
-       | wm AS (
-       |   SELECT symbol, date, ema12, ema26, macd,
-       |     list(macd) OVER (PARTITION BY symbol ORDER BY date
-       |       ROWS BETWEEN 399 PRECEDING AND CURRENT ROW) AS ms
-       |   FROM m),
-       | sig AS (
-       |   SELECT symbol, date, ema12, ema26, macd,
-       |     ${ewmConvSql("ms", 9)} AS macd_signal
-       |   FROM wm)
-       | SELECT symbol, date,
-       |   round(ema12, 2) AS ema_12,
-       |   round(ema26, 2) AS ema_26,
-       |   round(macd, 2) AS macd,
-       |   round(macd_signal, 2) AS macd_signal,
-       |   round(macd - macd_signal, 2) AS macd_histogram
-       | FROM sig ORDER BY symbol, date""".stripMargin
-
-  /** RSI(14) oracle — mirrors Indicators.rsi including the leading-null
-    * delta → gain=loss=0.0 quirk and the division edges.
-    */
-  private lazy val rsiOracle: String =
-    s"""$S, delta AS (
-       |   SELECT symbol, date,
-       |     close - lag(close, 1) OVER (PARTITION BY symbol ORDER BY date) AS d
-       |   FROM stocks),
-       | gl AS (
-       |   SELECT symbol, date,
-       |     CASE WHEN d > 0 THEN d ELSE 0.0 END AS gain,
-       |     CASE WHEN d < 0 THEN -d ELSE 0.0 END AS loss
-       |   FROM delta),
-       | ga AS (
-       |   SELECT symbol, date,
-       |     CASE WHEN count(*) OVER w = 14 THEN avg(gain) OVER w END AS ag,
-       |     CASE WHEN count(*) OVER w = 14 THEN avg(loss) OVER w END AS al
-       |   FROM gl
-       |   WINDOW w AS (PARTITION BY symbol ORDER BY date ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-       | SELECT symbol, date,
-       |   CASE WHEN al > 0 THEN round(100.0 - 100.0 / (1.0 + ag / al), 4)
-       |        WHEN al = 0 AND ag > 0 THEN 100.0 END AS rsi
-       | FROM ga ORDER BY symbol, date""".stripMargin
-
-  /** Comma-joined quality-issue list as a SQL scalar — mirrors
-    * Quality.withVerdict's value rules in declaration order (the stocks
-    * derivation never yields nulls, so the missing-field short-circuit
-    * branch is structurally unreachable on this data and elided here).
-    */
-  private lazy val qualityIssuesSql: String =
-    """concat_ws(',',
-      | CASE WHEN open <= 0 THEN 'invalid_open' END,
-      | CASE WHEN high <= 0 THEN 'invalid_high' END,
-      | CASE WHEN low <= 0 THEN 'invalid_low' END,
-      | CASE WHEN close <= 0 THEN 'invalid_close' END,
-      | CASE WHEN volume < 0 THEN 'negative_volume' END,
-      | CASE WHEN high < low THEN 'high_lt_low' END,
-      | CASE WHEN high < greatest(open, close) THEN 'high_lt_open_close' END,
-      | CASE WHEN low > least(open, close) THEN 'low_gt_open_close' END,
-      | CASE WHEN abs(close - open) / open > 0.5 THEN 'extreme_swing' END,
-      | CASE WHEN volume = 0 AND symbol IN ('AAPL','GOOGL','MSFT','AMZN','TSLA') THEN 'zero_volume_major' END)""".stripMargin.replace("\n", "")
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -551,7 +551,7 @@ object Sink {
     */
   def appendToIvfIndex(newEmb: DataFrame, dir: String): Unit = {
     val spark = newEmb.sparkSession
-    recoverIvfIndex(spark, dir)
+    recoverIndex(spark, ivfTrees(dir))
     val codec = storedGeometry(spark, dir).codec
     cellLayout(encodeBatch(spark, dir, codec, dedupBatch(newEmb)))
       .mode("append").parquet(s"$dir/assignment")
@@ -1080,7 +1080,7 @@ object Sink {
     * codec's layout. Run it on the [[ivfAppendDrift]] cadence.
     */
   def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
-    recoverIvfIndex(spark, dir)
+    recoverIndex(spark, ivfTrees(dir))
     val tmp = s"$dir/assignment__compact"
     // the full rewrite is the purge point for tombstoned rows — the
     // anti-join rides a pass that was already rewriting every row.
@@ -1175,17 +1175,25 @@ object Sink {
     }
   }
 
-  /** Roll back the two swaps the IVF lifecycle makes — the whole index
-    * dir (maintenance retrain) and its assignment table (compaction).
-    * Called by the mutating entry points before they read the index;
-    * maintenance is single-writer, so no swap is in flight there.
-    * Readers never recover: a search racing a live swap must not
-    * rename trees under it.
+  /** Roll back every swap an interrupted lifecycle call left in an
+    * index: `trees` are the paths its mutators replace with
+    * [[checkedSwap]] ([[ivfTrees]], [[dedupTrees]]). Called by the
+    * mutating entry points before they read the index; maintenance is
+    * single-writer, so no swap is in flight there. Readers never
+    * recover: a search racing a live swap must not rename trees under
+    * it.
     */
-  private def recoverIvfIndex(spark: SparkSession, dir: String): Unit = {
-    recoverSwap(spark, dir)
-    recoverSwap(spark, s"$dir/assignment")
-  }
+  private def recoverIndex(spark: SparkSession, trees: Seq[String]): Unit =
+    trees.foreach(recoverSwap(spark, _))
+
+  /** The IVF lifecycle swaps the whole index dir (maintenance retrain)
+    * and its assignment table (compaction).
+    */
+  private def ivfTrees(dir: String): Seq[String] = Seq(dir, s"$dir/assignment")
+
+  /** The dedup index swaps each of its three tables (compaction). */
+  private def dedupTrees(dir: String): Seq[String] =
+    Seq("shingles", "fingerprints", "bands").map(t => s"$dir/$t")
 
   /** Per-cell data-file counts from one recursive FS listing — the
     * fragmentation map [[compactIvfIndexSelective]] plans from (cost:
@@ -1220,7 +1228,7 @@ object Sink {
     */
   def compactIvfIndexSelective(spark: SparkSession, dir: String,
       minFilesPerCell: Int = 2, fullRewriteAbove: Double = 0.4): Int = {
-    recoverIvfIndex(spark, dir)
+    recoverIndex(spark, ivfTrees(dir))
     val assignPath = s"$dir/assignment"
     val counts = cellFileCounts(spark, assignPath)
     val fragmented = counts
@@ -1293,7 +1301,7 @@ object Sink {
       threshold: Double = 0.25, iters: Int = 2,
       compactFilesPerCell: Int = 4): DataFrame = {
     import spark.implicits._
-    recoverIvfIndex(spark, dir)
+    recoverIndex(spark, ivfTrees(dir))
     val g = storedGeometry(spark, dir)
     val assignPath = s"$dir/assignment"
     // dedupe + cell + encode the batch ONCE per drop (checkpointed,
@@ -1825,6 +1833,7 @@ object Sink {
   def appendToDedupIndex(batch: DataFrame, dir: String): Unit = {
     val spark = batch.sparkSession
     requireIndexKind(spark, dir, "dedup_text", "appendToDedupIndex")
+    recoverIndex(spark, dedupTrees(dir))
     require(pathExists(spark, s"$dir/bands"),
       s"appendToDedupIndex: no dedup index at $dir (missing bands table)")
     val sh = dedupShingleRows(batch).localCheckpoint()
@@ -1861,6 +1870,7 @@ object Sink {
   def deleteFromDedupIndex(spark: SparkSession, dir: String,
       docIds: DataFrame): Unit = {
     requireIndexKind(spark, dir, "dedup_text", "deleteFromDedupIndex")
+    recoverIndex(spark, dedupTrees(dir))
     require(pathExists(spark, s"$dir/bands"),
       s"deleteFromDedupIndex: no dedup index at $dir (missing bands table)")
     val d = docIds.select(col("doc_id").cast("long").as("doc_id"))
@@ -1986,6 +1996,7 @@ object Sink {
     */
   def maintainDedupIndex(spark: SparkSession, batch: DataFrame,
       dir: String, threshold: Double = 0.5): DataFrame = {
+    recoverIndex(spark, dedupTrees(dir))
     val verdicts = classifyWithDedupIndex(spark, batch, dir, threshold)
     // materialized once: the semi-join otherwise re-runs for the
     // emptiness check AND each of the append's table derivations,
@@ -2014,9 +2025,22 @@ object Sink {
     * a crash leaves either tree recoverable; a crash between the
     * swaps and the tombstone cleanup is safe (tombstones over
     * already-purged ids anti-join nothing).
+    *
+    * The three tables swap one at a time, so a crash BETWEEN two swaps
+    * leaves a mixed generation: the tables already swapped are
+    * compacted and purged, the others still hold their appended files
+    * and the tombstoned rows, the tombstones are all still present and
+    * the manifest is the pre-compaction one. That state serves what
+    * the index served before the compaction: classify masks the
+    * tombstoned docs on the fingerprint and band reads, and a purged
+    * doc's missing shingles are never read, because verification
+    * candidates come from the masked bands. The next compaction
+    * finishes the job (rewriting an already-compacted table is
+    * idempotent). SinkSpec's takedown-delete test pins this state.
     */
   def compactDedupIndex(spark: SparkSession, dir: String): Unit = {
     requireIndexKind(spark, dir, "dedup_text", "compactDedupIndex")
+    recoverIndex(spark, dedupTrees(dir))
     val tombFiles = {
       val buf = scala.collection.mutable.ArrayBuffer[String]()
       forEachDataFile(spark, s"$dir/tombstones")(f => buf += f.getPath.toString)

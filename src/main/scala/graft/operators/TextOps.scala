@@ -1209,7 +1209,7 @@ object TextOps {
     * selection toward serial cadence. Selection stays a driver-side
     * fold over the ≤ batchSize collected window (one count job per
     * round regardless); the oracle mirrors the fold as an unrolled
-    * kept-set CTE chain ([[graft.ExtQueries]] bpeBatchChainSql).
+    * kept-set CTE chain ([[graft.queries.TextQueries]] bpeBatchChainSql).
     */
   private[graft] def selectBatchWindow(
       ranked: Seq[(Int, String, String, Long)])

@@ -28,7 +28,7 @@ import graft.functions.EwmMean.ewm
   * `carryRows` = 700 the dropped terms carry weight ≤ (1-α)^700 — below
   * 1e-23 even for span 26 — so the chunked result agrees with the exact
   * recursion far inside double-precision ulp (the same truncation bound
-  * the DuckDB oracle itself uses, SparkEntry.emaMacdCheckedOracle).
+  * the DuckDB oracle itself uses, StockQueries.emaMacdCheckedOracle).
   *
   * Safety: the carry construction only reaches ONE chunk back, so the
   * plan silently under-fills frames if a middle chunk holds fewer than

@@ -44,4 +44,13 @@ class OracleCoverageSpec extends AnyFunSuite {
     assert(unknown.isEmpty,
       s"bench headline entries with no matching query: ${unknown.toSeq.sorted.mkString(", ")}")
   }
+
+  test("the registry build rejects a query name declared twice") {
+    // a map keeps the last of two equal keys, so without this check a
+    // mistyped name would silently drop a query from the oracle gate
+    val q = graft.queries.QuerySpec("dup_name", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val ex = intercept[IllegalArgumentException](
+      graft.queries.QuerySpec.unique(Seq(q, q.copy(oracle = "SELECT 2"))))
+    assert(ex.getMessage.contains("dup_name"), ex.getMessage)
+  }
 }

@@ -694,6 +694,23 @@ class SinkSpec extends SparkSpec {
     assert(ids(d2) == (0L until 500L).toSet)
     assert(Sink.searchIvfIndex(spark, e, d2, 10, 3).count() == 30)
     assert(!new java.io.File(d2 + "__old").exists())
+    // crash inside a dedup-index compaction, after rename(shingles →
+    // shingles__old): an append must not land a batch-only shingles
+    // table beside the parked one, which the next compaction would then
+    // treat as the redundant copy and delete
+    val d3 = Files.createTempDirectory("graft-swapdedup").toString + "/idx"
+    Sink.writeDedupIndex(dedupDocs(spark, dedupExisting), d3)
+    def classify() = Sink.classifyWithDedupIndex(
+        spark, dedupDocs(spark, dedupBatchRows), d3)
+      .collect().map(_.toSeq).toSeq
+    val beforeCrash = classify()
+    assert(new java.io.File(s"$d3/shingles")
+      .renameTo(new java.io.File(s"$d3/shingles__old")))
+    Sink.appendToDedupIndex(dedupDocs(spark,
+      Seq((20L, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"))), d3)
+    Sink.compactDedupIndex(spark, d3)
+    assert(classify() == beforeCrash)
+    assert(!new java.io.File(s"$d3/shingles__old").exists())
   }
 
   test("a truncated index manifest fails loudly instead of reading back wrong geometry") {
@@ -884,6 +901,25 @@ class SinkSpec extends SparkSpec {
         fresh, dedupDocs(fresh, dedupBatchRows), dir)
       .collect().map(_.toSeq).toSeq
     assert(masked == expected)
+    // mixed generation, as a crash between two of compaction's
+    // per-table swaps leaves it: shingles compacted and purged,
+    // fingerprints and bands not, tombstones still present — built on a
+    // copy by swapping in only a compacted copy's shingles
+    val mixed = Files.createTempDirectory("graft-dedupidx-mixed").toString + "/idx"
+    val donor = Files.createTempDirectory("graft-dedupidx-donor").toString + "/idx"
+    Seq(mixed, donor).foreach(d => org.apache.commons.io.FileUtils
+      .copyDirectory(new java.io.File(dir), new java.io.File(d)))
+    Sink.compactDedupIndex(spark, donor)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$mixed/shingles"))
+    assert(new java.io.File(s"$donor/shingles")
+      .renameTo(new java.io.File(s"$mixed/shingles")))
+    def deletedRows(t: String) =
+      spark.read.parquet(s"$mixed/$t").filter(col("doc_id") <= 1L).count()
+    assert(deletedRows("shingles") == 0 && deletedRows("bands") > 0)
+    val mixedGot = Sink.classifyWithDedupIndex(
+        spark, dedupDocs(spark, dedupBatchRows), mixed)
+      .collect().map(_.toSeq).toSeq
+    assert(mixedGot == expected)
     // purge: identical service with zero masking joins, rows gone,
     // tombstones consumed
     Sink.compactDedupIndex(spark, dir)
