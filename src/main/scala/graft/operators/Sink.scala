@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Parquet sink operators (SURVEY.md §2.1 S5/S6) — the engine
@@ -262,12 +262,8 @@ object Sink {
     * corpus-sized embedding table at serve time), the trained centroid
     * table (plus the PQ codebooks) beside it, and ONE manifest write
     * recording the geometry every later operation reads back. Serving
-    * never retrains. Returns the resolved cell count.
-    *
-    * The overwrite is forced to STATIC partition-overwrite semantics:
-    * a retrain must replace the WHOLE assignment directory, or cells
-    * absent from the new base would keep stale appended rows from the
-    * previous index generation under a dynamic session default.
+    * never retrains. Returns the resolved cell count. The overwrite is
+    * static ([[TableLayout.save]]): a retrain replaces every cell.
     */
   def writeIvfIndex(emb: DataFrame, dir: String, codec: IvfCodec,
       cells: IvfCells = Cells(8), iters: Int = 2,
@@ -329,11 +325,10 @@ object Sink {
     // broadcast trained artifacts (bit-identical to the trained
     // assignment — the same rounded-L2 argmin with cell tiebreak), so
     // the write pays ONE exchange: the cell repartition (guide §2.4)
-    try cellLayout(
+    try assignmentTable.save(
         codec.encode(withNearestCell(emb.select("vec_id", "embedding"), cent),
-          pq.get._2).select(codec.columns.map(col): _*))
-      .mode("overwrite").option("partitionOverwriteMode", "static")
-      .parquet(s"$dir/assignment")
+          pq.get._2).select(codec.columns.map(col): _*),
+        assignmentTable.path(dir), SaveMode.Overwrite)
     finally Await.ready(artF, Duration.Inf)
     artF.value.get.get // surface an artifact-write failure
     writeIndexManifest(spark, dir,
@@ -345,18 +340,63 @@ object Sink {
     n
   }
 
-  /** The cell-partitioned layout writer: repartition by cell BEFORE the
-    * partitioned write, so each task holds whole cells and every cell
-    * (or, on append, every touched cell) lands as ONE file. Without
-    * it every shuffle task writes a sliver into every cell directory —
-    * tasks × cells files, and at cells ∝ corpus the serve-time file
-    * listing dominates search (measured ×100 probe: 36.8 s → the
+  /** One partitioned table of a stored index: its name under the index
+    * dir, its partition column and its in-file sort keys. The writer
+    * repartitions on the partition column BEFORE the partitioned write,
+    * so each task holds whole partitions and every partition (or, on
+    * append, every touched one) lands as ONE file. Without it every
+    * shuffle task writes a sliver into every partition directory —
+    * tasks × partitions files, and at cells ∝ corpus the serve-time
+    * file listing dominates search (measured ×100 probe: 36.8 s → the
     * one-file-per-cell layout serves the same probe in ~1 s).
     */
-  private def cellLayout(rows: DataFrame) =
-    rows.repartition(col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.partitionBy("cell")
+  private final case class TableLayout(name: String, part: String, keys: String*) {
+    def path(dir: String): String = s"$dir/$name"
+
+    def writer(rows: DataFrame) =
+      rows.repartition(col(part)).sortWithinPartitions(keys.map(col): _*)
+        .write.partitionBy(part)
+
+    /** Append, or overwrite pinned to STATIC partition-overwrite
+      * semantics: a full rewrite must replace the WHOLE table, or
+      * partitions absent from the new rows would keep stale rows from
+      * the previous generation under a dynamic session default.
+      */
+    def save(rows: DataFrame, dst: String, mode: SaveMode): Unit =
+      writer(rows).mode(mode).option("partitionOverwriteMode", "static")
+        .parquet(dst)
+  }
+
+  private val assignmentTable = TableLayout("assignment", "cell", "cell", "vec_id")
+
+  // the dedup index's three tables (see "stored incremental-dedup
+  // text index" below)
+  private val shinglesTable = TableLayout("shingles", "db", "db", "doc_id", "s")
+  private val fingerprintsTable = TableLayout("fingerprints", "fpb", "fpb", "fp", "doc_id")
+  private val bandsTable = TableLayout("bands", "band", "band", "bv", "doc_id")
+
+  /** A stored-index family as the shared lifecycle core sees it: the
+    * manifest kinds it owns, the id column its tombstones carry, and
+    * the tables compaction rewrites (in swap order; the last one is
+    * written last, so its presence marks a complete index). `swapsDir`:
+    * a maintenance retrain swaps the whole index dir as well.
+    * `distinctRows`: every column is a key, so compaction restores the
+    * distinct invariant (defense in depth against a violated append
+    * contract).
+    */
+  private final case class IndexFamily(kinds: Seq[String], idCol: String,
+      tables: Seq[TableLayout], swapsDir: Boolean, distinctRows: Boolean) {
+    /** Every path a [[checkedSwap]] of this family replaces. */
+    def trees(dir: String): Seq[String] =
+      (if (swapsDir) Seq(dir) else Nil) ++ tables.map(_.path(dir))
+  }
+
+  private val ivfIndex = IndexFamily(Seq(Flat.kind, Sq8.kind, Pq().kind),
+    "vec_id", Seq(assignmentTable), swapsDir = true, distinctRows = false)
+
+  private val dedupIndex = IndexFamily(Seq("dedup_text"), "doc_id",
+    Seq(shinglesTable, fingerprintsTable, bandsTable),
+    swapsDir = false, distinctRows = true)
 
   /** Fixed-cell-SIZE geometry: cells = ⌈N/targetCellSize⌉ (see
     * [[CellSize]]). One column-pruned count on the keyless path; with
@@ -551,10 +591,10 @@ object Sink {
     */
   def appendToIvfIndex(newEmb: DataFrame, dir: String): Unit = {
     val spark = newEmb.sparkSession
-    recoverIndex(spark, ivfTrees(dir))
+    openForMutation(spark, dir, ivfIndex, "appendToIvfIndex")
     val codec = storedGeometry(spark, dir).codec
-    cellLayout(encodeBatch(spark, dir, codec, dedupBatch(newEmb)))
-      .mode("append").parquet(s"$dir/assignment")
+    assignmentTable.save(encodeBatch(spark, dir, codec, dedupBatch(newEmb)),
+      assignmentTable.path(dir), SaveMode.Append)
   }
 
   /** A deduped batch in the stored layout: cell from the narrow
@@ -956,18 +996,20 @@ object Sink {
     storedGeometry(spark, dir).codec match {
       case pq: Pq => pq
       case c => throw new IllegalArgumentException(
-        kindMismatch(label, dir, c.kind, "ivfpq"))
+        kindMismatch(label, dir, c.kind, Seq("ivfpq")))
     }
 
-  /** Tombstone-delete from a stored index (either layout — deletion is
+  /** Tombstone-delete from a stored index (any codec — deletion is
     * assignment-level): the ids land as one tiny id-only parquet file
-    * beside the index; both search paths mask them with a broadcast
-    * anti-join, and the next WHOLE-INDEX rewrite (a maintenance
-    * retrain, or [[compactIvfIndex]]) purges the rows physically and
-    * clears the tombstones. Cost model: a delete writes O(ids) bytes
-    * and never touches the corpus-sized assignment; serving pays one
-    * broadcast anti-join only while tombstones exist; the purge rides
-    * rewrites that were already rewriting every row.
+    * beside the index ([[writeTombstones]]); every search masks them
+    * with a broadcast anti-join, and the next WHOLE-INDEX rewrite (a
+    * maintenance retrain, or [[compactIvfIndex]]) purges the rows
+    * physically and consumes the tombstones. Cost model: a delete
+    * writes O(ids) bytes and never touches the corpus-sized
+    * assignment; serving pays one broadcast anti-join only while
+    * tombstones exist; the purge rides rewrites that were already
+    * rewriting every row. No manifest write: the generation caches key
+    * on `assignment` and `centroids`, which a delete does not change.
     *
     * Contract: a tombstoned id is DEAD until a purge clears it —
     * appending the same id again stays masked (no timestamp ordering
@@ -977,56 +1019,62 @@ object Sink {
     */
   def deleteFromIvfIndex(spark: SparkSession, dir: String,
       ids: DataFrame): Unit = {
-    // loud on a typo'd dir — every other lifecycle mutation fails
-    // loudly on a bad target, delete must not silently no-op beside it
-    require(pathExists(spark, s"$dir/assignment"),
-      s"deleteFromIvfIndex: no index at $dir (missing assignment table)")
-    val d = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct().localCheckpoint()
-    // ids may reference rows the index never held (out-of-order CDC:
-    // the delete can arrive before its row) — but an EMPTY delete must
-    // not write a schema-only file that would flip every future search
-    // onto the anti-join plan for nothing
-    if (!d.isEmpty) {
-      d.coalesce(1) // id lists are tiny; one file per delete call
-        .write.mode("append").parquet(s"$dir/tombstones")
-    }
-    org.apache.spark.sql.GraftShims.uncheckpoint(d)
+    openForMutation(spark, dir, ivfIndex, "deleteFromIvfIndex")
+    writeTombstones(spark, dir, ivfIndex, ids): Unit
   }
 
-  /** The live tombstone set — None when no delete has ever happened,
-    * so serving plans are untouched on tombstone-free indexes (FS
+  /** The one tombstone writer: the distinct ids of `ids` (the family's
+    * id column) append as ONE small file under `dir/tombstones`.
+    * Returns whether anything was written. The ids may reference rows
+    * the index never held (out-of-order CDC: the delete can arrive
+    * before its row) — but an EMPTY delete writes nothing, since a
+    * schema-only file would flip every later read onto the masking plan
+    * for nothing.
+    */
+  private def writeTombstones(spark: SparkSession, dir: String,
+      fam: IndexFamily, ids: DataFrame): Boolean = {
+    val d = ids.select(col(fam.idCol).cast("long").as(fam.idCol))
+      .distinct().localCheckpoint()
+    val nonEmpty = !d.isEmpty
+    if (nonEmpty) d.coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
+    org.apache.spark.sql.GraftShims.uncheckpoint(d)
+    nonEmpty
+  }
+
+  /** One listing of an index's tombstones: the data files it found and
+    * the distinct ids they hold — None when no delete has ever
+    * happened, so a tombstone-free index plans no masking join (FS
     * metadata check only).
     *
-    * The read is PINNED to the file set the existence check just
-    * listed (explicit paths + schema, so planning opens no footer) and
-    * tolerates files vanishing before task execution: a concurrent
-    * [[compactIvfIndex]] deletes exactly the tombstone files it
-    * consumed — those ids are purged from the rows it rewrote, so a
-    * query that planned against the old listing can safely treat the
-    * vanished files as empty instead of failing mid-flight.
+    * The read is PINNED to the listed file set (explicit paths +
+    * schema, so planning opens no footer) and tolerates files
+    * vanishing before task execution: a concurrent compaction deletes
+    * exactly the tombstone files IT listed, whose ids are purged from
+    * the rows it rewrote, so a reader that planned against the old
+    * listing can treat the vanished files as empty. The same pinned
+    * `files` are what a compaction deletes after its swap.
     */
-  private def tombstones(spark: SparkSession, dir: String,
-      idCol: String = "vec_id"): Option[DataFrame] = {
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    forEachDataFile(spark, s"$dir/tombstones")(f => files += f.getPath.toString)
-    if (files.isEmpty) None
-    else Some(
-      spark.read
-        .schema(s"$idCol long")
-        .option("ignoreMissingFiles", "true")
-        .parquet(files.toSeq: _*)
-        .select(idCol).distinct())
+  private final case class Tombstones(idCol: String, files: Seq[String],
+      ids: Option[DataFrame]) {
+    /** `rows` minus the tombstoned ids (a broadcast anti-join on the
+      * tiny id set) — identity when there are none.
+      */
+    def mask(rows: DataFrame): DataFrame =
+      ids.fold(rows)(t => rows.join(broadcast(t), Seq(idCol), "left_anti"))
   }
 
-  /** Mask tombstoned rows out of an assignment scan — identity when
-    * the index has no tombstones.
-    */
-  private def maskTombstones(spark: SparkSession, dir: String,
-      assignment: DataFrame): DataFrame =
-    tombstones(spark, dir)
-      .map(t => assignment.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      .getOrElse(assignment)
+  private def tombstones(spark: SparkSession, dir: String,
+      fam: IndexFamily): Tombstones = {
+    val files = scala.collection.mutable.ArrayBuffer.empty[String]
+    forEachDataFile(spark, s"$dir/tombstones")(f => files += f.getPath.toString)
+    Tombstones(fam.idCol, files.toSeq,
+      if (files.isEmpty) None
+      else Some(spark.read
+        .schema(s"${fam.idCol} long")
+        .option("ignoreMissingFiles", "true")
+        .parquet(files.toSeq: _*)
+        .select(fam.idCol).distinct()))
+  }
 
   private def clearTombstones(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
@@ -1055,75 +1103,98 @@ object Sink {
   }
 
   private def kindMismatch(label: String, dir: String, kind: String,
-      expected: String): String =
-    s"$label: index at $dir is kind '$kind', not '$expected' — use the " +
-      s"${indexFamily(kind)} operator family"
+      expected: Seq[String]): String =
+    s"$label: index at $dir is kind '$kind', not " +
+      expected.mkString("'", "' | '", "'") +
+      s" — use the ${indexFamily(kind)} operator family"
 
   /** Fail loudly when an operator is pointed at an index of another
     * layout. Kind is checked whenever the manifest records it; a legacy
     * pre-manifest index has no kind to check.
     */
   private def requireIndexKind(spark: SparkSession, dir: String,
-      expected: String, label: String): Unit =
+      label: String, expected: String*): Unit =
     readIndexManifest(spark, dir).flatMap(_.get("kind")).foreach { kind =>
-      require(kind == expected, kindMismatch(label, dir, kind, expected))
+      require(expected.contains(kind), kindMismatch(label, dir, kind, expected))
     }
 
-  /** Compact a stored index's assignment layout back to ONE file per
-    * cell. Every [[appendToIvfIndex]] batch adds one file per touched
-    * cell, so a continuously-fed index
-    * accumulates files linearly in batch count — and probe cost grows
-    * with file count (open/footer per file), not data. Compaction is
-    * the standard maintenance move: one shuffle by cell, rewrite via
-    * temp-and-swap (reading and overwriting the same path in one job
-    * would corrupt it), schema-agnostic so the same op serves every
-    * codec's layout. Run it on the [[ivfAppendDrift]] cadence.
+  /** The guard before any read of a family's index: a recorded kind the
+    * family owns, and the family's last-written table present (a
+    * typo'd dir fails loudly instead of silently no-opping beside the
+    * real index).
     */
-  def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
-    recoverIndex(spark, ivfTrees(dir))
-    val tmp = s"$dir/assignment__compact"
-    // the full rewrite is the purge point for tombstoned rows — the
-    // anti-join rides a pass that was already rewriting every row.
-    // The consumed tombstone FILE SET is pinned up front: compaction
-    // runs on the append cadence, concurrent with serving, and a
-    // delete landing between this listing and the post-swap cleanup
-    // must KEEP its tombstone (clearing the whole directory would
-    // silently resurrect it).
-    val tombFiles = {
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      forEachDataFile(spark, s"$dir/tombstones")(f => buf += f.getPath.toString)
-      buf.toSeq
+  private def requireIndex(spark: SparkSession, dir: String,
+      fam: IndexFamily, label: String): Unit = {
+    requireIndexKind(spark, dir, label, fam.kinds: _*)
+    val last = fam.tables.last
+    require(pathExists(spark, last.path(dir)),
+      s"$label: no index at $dir (missing ${last.name} table)")
+  }
+
+  /** The preamble of every mutating entry point (append, delete,
+    * compact, maintain): roll back each swap an interrupted lifecycle
+    * call left ([[recoverSwap]] over the family's trees), then
+    * [[requireIndex]] on the recovered state. Maintenance is
+    * single-writer, so no swap is in flight here. Readers never
+    * recover: a search racing a live swap must not rename trees under
+    * it.
+    */
+  private def openForMutation(spark: SparkSession, dir: String,
+      fam: IndexFamily, label: String): Unit = {
+    fam.trees(dir).foreach(recoverSwap(spark, _))
+    requireIndex(spark, dir, fam, label)
+  }
+
+  /** Compact a stored index's assignment layout back to ONE file per
+    * cell and purge its tombstoned rows ([[compactTables]]). Every
+    * [[appendToIvfIndex]] batch adds one file per touched cell, so a
+    * continuously-fed index accumulates files linearly in batch count —
+    * and probe cost grows with file count (open/footer per file), not
+    * data. Schema-agnostic, so the same op serves every codec's layout.
+    * Run it on the [[ivfAppendDrift]] cadence.
+    */
+  def compactIvfIndex(spark: SparkSession, dir: String): Unit =
+    compactTables(spark, dir, ivfIndex, "compactIvfIndex")
+
+  /** The one compaction routine: after the mutator preamble
+    * ([[openForMutation]]), rewrite each of the family's tables into
+    * `<table>__compact` in its one-file-per-partition layout,
+    * minus the tombstoned ids, and [[checkedSwap]] it into place
+    * (reading and overwriting the same path in one job would corrupt
+    * it); then delete the consumed tombstone files.
+    *
+    * The full rewrite is the purge point for tombstoned rows — the
+    * anti-join rides a pass that was already rewriting every row. The
+    * consumed tombstone FILE SET is pinned up front ([[tombstones]]):
+    * compaction runs on the append cadence, concurrent with serving,
+    * and a delete landing between the listing and the cleanup must
+    * KEEP its tombstone (clearing the whole directory would silently
+    * resurrect it). A crash between the swaps and the cleanup is safe:
+    * tombstones over already-purged ids anti-join nothing.
+    *
+    * Swap order matters on a LIVE index: the old tree is renamed
+    * ASIDE, the compacted tree into place, THEN the old one dies — the
+    * unreadable window is a single rename, and a crash mid-swap leaves
+    * either the old tree recoverable at `__old` or the new one live
+    * (delete-then-rename would leave NO table for the whole span and
+    * strand the compacted data in the temp dir on a crash).
+    */
+  private def compactTables(spark: SparkSession, dir: String,
+      fam: IndexFamily, label: String): Unit = {
+    openForMutation(spark, dir, fam, label)
+    val tombs = tombstones(spark, dir, fam)
+    fam.tables.foreach { t =>
+      val tmp = t.path(dir) + "__compact"
+      val rows = tombs.mask(spark.read.parquet(t.path(dir)))
+      t.save(if (fam.distinctRows) rows.distinct() else rows, tmp,
+        SaveMode.Overwrite)
+      checkedSwap(spark, tmp, t.path(dir), label)
     }
-    val src = spark.read.parquet(s"$dir/assignment")
-    val masked =
-      if (tombFiles.isEmpty) src
-      else src.join(
-        broadcast(spark.read.parquet(tombFiles: _*).select("vec_id").distinct()),
-        Seq("vec_id"), "left_anti")
-    cellLayout(masked).mode("overwrite")
-      .option("partitionOverwriteMode", "static").parquet(tmp)
-    // Swap order matters on a LIVE index (compaction runs on the
-    // append cadence, concurrent with serving): rename the old tree
-    // ASIDE, rename the compacted tree into place, THEN delete the old
-    // one — the index-unreadable window is a single rename, and a
-    // crash mid-swap leaves either the old tree recoverable at
-    // assignment__old or the new one already live (delete-then-rename
-    // would leave NO assignment dir for the whole span and strand the
-    // compacted data in the temp dir on a crash). The FS is resolved
-    // from the index dir's own URI, not the default FS, so an index on
-    // a non-default scheme (s3a://, hdfs://) swaps against the right
-    // store.
-    checkedSwap(spark, tmp, s"$dir/assignment", "compactIvfIndex")
     // delete ONLY the consumed tombstone files (never the directory):
-    // a tombstone written after the mask-read above survives and keeps
-    // masking. Crash between swap and this cleanup is safe: tombstones
-    // over already-purged ids anti-join nothing.
-    if (tombFiles.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      tombFiles.foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), false): Unit)
-    }
+    // a tombstone written after the listing survives and keeps masking
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    tombs.files.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), false): Unit)
   }
 
   /** Rename-aside tree swap with CHECKED renames: `tmp` replaces
@@ -1175,26 +1246,6 @@ object Sink {
     }
   }
 
-  /** Roll back every swap an interrupted lifecycle call left in an
-    * index: `trees` are the paths its mutators replace with
-    * [[checkedSwap]] ([[ivfTrees]], [[dedupTrees]]). Called by the
-    * mutating entry points before they read the index; maintenance is
-    * single-writer, so no swap is in flight there. Readers never
-    * recover: a search racing a live swap must not rename trees under
-    * it.
-    */
-  private def recoverIndex(spark: SparkSession, trees: Seq[String]): Unit =
-    trees.foreach(recoverSwap(spark, _))
-
-  /** The IVF lifecycle swaps the whole index dir (maintenance retrain)
-    * and its assignment table (compaction).
-    */
-  private def ivfTrees(dir: String): Seq[String] = Seq(dir, s"$dir/assignment")
-
-  /** The dedup index swaps each of its three tables (compaction). */
-  private def dedupTrees(dir: String): Seq[String] =
-    Seq("shingles", "fingerprints", "bands").map(t => s"$dir/$t")
-
   /** Per-cell data-file counts from one recursive FS listing — the
     * fragmentation map [[compactIvfIndexSelective]] plans from (cost:
     * file metadata only, no parquet opened).
@@ -1228,7 +1279,7 @@ object Sink {
     */
   def compactIvfIndexSelective(spark: SparkSession, dir: String,
       minFilesPerCell: Int = 2, fullRewriteAbove: Double = 0.4): Int = {
-    recoverIndex(spark, ivfTrees(dir))
+    openForMutation(spark, dir, ivfIndex, "compactIvfIndexSelective")
     val assignPath = s"$dir/assignment"
     val counts = cellFileCounts(spark, assignPath)
     val fragmented = counts
@@ -1253,7 +1304,7 @@ object Sink {
     val slice = spark.read.parquet(assignPath)
       .filter(col("cell").isin(fragmented: _*))
       .localCheckpoint()
-    cellLayout(slice).mode("overwrite")
+    assignmentTable.writer(slice).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(assignPath)
     org.apache.spark.sql.GraftShims.uncheckpoint(slice)
     fragmented.size
@@ -1301,7 +1352,7 @@ object Sink {
       threshold: Double = 0.25, iters: Int = 2,
       compactFilesPerCell: Int = 4): DataFrame = {
     import spark.implicits._
-    recoverIndex(spark, ivfTrees(dir))
+    openForMutation(spark, dir, ivfIndex, "maintainIvfIndex")
     val g = storedGeometry(spark, dir)
     val assignPath = s"$dir/assignment"
     // dedupe + cell + encode the batch ONCE per drop (checkpointed,
@@ -1350,7 +1401,8 @@ object Sink {
     // n_after = live stored + live batch: the append masks at serve
     // time, the retrain purges.
     val nBatch = incomingMap.valuesIterator.sum // as delivered (per id)
-    val (nTombLive, nBatchLive) = tombstones(spark, dir) match {
+    val tombs = tombstones(spark, dir, ivfIndex)
+    val (nTombLive, nBatchLive) = tombs.ids match {
       case None => (0L, nBatch)
       case Some(t) =>
         val tl = spark.read.parquet(assignPath).select("vec_id")
@@ -1367,7 +1419,7 @@ object Sink {
       // tombstones win over ANY pending content (the deleteFromIvfIndex
       // contract): mask the stored side AND the batch side, then the
       // rebuilt index starts clean and the tombstones die with it
-      val union = maskTombstones(spark, dir,
+      val union = tombs.mask(
         spark.read.parquet(assignPath).select("vec_id", "embedding")
           .unionByName(uniq))
       val tmp = dir + "__retrain"
@@ -1384,7 +1436,7 @@ object Sink {
       checkedSwap(spark, tmp, dir, "maintainIvfIndex")
       ("retrain", countDataFiles(spark, assignPath))
     } else {
-      cellLayout(rows).mode("append").parquet(assignPath)
+      assignmentTable.save(rows, assignPath, SaveMode.Append)
       // one appended file per touched cell (the append layout
       // invariant) — DERIVE the post-append count instead of
       // re-listing the whole tree; only a compaction (which rewrites
@@ -1495,21 +1547,16 @@ object Sink {
     * cells balanced (the coarse PSI would stay quiet) but degrades
     * ADC quality — the codebook no longer covers where the new
     * vectors live. Everything after the two grouped counts is
-    * m×k-sized; the PSI carrier mirrors [[ivfAppendDrift]].
+    * m×k-sized; the PSI carrier mirrors [[ivfAppendDrift]]. The
+    * codebook geometry is read from the index, as in
+    * [[searchIvfPqIndex]].
     */
   def ivfPqCodeDrift(spark: SparkSession, batch: DataFrame, dir: String,
-      m: Int = 4, subDim: Int = 16, threshold: Double = 0.25): DataFrame = {
+      threshold: Double = 0.25): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark2 = spark
     import spark2.implicits._
-    // a caller geometry that disagrees with the stored codebooks would
-    // silently score garbage (`slice()` past the embedding end yields
-    // short subvectors) — fail loudly instead
-    val Pq(sm, sd, _) = storedPqCodec(spark, dir, "ivfPqCodeDrift")
-    require(sm == m && sd == subDim,
-      s"stored PQ geometry (m=$sm, subDim=$sd) does " +
-        s"not match caller-supplied (m=$m, subDim=$subDim) — pass the " +
-        "values the index was written with")
+    val Pq(m, subDim, _) = storedPqCodec(spark, dir, "ivfPqCodeDrift")
     val pqc = loadPqCentroids(spark, dir)
     val stored = storedCodeCounts(spark, dir).toSeq
       .map { case ((s, c), n) => (s, c, n) }
@@ -1581,8 +1628,8 @@ object Sink {
       .select("qid", "cell", "pn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     (probeRows.toDF("qid", "cell", "pn"),
-      maskTombstones(spark, dir, readProbedCells(spark, s"$dir/assignment",
-        probeRows.map(_._2).distinct)))
+      tombstones(spark, dir, ivfIndex).mask(readProbedCells(spark,
+        s"$dir/assignment", probeRows.map(_._2).distinct)))
   }
 
   /** Read ONLY the probed cell partitions of an assignment layout, as
@@ -1707,7 +1754,7 @@ object Sink {
   def searchIvfSq8Index(spark: SparkSession, emb: DataFrame, dir: String,
       nQueries: Int = 10, k: Int = 3, nprobe: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    requireIndexKind(spark, dir, Sq8.kind, "searchIvfSq8Index")
+    requireIndexKind(spark, dir, "searchIvfSq8Index", Sq8.kind)
     val qCodes = Similarity.sq8Codes(emb.filter(col("vec_id") < nQueries))
       .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
     val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
@@ -1737,7 +1784,8 @@ object Sink {
   // re-hashing the full corpus before it can classify the next batch.
   // Same manifest/append/compact lifecycle as the IVF family.
   //
-  // Layout (all three tables partitioned so classify prunes):
+  // Layout (declared once as shinglesTable, fingerprintsTable and
+  // bandsTable; all three partitioned so classify prunes):
   //  - fingerprints/fpb=XX/  (fp, doc_id)    — RAW rows, fpb = first two
   //    hex chars of the md5 (256 buckets). Raw instead of the cached
   //    path's pre-aggregated fp → min(doc_id) so appends stay
@@ -1779,11 +1827,8 @@ object Sink {
   private def dedupFpBucket(fp: org.apache.spark.sql.Column) =
     pmod(crc32(fp.cast("string")), lit(256L))
 
-  private def dedupFpRows(docs: DataFrame): DataFrame =
-    Dedup.exactFpRows(docs).withColumn("fpb", dedupFpBucket(col("fp")))
-
-  private def dedupShingleRows(docs: DataFrame): DataFrame =
-    Dedup.shingles(docs).withColumn("db", pmod(col("doc_id"), lit(256L)))
+  private def dedupDocBucket(docId: org.apache.spark.sql.Column) =
+    pmod(docId, lit(256L))
 
   private def dedupIndexManifest(spark: SparkSession, dir: String): Unit =
     writeIndexManifest(spark, dir, Seq(
@@ -1792,37 +1837,11 @@ object Sink {
       "bands" -> (Dedup.minhashSeeds / Dedup.minhashBandSize).toString,
       "band_cap" -> Dedup.lshBucketCap.toString))
 
-  /** Build the stored dedup index at `dir` from the accepted corpus —
-    * one shingling pass feeds both the shingle table and the band
-    * rows. Each table lands one file per partition (the writeIvfIndex
-    * layout rule: repartition on the partition column first).
+  /** Build the stored dedup index at `dir` from the accepted corpus
+    * ([[saveDedupTables]] in overwrite mode).
     */
-  def writeDedupIndex(existing: DataFrame, dir: String): Unit = {
-    val spark = existing.sparkSession
-    val sh = dedupShingleRows(existing).localCheckpoint()
-    // static overwrite pinned per-write (the writeIvfIndex rule): a
-    // session configured for dynamic partition overwrite must not turn
-    // this full rebuild into a touched-partitions-only one
-    sh.repartition(col("db")).sortWithinPartitions("db", "doc_id", "s")
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("db").parquet(s"$dir/shingles")
-    dedupFpRows(existing)
-      .repartition(col("fpb")).sortWithinPartitions("fpb", "fp")
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("fpb").parquet(s"$dir/fingerprints")
-    Dedup.bandRowsOf(sh.drop("db"))
-      .repartition(col("band")).sortWithinPartitions("band", "bv", "doc_id")
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("band").parquet(s"$dir/bands")
-    // a full rebuild is a new generation: stale tombstones from the
-    // previous index must not mask docs the new corpus legitimately
-    // contains (the clearTombstones rule every IVF-family build
-    // follows) — without this, a rebuilt-over index classifies exact
-    // copies of previously-deleted doc_ids as 'new' forever
-    clearTombstones(spark, dir)
-    dedupIndexManifest(spark, dir)
-    org.apache.spark.sql.GraftShims.uncheckpoint(sh)
-  }
+  def writeDedupIndex(existing: DataFrame, dir: String): Unit =
+    saveDedupTables(existing, dir, SaveMode.Overwrite)
 
   /** Append an accepted batch to the stored dedup index — three
     * batch-proportional appends, no stored row rewritten. After the
@@ -1831,71 +1850,60 @@ object Sink {
     * are per-doc and doc_ids are new; the band cap applies at read).
     */
   def appendToDedupIndex(batch: DataFrame, dir: String): Unit = {
-    val spark = batch.sparkSession
-    requireIndexKind(spark, dir, "dedup_text", "appendToDedupIndex")
-    recoverIndex(spark, dedupTrees(dir))
-    require(pathExists(spark, s"$dir/bands"),
-      s"appendToDedupIndex: no dedup index at $dir (missing bands table)")
-    val sh = dedupShingleRows(batch).localCheckpoint()
-    sh.repartition(col("db")).sortWithinPartitions("db", "doc_id", "s")
-      .write.mode("append").partitionBy("db").parquet(s"$dir/shingles")
-    dedupFpRows(batch)
-      .repartition(col("fpb")).sortWithinPartitions("fpb", "fp")
-      .write.mode("append").partitionBy("fpb").parquet(s"$dir/fingerprints")
-    Dedup.bandRowsOf(sh.drop("db"))
-      .repartition(col("band")).sortWithinPartitions("band", "bv", "doc_id")
-      .write.mode("append").partitionBy("band").parquet(s"$dir/bands")
-    // fresh write_id: any generation-keyed consumer of this index must
-    // miss its cache after an append
+    openForMutation(batch.sparkSession, dir, dedupIndex, "appendToDedupIndex")
+    saveDedupTables(batch, dir, SaveMode.Append)
+  }
+
+  /** The one dedup-table writer behind [[writeDedupIndex]] and
+    * [[appendToDedupIndex]]: one shingling pass feeds both the shingle
+    * table and the band rows, and each table lands one file per
+    * partition ([[TableLayout.save]]). A full overwrite is a new
+    * generation, so it clears the tombstones: stale tombstones from
+    * the previous index must not mask docs the new corpus legitimately
+    * contains (the rule every IVF-family build follows) — without
+    * this, a rebuilt-over index classifies exact copies of
+    * previously-deleted doc_ids as 'new' forever. Either way the
+    * manifest is rewritten, so any generation-keyed consumer of the
+    * index misses its cache (fresh write_id).
+    */
+  private def saveDedupTables(docs: DataFrame, dir: String,
+      mode: SaveMode): Unit = {
+    val spark = docs.sparkSession
+    val sh = Dedup.shingles(docs)
+      .withColumn("db", dedupDocBucket(col("doc_id"))).localCheckpoint()
+    def put(t: TableLayout, rows: DataFrame): Unit = t.save(rows, t.path(dir), mode)
+    put(shinglesTable, sh)
+    put(fingerprintsTable,
+      Dedup.exactFpRows(docs).withColumn("fpb", dedupFpBucket(col("fp"))))
+    put(bandsTable, Dedup.bandRowsOf(sh.drop("db")))
+    if (mode == SaveMode.Overwrite) clearTombstones(spark, dir)
     dedupIndexManifest(spark, dir)
     org.apache.spark.sql.GraftShims.uncheckpoint(sh)
   }
 
   /** Takedown-delete from the stored dedup index: the doc ids land as
-    * one tiny id-only parquet file beside the index (the
-    * [[deleteFromIvfIndex]] shape — licensing/PII removals are
-    * O(ids) writes, never a corpus-sized rewrite). Classification
-    * masks tombstoned docs BEFORE the read-time band cap and before
-    * the fingerprint min-fold, so a masked index classifies
-    * identically to one REBUILT on the corpus minus the deleted docs:
-    * a bucket whose capped slots held a deleted doc promotes the next
-    * lowest doc_id exactly as the rebuild would, and an exact-dup
-    * batch doc whose only stored twin was deleted falls through to
-    * near/new. [[compactDedupIndex]] purges the rows physically and
-    * consumes the tombstones. Re-adding a deleted doc_id requires a
-    * compact between the delete and the re-append (tombstone-wins,
-    * as in the IVF family — there is no sequence ordering between
-    * them).
+    * one tiny id-only parquet file beside the index
+    * ([[writeTombstones]], shared with [[deleteFromIvfIndex]] —
+    * licensing/PII removals are O(ids) writes, never a corpus-sized
+    * rewrite). Classification masks tombstoned docs BEFORE the
+    * read-time band cap and before the fingerprint min-fold, so a
+    * masked index classifies identically to one REBUILT on the corpus
+    * minus the deleted docs: a bucket whose capped slots held a
+    * deleted doc promotes the next lowest doc_id exactly as the
+    * rebuild would, and an exact-dup batch doc whose only stored twin
+    * was deleted falls through to near/new. [[compactDedupIndex]]
+    * purges the rows physically and consumes the tombstones. Re-adding
+    * a deleted doc_id requires a compact between the delete and the
+    * re-append (tombstone-wins, as in the IVF family — there is no
+    * sequence ordering between them). A non-empty delete rewrites the
+    * manifest (fresh write_id): the index's served content changed.
     */
   def deleteFromDedupIndex(spark: SparkSession, dir: String,
       docIds: DataFrame): Unit = {
-    requireIndexKind(spark, dir, "dedup_text", "deleteFromDedupIndex")
-    recoverIndex(spark, dedupTrees(dir))
-    require(pathExists(spark, s"$dir/bands"),
-      s"deleteFromDedupIndex: no dedup index at $dir (missing bands table)")
-    val d = docIds.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
-    // an empty delete must not write a schema-only file that would
-    // flip every future classify onto the masking plan for nothing
-    if (!d.isEmpty) {
-      d.coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-      // fresh write_id: generation-keyed consumers must miss their
-      // cache — the index's served content just changed
+    openForMutation(spark, dir, dedupIndex, "deleteFromDedupIndex")
+    if (writeTombstones(spark, dir, dedupIndex, docIds))
       dedupIndexManifest(spark, dir)
-    }
-    org.apache.spark.sql.GraftShims.uncheckpoint(d)
   }
-
-  /** The live tombstone set of a stored dedup index — None when no
-    * delete has ever happened, so tombstone-free classify plans carry
-    * no masking joins (FS metadata check only). Pinned to the listed
-    * file set and tolerant of files vanishing before execution, for
-    * the same reason as the IVF [[tombstones]] reader: a concurrent
-    * compact deletes exactly the files it consumed.
-    */
-  private def dedupTombstones(spark: SparkSession,
-      dir: String): Option[DataFrame] =
-    tombstones(spark, dir, idCol = "doc_id")
 
   /** Classify a new batch against the STORED index — the restart-safe
     * twin of [[Dedup.incrementalDedup]]: same verdict schema
@@ -1909,9 +1917,7 @@ object Sink {
     */
   def classifyWithDedupIndex(spark: SparkSession, batch: DataFrame,
       dir: String, threshold: Double = 0.5): DataFrame = {
-    requireIndexKind(spark, dir, "dedup_text", "classifyWithDedupIndex")
-    require(pathExists(spark, s"$dir/bands"),
-      s"classifyWithDedupIndex: no dedup index at $dir (missing bands table)")
+    requireIndex(spark, dir, dedupIndex, "classifyWithDedupIndex")
     // version-skew guard: the batch is shingled/banded with THIS
     // binary's constants — if they differ from the build-time geometry
     // the manifest records, batch band values never match stored ones
@@ -1932,10 +1938,7 @@ object Sink {
     // takedown masking: identity when no delete ever happened; else a
     // broadcast anti-join on the tiny tombstone set, applied to the
     // stored side of BOTH match paths (below) before any fold or cap
-    val tombOpt = dedupTombstones(spark, dir)
-    def mask(stored: DataFrame): DataFrame = tombOpt
-      .map(t => stored.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(stored)
+    val tombs = tombstones(spark, dir, dedupIndex)
     // fingerprint store pruned to the batch's fp buckets (≤256 literal
     // values — bounded by the bucket grid, never by the batch), then
     // scoped to the batch's exact fingerprints before the min fold so
@@ -1943,7 +1946,7 @@ object Sink {
     // rides the collision-sized set too)
     val fpbs = bFp.select(dedupFpBucket(col("fp")).as("fpb")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val exFp = mask(spark.read.parquet(s"$dir/fingerprints")
+    val exFp = tombs.mask(spark.read.parquet(fingerprintsTable.path(dir))
         .filter(col("fpb").isin(fpbs: _*))
         .join(bFp.select("fp").distinct(), Seq("fp"), "left_semi"))
       .groupBy("fp").agg(min("doc_id").as("ex_exact"))
@@ -1954,7 +1957,7 @@ object Sink {
     // on the filtered corpus would apply to these rows: a deleted doc
     // that held a capped slot frees it for the next lowest doc_id)
     val exCapped = Dedup.capBandRows(
-      mask(spark.read.parquet(s"$dir/bands")
+      tombs.mask(spark.read.parquet(bandsTable.path(dir))
         .join(bBands.select("band", "bv").distinct(), Seq("band", "bv"),
           "left_semi")))
     val cands = bBands.as("q").join(exCapped.as("e"),
@@ -1967,9 +1970,9 @@ object Sink {
     // each kept doc keeps its FULL shingle set (classifyCore contract).
     // No tombstone mask needed here: candidates come from the MASKED
     // band rows above, so a deleted doc can never appear as a doc_b
-    val dbs = cands.select(pmod(col("doc_b"), lit(256L)).as("db")).distinct()
+    val dbs = cands.select(dedupDocBucket(col("doc_b")).as("db")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val shStore = spark.read.parquet(s"$dir/shingles")
+    val shStore = spark.read.parquet(shinglesTable.path(dir))
     val exSh = (if (dbs.isEmpty) shStore.filter(lit(false))
                 else shStore.filter(col("db").isin(dbs: _*)))
       .select("doc_id", "s")
@@ -1996,7 +1999,7 @@ object Sink {
     */
   def maintainDedupIndex(spark: SparkSession, batch: DataFrame,
       dir: String, threshold: Double = 0.5): DataFrame = {
-    recoverIndex(spark, dedupTrees(dir))
+    openForMutation(spark, dir, dedupIndex, "maintainDedupIndex")
     val verdicts = classifyWithDedupIndex(spark, batch, dir, threshold)
     // materialized once: the semi-join otherwise re-runs for the
     // emptiness check AND each of the append's table derivations,
@@ -2013,18 +2016,13 @@ object Sink {
     verdicts
   }
 
-  /** Compact the stored dedup index: rewrite each table back to the
-    * one-file-per-partition layout (appends add a file per call),
-    * restore the distinct invariants (defense in depth against a
-    * violated append contract), and physically PURGE tombstoned docs
-    * ([[deleteFromDedupIndex]]) — the anti-join rides a pass that was
-    * already rewriting every row, and the consumed tombstone file set
-    * is pinned up front so a delete landing mid-compact keeps its
-    * tombstone (the [[compactIvfIndex]] rule). Same rename-aside swap
-    * discipline — the index stays serveable through the rewrite, and
-    * a crash leaves either tree recoverable; a crash between the
-    * swaps and the tombstone cleanup is safe (tombstones over
-    * already-purged ids anti-join nothing).
+  /** Compact the stored dedup index with the shared routine
+    * ([[compactTables]]): each table back to the one-file-per-partition
+    * layout (appends add a file per call), the distinct invariants
+    * restored (defense in depth against a violated append contract),
+    * and tombstoned docs ([[deleteFromDedupIndex]]) physically PURGED,
+    * under the same pinned-tombstone and rename-aside swap discipline
+    * as [[compactIvfIndex]]. The manifest is rewritten last.
     *
     * The three tables swap one at a time, so a crash BETWEEN two swaps
     * leaves a mixed generation: the tables already swapped are
@@ -2039,35 +2037,7 @@ object Sink {
     * idempotent). SinkSpec's takedown-delete test pins this state.
     */
   def compactDedupIndex(spark: SparkSession, dir: String): Unit = {
-    requireIndexKind(spark, dir, "dedup_text", "compactDedupIndex")
-    recoverIndex(spark, dedupTrees(dir))
-    val tombFiles = {
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      forEachDataFile(spark, s"$dir/tombstones")(f => buf += f.getPath.toString)
-      buf.toSeq
-    }
-    val tombs =
-      if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles: _*).select("doc_id").distinct())
-    def rewrite(table: String, keys: Seq[String], part: String): Unit = {
-      val tmp = s"$dir/${table}__compact"
-      val src = spark.read.parquet(s"$dir/$table")
-      tombs.fold(src)(t => src.join(broadcast(t), Seq("doc_id"), "left_anti"))
-        .dropDuplicates(keys)
-        .repartition(col(part)).sortWithinPartitions(keys.map(col): _*)
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy(part).parquet(tmp)
-      checkedSwap(spark, tmp, s"$dir/$table", "compactDedupIndex")
-    }
-    rewrite("shingles", Seq("db", "doc_id", "s"), "db")
-    rewrite("fingerprints", Seq("fpb", "fp", "doc_id"), "fpb")
-    rewrite("bands", Seq("band", "bv", "doc_id"), "band")
-    if (tombFiles.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      tombFiles.foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), false): Unit)
-    }
+    compactTables(spark, dir, dedupIndex, "compactDedupIndex")
     dedupIndexManifest(spark, dir)
   }
 
@@ -2115,7 +2085,7 @@ object Sink {
     * [[graft.operators.TextOps.bpeEncodeBatched]] directly.
     */
   def loadBpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    requireIndexKind(spark, dir, "bpe_tokenizer", "loadBpeMerges")
+    requireIndexKind(spark, dir, "loadBpeMerges", "bpe_tokenizer")
     require(pathExists(spark, s"$dir/merges"),
       s"loadBpeMerges: no tokenizer artifact at $dir (missing merges table)")
     cachedArtifactLoad(spark, s"$dir/merges") {

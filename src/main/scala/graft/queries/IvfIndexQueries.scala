@@ -570,7 +570,7 @@ object IvfIndexQueries {
       val dir = ivfPqDriftDir
       Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
-      Sink.ivfPqCodeDrift(s, all.filter(col("vec_id") >= 400), dir, 4, 16)
+      Sink.ivfPqCodeDrift(s, all.filter(col("vec_id") >= 400), dir)
     },
       ivfPqCodeDriftOracle),
     // drop-at-a-time ingestion into the COMPRESSED tier: three

@@ -271,24 +271,11 @@ object DedupStream {
     // re-apply window ([[Replay]]): a re-run append folds at read
     // (compact-recoverable duplication) and a re-run delete is a
     // no-op on the tombstone set
-    Replay.replayWith(spark, dropGlob, checkpointDir,
-      StructType(Replay.docSchema.fields :+
-        StructField("op", StringType))) { (batch, _) =>
-      val ops = batch.groupBy("op").count().collect()
-        .map(r => Option(r.getString(0)).getOrElse("<null>") -> r.getLong(1))
-        .toMap
-      val unknown = ops.keySet -- Set("add", "delete")
-      require(unknown.isEmpty,
-        s"runCdcReplay: unknown op(s) ${unknown.mkString(", ")} in drop — " +
-          "these rows would be silently dropped; ops are 'add' | 'delete'")
-      if (ops.getOrElse("add", 0L) > 0)
-        graft.operators.Sink.appendToDedupIndex(
-          batch.filter(col("op") === "add").select("doc_id", "text"),
-          indexDir)
-      if (ops.getOrElse("delete", 0L) > 0)
-        graft.operators.Sink.deleteFromDedupIndex(spark, indexDir,
-          batch.filter(col("op") === "delete").select("doc_id"))
-    }
+    Replay.cdcReplayWith(spark, dropGlob, checkpointDir, Replay.docSchema)(
+      add = b => graft.operators.Sink.appendToDedupIndex(
+        b.select("doc_id", "text"), indexDir),
+      delete = b => graft.operators.Sink.deleteFromDedupIndex(spark, indexDir,
+        b.select("doc_id")))
 
   /** Classify each micro-batch against the FROZEN stored index and
     * append the verdicts to `outDir` — the restart-safe streaming form

@@ -27,14 +27,6 @@ object IvfStream {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  /** CDC drop schema: `op` is "add" (embedding present) or "delete"
-    * (embedding null — only the id matters).
-    */
-  val cdcSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("op", StringType)))
-
   /** Recursive delete for the per-run checkpoint: the replay must
     * re-process every drop on each evaluation (a stale checkpoint
     * would silently skip them after the index reset). Shared with the
@@ -92,30 +84,12 @@ object IvfStream {
     * must compact between the delete and the re-add).
     */
   def runCdcReplay(spark: SparkSession, dropGlob: String,
-      indexDir: String, checkpointDir: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    replayWith(spark, dropGlob, checkpointDir, cdcSchema) { (batch, _) =>
-      // one pass classifies the whole drop: an op this replay doesn't
-      // know must FAIL the stream, not silently vanish from the index
-      val ops = batch.groupBy("op").count().collect()
-        .map(r => Option(r.getString(0)).getOrElse("<null>") -> r.getLong(1))
-        .toMap
-      val unknown = ops.keySet -- Set("add", "delete")
-      require(unknown.isEmpty,
-        s"runCdcReplay: unknown op(s) ${unknown.mkString(", ")} in drop — " +
-          "these rows would be silently dropped; ops are 'add' | 'delete'")
-      if (ops.getOrElse("add", 0L) > 0)
-        Sink.appendToIvfIndex(
-          batch.filter(col("op") === "add").select("vec_id", "embedding"),
-          indexDir)
-      if (ops.getOrElse("delete", 0L) > 0)
-        Sink.deleteFromIvfIndex(spark, indexDir,
-          batch.filter(col("op") === "delete").select("vec_id"))
-    }
-  }
+      indexDir: String, checkpointDir: String): Unit =
+    Replay.cdcReplayWith(spark, dropGlob, checkpointDir, schema)(
+      add = b => Sink.appendToIvfIndex(b.select("vec_id", "embedding"), indexDir),
+      delete = b => Sink.deleteFromIvfIndex(spark, indexDir, b.select("vec_id")))
 
   private def replayWith(spark: SparkSession, dropGlob: String,
-      checkpointDir: String, dropSchema: StructType = schema)(
-      append: (DataFrame, Long) => Unit): Unit =
-    Replay.replayWith(spark, dropGlob, checkpointDir, dropSchema)(append)
+      checkpointDir: String)(append: (DataFrame, Long) => Unit): Unit =
+    Replay.replayWith(spark, dropGlob, checkpointDir, schema)(append)
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -63,4 +64,28 @@ private[graft] object Replay {
       .start()
     q.awaitTermination()
   }
+
+  /** The CDC replay shared by the index families: each drop row is a
+    * `rowSchema` row plus `op` — "add", or "delete" (only the id
+    * matters). One pass counts the ops, and an op this replay doesn't
+    * know FAILS the stream instead of silently vanishing from the
+    * index; then the add rows go to `add` and the delete rows to
+    * `delete`, in that order.
+    */
+  def cdcReplayWith(spark: SparkSession, dropGlob: String,
+      checkpointDir: String, rowSchema: StructType)(
+      add: DataFrame => Unit, delete: DataFrame => Unit): Unit =
+    replayWith(spark, dropGlob, checkpointDir,
+      rowSchema.add(StructField("op", StringType))) { (batch, _) =>
+      val ops = batch.groupBy("op").count().collect()
+        .map(r => Option(r.getString(0)).getOrElse("<null>") -> r.getLong(1))
+        .toMap
+      val unknown = ops.keySet -- Set("add", "delete")
+      require(unknown.isEmpty,
+        s"runCdcReplay: unknown op(s) ${unknown.mkString(", ")} in drop — " +
+          "these rows would be silently dropped; ops are 'add' | 'delete'")
+      if (ops.getOrElse("add", 0L) > 0) add(batch.filter(col("op") === "add"))
+      if (ops.getOrElse("delete", 0L) > 0)
+        delete(batch.filter(col("op") === "delete"))
+    }
 }

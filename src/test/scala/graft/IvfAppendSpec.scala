@@ -127,7 +127,7 @@ class IvfAppendSpec extends SparkSpec {
     val shifted = all.filter(col("vec_id") >= 400).select(col("vec_id"),
       expr("transform(embedding, (x, i) -> IF(i < 16, CAST(x + 10.0 AS FLOAT), x))")
         .as("embedding"))
-    val bad = Sink.ivfPqCodeDrift(spark, shifted, dir, 4, 16).collect()
+    val bad = Sink.ivfPqCodeDrift(spark, shifted, dir).collect()
     val flags = bad.groupBy(_.getAs[Int]("sub"))
       .map { case (s, rows) => s -> rows.head.getAs[Boolean]("retrain_due") }
     assert(flags(0), s"shifted subspace must flag: $flags")
@@ -135,7 +135,7 @@ class IvfAppendSpec extends SparkSpec {
       s"unshifted subspaces must stay quiet: $flags")
     // a same-distribution batch flags nothing
     val ok = Sink.ivfPqCodeDrift(spark,
-      all.filter(col("vec_id") >= 400), dir, 4, 16).collect()
+      all.filter(col("vec_id") >= 400), dir).collect()
     assert(ok.forall(!_.getAs[Boolean]("retrain_due")))
     // the verdict is advisory: nothing was appended
     assert(spark.read.parquet(s"$dir/assignment").count() == 400)

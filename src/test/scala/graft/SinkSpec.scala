@@ -694,6 +694,26 @@ class SinkSpec extends SparkSpec {
     assert(ids(d2) == (0L until 500L).toSet)
     assert(Sink.searchIvfIndex(spark, e, d2, 10, 3).count() == 30)
     assert(!new java.io.File(d2 + "__old").exists())
+    // the same compaction crash, then a delete: the delete must roll
+    // the parked tree back before it checks for the index, so search
+    // serves the original rows minus the deleted ids
+    val d4 = Files.createTempDirectory("graft-swapdelete").toString
+    Sink.writeIvfIndex(base, d4, Sink.Flat, Sink.Cells(8), iters = 2)
+    val dead = (0L until 400L by 7).toSet
+    val d4ref = Files.createTempDirectory("graft-swapdelete-ref").toString
+    Sink.writeIvfIndex(base, d4ref, Sink.Flat, Sink.Cells(8), iters = 2)
+    Sink.deleteFromIvfIndex(spark, d4ref,
+      spark.createDataFrame(dead.toSeq.map(Tuple1(_))).toDF("vec_id"))
+    assert(new java.io.File(s"$d4/assignment")
+      .renameTo(new java.io.File(s"$d4/assignment__old")))
+    Sink.deleteFromIvfIndex(spark, d4,
+      spark.createDataFrame(dead.toSeq.map(Tuple1(_))).toDF("vec_id"))
+    assert(ids(d4) == (0L until 400L).toSet)
+    assert(!new java.io.File(s"$d4/assignment__old").exists())
+    val served4 = Sink.searchIvfIndex(spark, e, d4, 10, 3, 2).collect().map(_.toSeq).toSeq
+    assert(served4.nonEmpty && served4.forall(r => !dead(r(3).asInstanceOf[Long])))
+    assert(served4 ==
+      Sink.searchIvfIndex(spark, e, d4ref, 10, 3, 2).collect().map(_.toSeq).toSeq)
     // crash inside a dedup-index compaction, after rename(shingles →
     // shingles__old): an append must not land a batch-only shingles
     // table beside the parked one, which the next compaction would then
@@ -989,6 +1009,41 @@ class SinkSpec extends SparkSpec {
       Sink.classifyWithDedupIndex(spark, dedupDocs(spark, dedupBatchRows), dir)
     }
     assert(ex.getMessage.contains("bands=999"))
+  }
+
+  test("job budget: the dedup index's write, append, classify, maintain, delete and compact stay within their Spark job counts") {
+    val all = Tables.documents(spark, "/root/testdata/sf0.001").select("doc_id", "text")
+    // the docs in [lo, hi) plus verbatim and near copies of stored
+    // docs, so the exact, near and new paths all run
+    def planted(lo: Long, hi: Long, shift: Long) =
+      all.filter(col("doc_id") >= lo && col("doc_id") < hi)
+        .unionByName(all.filter(col("doc_id") < 10)
+          .select((col("doc_id") + shift).as("doc_id"), col("text")))
+        .unionByName(all.filter(col("doc_id") >= 10 && col("doc_id") < 20)
+          .select((col("doc_id") + shift + 1000).as("doc_id"),
+            concat(col("text"), lit(" zq1 zq2 zq3")).as("text")))
+    val dir = Files.createTempDirectory("graft-dedupbudget").toString + "/idx"
+    val used = Seq(
+      jobsOf(Sink.writeDedupIndex(all.filter(col("doc_id") < 300), dir)),
+      jobsOf(Sink.appendToDedupIndex(
+        all.filter(col("doc_id") >= 300 && col("doc_id") < 400), dir)),
+      jobsOf(Sink.classifyWithDedupIndex(spark, planted(400, 450, 10000), dir)
+        .collect(): Unit),
+      jobsOf(Sink.maintainDedupIndex(spark, planted(450, 500, 20000), dir)
+        .collect(): Unit),
+      jobsOf(Sink.deleteFromDedupIndex(spark, dir,
+        all.filter(col("doc_id") < 5).select("doc_id"))),
+      jobsOf(Sink.classifyWithDedupIndex(spark, planted(400, 450, 10000), dir)
+        .collect(): Unit),
+      jobsOf(Sink.compactDedupIndex(spark, dir)))
+    // the counts before the two families shared one lifecycle core —
+    // sharing it must not add a job
+    val budget = Seq(10, 10, 44, 62, 4, 48, 21)
+    Seq("write", "append", "classify", "maintain", "delete",
+        "classify (masked)", "compact").zip(used.zip(budget))
+      .foreach { case (step, (n, max)) =>
+        assert(n <= max, s"dedup $step ran $n Spark jobs, budget $max")
+      }
   }
 
   // ---- stored BPE tokenizer artifact -------------------------------
