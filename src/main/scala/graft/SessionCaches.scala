@@ -215,6 +215,12 @@ final class BoundedLruCache[K, V](maxEntries: Int, release: V => Unit) {
 
   def size: Int = synchronized { m.size() }
 
+  /** The live keys, least-recently-used first. */
+  private[graft] def keys: Seq[K] = synchronized {
+    import scala.jdk.CollectionConverters._
+    m.keySet().asScala.toSeq
+  }
+
   /** putIfAbsent semantics plus the LRU bound: returns the value that
     * won (the existing one on a lost race — the caller releases its
     * loser). Values evicted by the bound are parked for one generation

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Similarity search over the embeddings table (64-dim float vectors) —
   * brute-force cosine top-k as the correctness baseline and a
@@ -545,10 +546,52 @@ object Similarity {
     * narrow per-row expression over the scan instead of joining a
     * materialized assignment frame back to the corpus by vec_id
     * (guide §2.4: remove shuffles outright — the join shuffled the
-    * corpus twice for a value derivable in the projection).
+    * corpus twice for a value derivable in the projection). Packed on
+    * the driver from `cent`'s rows into a one-row local relation: over
+    * a [[driverLocal]] table the collect runs no job, where the
+    * equivalent collect_list aggregate costs a shuffle stage and a
+    * collect per broadcast.
     */
-  private[operators] def centroidArray(cent: DataFrame): DataFrame =
-    cent.agg(array_sort(collect_list(struct(col("cell"), col("c")))).as("cs"))
+  private[operators] def centroidArray(cent: DataFrame): DataFrame = {
+    val t = cent.select("cell", "c")
+    val packed = t.collect().sortBy(_.getAs[Number](0).longValue).toSeq
+    localRelation(cent.sparkSession, Array(Row(packed)), StructType(Seq(
+      StructField("cs", ArrayType(StructType(t.schema.fields), containsNull = false)))))
+  }
+
+  /** `rows` as a local relation: a driver-held frame that no job
+    * produces, that broadcasts without a scan and that pins no Spark
+    * block (nothing to release when a cache drops it).
+    */
+  private[graft] def localRelation(spark: SparkSession, rows: Array[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** A model-sized frame (trained centroids, codebooks) collected to
+    * the driver as a [[localRelation]] with the all-nullable schema a
+    * parquet read of it returns, so the trained table and its stored
+    * artifact are interchangeable. One collect; the checkpoint behind
+    * `df`, if any, is released.
+    */
+  private[graft] def driverLocal(df: DataFrame): DataFrame = {
+    val rows = df.collect()
+    org.apache.spark.sql.GraftShims.uncheckpoint(df)
+    localRelation(df.sparkSession, rows, nullable(df.schema))
+  }
+
+  /** `t` with every field, array element and map value nullable — the
+    * schema a file-source read returns for data written with `t`.
+    */
+  private[graft] def nullable(t: StructType): StructType = {
+    def go(d: DataType): DataType = d match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = go(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(go(a.elementType), containsNull = true)
+      case m: MapType => MapType(go(m.keyType), go(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    go(t).asInstanceOf[StructType]
+  }
 
   /** Per-row nearest-cell expression over a [[centroidArray]] column:
     * lexicographic array_min of struct(d, cell) — the SAME rounded-L2
@@ -602,18 +645,16 @@ object Similarity {
           org.apache.spark.sql.GraftShims.uncheckpoint(df))
 
   /** Trained-centroid sibling of [[quantizerCache]], same keying — the
-    * multi-probe path ranks centroids per query, so it needs the
-    * centroid table alongside the assignment. Kept as a separate cache
-    * (not a tuple value) so [[kmeansAssignCached]] callers are
-    * untouched; Lloyd's is deterministic, so an assignment from one
-    * training run and centroids from another are interchangeable.
+    * multi-probe path ranks centroids per query and an index write
+    * stores them, and neither needs the corpus-sized assignment. Kept
+    * as a separate cache (not a tuple value) so each consumer holds
+    * only what it reads: Lloyd's is deterministic, so an assignment
+    * derived from cached centroids equals the trained one. Values are
+    * [[driverLocal]] (cells × dims doubles on the driver, no blocks).
     */
   private val centroidCache =
     new graft.BoundedLruCache[(SparkSession, String, Int, Int, Int), DataFrame](
-      maxEntries = 16,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
+      maxEntries = 16, release = _ => ())
 
   /** Corpus row counts per (session, corpusKey): [[semDedupSized]]'s
     * cell geometry needs N, and an unconditional driver-side
@@ -648,13 +689,19 @@ object Similarity {
       ck: String): Option[Long] =
     corpusCountCache.get((s, ck)).map(_.longValue())
 
+  /** Test hook: whether a trained assignment is cached for a
+    * (session, corpusKey, k, iters) at the auto training sample.
+    */
+  private[graft] def cachedAssignment(s: SparkSession, ck: String, k: Int,
+      iters: Int): Boolean =
+    quantizerCache.get((s, ck, k, iters, resolveSample(AutoTrainSample, k))).isDefined
+
   locally {
     graft.SessionCaches.register(
       evict = s => {
         quantizerCache.removeIf(_._1 eq s,
           releaseRemoved = !s.sparkContext.isStopped)
-        centroidCache.removeIf(_._1 eq s,
-          releaseRemoved = !s.sparkContext.isStopped)
+        centroidCache.removeIf(_._1 eq s, releaseRemoved = false)
         corpusCountCache.removeIf(_._1 eq s, releaseRemoved = false)
       },
       sweep = () => {
@@ -692,31 +739,41 @@ object Similarity {
     }
   }
 
+  /** The trained centroid table alone, through [[centroidCache]]:
+    * Lloyd's on the capped sample, with none of the full-corpus
+    * assignment pass [[kmeansAssignInternal]] only plans — the entry
+    * point of a keyed index write, which stores centroids and derives
+    * every cell in its own scan. Returns a [[driverLocal]] frame.
+    */
+  private[operators] def kmeansCentroidsCached(emb: DataFrame, k: Int,
+      iters: Int, corpusKey: String,
+      sampleRows: Int = AutoTrainSample): DataFrame = {
+    graft.SessionCaches.watch(emb.sparkSession)
+    val key = (emb.sparkSession, corpusKey, k, iters, resolveSample(sampleRows, k))
+    centroidCache.get(key).getOrElse(centroidCache.putIfAbsent(key,
+      driverLocal(kmeansAssignInternal(emb, k, iters, sampleRows)._2.get)))
+  }
+
   /** [[kmeansAssignCached]] that also returns the trained centroid
-    * table through [[centroidCache]] — the multi-probe entry point.
-    * A key present in one cache but not the other (e.g. ivfTopK
-    * trained first) costs one redundant training; determinism makes
-    * the mixed result identical.
+    * table ([[kmeansCentroidsCached]]) — the multi-probe entry point.
+    * A missing assignment is derived from the centroids in one
+    * broadcast pass ([[assignWithCentroids]] in vec_id order, exactly
+    * the final step of [[kmeansAssignInternal]]), so a key an index
+    * write trained first never reruns Lloyd's.
     */
   private[operators] def kmeansAssignCachedWithCentroids(emb: DataFrame, k: Int,
       iters: Int, corpusKey: String,
       sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = {
-    graft.SessionCaches.watch(emb.sparkSession)
+    val cent = kmeansCentroidsCached(emb, k, iters, corpusKey, sampleRows)
     val key = (emb.sparkSession, corpusKey, k, iters, resolveSample(sampleRows, k))
-    (quantizerCache.get(key), centroidCache.get(key)) match {
-      case (Some(a), Some(c)) => (a, c)
-      case _ =>
-        val (assigned, centOpt) = kmeansAssignInternal(emb, k, iters, sampleRows)
-        val trainedA = assigned.localCheckpoint()
-        val trainedC = centOpt.get // iters >= 2 enforced by callers
-        val winA = quantizerCache.putIfAbsent(key, trainedA)
-        if (winA ne trainedA)
-          org.apache.spark.sql.GraftShims.uncheckpoint(trainedA)
-        val winC = centroidCache.putIfAbsent(key, trainedC)
-        if (winC ne trainedC)
-          org.apache.spark.sql.GraftShims.uncheckpoint(trainedC)
-        (winA, winC)
+    val assigned = quantizerCache.get(key).getOrElse {
+      val trained = assignWithCentroids(emb, cent).orderBy("vec_id").localCheckpoint()
+      val winner = quantizerCache.putIfAbsent(key, trained)
+      if (winner ne trained)  // lost the race: release the loser
+        org.apache.spark.sql.GraftShims.uncheckpoint(trained)
+      winner
     }
+    (assigned, cent)
   }
 
   /** IVF top-k: brute-force restricted to the query's k-means cell —

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** Parquet sink operators (SURVEY.md §2.1 S5/S6) — the engine
   * equivalents of the reference's row-at-a-time insert
@@ -199,10 +201,11 @@ object Sink {
     private[Sink] def columns: Seq[String]
     private[Sink] def fields: Seq[(String, String)] = Nil
     /** The layout columns over (vec_id, embedding, cell) rows, as
-      * narrow per-row expressions; `codebooks` (the stored or freshly
-      * trained PQ artifact) is only evaluated by [[Pq]].
+      * narrow per-row expressions; `subs` (the stored or freshly
+      * trained PQ codebooks, packed by [[pqSubsArray]]) is only
+      * evaluated by [[Pq]].
       */
-    private[Sink] def encode(rows: DataFrame, codebooks: => DataFrame): DataFrame = rows
+    private[Sink] def encode(rows: DataFrame, subs: => DataFrame): DataFrame = rows
   }
 
   /** Float vectors only — exact-cosine serving ([[searchIvfIndex]]). */
@@ -221,7 +224,7 @@ object Sink {
     val kind = "ivfsq8"
     private[Sink] val columns = Seq("vec_id", "q", "n2", "ma", "embedding", "cell")
     override private[Sink] def encode(rows: DataFrame,
-        codebooks: => DataFrame): DataFrame = Similarity.withSq8Codes(rows)
+        subs: => DataFrame): DataFrame = Similarity.withSq8Codes(rows)
   }
 
   /** The FAISS-style compressed tier: m subspaces of `subDim` dims, `k`
@@ -237,9 +240,8 @@ object Sink {
     override private[Sink] val fields =
       Seq("m" -> m.toString, "subDim" -> subDim.toString, "k" -> k.toString)
     override private[Sink] def encode(rows: DataFrame,
-        codebooks: => DataFrame): DataFrame =
-      rows.crossJoin(broadcast(pqSubsArray(codebooks)))
-        .withColumn("codes", pqCodesColumn(subDim))
+        subs: => DataFrame): DataFrame =
+      rows.crossJoin(broadcast(subs)).withColumn("codes", pqCodesColumn(subDim))
   }
 
   /** Write-time cell geometry. A fixed cell COUNT makes per-cell
@@ -261,9 +263,12 @@ object Sink {
     * carries everything it scores — no join back against the
     * corpus-sized embedding table at serve time), the trained centroid
     * table (plus the PQ codebooks) beside it, and ONE manifest write
-    * recording the geometry every later operation reads back. Serving
-    * never retrains. Returns the resolved cell count. The overwrite is
-    * static ([[TableLayout.save]]): a retrain replaces every cell.
+    * recording the geometry and the assignment's data schema every
+    * later operation reads back. Serving never retrains. Returns the
+    * resolved cell count. The overwrite is static
+    * ([[TableLayout.save]]): a retrain replaces every cell. The stored
+    * artifacts seed the artifact cache ([[seedArtifact]]) as the new
+    * generation of `dir`.
     */
   def writeIvfIndex(emb: DataFrame, dir: String, codec: IvfCodec,
       cells: IvfCells = Cells(8), iters: Int = 2,
@@ -279,12 +284,17 @@ object Sink {
         (sizedCells(emb, sz, corpusKey), Seq("target_cell_size" -> sz.toString))
     }
     // training is once-per-corpus by design: with a corpusKey the
-    // quantizer (and the PQ codebooks) come from the session caches —
-    // shared with ivfTopK / the pq_* queries — and a rebuild pays only
-    // the writes. The caches OWN those checkpoints; release them only
-    // on the keyless (train-fresh) path.
-    def release(dfs: Seq[DataFrame]): Unit =
-      if (corpusKey.isEmpty) dfs.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
+    // centroids (and the PQ codebooks) come from the session caches —
+    // shared with ivfMultiProbeTopK / the pq_* queries — and a rebuild
+    // pays only the writes. Only the centroids train: the write derives
+    // every cell in its own scan, so no corpus-sized assignment is
+    // materialized. The PQ cache OWNS its checkpoints; release them
+    // only on the keyless (train-fresh) path.
+    def release(pq: Option[(DataFrame, DataFrame)]): Unit =
+      if (corpusKey.isEmpty) pq.foreach { case (codes, cents) =>
+        org.apache.spark.sql.GraftShims.uncheckpoint(codes)
+        org.apache.spark.sql.GraftShims.uncheckpoint(cents)
+      }
     // the PQ codebooks and the coarse quantizer train on DISJOINT
     // inputs (subvector slices vs full vectors) — run them
     // concurrently; results are bit-identical to serial, and the
@@ -295,48 +305,58 @@ object Sink {
         case _ => None
       }
     }
-    def trainedPq(pq: Option[(DataFrame, DataFrame)]) =
-      pq.toSeq.flatMap { case (codes, cents) => Seq(codes, cents) }
-    // a failure on either training leg must not abandon the other
-    // leg's keyless checkpoints
+    // a failure on the centroid leg must not abandon the PQ leg's
+    // keyless checkpoints
     val cent = try corpusKey match {
-      case Some(ck) => Similarity.kmeansAssignCachedWithCentroids(emb, n, iters, ck)._2
-      case None => Similarity.kmeansAssignInternal(emb, n, iters)._2.get
+      case Some(ck) => Similarity.kmeansCentroidsCached(emb, n, iters, ck)
+      case None => Similarity.driverLocal(Similarity.kmeansAssignInternal(emb, n, iters)._2.get)
     } catch { case t: Throwable =>
-      try release(trainedPq(Await.result(pqF, Duration.Inf)))
+      try release(Await.result(pqF, Duration.Inf))
       catch { case _: Throwable => () }
       throw t
     }
-    val pq = try Await.result(pqF, Duration.Inf)
-      catch { case t: Throwable => release(Seq(cent)); throw t }
-    val trained = trainedPq(pq)
+    val pq = Await.result(pqF, Duration.Inf)
+    // the artifacts as the index stores them, held on the driver: they
+    // encode this write's rows and then seed the artifact cache
+    val centArt = new Artifact(cent)
+    val pqArt = pq.map { case (_, c) =>
+      new Artifact(Similarity.driverLocal(c.select("sub", "cell", "c")))
+    }
     // the model-sized artifacts are independent of the corpus-sized
     // assignment write — overlap them (guide §2.6: the small job
     // back-fills the big one's tail); the manifest still lands only
     // after everything exists, so a reader never sees a manifest ahead
     // of its content
     val artF = Future {
-      writeCentroidArtifact(cent, s"$dir/centroids")
-      pq.foreach { case (_, c) =>
-        writeCentroidArtifact(c.select("sub", "cell", "c"), s"$dir/pq_centroids")
-      }
+      writeCentroidArtifact(centArt.rows, s"$dir/centroids")
+      pqArt.foreach(a => writeCentroidArtifact(a.rows, s"$dir/pq_centroids"))
     }
     // cell and payload are NARROW per-row expressions against the
     // broadcast trained artifacts (bit-identical to the trained
     // assignment — the same rounded-L2 argmin with cell tiebreak), so
     // the write pays ONE exchange: the cell repartition (guide §2.4)
-    try assignmentTable.save(
-        codec.encode(withNearestCell(emb.select("vec_id", "embedding"), cent),
-          pq.get._2).select(codec.columns.map(col): _*),
-        assignmentTable.path(dir), SaveMode.Overwrite)
+    val rows = codec.encode(
+        withNearestCell(emb.select("vec_id", "embedding"), centArt.centroidArray),
+        pqArt.get.pqSubs)
+      .select(codec.columns.map(col): _*)
+    try assignmentTable.save(rows, assignmentTable.path(dir), SaveMode.Overwrite)
     finally Await.ready(artF, Duration.Inf)
     artF.value.get.get // surface an artifact-write failure
+    // `schema`: the assignment files' data columns, so a search reads
+    // the probed cells without a schema-inference job
     writeIndexManifest(spark, dir,
-      Seq("kind" -> codec.kind, "cells" -> n.toString) ++ codec.fields ++ sizeField)
+      Seq("kind" -> codec.kind, "cells" -> n.toString) ++ codec.fields ++ sizeField :+
+        ("schema" -> Similarity.nullable(StructType(
+          rows.schema.filterNot(_.name == assignmentTable.part))).toDDL))
     // a full (re)write is a new generation — tombstones against the
-    // REPLACED rows must not mask the new content
+    // REPLACED rows must not mask the new content, and nothing cached
+    // for the replaced tables may outlive them; the artifacts this write
+    // stored seed the new generation, so the next load is a cache hit
     clearTombstones(spark, dir)
-    release(cent +: trained)
+    release(pq)
+    dropGenerations(dir)
+    seedArtifact(spark, s"$dir/centroids", centArt)
+    pqArt.foreach(seedArtifact(spark, s"$dir/pq_centroids", _))
     n
   }
 
@@ -465,16 +485,22 @@ object Sink {
     (spark, path, artifactGeneration(spark, path), writeId)
   }
 
+  /** Every [[genCache]], for [[dropGenerations]]. Declared before the
+    * first cache so the object initializer can register them.
+    */
+  private val genCaches =
+    new java.util.concurrent.ConcurrentLinkedQueue[graft.BoundedLruCache[GenKey, _]]()
+
   /** A [[GenKey]]-keyed driver cache, LRU-bounded and registered with
     * [[graft.SessionCaches]] for per-session eviction and the
-    * stopped-context sweep.
+    * stopped-context sweep. Values are driver-side (maps, local
+    * relations), so eviction releases nothing.
     */
-  private def genCache[V](maxEntries: Int,
-      release: V => Unit = (_: V) => ()): graft.BoundedLruCache[GenKey, V] = {
-    val cache = new graft.BoundedLruCache[GenKey, V](maxEntries, release)
+  private def genCache[V](maxEntries: Int): graft.BoundedLruCache[GenKey, V] = {
+    val cache = new graft.BoundedLruCache[GenKey, V](maxEntries, _ => ())
+    genCaches.add(cache)
     graft.SessionCaches.register(
-      evict = s => cache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
+      evict = s => cache.removeIf(_._1 eq s, releaseRemoved = false),
       sweep = () => cache.removeIf(_._1.sparkContext.isStopped,
         releaseRemoved = false))
     cache
@@ -486,38 +512,70 @@ object Sink {
     cache.get(key).getOrElse(cache.putIfAbsent(key, compute))
   }
 
+  /** Drop every generation any [[genCache]] holds for a table under
+    * `dir`, in every session: a full index write (or a retrain swapped
+    * into place) supersedes them all, so each cache keeps at most the
+    * one generation the writer seeds.
+    */
+  private def dropGenerations(dir: String): Unit = {
+    val under = dir + "/"
+    genCaches.forEach(_.removeIf(_._2.startsWith(under), releaseRemoved = false))
+  }
+
+  /** Test hook: the manifest `write_id` of every generation any
+    * [[genCache]] holds for a table under `dir` ("" for a legacy index).
+    */
+  private[graft] def cachedWriteIds(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    genCaches.asScala.flatMap(_.keys).filter(_._2.startsWith(dir + "/")).map(_._4).toSet
+  }
+
+  /** A stored model-sized artifact (IVF centroids, PQ codebooks, BPE
+    * merges) held on the driver: `rows` is a local relation — what the
+    * load functions return, the same bytes every consumer broadcasts —
+    * and the one-row packed forms the narrow per-row encoders broadcast
+    * are built from it once, on first use. Holds no Spark block.
+    */
+  private final class Artifact(val rows: DataFrame) {
+    lazy val centroidArray: DataFrame = Similarity.centroidArray(rows)
+    lazy val pqSubs: DataFrame = pqSubsArray(rows)
+  }
+
   /** Loaded stored-artifact cache: serving and maintenance call
     * [[loadIvfCentroids]]/[[loadPqCentroids]] on EVERY operation (a
     * drop-cadence maintenance replay reloads the same frozen artifacts
     * a dozen times), and each load is a read over an unchanged file
-    * set. Values are localCheckpoint'ed model-sized frames.
+    * set. A miss collects the artifact once into an [[Artifact]]; an
+    * index write seeds the generation it creates ([[seedArtifact]]),
+    * so the append and search that follow it miss nothing.
     */
-  private val artifactLoadCache = genCache[DataFrame](maxEntries = 32,
-    release = df =>
-      if (!df.sparkSession.sparkContext.isStopped)
-        org.apache.spark.sql.GraftShims.uncheckpoint(df))
+  private val artifactLoadCache = genCache[Artifact](maxEntries = 32)
 
   private def cachedArtifactLoad(spark: SparkSession, path: String)(
-      build: => DataFrame): DataFrame = {
+      read: => DataFrame): Artifact = {
     val key = genKey(spark, path)
     artifactLoadCache.get(key).getOrElse {
-      val df = build.localCheckpoint()
+      val df = read
+      val rows = df.collect()
       // once per artifact generation (cache misses only): an index
       // artifact table is never legitimately empty, and an empty
       // broadcast codebook/centroid frame makes every downstream join
       // silently drop all rows instead of failing
-      if (df.isEmpty) {
-        org.apache.spark.sql.GraftShims.uncheckpoint(df)
+      if (rows.isEmpty)
         throw new IllegalArgumentException(
           s"stored index artifact at $path is empty — zero-row table " +
             "or missing data files (partial restore / failed rewrite?)")
-      }
-      val winner = artifactLoadCache.putIfAbsent(key, df)
-      if (winner ne df)
-        org.apache.spark.sql.GraftShims.uncheckpoint(df)
-      winner
+      artifactLoadCache.putIfAbsent(key,
+        new Artifact(Similarity.localRelation(spark, rows, df.schema)))
     }
   }
+
+  /** Cache `art` as the current generation of the artifact at `path` —
+    * called by the writer right after its manifest write, with the
+    * rows it just stored.
+    */
+  private def seedArtifact(spark: SparkSession, path: String, art: Artifact): Unit =
+    artifactLoadCache.putIfAbsent(genKey(spark, path), art): Unit
 
   /** Append the nearest-cell column as a NARROW per-row argmin over the
     * broadcast centroid table — the same rounded-L2 metric and cell
@@ -526,19 +584,28 @@ object Sink {
     * inside the scan projection instead of shuffling an assignment
     * frame back onto the vectors (guide §2.4).
     */
-  private def withNearestCell(batch: DataFrame, cent: DataFrame): DataFrame =
-    batch.crossJoin(broadcast(Similarity.centroidArray(cent)))
+  private def withNearestCell(batch: DataFrame, cs: DataFrame): DataFrame =
+    batch.crossJoin(broadcast(cs))
       .withColumn("cell",
         Similarity.nearestCell(Similarity.toDouble(col("embedding")), col("cs")))
 
-  /** The stored PQ codebooks collapsed to ONE broadcastable row
-    * (subs: array<struct<sub, cs: array<struct<cell, c>>>>, sub-sorted)
-    * — the shape [[pqCodesColumn]] consumes.
+  /** The PQ codebooks collapsed to ONE broadcastable row (subs:
+    * array<struct<sub, cs: array<struct<cell, c>>>>, sub- and
+    * cell-sorted) — the shape [[pqCodesColumn]] consumes. Packed on the
+    * driver like [[Similarity.centroidArray]], from an [[Artifact]]'s
+    * local rows.
     */
-  private def pqSubsArray(pqc: DataFrame): DataFrame =
-    pqc.groupBy("sub")
-      .agg(array_sort(collect_list(struct(col("cell"), col("c")))).as("cs"))
-      .agg(array_sort(collect_list(struct(col("sub"), col("cs")))).as("subs"))
+  private def pqSubsArray(pqc: DataFrame): DataFrame = {
+    val t = pqc.select("sub", "cell", "c")
+    val cs = StructType(t.schema.fields.drop(1))
+    val subs = t.collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (sub, rs) =>
+      Row(sub, rs.sortBy(_.getAs[Number](1).longValue).map(r => Row(r.get(1), r.get(2))).toSeq)
+    }
+    Similarity.localRelation(pqc.sparkSession, Array(Row(subs)), StructType(Seq(
+      StructField("subs", ArrayType(StructType(Seq(t.schema.fields(0),
+        StructField("cs", ArrayType(cs, containsNull = false), nullable = false))),
+        containsNull = false)))))
+  }
 
   /** Per-row PQ codes over a [[pqSubsArray]] `subs` column: for each
     * subspace, the lexicographic argmin of (rounded-L2 distance, code)
@@ -570,6 +637,9 @@ object Sink {
     * artifact generation (see [[cachedArtifactLoad]]).
     */
   def loadIvfCentroids(spark: SparkSession, dir: String): DataFrame =
+    ivfCentroids(spark, dir).rows
+
+  private def ivfCentroids(spark: SparkSession, dir: String): Artifact =
     cachedArtifactLoad(spark, s"$dir/centroids") {
       spark.read.parquet(s"$dir/centroids").select("cell", "c")
     }
@@ -603,8 +673,8 @@ object Sink {
     */
   private def encodeBatch(spark: SparkSession, dir: String, codec: IvfCodec,
       uniq: DataFrame): DataFrame =
-    codec.encode(withNearestCell(uniq, loadIvfCentroids(spark, dir)),
-        loadPqCentroids(spark, dir))
+    codec.encode(withNearestCell(uniq, ivfCentroids(spark, dir).centroidArray),
+        pqCodebooks(spark, dir).pqSubs)
       .select(codec.columns.map(col): _*)
 
   /** Hard bound on the DRIVER-SIDE index maps ([[storedCellCounts]],
@@ -853,6 +923,9 @@ object Sink {
     * per artifact generation like [[loadIvfCentroids]].
     */
   def loadPqCentroids(spark: SparkSession, dir: String): DataFrame =
+    pqCodebooks(spark, dir).rows
+
+  private def pqCodebooks(spark: SparkSession, dir: String): Artifact =
     cachedArtifactLoad(spark, s"$dir/pq_centroids") {
       spark.read.parquet(s"$dir/pq_centroids").select("sub", "cell", "c")
     }
@@ -886,6 +959,8 @@ object Sink {
     // reproduce the (mtime, count, bytes) generation stamp still misses
     val writeId = s"${System.nanoTime()}x${manifestWriteCounter.incrementAndGet()}"
     val json = (fields :+ ("write_id" -> writeId)).map { case (k, v) =>
+      // the reader's flat grammar has no escapes
+      require(!v.contains("\""), s"writeIndexManifest: field $k holds a quote: $v")
       // unquoted only for well-formed integers
       "\"" + k + "\":" + (if (v.matches("-?\\d+")) v else "\"" + v + "\"")
     }.mkString("{", ",", "}")
@@ -897,6 +972,12 @@ object Sink {
       require(fs.rename(tmp, p),
         s"writeIndexManifest: rename($tmp, $p) failed — the new manifest remains at $tmp")
     }
+    // each write's temp name is fresh, so a temp a crash left before
+    // its rename would otherwise outlive every later write (writers
+    // are single-writer per index, so no live temp is deleted here)
+    fs.listStatus(p.getParent).map(_.getPath)
+      .filter(t => t.getName.startsWith("_graft_manifest.json.") && t.getName.endsWith(".tmp"))
+      .foreach(fs.delete(_, false): Unit)
   }
 
   private val manifestPair = """"([A-Za-z_]+)":(-?\d+|"[^"]*")"""
@@ -1434,6 +1515,10 @@ object Sink {
       // compactIvfIndex whose cleanup is pinned to the file set it
       // consumed and therefore tolerates concurrent deletes.
       checkedSwap(spark, tmp, dir, "maintainIvfIndex")
+      // the retrain's generations were cached under the temp dir, the
+      // replaced index's under `dir`: neither is current any more
+      dropGenerations(dir)
+      dropGenerations(tmp)
       ("retrain", countDataFiles(spark, assignPath))
     } else {
       assignmentTable.save(rows, assignPath, SaveMode.Append)
@@ -1603,36 +1688,38 @@ object Sink {
     * rows rank the STORED centroids (rounded L2, cell tiebreak — the
     * training metric), each keeps its `nprobe` nearest cells, and the
     * probe list is collected — ≤ nQueries×nprobe rows, bounded by the
-    * query batch, never by data. The collected rows serve twice: as
-    * the literal probed-cell list [[readProbedCells]] turns into a
-    * per-subdirectory read (Spark's dynamic partition pruning
-    * degenerates to `dynamicpruningexpression(true)` on this join
-    * shape, which would silently scan EVERY cell), and as a local
+    * query batch, never by data. The ranking is narrow: each query row
+    * sorts its (distance, cell) pairs over the broadcast one-row
+    * centroid array and keeps the first `nprobe` (the order a window
+    * over (pd, cell) gives, without its shuffle). The collected rows
+    * serve twice: as the literal probed-cell list [[readProbedCells]]
+    * turns into a per-subdirectory read (Spark's dynamic partition
+    * pruning degenerates to `dynamicpruningexpression(true)` on this
+    * join shape, which would silently scan EVERY cell), and as a local
     * (qid, cell, pn) relation the serving join broadcasts, instead of
     * recomputing the probe ranking inside the broadcast build. Returns
     * that relation and the tombstone-masked scan of the probed cells.
     */
   private def probeStoredCells(spark: SparkSession, emb: DataFrame, dir: String,
       nQueries: Int, nprobe: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val pw = Window.partitionBy("qid").orderBy(col("pd"), col("cell"))
+    val ranked = array_sort(transform(col("cs"), s =>
+      struct(Similarity.l2sq(col("qv"), s.getField("c")).as("pd"),
+        s.getField("cell").as("cell"))))
     val probeRows = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"),
         Similarity.toDouble(col("embedding")).as("qv"))
-      .crossJoin(broadcast(loadIvfCentroids(spark, dir)))
-      .withColumn("pd", Similarity.l2sq(col("qv"), col("c")))
-      .withColumn("pn", row_number().over(pw))
-      .filter(col("pn") <= nprobe)
-      .select("qid", "cell", "pn")
+      .crossJoin(broadcast(ivfCentroids(spark, dir).centroidArray))
+      .select(col("qid"), posexplode(slice(ranked, 1, nprobe)).as(Seq("p", "probe")))
+      .select(col("qid"), col("probe").getField("cell"), col("p") + 1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     (probeRows.toDF("qid", "cell", "pn"),
-      tombstones(spark, dir, ivfIndex).mask(readProbedCells(spark,
-        s"$dir/assignment", probeRows.map(_._2).distinct)))
+      tombstones(spark, dir, ivfIndex).mask(
+        readProbedCells(spark, dir, probeRows.map(_._2).distinct)))
   }
 
-  /** Read ONLY the probed cell partitions of an assignment layout, as
+  /** Read ONLY the probed cell partitions of an index's assignment, as
     * per-subdirectory reads under `basePath` (the partition column
     * stays in the schema). A plain `spark.read.parquet(assignment)`
     * LISTS THE WHOLE TREE before partition pruning ever applies — with
@@ -1645,19 +1732,40 @@ object Sink {
     * with bounded exists() probes; if none exist, fall back to the
     * full-tree read filtered empty (schema-correct, effectively never
     * taken).
+    *
+    * The read takes the data schema the manifest records (`schema`,
+    * see [[writeIvfIndex]]) instead of inferring it from a footer,
+    * which costs a Spark job per search; `cell` keeps the type
+    * partition inference gives the read directories, because searches
+    * output it. A legacy manifest without the field infers.
     */
-  private def readProbedCells(spark: SparkSession, assignPath: String,
+  private def readProbedCells(spark: SparkSession, dir: String,
       cells: Seq[Long]): DataFrame = {
+    val assignPath = s"$dir/assignment"
     val base = new org.apache.hadoop.fs.Path(assignPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val paths = cells.distinct
-      .map(c => new org.apache.hadoop.fs.Path(base, s"cell=$c"))
-      .filter(fs.exists).map(_.toString)
-    if (paths.isEmpty)
+    val present = cells.distinct
+      .filter(c => fs.exists(new org.apache.hadoop.fs.Path(base, s"cell=$c")))
+    if (present.isEmpty)
       spark.read.parquet(assignPath).filter(lit(false))
-    else
-      spark.read.option("basePath", assignPath).parquet(paths: _*)
+    else {
+      val reader = spark.read.option("basePath", assignPath)
+      readIndexManifest(spark, dir).flatMap(_.get("schema"))
+        .fold(reader)(ddl => reader.schema(
+          StructType.fromDDL(ddl).add("cell", inferredCellType(spark, present))))
+        .parquet(present.map(c => new org.apache.hadoop.fs.Path(base, s"cell=$c").toString): _*)
+    }
   }
+
+  /** The type partition inference gives a set of `cell=<id>`
+    * directories: INT when every id fits, else BIGINT (STRING with
+    * inference switched off).
+    */
+  private def inferredCellType(spark: SparkSession, cells: Seq[Long]): DataType =
+    if (!spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled",
+        "true").toBoolean) StringType
+    else if (cells.forall(_.isValidInt)) IntegerType
+    else LongType
 
   /** Search a stored IVF index by exact cosine over the probed cells'
     * co-located vectors ([[probeStoredCells]]) — a probe never joins
@@ -2090,7 +2198,7 @@ object Sink {
       s"loadBpeMerges: no tokenizer artifact at $dir (missing merges table)")
     cachedArtifactLoad(spark, s"$dir/merges") {
       spark.read.parquet(s"$dir/merges")
-    }
+    }.rows
   }
 
   /** Encode a corpus with the STORED tokenizer — the production

@@ -110,14 +110,18 @@ class IndexFaultSpec extends SparkSpec {
       .filter(n => n.endsWith("__old") || n.endsWith("__compact")).toSeq
   }
 
+  private def manifestTemps(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .filter(n => n.startsWith("_graft_manifest.json.") && n.endsWith(".tmp"))
+
   private def tombstoneFiles(dir: String): Int =
     Option(new java.io.File(s"$dir/tombstones").listFiles())
       .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
 
   /** Run every case against a copy of `fixture`: fault the compaction,
     * check service, compact again without the fault, and check the
-    * index serves the same, holds no swap leftovers and has consumed
-    * its tombstones.
+    * index serves the same, holds no swap leftovers or manifest temps
+    * and has consumed its tombstones.
     */
   private def runCases(fixture: String, cases: Seq[Case],
       compact: String => Unit, serve: String => Seq[Seq[Any]]): Unit = {
@@ -134,6 +138,8 @@ class IndexFaultSpec extends SparkSpec {
       assert(serve(dir) == expected, s"${c.name}: the next mutator recovers")
       assert(leftovers(dir).isEmpty, s"${c.name}: swap leftovers ${leftovers(dir)}")
       assert(tombstoneFiles(dir) == 0, s"${c.name}: tombstones not consumed")
+      assert(manifestTemps(dir).isEmpty,
+        s"${c.name}: orphaned manifest temps ${manifestTemps(dir)}")
     }
   }
 

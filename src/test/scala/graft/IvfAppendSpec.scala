@@ -456,8 +456,28 @@ class IvfAppendSpec extends SparkSpec {
       val cellsWritten = spark.read.parquet(s"$dir/centroids")
         .select("cell").distinct().count()
       val columnsWritten = spark.read.parquet(s"$dir/assignment").columns.toSeq
+      // a manifest without the recorded data schema (written before the
+      // field existed) serves the same rows, with the same types,
+      // through schema inference
+      def served() = {
+        val df = codec match {
+          case Sink.Flat => Sink.searchIvfIndex(spark, base, dir, 5, 3, nprobe = 2)
+          case Sink.Sq8 => Sink.searchIvfSq8Index(spark, base, dir, 5, 3)
+          case _ => Sink.searchIvfPqIndex(spark, base, dir, 5, 3, 10, nprobe = 2)
+        }
+        (df.schema, df.collect().map(_.toSeq).toSeq)
+      }
+      val withSchema = served()
+      val mf = Sink.readIndexManifest(spark, dir).get
+      assert(mf.contains("schema"), s"${codec.kind}: the write records the data schema")
+      Sink.writeIndexManifest(spark, dir,
+        mf.toSeq.filterNot { case (k, _) => k == "schema" || k == "write_id" })
+      assert(served() == withSchema,
+        s"${codec.kind}: the legacy manifest must serve the same rows and types")
       // strip the manifest — the pre-manifest on-disk layout
       assert(new java.io.File(s"$dir/_graft_manifest.json").delete())
+      assert(served() == withSchema,
+        s"${codec.kind}: the pre-manifest layout must serve the same rows and types")
       // drifted batch → retrain: the rebuilt index must keep the WRITTEN
       // cell count and layout
       val skew = twoClusters(200L until 220L, _ => 1)

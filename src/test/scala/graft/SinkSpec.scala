@@ -615,6 +615,19 @@ class SinkSpec extends SparkSpec {
       "codebook grid" -> (() => Sink.pqCodeGrid(spark, dir)))
     Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
     val id1 = Sink.readIndexManifest(spark, dir).flatMap(_.get("write_id"))
+    // the write seeded the artifacts it stored: the loads run no job and
+    // return exactly what a fresh parquet read of the tables returns
+    Seq("centroids" -> (() => Sink.loadIvfCentroids(spark, dir)),
+        "pq_centroids" -> (() => Sink.loadPqCentroids(spark, dir))).foreach {
+      case (t, load) =>
+        var seeded: org.apache.spark.sql.DataFrame = null
+        assert(jobsOf { seeded = load() } == 0, s"$t: the write must seed its artifact")
+        val fresh = spark.read.parquet(s"$dir/$t").select(seeded.columns.map(col): _*)
+        assert(seeded.schema == fresh.schema, s"$t: ${seeded.schema} vs ${fresh.schema}")
+        def sorted(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq).sortBy(_.take(2).mkString(",")).toSeq
+        assert(sorted(seeded) == sorted(fresh), s"$t: seeded rows differ from the stored rows")
+    }
     pinMtimes()
     val g1 = stamps()
     val first = caches.map(_._2())
@@ -632,6 +645,15 @@ class SinkSpec extends SparkSpec {
       assert(read() ne v,
         s"$name: a rewrite with a colliding generation stamp must still miss the cache")
     }
+    // the rewrite dropped every entry of the superseded generation
+    assert(Sink.cachedWriteIds(dir) == id2.toSet,
+      s"cached generations ${Sink.cachedWriteIds(dir)}, current $id2")
+    // a keyed write trains centroids only: no corpus-sized assignment
+    // is left cached for its key
+    val key = s"artifact-cache-spec-$dir"
+    Sink.writeIvfIndex(e, dir, Sink.Flat, Sink.Cells(8), iters = 2, corpusKey = Some(key))
+    assert(!graft.operators.Similarity.cachedAssignment(spark, key, 8, 2),
+      "a keyed write must not cache an assignment")
   }
 
   test("job budget: each codec's write, append, maintain and search stay within their Spark job counts") {
@@ -644,27 +666,60 @@ class SinkSpec extends SparkSpec {
       case Sink.Sq8 => Sink.searchIvfSq8Index(spark, e, dir, 10, 3)
       case _: Sink.Pq => Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10)
     }
-    // (write, append, maintain on its append branch, search): the job
-    // counts of the per-codec functions this one lifecycle replaced —
-    // sharing the path, and the narrow nearest-cell append, must not
-    // add a job
+    // the artifact loads the append and search below start: none, since
+    // the write seeded what it stored and an append never touches it
+    def artifactLoads(codec: Sink.IvfCodec, dir: String): Int = jobsOf {
+      Sink.loadIvfCentroids(spark, dir)
+      if (codec.isInstanceOf[Sink.Pq]) Sink.loadPqCentroids(spark, dir)
+    }
+    // (write, append, maintain on its append branch, search), each at
+    // the count it runs: the centroid array is packed on the driver, the
+    // loads after a write hit the artifacts it seeded, and the probe
+    // ranks narrowly over a read with a recorded schema. The keyed row
+    // is the benchmark's path; its first write trains on a fresh key
+    val corpusKey = s"job-budget-${System.nanoTime()}"
     val budgets = Seq(
-      Sink.Flat -> Seq(15, 8, 14, 10),
-      Sink.Sq8 -> Seq(15, 9, 15, 10),
-      Sink.Pq(4, 16, 8) -> Seq(77, 15, 34, 15))
-    budgets.foreach { case (codec, budget) =>
+      (Sink.Flat, None, Seq(15, 4, 10, 8)),
+      (Sink.Sq8, None, Seq(15, 4, 10, 8)),
+      (Sink.Pq(4, 16, 8), None, Seq(76, 5, 16, 13)),
+      (Sink.Flat, Some(corpusKey), Seq(15, 4, 10, 8)))
+    budgets.foreach { case (codec, key, budget) =>
       val dir = Files.createTempDirectory("graft-jobbudget").toString
-      val used = Seq(
-        jobsOf(Sink.writeIvfIndex(base, dir, codec, Sink.Cells(8), iters = 2)),
-        jobsOf(Sink.appendToIvfIndex(batch1, dir)),
+      val write = jobsOf(Sink.writeIvfIndex(base, dir, codec, Sink.Cells(8), iters = 2,
+        corpusKey = key))
+      assert(artifactLoads(codec, dir) == 0, s"${codec.kind}: a load after the write ran a job")
+      val append = jobsOf(Sink.appendToIvfIndex(batch1, dir))
+      assert(artifactLoads(codec, dir) == 0, s"${codec.kind}: a load after the append ran a job")
+      val used = Seq(write, append,
         jobsOf(assert(Sink.maintainIvfIndex(spark, batch2, dir, threshold = 1e9)
           .head().getAs[String]("action") == "append")),
         jobsOf(search(codec, dir).collect()))
       Seq("write", "append", "maintain", "search").zip(used.zip(budget))
         .foreach { case (step, (n, max)) =>
-          assert(n <= max, s"${codec.kind} $step ran $n Spark jobs, budget $max")
+          assert(n <= max, s"${codec.kind} ${key.fold("")(_ => "keyed ")}$step ran " +
+            s"$n Spark jobs, budget $max")
         }
     }
+    // a keyed rewrite trains nothing: its centroids are the session's
+    val dir = Files.createTempDirectory("graft-jobbudget").toString
+    val rewrite = jobsOf(Sink.writeIvfIndex(base, dir, Sink.Flat, Sink.Cells(8), iters = 2,
+      corpusKey = Some(corpusKey)))
+    assert(rewrite <= 4, s"keyed rewrite ran $rewrite Spark jobs, budget 4")
+    // a same-key multiprobe search derives its assignment from those
+    // centroids: the rows a fresh training returns, in fewer jobs
+    def multiprobe(key: Option[String]): (Seq[Seq[Any]], Int) = {
+      var rows = Seq.empty[Seq[Any]]
+      val jobs = jobsOf {
+        rows = graft.operators.Similarity.ivfMultiProbeTopK(base, 10, 3, cells = 8,
+          iters = 2, nprobe = 2, corpusKey = key).collect().map(_.toSeq).toSeq
+      }
+      (rows, jobs)
+    }
+    val (trained, retrainJobs) = multiprobe(None)
+    val (derived, derivedJobs) = multiprobe(Some(corpusKey))
+    assert(derived == trained, "the cached centroids must give the freshly trained rows")
+    assert(derivedJobs < retrainJobs,
+      s"deriving the assignment ran $derivedJobs Spark jobs, a retrain $retrainJobs")
   }
 
   test("an interrupted rename-aside swap rolls back: compaction and a maintain retrain serve the original rows") {
