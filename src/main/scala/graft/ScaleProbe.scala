@@ -189,8 +189,7 @@ object ScaleProbe {
       // proportional to the BATCH, one broadcast-join pass
       time("embed_ivf_append_assign") {
         val base = Tables.embeddings(spark, sfDir)
-        val (_, cOpt) = Similarity.kmeansAssignInternal(base, 8, 2)
-        Similarity.assignWithCentroids(emb, cOpt.get)
+        Similarity.assignWithCentroids(emb, Similarity.kmeansCentroids(base, 8, 2))
       },
       // round-13: the SQ8 tier vs the float32 brute scan at the same
       // factor — same plan shape (broadcast queries, per-qid window),

@@ -144,7 +144,7 @@ object Relational {
         .localCheckpoint()
       // each eager checkpoint fully consumes its predecessor — release
       // the superseded block sets instead of pinning them for the
-      // session (the kmeansAssignInternal round-release pattern). Only
+      // session. Only
       // the terminal two-level frame must survive: it goes in the cache.
       org.apache.spark.sql.GraftShims.uncheckpoint(base)
       val built = GlobalRank.chunkedNtile(r, -col("frequency"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, MapType, StructField, StructType}
 
 /** Similarity search over the embeddings table (64-dim float vectors) —
   * brute-force cosine top-k as the correctness baseline and a
@@ -182,41 +182,18 @@ object Similarity {
     * codes score ONLY those candidates. The two knobs compose
     * independently — nprobe buys recall at scan cost, SQ8 cuts the
     * scanned bytes 4× within [[sq8TopK]]'s bounded score error. Same
-    * cached-training contract as [[ivfMultiProbeTopK]].
+    * training and probe contract as [[ivfMultiProbeTopK]].
     */
   def ivfSq8TopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3,
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2,
       corpusKey: Option[String] = None): DataFrame = {
     require(iters >= 2, "IVF-SQ8 needs trained centroids (iters >= 2)")
-    // terminal checkpoints (the returned plan keeps reading them) go
-    // through the CheckpointPool: the cached-quantizer path reuses one
-    // probe block set across calls (stable LogicalRDD leaves → stable
-    // key), and the keyless path degrades to the pool's bounded FIFO
-    // instead of pinning a fresh corpus-sized set per evaluation (the
-    // vocabPrune-class leak, closed generically in round 13)
-    val (assignedAll, centroids, cacheOwned) = corpusKey match {
-      case Some(tag) =>
-        val (a, c) = kmeansAssignCachedWithCentroids(emb, cells, iters, tag)
-        (a, c, true)
-      case None =>
-        val (a, cOpt) = kmeansAssignInternal(emb, cells, iters)
-        (graft.CheckpointPool.cached("ivfsq8-assigned")(a), cOpt.get, false)
-    }
+    val (assignedAll, centroids) = quantizer(emb, cells, iters, corpusKey)
     val assigned = assignedAll.select("vec_id", "cell")
     val codes = sq8Codes(emb)
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qv"))
     val qCodes = codes.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
-    val pw = Window.partitionBy("qid").orderBy(col("pd"), col("cell"))
-    val probes = graft.CheckpointPool.cached("ivfsq8-probes")(
-      q.crossJoin(broadcast(centroids))
-        .withColumn("pd", l2sq(col("qv"), col("c")))
-        .withColumn("pn", row_number().over(pw))
-        .filter(col("pn") <= nprobe)
-        .select("qid", "cell", "pn"))
-    if (!cacheOwned)
-      org.apache.spark.sql.GraftShims.uncheckpoint(centroids)
+    val probes = rankProbes(emb, nQueries, centroidArray(centroids), nprobe)
     val withCell = codes.join(assigned, "vec_id")
     val dotInt = aggregate(
       zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
@@ -300,9 +277,7 @@ object Similarity {
     // two-level 20 s)
     val assigned =
       if (cells <= maxFlatCells)
-        corpusKey.map(kmeansAssignCached(emb, cells, iters, _))
-          .getOrElse(kmeansAssign(emb, cells, iters))
-          .select("vec_id", "cell")
+        quantizer(emb, cells, iters, corpusKey)._1.select("vec_id", "cell")
       else {
         // flat Lloyd's is N·cells distance work — quadratic-ish once
         // cells ∝ √N (measured: 181 s at ×100 with cells=800 vs 5.7 s
@@ -404,14 +379,14 @@ object Similarity {
     * rounded squared distance to the final centroid.
     *
     * Scale: each round is one broadcast of k×dims centroids against a
-    * corpus scan (no shuffle of the corpus) plus one k×dims-sized
-    * aggregate for the update — the textbook distributed Lloyd's. The
-    * explode in the update stage moves rows×dims elements through a
-    * map-side-combined avg, bounded by the corpus size, not k.
+    * sample scan (no shuffle of the sample) plus one k×dims-sized
+    * aggregate for the update, collected to the driver — the textbook
+    * distributed Lloyd's ([[lloyds]]). The final assignment is one
+    * narrow pass over the corpus ([[nearestCell]]).
     */
   def kmeansAssign(emb: DataFrame, k: Int = 8, iters: Int = 2,
       sampleRows: Int = AutoTrainSample): DataFrame =
-    kmeansAssignInternal(emb, k, iters, sampleRows)._1
+    nearestAssignment(emb, kmeansCentroids(emb, k, iters, sampleRows)).orderBy("vec_id")
 
   /** Default training-sample FLOOR: production Lloyd's never trains on
     * the full corpus (FAISS's train-on-a-sample discipline — the
@@ -458,105 +433,108 @@ object Similarity {
     Sampling.hashBucket(key, sampleBuckets)
 
   /** Deterministic capped training sample over (vec_id, v): keep a row
-    * iff [[hexBucket]](vec_id) · n < 2^20 · sampleRows, with n the
-    * corpus row count folded in declaratively (one broadcast one-row
-    * aggregate — no driver job). Content-hash keyed like every sampler
-    * here: stable across runs, engines, and partition layouts, never
-    * an RNG. When n ≤ sampleRows the predicate is identically true
-    * (hb < 2^20 always), so small corpora keep EVERY row and training
-    * degenerates to the exact full-corpus Lloyd's. Expected sample
-    * size ≈ sampleRows above the cap (binomial concentration — the cap
-    * is a target, not an exact rank).
+    * iff [[hexBucket]](vec_id) · n < 2^20 · sampleRows, with n the row
+    * count of the row's group — the corpus when `groups` is empty, its
+    * parent cell on the per-parent rung — folded in declaratively (one
+    * broadcast count aggregate — no driver job). Content-hash keyed
+    * like every sampler here: stable across runs, engines, and
+    * partition layouts, never an RNG. When n ≤ sampleRows the
+    * predicate is identically true (hb < 2^20 always), so small
+    * corpora keep EVERY row and training degenerates to the exact
+    * full-corpus Lloyd's. Expected sample size ≈ sampleRows above the
+    * cap (binomial concentration — the cap is a target, not an exact
+    * rank).
     */
-  private[graft] def trainSample(e: DataFrame, sampleRows: Int): DataFrame = {
+  private[graft] def trainSample(e: DataFrame, sampleRows: Int,
+      groups: Seq[String] = Nil): DataFrame = {
     require(sampleRows > 0, s"sampleRows must be positive, got $sampleRows")
-    val n1 = e.agg(count(lit(1)).as("__n"))
-    e.crossJoin(broadcast(n1))
+    val n = broadcast(e.groupBy(groups.map(col): _*).agg(count(lit(1)).as("__n")))
+    (if (groups.isEmpty) e.crossJoin(n) else e.join(n, groups))
       .filter(hexBucket(col("vec_id").cast("string"))
         * col("__n") < lit(sampleRows.toLong * sampleBuckets))
       .drop("__n")
   }
 
-  /** Training with the final centroid checkpoint exposed: a caller that
-    * MATERIALIZES the returned assignment (cache/checkpoint) should then
-    * release the centroid blocks via GraftShims.uncheckpoint — after
-    * that, the un-materialized assignment plan must not be executed
-    * again (its LogicalRDD leaves are gone). Earlier rounds' centroid
-    * checkpoints are released inside the loop as soon as the next
-    * round's (eager) checkpoint replaces them.
-    *
-    * Training runs on the [[trainSample]] capped sample (materialized —
-    * its checkpoint is bounded by ~sampleRows and released before
-    * return); the FINAL assignment is one broadcast pass over the full
-    * corpus against the trained centroids. Init = the k lowest vec_ids
-    * of the sample — identical to the historical `vec_id < k` whenever
-    * the sample keeps everything and ids are dense from 0, which is
-    * every sub-cap corpus.
+  /** (vec_id, v): the embedding cast to double — the row every
+    * k-means pass reads.
     */
-  private[graft] def kmeansAssignInternal(emb: DataFrame, k: Int,
-      iters: Int, sampleRows: Int = AutoTrainSample)
-      : (DataFrame, Option[DataFrame]) = {
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val smp = trainSample(e, resolveSample(sampleRows, k)).localCheckpoint()
-    var centroids = smp.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cell"), col("v").as("c"))
-      .localCheckpoint() // k rows — lets smp release even at iters = 1
-    var checkpointed: Option[DataFrame] = Some(centroids)
-    // argmin by AGGREGATION, not a window: min(struct(d, cell)) is the
-    // same lexicographic pick as row_number over (d asc, cell asc) at
-    // rn = 1 (d is pre-rounded, so the order is stable), but the
-    // hash aggregate partial-combines map-side — the N·cells candidate
-    // frame collapses to one row per vector BEFORE any exchange, where
-    // the window shape would shuffle every candidate row (at ×100 /
-    // 800 cells that is a 160M-row exchange per assignment pass)
-    def argmin(rows: DataFrame) =
-      rows.crossJoin(broadcast(centroids))
-        .withColumn("d", l2sq(col("v"), col("c")))
-        .groupBy("vec_id")
-        .agg(min(struct(col("d"), col("cell"))).as("m"))
-        .select(col("vec_id"), col("m").getField("cell").as("cell"),
-          col("m").getField("d").as("d"))
-    for (_ <- 1 until iters) {
-      val means = argmin(smp).join(smp, "vec_id")
-        .select(col("cell"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("cell", "i").agg(round(avg(col("x")), 6).as("m"))
-      // materialize the k×dims centroid table each update: without it
-      // every downstream evaluation of the assignment (the means of the
-      // NEXT round, plus each join side of an IVF search) re-runs the
-      // whole previous assign+update chain from the scan up
-      centroids = means
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("ps"))
-        .select(col("cell"), transform(col("ps"), p => p.getField("m")).as("c"))
-        .localCheckpoint()
-      // the new checkpoint is eager, so the previous round's blocks are
-      // no longer reachable from any live plan — release them now
-      checkpointed.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-      checkpointed = Some(centroids)
-    }
-    // the final full-corpus assignment reads only the trained centroid
-    // checkpoint — the sample blocks are unreachable from here
-    org.apache.spark.sql.GraftShims.uncheckpoint(smp)
-    (argmin(e).orderBy("vec_id"), checkpointed)
+  private def vectors(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+
+  /** The flat trainer: Lloyd's on the [[trainSample]] capped sample,
+    * initialized from its k lowest vec_ids, each of which becomes its
+    * cell's id — identical to the historical `vec_id < k` whenever the
+    * sample keeps everything and ids are dense from 0, which is every
+    * sub-cap corpus. Returns the trained (cell, c) table held on the
+    * driver ([[driverLocal]]): no Spark block outlives the call, so no
+    * caller has anything to release.
+    */
+  private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
+      sampleRows: Int = AutoTrainSample): DataFrame =
+    trainOn(trainSample(vectors(emb), resolveSample(sampleRows, k)), Nil, iters)(
+      _.orderBy("vec_id").limit(k).select(col("vec_id").as("cell"), col("v").as("c")))
+
+  /** [[lloyds]] over `sample`, materialized once because the init and
+    * every round read it (the checkpoint is sample-sized and released
+    * before return), starting from the driver-held `init` of it.
+    */
+  private def trainOn(sample: DataFrame, groups: Seq[String], iters: Int)(
+      init: DataFrame => DataFrame): DataFrame = {
+    val smp = sample.localCheckpoint()
+    try lloyds(smp, driverLocal(init(smp)), groups, iters)
+    finally org.apache.spark.sql.GraftShims.uncheckpoint(smp)
   }
 
-  /** The centroid table collapsed to ONE broadcastable row holding
-    * array<struct<cell, c>> sorted by cell — the shape [[nearestCell]]
-    * consumes. Lets an index write compute each vector's cell as a
-    * narrow per-row expression over the scan instead of joining a
-    * materialized assignment frame back to the corpus by vec_id
-    * (guide §2.4: remove shuffles outright — the join shuffled the
-    * corpus twice for a value derivable in the projection). Packed on
-    * the driver from `cent`'s rows into a one-row local relation: over
-    * a [[driverLocal]] table the collect runs no job, where the
+  /** The one Lloyd's loop. `smp` holds (vec_id, v, groups…) rows, one
+    * per vector and group; `init` the driver-held starting centroids
+    * (groups…, cell, c). Every group trains independently in the same
+    * pass: flat training is the no-group case, the per-parent rung
+    * groups by parent cell, PQ by subspace. Each of the `iters` − 1
+    * rounds assigns the sample through [[nearestCell]] (a narrow
+    * projection: the sample is unique per vector, so no argmin
+    * aggregate), averages each (group, cell, dimension) through a
+    * map-side-combined avg rounded to 6dp, and collects those
+    * groups×k×dims means; the driver packs them into the next round's
+    * centroid table. A cell that wins no sample row drops out. Returns
+    * a [[driverLocal]]-shaped table.
+    */
+  private def lloyds(smp: DataFrame, init: DataFrame, groups: Seq[String],
+      iters: Int): DataFrame =
+    (1 until iters).foldLeft(init) { (cent, _) =>
+      val means = withNearest(smp, cent, groups)
+        .select(groups.map(col) :+ col("m.cell").as("cell") :+
+          posexplode(col("v")).as(Seq("i", "x")): _*)
+        .groupBy(groups.map(col) :+ col("cell") :+ col("i"): _*)
+        .agg(round(avg(col("x")), 6).as("m"))
+      val g = groups.size
+      val rows = means.collect().groupBy(_.toSeq.take(g + 1)).toArray.map { case (key, rs) =>
+        Row.fromSeq(key :+ rs.sortBy(_.getInt(g + 1)).map(_.get(g + 2)).toSeq)
+      }
+      localRelation(smp.sparkSession, rows, nullable(StructType(
+        means.schema.fields.take(g + 1) :+ StructField("c", ArrayType(DoubleType)))))
+    }
+
+  /** A centroid table (groups…, cell, c) collapsed to ONE broadcastable
+    * row per group holding cs: array<struct<cell, c>> sorted by cell —
+    * the shape [[nearestCell]] consumes. Lets a pass compute each
+    * vector's cell as a narrow per-row expression over its scan
+    * instead of joining a materialized assignment frame back to the
+    * corpus by vec_id (guide §2.4: remove shuffles outright). Packed on
+    * the driver from `cent`'s rows into a local relation: over a
+    * [[driverLocal]] table the collect runs no job, where the
     * equivalent collect_list aggregate costs a shuffle stage and a
     * collect per broadcast.
     */
-  private[operators] def centroidArray(cent: DataFrame): DataFrame = {
-    val t = cent.select("cell", "c")
-    val packed = t.collect().sortBy(_.getAs[Number](0).longValue).toSeq
-    localRelation(cent.sparkSession, Array(Row(packed)), StructType(Seq(
-      StructField("cs", ArrayType(StructType(t.schema.fields), containsNull = false)))))
+  private[operators] def centroidArray(cent: DataFrame,
+      groups: Seq[String] = Nil): DataFrame = {
+    val t = cent.select(groups.map(col) :+ col("cell") :+ col("c"): _*)
+    val g = groups.size
+    val rows = t.collect().groupBy(_.toSeq.take(g)).toArray.map { case (key, rs) =>
+      Row.fromSeq(key :+ rs.sortBy(_.getAs[Number](g).longValue)
+        .map(r => Row(r.get(g), r.get(g + 1))).toSeq)
+    }
+    localRelation(cent.sparkSession, rows, StructType(t.schema.fields.take(g) :+
+      StructField("cs", ArrayType(StructType(t.schema.fields.drop(g)), containsNull = false))))
   }
 
   /** `rows` as a local relation: a driver-held frame that no job
@@ -570,14 +548,10 @@ object Similarity {
   /** A model-sized frame (trained centroids, codebooks) collected to
     * the driver as a [[localRelation]] with the all-nullable schema a
     * parquet read of it returns, so the trained table and its stored
-    * artifact are interchangeable. One collect; the checkpoint behind
-    * `df`, if any, is released.
+    * artifact are interchangeable.
     */
-  private[graft] def driverLocal(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    org.apache.spark.sql.GraftShims.uncheckpoint(df)
-    localRelation(df.sparkSession, rows, nullable(df.schema))
-  }
+  private def driverLocal(df: DataFrame): DataFrame =
+    localRelation(df.sparkSession, df.collect(), nullable(df.schema))
 
   /** `t` with every field, array element and map value nullable — the
     * schema a file-source read returns for data written with `t`.
@@ -593,49 +567,101 @@ object Similarity {
     go(t).asInstanceOf[StructType]
   }
 
-  /** Per-row nearest-cell expression over a [[centroidArray]] column:
-    * lexicographic array_min of struct(d, cell) — the SAME rounded-L2
-    * metric and cell tiebreak as the aggregate argmin in
-    * [[kmeansAssignInternal]]/[[assignWithCentroids]] (min(struct(d,
-    * cell)) and array_min compare identically), so the produced cell is
-    * bit-identical to the trained assignment against the same
-    * centroids. `v` must already be the double-cast vector.
+  /** struct(d, cell) of `v` against every entry of a [[centroidArray]]
+    * column, in cell order: d is the [[l2sq]] rounded distance. `v`
+    * must already be the double-cast vector.
+    */
+  private def cellDistances(v: Column, cs: Column): Column =
+    transform(cs, s =>
+      struct(l2sq(v, s.getField("c")).as("d"), s.getField("cell").as("cell")))
+
+  /** THE nearest-cell kernel: struct(d, cell) of the nearest centroid
+    * of a [[centroidArray]] column — the lexicographic array_min of
+    * [[cellDistances]], so an exact distance tie picks the lower cell
+    * id. Every Lloyd's round, assignment, and PQ code derives from
+    * this one expression (probes rank the same pairs, [[rankProbes]]),
+    * so a cell is bit-identical wherever it is computed against the
+    * same centroids.
     */
   private[operators] def nearestCell(v: Column, cs: Column): Column =
-    array_min(transform(cs, s =>
-      struct(l2sq(v, s.getField("c")).as("d"), s.getField("cell").as("cell"))))
-      .getField("cell")
+    array_min(cellDistances(v, cs))
+
+  /** `rows` (carrying the double vector `v`) plus `m` =
+    * [[nearestCell]] against the row's group's centroids, broadcast as
+    * one packed row per group ([[centroidArray]]).
+    */
+  private def withNearest(rows: DataFrame, cent: DataFrame,
+      groups: Seq[String]): DataFrame = {
+    val cs = broadcast(centroidArray(cent, groups))
+    (if (groups.isEmpty) rows.crossJoin(cs) else rows.join(cs, groups))
+      .withColumn("m", nearestCell(col("v"), col("cs"))).drop("cs")
+  }
+
+  /** (vec_id, cell, d) for every row of `emb` against trained
+    * centroids: one narrow pass, one output row per input row.
+    */
+  private def nearestAssignment(emb: DataFrame, cent: DataFrame): DataFrame =
+    withNearest(vectors(emb), cent, Nil)
+      .select(col("vec_id"), col("m.cell").as("cell"), col("m.d").as("d"))
+
+  /** The probe ranking every multi-probe search shares: each of the
+    * first `nQueries` vectors of `emb` keeps its `nprobe` nearest cells
+    * of a [[centroidArray]] `cs`, pn = 1 for the nearest — a narrow
+    * sort and slice of its [[cellDistances]] (the order a window over
+    * (distance, cell) gives, without its shuffle). The ≤
+    * nQueries×nprobe (qid, cell, pn) rows are collected into a
+    * [[localRelation]], so the serving join broadcasts them without
+    * re-running the ranking.
+    */
+  private[operators] def rankProbes(emb: DataFrame, nQueries: Int,
+      cs: DataFrame, nprobe: Int): DataFrame = {
+    val ranked = emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qv"))
+      .crossJoin(broadcast(cs))
+      .select(col("qid"), posexplode(slice(
+        array_sort(cellDistances(col("qv"), col("cs"))), 1, nprobe)).as(Seq("p", "probe")))
+      .select(col("qid"), col("probe.cell").as("cell"), (col("p") + 1).as("pn"))
+    localRelation(emb.sparkSession, ranked.collect(), ranked.schema)
+  }
 
   /** Assign vectors to their nearest centroid WITHOUT retraining — the
     * incremental-maintenance primitive: an appended batch folds into an
-    * existing IVF index using the stored centroids (the same rounded-L2
-    * metric and cell tiebreak as training), so append cost is one
-    * broadcast-join pass over the batch, never a Lloyd's rerun.
-    * `centroids` is a (cell, c: array<double>) frame, e.g. from
-    * [[graft.operators.Sink.loadIvfCentroids]].
+    * existing IVF index using the stored centroids (the [[nearestCell]]
+    * kernel training uses), so append cost is one broadcast pass over
+    * the batch, never a Lloyd's rerun. `centroids` is a (cell, c:
+    * array<double>) frame, e.g. from
+    * [[graft.operators.Sink.loadIvfCentroids]]. One row per vec_id even
+    * when a replay batch repeats an id: the min over its rows' nearest
+    * (d, cell).
     */
-  def assignWithCentroids(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    // aggregate argmin (see kmeansAssignInternal): map-side combine
-    // collapses the batch×cells candidates before the exchange
-    e.crossJoin(broadcast(centroids))
-      .withColumn("d", l2sq(col("v"), col("c")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d"), col("cell"))).as("m"))
-      .select(col("vec_id"), col("m").getField("cell").as("cell"),
-        col("m").getField("d").as("d"))
-  }
+  def assignWithCentroids(emb: DataFrame, centroids: DataFrame): DataFrame =
+    withNearest(vectors(emb), centroids, Nil)
+      .groupBy("vec_id").agg(min(col("m")).as("m"))
+      .select(col("vec_id"), col("m.cell").as("cell"), col("m.d").as("d"))
 
-  /** Per-session trained-quantizer cache: Lloyd's runs once per
-    * (session, corpus key, k, iters) and the materialized assignment is
-    * reused by every subsequent query — an IVF index is trained once
-    * and searched many times, so a bench (or a user) issuing repeated
-    * top-k queries must not pay training per query. The key is the
-    * caller's corpus identifier (e.g. the table directory); entries are
-    * session-scoped because checkpointed blocks die with their session.
-    * Index-staleness is the usual ANN contract: if the data under a key
-    * changes mid-session, the caller owns retraining under a new key —
-    * exactly like any deployed IVF index.
+  /** Per-session trained-centroid cache: Lloyd's runs once per
+    * (session, corpus key, k, iters, resolved sample cap) and every
+    * later consumer of the key — an assignment, a multi-probe ranking,
+    * an index write — derives from the one trained table. An IVF index
+    * is trained once and searched many times, so a bench (or a user)
+    * issuing repeated top-k queries must not pay training per query.
+    * The key is the caller's corpus identifier (e.g. the table
+    * directory). Values are [[driverLocal]] (cells × dims doubles on
+    * the driver, no blocks). Index-staleness is the usual ANN
+    * contract: if the data under a key changes mid-session, the caller
+    * owns retraining under a new key — exactly like any deployed IVF
+    * index.
+    */
+  private val centroidCache =
+    new graft.BoundedLruCache[(SparkSession, String, Int, Int, Int), DataFrame](
+      maxEntries = 16, release = _ => ())
+
+  /** The corpus-sized assignment derived from [[centroidCache]]'s
+    * centroids, same keying, materialized once because its consumers
+    * (both sides of an IVF search join, the SemDeDup ranking) read it
+    * repeatedly. Lloyd's is deterministic, so the derived assignment
+    * equals a fresh training's. Entries are session-scoped because
+    * checkpointed blocks die with their session.
     */
   private val quantizerCache =
     new graft.BoundedLruCache[(SparkSession, String, Int, Int, Int), DataFrame](
@@ -643,18 +669,6 @@ object Similarity {
       release = df =>
         if (!df.sparkSession.sparkContext.isStopped)
           org.apache.spark.sql.GraftShims.uncheckpoint(df))
-
-  /** Trained-centroid sibling of [[quantizerCache]], same keying — the
-    * multi-probe path ranks centroids per query and an index write
-    * stores them, and neither needs the corpus-sized assignment. Kept
-    * as a separate cache (not a tuple value) so each consumer holds
-    * only what it reads: Lloyd's is deterministic, so an assignment
-    * derived from cached centroids equals the trained one. Values are
-    * [[driverLocal]] (cells × dims doubles on the driver, no blocks).
-    */
-  private val centroidCache =
-    new graft.BoundedLruCache[(SparkSession, String, Int, Int, Int), DataFrame](
-      maxEntries = 16, release = _ => ())
 
   /** Corpus row counts per (session, corpusKey): [[semDedupSized]]'s
     * cell geometry needs N, and an unconditional driver-side
@@ -714,66 +728,71 @@ object Similarity {
       })
   }
 
-  /** [[kmeansAssign]] through the trained-quantizer cache. Training
-    * runs OUTSIDE the map lock (multi-job Lloyd's must not block
-    * unrelated keys in the same hash bin); a lost putIfAbsent race
-    * costs one redundant training, never a wrong result.
+  /** [[kmeansAssign]] through the session caches: the assignment
+    * derives from the key's cached centroids
+    * ([[kmeansAssignCachedWithCentroids]]), so a key trains once
+    * whichever of its consumers runs first.
     */
   def kmeansAssignCached(emb: DataFrame, k: Int, iters: Int,
       corpusKey: String,
-      sampleRows: Int = AutoTrainSample): DataFrame = {
-    graft.SessionCaches.watch(emb.sparkSession)
-    // key on the RESOLVED cap so auto and an equal explicit value share
-    // one training (auto is pure in (k), so the key stays deterministic)
-    val key = (emb.sparkSession, corpusKey, k, iters, resolveSample(sampleRows, k))
-    quantizerCache.get(key).getOrElse {
-      val (assigned, centroids) = kmeansAssignInternal(emb, k, iters, sampleRows)
-      val trained = assigned.localCheckpoint()
-      // the assignment checkpoint is eager; the centroid blocks behind
-      // the (now superseded) training plan can be released
-      centroids.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-      val winner = quantizerCache.putIfAbsent(key, trained)
-      if (winner ne trained)  // lost the race: release the loser
-        org.apache.spark.sql.GraftShims.uncheckpoint(trained)
-      winner
-    }
-  }
+      sampleRows: Int = AutoTrainSample): DataFrame =
+    kmeansAssignCachedWithCentroids(emb, k, iters, corpusKey, sampleRows)._1
 
-  /** The trained centroid table alone, through [[centroidCache]]:
-    * Lloyd's on the capped sample, with none of the full-corpus
-    * assignment pass [[kmeansAssignInternal]] only plans — the entry
-    * point of a keyed index write, which stores centroids and derives
-    * every cell in its own scan. Returns a [[driverLocal]] frame.
+  /** The trained centroid table of [[kmeansCentroids]]: through
+    * [[centroidCache]] when the caller names the corpus, trained fresh
+    * otherwise — the entry point of an index write, which stores
+    * centroids and derives every cell in its own scan. Training runs
+    * OUTSIDE the map lock (multi-job Lloyd's must not block unrelated
+    * keys in the same hash bin); a lost putIfAbsent race costs one
+    * redundant training, never a wrong result. Returns a
+    * [[driverLocal]] frame.
     */
   private[operators] def kmeansCentroidsCached(emb: DataFrame, k: Int,
-      iters: Int, corpusKey: String,
-      sampleRows: Int = AutoTrainSample): DataFrame = {
-    graft.SessionCaches.watch(emb.sparkSession)
-    val key = (emb.sparkSession, corpusKey, k, iters, resolveSample(sampleRows, k))
-    centroidCache.get(key).getOrElse(centroidCache.putIfAbsent(key,
-      driverLocal(kmeansAssignInternal(emb, k, iters, sampleRows)._2.get)))
+      iters: Int, corpusKey: Option[String],
+      sampleRows: Int = AutoTrainSample): DataFrame = corpusKey match {
+    case None => kmeansCentroids(emb, k, iters, sampleRows)
+    case Some(ck) =>
+      graft.SessionCaches.watch(emb.sparkSession)
+      // key on the RESOLVED cap so auto and an equal explicit value share
+      // one training (auto is pure in (k), so the key stays deterministic)
+      val key = (emb.sparkSession, ck, k, iters, resolveSample(sampleRows, k))
+      centroidCache.get(key).getOrElse(
+        centroidCache.putIfAbsent(key, kmeansCentroids(emb, k, iters, sampleRows)))
   }
 
-  /** [[kmeansAssignCached]] that also returns the trained centroid
-    * table ([[kmeansCentroidsCached]]) — the multi-probe entry point.
-    * A missing assignment is derived from the centroids in one
-    * broadcast pass ([[assignWithCentroids]] in vec_id order, exactly
-    * the final step of [[kmeansAssignInternal]]), so a key an index
-    * write trained first never reruns Lloyd's.
+  /** The cached assignment with the centroids it derives from
+    * ([[kmeansCentroidsCached]]). A missing assignment is one narrow
+    * pass over the corpus in vec_id order, materialized into
+    * [[quantizerCache]].
     */
-  private[operators] def kmeansAssignCachedWithCentroids(emb: DataFrame, k: Int,
+  private def kmeansAssignCachedWithCentroids(emb: DataFrame, k: Int,
       iters: Int, corpusKey: String,
       sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = {
-    val cent = kmeansCentroidsCached(emb, k, iters, corpusKey, sampleRows)
+    val cent = kmeansCentroidsCached(emb, k, iters, Some(corpusKey), sampleRows)
     val key = (emb.sparkSession, corpusKey, k, iters, resolveSample(sampleRows, k))
     val assigned = quantizerCache.get(key).getOrElse {
-      val trained = assignWithCentroids(emb, cent).orderBy("vec_id").localCheckpoint()
+      val trained = nearestAssignment(emb, cent).orderBy("vec_id").localCheckpoint()
       val winner = quantizerCache.putIfAbsent(key, trained)
       if (winner ne trained)  // lost the race: release the loser
         org.apache.spark.sql.GraftShims.uncheckpoint(trained)
       winner
     }
     (assigned, cent)
+  }
+
+  /** (assignment, centroids) for a search or a dedup pass: the cached
+    * pair when the caller names the corpus; otherwise freshly trained
+    * centroids and their assignment as an unmaterialized narrow pass,
+    * which each consumer re-derives from the driver-held centroids
+    * instead of pinning a corpus-sized checkpoint.
+    */
+  private def quantizer(emb: DataFrame, cells: Int, iters: Int,
+      corpusKey: Option[String],
+      sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = corpusKey match {
+    case Some(key) => kmeansAssignCachedWithCentroids(emb, cells, iters, key, sampleRows)
+    case None =>
+      val cent = kmeansCentroids(emb, cells, iters, sampleRows)
+      (nearestAssignment(emb, cent), cent)
   }
 
   /** IVF top-k: brute-force restricted to the query's k-means cell —
@@ -784,19 +803,8 @@ object Similarity {
       cells: Int = 8, iters: Int = 2,
       corpusKey: Option[String] = None,
       sampleRows: Int = AutoTrainSample): DataFrame = {
-    // the assignment feeds BOTH sides of the search join — without a
-    // materialization each side re-runs the full Lloyd's chain. Cached
-    // when the caller names the corpus; checkpointed either way.
-    val cellOf = corpusKey match {
-      case Some(key) =>
-        kmeansAssignCached(emb, cells, iters, key, sampleRows)
-          .select("vec_id", "cell")
-      case None =>
-        val (assigned, centroids) = kmeansAssignInternal(emb, cells, iters, sampleRows)
-        val cp = assigned.select("vec_id", "cell").localCheckpoint()
-        centroids.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-        cp
-    }
+    val cellOf = quantizer(emb, cells, iters, corpusKey, sampleRows)._1
+      .select("vec_id", "cell")
     val withCell = emb.join(cellOf, "vec_id")
     val q = withCell.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cell").as("qcell"))
@@ -818,42 +826,26 @@ object Similarity {
     * attribution is visible in the rows; nprobe=1 reduces to
     * [[ivfTopK]]'s candidate set.
     *
-    * Shape: probes are queries × cells against the broadcast centroid
-    * table; candidates join corpus on cell — fan-out ≤ nprobe/cells of
-    * the corpus per query, never all-pairs. The probe list and the
-    * assignment checkpoint are both eager and tiny, after which the
-    * centroid blocks release (the keyless-ivfTopK pattern).
+    * Shape: probes are queries × cells against the driver-held
+    * centroids ([[rankProbes]], the ranking the stored search uses),
+    * collected into a local relation; candidates join corpus on cell —
+    * fan-out ≤ nprobe/cells of the corpus per query, never all-pairs.
+    * One Lloyd's training per corpus key serves every nprobe setting
+    * (and the key's ivfTopK and index writes): a recall curve must not
+    * retrain per point.
     */
   def ivfMultiProbeTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3,
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2,
       corpusKey: Option[String] = None): DataFrame = {
     require(iters >= 2, "multi-probe IVF needs trained centroids (iters >= 2)")
-    // cached path: one Lloyd's training serves every nprobe setting
-    // (and shares the key with ivfTopK) — a recall curve must not
-    // retrain per point; the cache owns the checkpointed blocks
-    val (assignedAll, centroids, cacheOwned) = corpusKey match {
-      case Some(tag) =>
-        val (a, c) = kmeansAssignCachedWithCentroids(emb, cells, iters, tag)
-        (a, c, true)
-      case None =>
-        val (a, cOpt) = kmeansAssignInternal(emb, cells, iters)
-        (a.localCheckpoint(), cOpt.get, false)
-    }
+    val (assignedAll, centroids) = quantizer(emb, cells, iters, corpusKey)
     val assigned = assignedAll.select("vec_id", "cell")
     val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        toDouble(col("embedding")).as("qv"))
-    val pw = Window.partitionBy("qid").orderBy(col("pd"), col("cell"))
-    val probes = q.select("qid", "qv").crossJoin(broadcast(centroids))
-      .withColumn("pd", l2sq(col("qv"), col("c")))
-      .withColumn("pn", row_number().over(pw))
-      .filter(col("pn") <= nprobe)
-      .select("qid", "cell", "pn").localCheckpoint()
-    if (!cacheOwned)
-      org.apache.spark.sql.GraftShims.uncheckpoint(centroids)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val probes = rankProbes(emb, nQueries, centroidArray(centroids), nprobe)
     val withCell = emb.join(assigned, "vec_id")
     val scored = probes
-      .join(broadcast(q.select("qid", "qe")), "qid")
+      .join(broadcast(q), "qid")
       .join(withCell, "cell")
       .filter(col("qid") =!= col("vec_id"))
       .withColumn("cos", cosine(col("qe"), col("embedding")))
@@ -980,15 +972,8 @@ object Similarity {
   def semDedup(emb: DataFrame, tau: Double = 0.95, cells: Int = 8,
       iters: Int = 2, corpusKey: Option[String] = None,
       sampleRows: Int = AutoTrainSample, hiRankCap: Int = 0): DataFrame = {
-    val assigned = corpusKey match {
-      case Some(key) => kmeansAssignCached(emb, cells, iters, key, sampleRows)
-      case None =>
-        val (a, centroids) = kmeansAssignInternal(emb, cells, iters, sampleRows)
-        val cp = a.localCheckpoint()
-        centroids.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-        cp
-    }
-    pruneWithinCells(emb, assigned, tau, cells, hiRankCap)
+    pruneWithinCells(emb, quantizer(emb, cells, iters, corpusKey, sampleRows)._1,
+      tau, cells, hiRankCap)
   }
 
   /** The pure rung-selection rule behind [[semDedupAuto]]:
@@ -1116,70 +1101,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Per-parent Lloyd's: the [[kmeansAssignInternal]] recipe run
-    * INDEPENDENTLY inside every parent cell in one distributed pass.
-    * Centroid tables are keyed (pcell, cell) and the assignment joins on
-    * pcell instead of cross-joining the full centroid set — with
-    * coarse ≈ fine ≈ √cells, per-vector assignment work drops from
-    * O(cells) to O(2√cells). Same determinism: init = the k lowest
-    * vec_ids per parent, means rounded to 6dp, ties by cell id.
-    */
-  private def kmeansAssignWithin(parents: DataFrame, emb: DataFrame,
-      k: Int, iters: Int, sampleRows: Int = AutoTrainSample): DataFrame = {
-    val sr = resolveSample(sampleRows, k)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .join(parents, "vec_id") // (vec_id, v, pcell)
-    // per-parent capped training sample (the trainSample rule with n =
-    // the PARENT population, folded in via one broadcast parent-count
-    // frame): each parent trains its k fine cells on ≤ ~sr of its own
-    // rows — training cost stops scaling with the parent population. A
-    // sub-cap parent keeps every row, so small parents (every local
-    // test corpus) train bit-identically to the unsampled form.
-    val np = e.groupBy("pcell").agg(count(lit(1)).as("__np"))
-    val smp = e.join(broadcast(np), "pcell")
-      .filter(hexBucket(col("vec_id").cast("string"))
-        * col("__np") < lit(sr.toLong * sampleBuckets))
-      .drop("__np")
-      .localCheckpoint()
-    var centroids = smp
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("pcell").orderBy("vec_id")))
-      .filter(col("rn") <= k)
-      .select(col("pcell"), (col("rn") - 1).as("cell"), col("v").as("c"))
-      .localCheckpoint()
-    var previous: Option[DataFrame] = Some(centroids)
-    // aggregate argmin (see kmeansAssignInternal); pcell is functionally
-    // determined by vec_id (one parent per vector), so grouping by both
-    // keeps it in scope without changing the per-vector pick
-    def argminOf(rows: DataFrame) =
-      rows.join(centroids, "pcell")
-        .withColumn("d", l2sq(col("v"), col("c")))
-        .groupBy("vec_id", "pcell")
-        .agg(min(struct(col("d"), col("cell"))).as("m"))
-        .select(col("vec_id"), col("pcell"),
-          col("m").getField("cell").as("cell"),
-          col("m").getField("d").as("d"))
-    for (_ <- 1 until iters) {
-      val means = argminOf(smp).join(smp.select("vec_id", "v"), "vec_id")
-        .select(col("pcell"), col("cell"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("pcell", "cell", "i").agg(round(avg(col("x")), 6).as("m"))
-      centroids = means
-        .groupBy("pcell", "cell")
-        .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("ps"))
-        .select(col("pcell"), col("cell"),
-          transform(col("ps"), p => p.getField("m")).as("c"))
-        .localCheckpoint()
-      previous.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-      previous = Some(centroids)
-    }
-    // the final per-parent assignment scores the FULL population
-    // against the (possibly sample-)trained fine centroids
-    val out = argminOf(e).localCheckpoint()
-    org.apache.spark.sql.GraftShims.uncheckpoint(smp)
-    previous.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-    out
-  }
-
   /** Two-level SemDeDup — the scale rung past flat IVF: coarse Lloyd's
     * over the corpus, then an independent fine Lloyd's INSIDE each
     * coarse cell, then the standard intra-cell pruning within
@@ -1199,15 +1120,13 @@ object Similarity {
     pruneWithinCells(emb, composite, tau, coarseCells * fineCells, hiRankCap)
   }
 
-  /** Two-level (coarse → fine-within-coarse) assignment with its
-    * terminal checkpoint in a bounded session cache: the fine
-    * assignment is EAGER ([[kmeansAssignWithin]] checkpoints it) and
-    * every caller's result keeps reading from it, so an uncached call
-    * pinned one corpus-assignment block set per evaluation for the
-    * session lifetime — the vocabPrune-class leak. Keyed on the input
-    * plan + geometry; deterministic Lloyd's makes cross-call reuse
-    * exact (and a repeated semdedup/sampler evaluation skips both
-    * Lloyd's passes entirely).
+  /** Two-level assignments, materialized, in a bounded session cache:
+    * every caller's result keeps reading the fine assignment, so an
+    * uncached call pinned one corpus-assignment block set per
+    * evaluation for the session lifetime — the vocabPrune-class leak.
+    * Keyed on the input plan + geometry; deterministic Lloyd's makes
+    * cross-call reuse exact (and a repeated semdedup/sampler evaluation
+    * skips both Lloyd's passes entirely).
     */
   private val twoLevelCache =
     new graft.BoundedLruCache[(SparkSession, Int, Int, Int, Int, Long, Int, Int), DataFrame](
@@ -1224,6 +1143,25 @@ object Similarity {
         releaseRemoved = false))
   }
 
+  /** The k lowest-vec_id rows of each `group` of a training sample,
+    * numbered rn = 1..k — the per-group init.
+    */
+  private def lowestIds(smp: DataFrame, group: String, k: Int): DataFrame =
+    smp.withColumn("rn", row_number().over(Window.partitionBy(group).orderBy("vec_id")))
+      .filter(col("rn") <= k)
+
+  /** The per-parent rung, (vec_id, pcell, cell, d): coarse
+    * [[kmeansCentroids]] over the corpus, then the one Lloyd's loop
+    * grouped by parent cell, so every parent trains its fine cells
+    * independently in one distributed pass. Each parent trains on a
+    * [[trainSample]] capped against ITS population (a sub-cap parent
+    * keeps every row, so small parents train bit-identically to the
+    * unsampled form) and numbers its fine cells 0..k−1 by vec_id. A
+    * vector's parent is derived inside the fine pass ([[nearestCell]]
+    * against the coarse centroids), so no coarse assignment is
+    * materialized; the fine centroids join on pcell, so assignment
+    * work is O(coarse + fine) per vector instead of O(cells).
+    */
   private def twoLevelAssign(emb: DataFrame, coarseCells: Int,
       fineCells: Int, iters: Int,
       sampleRows: Int = AutoTrainSample): DataFrame = {
@@ -1237,110 +1175,100 @@ object Similarity {
       coarseCells, fineCells, iters,
       graft.CheckpointPool.planGeneration(emb), srCoarse, srFine)
     twoLevelCache.get(key).getOrElse {
-      val (coarse, cCent) = kmeansAssignInternal(emb, coarseCells, iters, srCoarse)
-      val coarseCp = coarse.select(col("vec_id"), col("cell").as("pcell"))
+      val e = withNearest(vectors(emb), kmeansCentroids(emb, coarseCells, iters, srCoarse), Nil)
+        .select(col("vec_id"), col("v"), col("m.cell").as("pcell"))
+      val fine = trainOn(trainSample(e, srFine, Seq("pcell")), Seq("pcell"), iters)(
+        lowestIds(_, "pcell", fineCells)
+          .select(col("pcell"), (col("rn") - 1).as("cell"), col("v").as("c")))
+      val out = withNearest(e, fine, Seq("pcell"))
+        .select(col("vec_id"), col("pcell"), col("m.cell").as("cell"), col("m.d").as("d"))
         .localCheckpoint()
-      cCent.foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-      val fine = kmeansAssignWithin(coarseCp, emb, fineCells, iters, srFine)
-      // fine is checkpointed — coarseCp is fully consumed
-      org.apache.spark.sql.GraftShims.uncheckpoint(coarseCp)
-      val winner = twoLevelCache.putIfAbsent(key, fine)
-      if (winner ne fine)
-        org.apache.spark.sql.GraftShims.uncheckpoint(fine)
+      val winner = twoLevelCache.putIfAbsent(key, out)
+      if (winner ne out)
+        org.apache.spark.sql.GraftShims.uncheckpoint(out)
       winner
     }
   }
 
-  /** The m disjoint subvector views of the embedding column — the
+  /** The m disjoint subvector slices of `v`, in subspace order — the
     * product-quantization decomposition (Jégou et al. 2011, "Product
-    * Quantization for Nearest Neighbor Search", IEEE TPAMI). Slicing
-    * happens BEFORE the double cast so each subspace pipeline is
-    * byte-identical to running [[kmeansAssignInternal]] on a narrower
-    * corpus.
+    * Quantization for Nearest Neighbor Search", IEEE TPAMI).
     */
-  private def subspaces(emb: DataFrame, m: Int, subDim: Int): Seq[(Int, DataFrame)] =
-    (0 until m).map { s =>
-      (s, emb.select(col("vec_id"),
-        slice(col("embedding"), s * subDim + 1, subDim).as("embedding")))
-    }
+  private def subVectors(v: Column, m: Int, subDim: Int): Column =
+    array((0 until m).map(s => slice(v, s * subDim + 1, subDim)): _*)
 
-  /** Per-session trained-PQ cache, the [[quantizerCache]] twin: a PQ
-    * index trains once per (session, corpus, geometry) and is searched
-    * many times. Holds (codes, centroids), both localCheckpointed.
+  /** Per-session trained-PQ cache, the [[centroidCache]] twin: a PQ
+    * index trains its codebooks once per (session, corpus, geometry)
+    * and is searched many times. Values are the [[driverLocal]]
+    * (sub, cell, c) codebooks; codes derive from them in each
+    * consumer's own scan ([[pqCodesColumn]]).
     */
   private val pqCache = new graft.BoundedLruCache[
-    (SparkSession, String, Int, Int, Int, Int), (DataFrame, DataFrame)](
-      maxEntries = 8,
-      release = { case (codes, cents) =>
-        if (!codes.sparkSession.sparkContext.isStopped) {
-          org.apache.spark.sql.GraftShims.uncheckpoint(codes)
-          org.apache.spark.sql.GraftShims.uncheckpoint(cents)
-        }
-      })
+    (SparkSession, String, Int, Int, Int, Int), DataFrame](maxEntries = 8, release = _ => ())
 
   locally {
     graft.SessionCaches.register(
-      evict = s => pqCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
+      evict = s => pqCache.removeIf(_._1 eq s, releaseRemoved = false),
       sweep = () => pqCache.removeIf(_._1.sparkContext.isStopped,
         releaseRemoved = false))
   }
 
-  /** Train (or fetch) the PQ index: per-subspace Lloyd's → one
-    * (sub, vec_id, code, d) codes frame and one (sub, cell, c)
-    * centroids frame, both eagerly materialized so repeated searches
-    * (and the codes/search/recall query trio) pay training once per
-    * (session, corpusKey, geometry).
+  /** Train (or fetch) the PQ codebooks, (sub, cell, c) held on the
+    * driver. The m subspace quantizers are the m groups of ONE Lloyd's
+    * run over the capped sample exploded into its subvectors — the
+    * same values as training each subspace as a narrower corpus, with
+    * the flat init rule (the k lowest vec_ids, each its code's id), so
+    * the codebooks equal m independent trainings.
     */
   private[graft] def pqTrained(emb: DataFrame, m: Int, subDim: Int, k: Int,
-      iters: Int, corpusKey: Option[String]): (DataFrame, DataFrame) = {
+      iters: Int, corpusKey: Option[String]): DataFrame = {
     require(iters >= 2, "PQ needs trained centroids (iters >= 2)")
-    def train(): (DataFrame, DataFrame) = {
-      // the m subspace quantizers are INDEPENDENT — train them
-      // concurrently (Spark schedules jobs from multiple threads
-      // freely; each training materializes only its own checkpoints).
-      // Serially, a keyless rebuild pays m × the per-subspace Lloyd's
-      // latency, which is almost all scheduling overhead at small k —
-      // the dominant cost of a two-tier index RETRAIN. Results are
-      // bit-identical either way (trainings share nothing), and
-      // Future.sequence preserves subspace order.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val parts = Await.result(
-        Future.sequence(subspaces(emb, m, subDim).map { case (s, e) =>
-          Future {
-            val (assigned, cOpt) = kmeansAssignInternal(e, k, iters)
-            (assigned.select(lit(s).as("sub"), col("vec_id"),
-              col("cell").as("code"), col("d")),
-              cOpt.get.select(lit(s).as("sub"), col("cell"), col("c")))
-          }
-        }), Duration.Inf)
-      val codes = parts.map(_._1).reduce(_ unionByName _).localCheckpoint()
-      val cents = parts.map(_._2).reduce(_ unionByName _).localCheckpoint()
-      // both unions are eagerly materialized — the per-subspace training
-      // checkpoints behind them can be released
-      parts.foreach { case (_, c) =>
-        org.apache.spark.sql.GraftShims.uncheckpoint(c)
-      }
-      (codes, cents)
-    }
+    def train(): DataFrame = trainOn(
+        trainSample(vectors(emb), resolveSample(AutoTrainSample, k)).select(col("vec_id"),
+          posexplode(subVectors(col("v"), m, subDim)).as(Seq("sub", "v"))),
+        Seq("sub"), iters)(
+      lowestIds(_, "sub", k).select(col("sub"), col("vec_id").as("cell"), col("v").as("c")))
     corpusKey match {
       case None => train()
       case Some(ck) =>
         graft.SessionCaches.watch(emb.sparkSession)
         val key = (emb.sparkSession, ck, m, subDim, k, iters)
-        pqCache.get(key).getOrElse {
-          val trained = train()
-          val winner = pqCache.putIfAbsent(key, trained)
-          if (winner ne trained) {  // lost the race: release the loser
-            org.apache.spark.sql.GraftShims.uncheckpoint(trained._1)
-            org.apache.spark.sql.GraftShims.uncheckpoint(trained._2)
-          }
-          winner
-        }
+        pqCache.get(key).getOrElse(pqCache.putIfAbsent(key, train()))
     }
   }
+
+  /** The PQ codebooks collapsed to ONE broadcastable row (subs:
+    * array<struct<sub, cs>>, sub-sorted, each `cs` the subspace's
+    * [[centroidArray]]) — the shape [[pqCodesColumn]] consumes.
+    */
+  private[operators] def pqSubsArray(pqc: DataFrame): DataFrame = {
+    val bySub = centroidArray(pqc, Seq("sub"))
+    localRelation(pqc.sparkSession, Array(Row(bySub.collect().sortBy(_.getInt(0)).toSeq)),
+      StructType(Seq(StructField("subs", ArrayType(bySub.schema, containsNull = false)))))
+  }
+
+  /** Per subspace of the row's `embedding`, [[nearestCell]] of its
+    * slice against that subspace's codewords in a [[pqSubsArray]]
+    * `subs` column: array<struct<d, cell>> in subspace order.
+    */
+  private def pqNearest(subDim: Int): Column =
+    transform(col("subs"), sa => nearestCell(
+      toDouble(slice(col("embedding"), sa.getField("sub") * lit(subDim) + lit(1), lit(subDim))),
+      sa.getField("cs")))
+
+  /** The per-row PQ codes (one code per subspace) as a narrow
+    * expression — what a stored IVF-PQ index keeps beside each vector.
+    */
+  private[operators] def pqCodesColumn(subDim: Int): Column =
+    transform(pqNearest(subDim), _.getField("cell"))
+
+  /** (sub, vec_id, code, d): every vector's code and rounded distance
+    * per subspace against the codebooks `cb`, in one narrow pass.
+    */
+  private def pqCodeRows(emb: DataFrame, cb: DataFrame, subDim: Int): DataFrame =
+    emb.crossJoin(broadcast(pqSubsArray(cb)))
+      .select(col("vec_id"), posexplode(pqNearest(subDim)).as(Seq("sub", "m")))
+      .select(col("sub"), col("vec_id"), col("m.cell").as("code"), col("m.d").as("d"))
 
   /** PQ codes: each vector compressed to m sub-codes, one per subspace,
     * via the same deterministic Lloyd's as the IVF coarse quantizer
@@ -1351,7 +1279,8 @@ object Similarity {
     */
   def pqCodes(emb: DataFrame, m: Int = 4, subDim: Int = 16, k: Int = 8,
       iters: Int = 2, corpusKey: Option[String] = None): DataFrame =
-    pqTrained(emb, m, subDim, k, iters, corpusKey)._1.orderBy("sub", "vec_id")
+    pqCodeRows(emb, pqTrained(emb, m, subDim, k, iters, corpusKey), subDim)
+      .orderBy("sub", "vec_id")
 
   /** Asymmetric-distance (ADC) PQ top-k: per query, a lookup table of
     * squared L2 distances from its raw subvectors to every subspace
@@ -1365,16 +1294,13 @@ object Similarity {
   def pqAdcTopK(emb: DataFrame, nQueries: Int = 10, kTop: Int = 3,
       m: Int = 4, subDim: Int = 16, k: Int = 8, iters: Int = 2,
       corpusKey: Option[String] = None): DataFrame = {
-    val (codes, cents) = pqTrained(emb, m, subDim, k, iters, corpusKey)
-    val qsub = subspaces(emb.filter(col("vec_id") < nQueries), m, subDim)
-      .map { case (s, e) =>
-        e.select(lit(s).as("sub"), col("vec_id").as("qid"),
-          toDouble(col("embedding")).as("qv"))
-      }.reduce(_ unionByName _)
+    val cents = pqTrained(emb, m, subDim, k, iters, corpusKey)
+    val qsub = emb.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"),
+      posexplode(subVectors(toDouble(col("embedding")), m, subDim)).as(Seq("sub", "qv")))
     val luts = qsub.join(cents, "sub")
       .select(col("sub"), col("qid"), col("cell").as("code"),
         l2sq(col("qv"), col("c")).as("dist"))
-    val scored = codes.join(broadcast(luts), Seq("sub", "code"))
+    val scored = pqCodeRows(emb, cents, subDim).join(broadcast(luts), Seq("sub", "code"))
       .filter(col("qid") =!= col("vec_id"))
       .groupBy("qid", "vec_id")
       .agg(sum(col("dist").cast("decimal(18,6)")).as("adist"))

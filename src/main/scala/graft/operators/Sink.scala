@@ -202,7 +202,7 @@ object Sink {
     private[Sink] def fields: Seq[(String, String)] = Nil
     /** The layout columns over (vec_id, embedding, cell) rows, as
       * narrow per-row expressions; `subs` (the stored or freshly
-      * trained PQ codebooks, packed by [[pqSubsArray]]) is only
+      * trained PQ codebooks, packed by [[Similarity.pqSubsArray]]) is only
       * evaluated by [[Pq]].
       */
     private[Sink] def encode(rows: DataFrame, subs: => DataFrame): DataFrame = rows
@@ -241,7 +241,7 @@ object Sink {
       Seq("m" -> m.toString, "subDim" -> subDim.toString, "k" -> k.toString)
     override private[Sink] def encode(rows: DataFrame,
         subs: => DataFrame): DataFrame =
-      rows.crossJoin(broadcast(subs)).withColumn("codes", pqCodesColumn(subDim))
+      rows.crossJoin(broadcast(subs)).withColumn("codes", Similarity.pqCodesColumn(subDim))
   }
 
   /** Write-time cell geometry. A fixed cell COUNT makes per-cell
@@ -286,42 +286,22 @@ object Sink {
     // training is once-per-corpus by design: with a corpusKey the
     // centroids (and the PQ codebooks) come from the session caches —
     // shared with ivfMultiProbeTopK / the pq_* queries — and a rebuild
-    // pays only the writes. Only the centroids train: the write derives
-    // every cell in its own scan, so no corpus-sized assignment is
-    // materialized. The PQ cache OWNS its checkpoints; release them
-    // only on the keyless (train-fresh) path.
-    def release(pq: Option[(DataFrame, DataFrame)]): Unit =
-      if (corpusKey.isEmpty) pq.foreach { case (codes, cents) =>
-        org.apache.spark.sql.GraftShims.uncheckpoint(codes)
-        org.apache.spark.sql.GraftShims.uncheckpoint(cents)
-      }
-    // the PQ codebooks and the coarse quantizer train on DISJOINT
-    // inputs (subvector slices vs full vectors) — run them
-    // concurrently; results are bit-identical to serial, and the
-    // codebook-free codecs train the quantizer on the calling thread
+    // pays only the writes. Only the trained tables are built, both
+    // held on the driver: the write derives every cell and code in its
+    // own scan, so nothing corpus-sized is materialized and nothing is
+    // left to release. The PQ codebooks and the coarse quantizer train
+    // on DISJOINT inputs (subvector slices vs full vectors) — run them
+    // concurrently; results are bit-identical to serial
     val pqF = Future {
       codec match {
         case Pq(m, subDim, k) => Some(Similarity.pqTrained(emb, m, subDim, k, iters, corpusKey))
         case _ => None
       }
     }
-    // a failure on the centroid leg must not abandon the PQ leg's
-    // keyless checkpoints
-    val cent = try corpusKey match {
-      case Some(ck) => Similarity.kmeansCentroidsCached(emb, n, iters, ck)
-      case None => Similarity.driverLocal(Similarity.kmeansAssignInternal(emb, n, iters)._2.get)
-    } catch { case t: Throwable =>
-      try release(Await.result(pqF, Duration.Inf))
-      catch { case _: Throwable => () }
-      throw t
-    }
-    val pq = Await.result(pqF, Duration.Inf)
-    // the artifacts as the index stores them, held on the driver: they
-    // encode this write's rows and then seed the artifact cache
-    val centArt = new Artifact(cent)
-    val pqArt = pq.map { case (_, c) =>
-      new Artifact(Similarity.driverLocal(c.select("sub", "cell", "c")))
-    }
+    // the artifacts as the index stores them: they encode this write's
+    // rows and then seed the artifact cache
+    val centArt = new Artifact(Similarity.kmeansCentroidsCached(emb, n, iters, corpusKey))
+    val pqArt = Await.result(pqF, Duration.Inf).map(new Artifact(_))
     // the model-sized artifacts are independent of the corpus-sized
     // assignment write — overlap them (guide §2.6: the small job
     // back-fills the big one's tail); the manifest still lands only
@@ -353,7 +333,6 @@ object Sink {
     // for the replaced tables may outlive them; the artifacts this write
     // stored seed the new generation, so the next load is a cache hit
     clearTombstones(spark, dir)
-    release(pq)
     dropGenerations(dir)
     seedArtifact(spark, s"$dir/centroids", centArt)
     pqArt.foreach(seedArtifact(spark, s"$dir/pq_centroids", _))
@@ -538,7 +517,7 @@ object Sink {
     */
   private final class Artifact(val rows: DataFrame) {
     lazy val centroidArray: DataFrame = Similarity.centroidArray(rows)
-    lazy val pqSubs: DataFrame = pqSubsArray(rows)
+    lazy val pqSubs: DataFrame = Similarity.pqSubsArray(rows)
   }
 
   /** Loaded stored-artifact cache: serving and maintenance call
@@ -578,8 +557,8 @@ object Sink {
     artifactLoadCache.putIfAbsent(genKey(spark, path), art): Unit
 
   /** Append the nearest-cell column as a NARROW per-row argmin over the
-    * broadcast centroid table — the same rounded-L2 metric and cell
-    * tiebreak as [[Similarity.assignWithCentroids]], without its
+    * broadcast centroid table ([[Similarity.nearestCell]], the kernel
+    * training uses), without [[Similarity.assignWithCentroids]]'
     * aggregate + vec_id-join shape: writes and appends derive the cell
     * inside the scan projection instead of shuffling an assignment
     * frame back onto the vectors (guide §2.4).
@@ -587,41 +566,7 @@ object Sink {
   private def withNearestCell(batch: DataFrame, cs: DataFrame): DataFrame =
     batch.crossJoin(broadcast(cs))
       .withColumn("cell",
-        Similarity.nearestCell(Similarity.toDouble(col("embedding")), col("cs")))
-
-  /** The PQ codebooks collapsed to ONE broadcastable row (subs:
-    * array<struct<sub, cs: array<struct<cell, c>>>>, sub- and
-    * cell-sorted) — the shape [[pqCodesColumn]] consumes. Packed on the
-    * driver like [[Similarity.centroidArray]], from an [[Artifact]]'s
-    * local rows.
-    */
-  private def pqSubsArray(pqc: DataFrame): DataFrame = {
-    val t = pqc.select("sub", "cell", "c")
-    val cs = StructType(t.schema.fields.drop(1))
-    val subs = t.collect().groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (sub, rs) =>
-      Row(sub, rs.sortBy(_.getAs[Number](1).longValue).map(r => Row(r.get(1), r.get(2))).toSeq)
-    }
-    Similarity.localRelation(pqc.sparkSession, Array(Row(subs)), StructType(Seq(
-      StructField("subs", ArrayType(StructType(Seq(t.schema.fields(0),
-        StructField("cs", ArrayType(cs, containsNull = false), nullable = false))),
-        containsNull = false)))))
-  }
-
-  /** Per-row PQ codes over a [[pqSubsArray]] `subs` column: for each
-    * subspace, the lexicographic argmin of (rounded-L2 distance, code)
-    * between the row's subvector slice and that subspace's codewords —
-    * bit-identical to [[Similarity.assignWithCentroids]] applied
-    * per-subspace (the pqTrained scheme), as a narrow expression.
-    */
-  private def pqCodesColumn(subDim: Int): Column =
-    transform(col("subs"), sa =>
-      array_min(transform(sa.getField("cs"), s0 =>
-        struct(Similarity.l2sq(
-            Similarity.toDouble(slice(col("embedding"),
-              sa.getField("sub") * lit(subDim) + lit(1), lit(subDim))),
-            s0.getField("c")).as("d"),
-          s0.getField("cell").as("cell"))))
-        .getField("cell"))
+        Similarity.nearestCell(Similarity.toDouble(col("embedding")), col("cs")).getField("cell"))
 
   /** Persist a model-sized centroid/codebook frame PIVOTED — the
     * vector column stays an array<double>, exactly the shape every
@@ -1641,20 +1586,17 @@ object Sink {
     import org.apache.spark.sql.expressions.Window
     val spark2 = spark
     import spark2.implicits._
-    val Pq(m, subDim, _) = storedPqCodec(spark, dir, "ivfPqCodeDrift")
-    val pqc = loadPqCentroids(spark, dir)
+    val Pq(_, subDim, _) = storedPqCodec(spark, dir, "ivfPqCodeDrift")
+    val pqc = pqCodebooks(spark, dir)
     val stored = storedCodeCounts(spark, dir).toSeq
       .map { case ((s, c), n) => (s, c, n) }
       .toDF("sub", "code", "n_stored")
-    val incoming = (0 until m).map { s0 =>
-      val sub = batch.select(col("vec_id"),
-        slice(col("embedding"), s0 * subDim + 1, subDim).as("embedding"))
-      Similarity.assignWithCentroids(sub,
-          pqc.filter(col("sub") === s0).select("cell", "c"))
-        .select(lit(s0).as("sub"), col("cell").as("code"))
-    }.reduce(_ unionByName _)
+    // one row per vec_id (a re-delivered id counts once, as in the
+    // maintain path), coded against the STORED codebooks
+    val incoming = dedupBatch(batch).crossJoin(broadcast(pqc.pqSubs))
+      .select(posexplode(Similarity.pqCodesColumn(subDim)).as(Seq("sub", "code")))
       .groupBy("sub", "code").agg(count(lit(1)).as("n_new"))
-    val grid = pqc.select(col("sub"), col("cell").as("code"))
+    val grid = pqc.rows.select(col("sub"), col("cell").as("code"))
     val cells = grid
       .join(stored, Seq("sub", "code"), "left")
       .join(incoming, Seq("sub", "code"), "left")
@@ -1685,38 +1627,26 @@ object Sink {
   }
 
   /** The probe stage every stored search shares: the nQueries query
-    * rows rank the STORED centroids (rounded L2, cell tiebreak — the
-    * training metric), each keeps its `nprobe` nearest cells, and the
-    * probe list is collected — ≤ nQueries×nprobe rows, bounded by the
-    * query batch, never by data. The ranking is narrow: each query row
-    * sorts its (distance, cell) pairs over the broadcast one-row
-    * centroid array and keeps the first `nprobe` (the order a window
-    * over (pd, cell) gives, without its shuffle). The collected rows
-    * serve twice: as the literal probed-cell list [[readProbedCells]]
-    * turns into a per-subdirectory read (Spark's dynamic partition
-    * pruning degenerates to `dynamicpruningexpression(true)` on this
-    * join shape, which would silently scan EVERY cell), and as a local
-    * (qid, cell, pn) relation the serving join broadcasts, instead of
-    * recomputing the probe ranking inside the broadcast build. Returns
-    * that relation and the tombstone-masked scan of the probed cells.
+    * rows rank the STORED centroids ([[Similarity.rankProbes]], the
+    * ranking the in-memory multi-probe searches use) and each keeps its
+    * `nprobe` nearest cells — ≤ nQueries×nprobe rows, bounded by the
+    * query batch, never by data, held on the driver. They serve twice:
+    * as the literal probed-cell list [[readProbedCells]] turns into a
+    * per-subdirectory read (Spark's dynamic partition pruning
+    * degenerates to `dynamicpruningexpression(true)` on this join
+    * shape, which would silently scan EVERY cell), and as the local
+    * (qid, cell, pn) relation the serving join broadcasts. Returns that
+    * relation and the tombstone-masked scan of the probed cells.
     */
   private def probeStoredCells(spark: SparkSession, emb: DataFrame, dir: String,
       nQueries: Int, nprobe: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val ranked = array_sort(transform(col("cs"), s =>
-      struct(Similarity.l2sq(col("qv"), s.getField("c")).as("pd"),
-        s.getField("cell").as("cell"))))
-    val probeRows = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"),
-        Similarity.toDouble(col("embedding")).as("qv"))
-      .crossJoin(broadcast(ivfCentroids(spark, dir).centroidArray))
-      .select(col("qid"), posexplode(slice(ranked, 1, nprobe)).as(Seq("p", "probe")))
-      .select(col("qid"), col("probe").getField("cell"), col("p") + 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    (probeRows.toDF("qid", "cell", "pn"),
-      tombstones(spark, dir, ivfIndex).mask(
-        readProbedCells(spark, dir, probeRows.map(_._2).distinct)))
+    val probes = Similarity.rankProbes(emb, nQueries, ivfCentroids(spark, dir).centroidArray, nprobe)
+      .collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue, r.getInt(2)))
+      .toSeq
+    (probes.toDF("qid", "cell", "pn"),
+      tombstones(spark, dir, ivfIndex).mask(readProbedCells(spark, dir, probes.map(_._2))))
   }
 
   /** Read ONLY the probed cell partitions of an index's assignment, as

@@ -1276,7 +1276,7 @@ object TextOps {
     // 125 rounds × 256) Catalyst would be analyzing a 32k-deep
     // expression tree. The checkpoint pins each round's vocab-sized
     // result and resets the plan to one round deep; the previous
-    // round's blocks release eagerly (the kmeansAssignWithin pattern).
+    // round's blocks release eagerly.
     while (round <= roundOffset + rounds && !exhausted) {
       val syms = split(regexp_replace(col("state"), "^·|·$", ""), "··")
       // one vocab-sized aggregate + ONE bounded (≤ batchSize rows)

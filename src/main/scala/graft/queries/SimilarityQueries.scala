@@ -74,7 +74,7 @@ object SimilarityQueries {
     "SELECT qid, CAST(rnk AS INTEGER) AS rnk, vec_id, qcos FROM r WHERE rnk <= 3 ORDER BY qid, rnk"
 
   /** [[kmeansBody]] in the SAMPLED-training regime (mirrors
-    * Similarity.trainSample + kmeansAssignInternal with a biting cap):
+    * Similarity.trainSample + kmeansCentroids with a biting cap):
     * smp keeps a row iff hashBucket(vec_id, 2^20)·n < 2^20·S over the
     * md5 ascii polynomial, c0 = the k lowest vec_ids OF THE SAMPLE,
     * both unrolled Lloyd's rounds run on the sample, and the FINAL
@@ -827,7 +827,7 @@ object SimilarityQueries {
       // round-for-round the flat oracle's; the fine pass re-runs the same
       // two unrolled rounds INDEPENDENTLY per coarse cell (f0 init = the 4
       // lowest vec_ids per pcell, fine cell = rank-1 — mirroring
-      // Similarity.kmeansAssignWithin), and the pruning CTEs are verbatim
+      // Similarity.twoLevelAssign), and the pruning CTEs are verbatim
       // the flat ones over the composite cell pcell*4+fine.
       s"""WITH $perturbedCorpusSql,
         | ${kmeansBody("corpus", "4")},

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Similarity, Sink}
 
 /** Similarity search: cosine correctness + top-k ranking. */
 class SimilaritySpec extends SparkSpec {
@@ -346,6 +346,79 @@ class SimilaritySpec extends SparkSpec {
     val top = Similarity.ivfTopK(twoClusters, nQueries = 1, k = 5, cells = 2, iters = 2)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     assert(top == Set(2L, 4L)) // only cell-0 candidates are scored
+
+    // exact tie: vector 9 sits at squared distance 72 from vectors 0 and
+    // 1 (the init centroids) AND from the trained centroids (7,1,7,1)
+    // and (1,7,1,7) — every mean is exact, and 9 joining cell 0 is what
+    // keeps the trained pair symmetric about it. Every path must pick
+    // the lower cell id
+    val tie = emb(
+      Seq((0L, 11f, 1f), (1L, 1f, 11f), (2L, 8f, 2f), (3L, 8f, 0f),
+        (4L, 2f, 5f), (5L, 0f, 5f), (9L, 1f, 1f))
+        .map { case (id, x, y) => (id, Seq(x, y, x, y), 0) }: _*)
+    def cellOf(df: org.apache.spark.sql.DataFrame, id: Long): Long =
+      df.filter(col("vec_id") === id).select(col("cell").cast("long")).head().getLong(0)
+    val flat = Similarity.kmeansAssign(tie, k = 2, iters = 2)
+    assert(cellOf(flat, 9L) == 0L)
+    assert(flat.filter(col("vec_id") === 9L).head().getAs[Double]("d") == 72.0)
+    val spark2 = spark
+    import spark2.implicits._
+    val cents = Seq((1L, Seq(1.0, 7.0, 1.0, 7.0)), (0L, Seq(7.0, 1.0, 7.0, 1.0))).toDF("cell", "c")
+    assert(cellOf(Similarity.assignWithCentroids(tie, cents), 9L) == 0L)
+    // two-level: the tie at the coarse level (one fine cell per parent)
+    // and at the fine level (one coarse cell)
+    Seq((2, 1), (1, 2)).foreach { case (coarse, fine) =>
+      val two = Similarity.semDedupTwoLevel(tie, tau = 0.9999,
+        coarseCells = coarse, fineCells = fine, iters = 2)
+      assert(cellOf(two, 9L) == 0L, s"two-level $coarse x $fine")
+    }
+    val codes = Similarity.pqCodes(tie, m = 2, subDim = 2, k = 2, iters = 2)
+      .filter(col("vec_id") === 9L).collect().map(r => r.getAs[Int]("sub") -> r.getAs[Long]("code"))
+    assert(codes.toMap == Map(0 -> 0L, 1 -> 0L), codes.toSeq.toString)
+    val pn = Similarity.ivfMultiProbeTopK(tie, nQueries = 10, k = 6, cells = 2, iters = 2,
+        nprobe = 2)
+      .filter(col("qid") === 9L).collect()
+      .map(r => r.getAs[Long]("cell") -> r.getAs[Int]("pn")).toMap
+    assert(pn == Map(0L -> 1, 1L -> 2), pn.toString)
+  }
+
+  test("a corpus key trains once, whichever of its consumers runs first") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val key = s"simspec-train-once-${System.nanoTime()}"
+    Similarity.kmeansAssignCached(e, 8, 2, key)
+    def build(k: String) = jobsOf(Similarity.ivfMultiProbeTopK(e, 10, 3, 8, 2, 2, Some(k)))
+    val afterAssign = build(key)
+    val warm = build(key)
+    assert(afterAssign == warm,
+      s"a multi-probe build after kmeansAssignCached ran $afterAssign jobs, a warm one $warm")
+    // and the reverse: a keyed index write leaves its centroids for the
+    // key's assignment, which then derives instead of retraining
+    val written = s"$key-written"
+    Sink.writeIvfIndex(e, java.nio.file.Files.createTempDirectory("graft-trainonce").toString,
+      Sink.Flat, Sink.Cells(8), 2, corpusKey = Some(written))
+    val derived = jobsOf(Similarity.kmeansAssignCached(e, 8, 2, written))
+    val cold = jobsOf(Similarity.kmeansAssignCached(e, 8, 2, s"$key-cold"))
+    assert(derived < cold, s"assignment after a keyed write ran $derived jobs, a cold one $cold")
+    assert(Similarity.kmeansAssignCached(e, 8, 2, written).collect().toSeq ==
+      Similarity.kmeansAssign(e, 8, 2).collect().toSeq)
+  }
+
+  test("k-means job budget: keyless assign, cold keyed multi-probe build, two-level dedup, keyless PQ codes") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val used = Seq(
+      "kmeansAssign" -> jobsOf(Similarity.kmeansAssign(e, 8, 2).collect()),
+      "ivfMultiProbeTopK cold keyed build" -> jobsOf(Similarity.ivfMultiProbeTopK(e, 10, 3, 8, 2, 2,
+        Some(s"simspec-budget-${System.nanoTime()}"))),
+      // a plan no other spec builds, so the two-level cache is cold
+      "semDedupTwoLevel" -> jobsOf(Similarity.semDedupTwoLevel(e.filter(col("vec_id") =!= 7L),
+        0.95, 3, 3, 2).collect()),
+      "pqCodes" -> jobsOf(Similarity.pqCodes(e, 4, 16, 8, 2).collect()))
+    // the two-loop trainer with checkpointed centroids ran 15, 19, 46, 61
+    val budget = Map("kmeansAssign" -> 11, "ivfMultiProbeTopK cold keyed build" -> 13,
+      "semDedupTwoLevel" -> 30, "pqCodes" -> 12)
+    used.foreach { case (step, n) =>
+      assert(n <= budget(step), s"$step ran $n Spark jobs, budget ${budget(step)}")
+    }
   }
 
   /** 8-dim fixture with planted near-dups for the banded pair search:

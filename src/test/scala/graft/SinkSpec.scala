@@ -531,25 +531,6 @@ class SinkSpec extends SparkSpec {
         "cells must not lose true neighbors on this fixture")
   }
 
-  /** Spark jobs started while `body` runs (the listener bus is drained
-    * on both sides, so no event lands in the wrong count).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftListenerShims.flushListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftListenerShims.flushListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("PQ geometry: manifest check fails loudly with zero Spark jobs; legacy fallback still catches") {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-pqgeom").toString
@@ -679,10 +660,10 @@ class SinkSpec extends SparkSpec {
     // is the benchmark's path; its first write trains on a fresh key
     val corpusKey = s"job-budget-${System.nanoTime()}"
     val budgets = Seq(
-      (Sink.Flat, None, Seq(15, 4, 10, 8)),
-      (Sink.Sq8, None, Seq(15, 4, 10, 8)),
-      (Sink.Pq(4, 16, 8), None, Seq(76, 5, 16, 13)),
-      (Sink.Flat, Some(corpusKey), Seq(15, 4, 10, 8)))
+      (Sink.Flat, None, Seq(11, 4, 10, 8)),
+      (Sink.Sq8, None, Seq(11, 4, 10, 8)),
+      (Sink.Pq(4, 16, 8), None, Seq(21, 5, 16, 13)),
+      (Sink.Flat, Some(corpusKey), Seq(11, 4, 10, 8)))
     budgets.foreach { case (codec, key, budget) =>
       val dir = Files.createTempDirectory("graft-jobbudget").toString
       val write = jobsOf(Sink.writeIvfIndex(base, dir, codec, Sink.Cells(8), iters = 2,
@@ -720,6 +701,26 @@ class SinkSpec extends SparkSpec {
     assert(derived == trained, "the cached centroids must give the freshly trained rows")
     assert(derivedJobs < retrainJobs,
       s"deriving the assignment ran $derivedJobs Spark jobs, a retrain $retrainJobs")
+  }
+
+  test("a keyed PQ write and a same-key ADC search leave no Spark block persisted") {
+    // a fresh session: its caches start empty. The check covers the
+    // RDDs created from here on, since the context is shared by every
+    // spec in the JVM
+    val s = spark.newSession()
+    val marker = s.sparkContext.emptyRDD[Int].id
+    val e = Tables.embeddings(s, "/root/testdata/sf0.001")
+    val key = s"pq-blocks-${System.nanoTime()}"
+    val dir = Files.createTempDirectory("graft-pqblocks").toString
+    try {
+      Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2,
+        corpusKey = Some(key))
+      graft.operators.Similarity.pqAdcTopK(e, 10, 3, 4, 16, 8, 2, Some(key)).collect()
+      org.apache.spark.GraftListenerShims.flushListeners(s.sparkContext)
+      val pinned = s.sparkContext.getRDDStorageInfo.filter(_.id > marker)
+      assert(pinned.isEmpty, s"persisted after a keyed PQ write + search: " +
+        pinned.map(i => s"${i.id}:${i.name}").mkString(", "))
+    } finally SessionCaches.evictSession(s)
   }
 
   test("an interrupted rename-aside swap rolls back: compaction and a maintain retrain serve the original rows") {

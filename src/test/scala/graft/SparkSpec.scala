@@ -21,6 +21,25 @@ trait SparkSpec extends AnyFunSuite {
       "symbol", "date", "open", "high", "low", "close", "adj_close", "volume")
   }
 
+  /** Spark jobs started while `body` runs (the listener bus is drained
+    * on both sides, so no event lands in the wrong count).
+    */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerShims.flushListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerShims.flushListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   /** Compare a result column against pandas goldens: NaN golden ⇔ null
     * cell; numeric within 1e-9 relative tolerance.
     */
