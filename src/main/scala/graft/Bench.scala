@@ -35,7 +35,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     val qs = SparkEntry.queries
     val names = headline.filter(qs.contains) ++
       (if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) qs.keys.toSeq.sorted.diff(headline) else Nil)

@@ -8,7 +8,6 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = LocalSession(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()

@@ -84,7 +84,6 @@ object ScaleProbe {
     val only = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = LocalSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
 
     val docs = replicateDocs(
       Tables.documents(spark, sfDir).select("doc_id", "text"), factor)

@@ -3,13 +3,11 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Lifecycle registry for session-scoped caches ([[Tables]] stocks
-  * derivations, [[operators.Similarity]] trained quantizers): each cache
-  * registers a targeted per-session evictor plus a sweep for entries
-  * whose context has stopped, so a long-lived multi-tenant JVM never
-  * pins a dead session's object graph — and a live session's
-  * persisted/checkpointed blocks can be released explicitly when a
-  * tenant is done.
+/** Lifecycle registry for the session-scoped caches: every
+  * [[SessionCache]] registers itself when it is built, so a long-lived
+  * multi-tenant JVM never pins a dead session's object graph, and a
+  * live session's persisted/checkpointed blocks can be released
+  * explicitly when a tenant is done.
   *
   * Two paths, because Spark has two end-of-life shapes:
   *  - `SparkSession.newSession()` wrappers die logically while their
@@ -21,27 +19,28 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionCaches {
 
-  private final case class Hooks(evict: SparkSession => Unit, sweep: () => Unit)
-  private val hooks = new java.util.concurrent.ConcurrentLinkedQueue[Hooks]()
+  private val caches = new java.util.concurrent.ConcurrentLinkedQueue[SessionCache[_, _]]()
   private val watched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Register a cache's eviction hooks (done once, in the cache owner's
-    * object initializer).
-    */
-  def register(evict: SparkSession => Unit, sweep: () => Unit): Unit = {
-    hooks.add(Hooks(evict, sweep)): Unit
+  /** Called once by each [[SessionCache]] as it is built. */
+  private[graft] def register(cache: SessionCache[_, _]): Unit = caches.add(cache): Unit
+
+  /** Every cache built so far, in build order. */
+  private[graft] def all: Seq[SessionCache[_, _]] = {
+    import scala.jdk.CollectionConverters._
+    caches.asScala.toSeq
   }
 
-  /** Drop every registered cache's entries for `spark` and release
-    * their storage (unpersist/uncheckpoint) — the multi-tenant
-    * "this session is done" call.
+  /** Drop every cache's entries for `spark` and release their storage
+    * (unpersist/uncheckpoint) — the multi-tenant "this session is
+    * done" call.
     */
-  def evictSession(spark: SparkSession): Unit = hooks.forEach(h => h.evict(spark))
+  def evictSession(spark: SparkSession): Unit = caches.forEach(_.evict(spark))
 
   /** Drop entries whose owning context has stopped. Their blocks died
     * with the executors; this releases the driver-side references.
     */
-  def sweepStopped(): Unit = hooks.forEach(h => h.sweep())
+  def sweepStopped(): Unit = caches.forEach(_.sweep())
 
   /** Hook `spark`'s context once: application end triggers the sweep,
     * so sequential sessions in one JVM (bench harnesses, notebooks
@@ -56,6 +55,75 @@ object SessionCaches {
       })
     }
   }
+}
+
+/** A session-scoped cache: entries are keyed by `(session, k)` in a
+  * [[BoundedLruCache]] of `maxEntries`, and the cache registers itself
+  * with [[SessionCaches]] for per-session eviction and the
+  * stopped-context sweep.
+  *
+  * `release` frees a value's storage (uncheckpoint/unpersist) when the
+  * value is evicted by the bound, evicted with its session, or loses an
+  * insert race. It runs only while the entry's context is alive: a
+  * stopped context already dropped every block, so there is nothing
+  * left to free. Values that hold no Spark blocks (driver-side maps,
+  * counts, local relations, plan handles) keep the no-op default.
+  *
+  * Key rule: an entry is reused for as long as its session lives, so a
+  * key must change whenever the data it was built from can change — a
+  * plan's file generation ([[CheckpointPool.planGeneration]]), a stored
+  * table's generation stamp, or a caller-named corpus whose contents
+  * the caller promises not to change under that name.
+  */
+final class SessionCache[K, V](maxEntries: Int, release: V => Unit = (_: V) => ()) {
+  // the value carries its session so a release can check the entry's
+  // context without knowing what V is
+  private val lru = new BoundedLruCache[(SparkSession, K), (SparkSession, V)](
+    maxEntries, { case (s, v) => releaseLive(s, v) })
+
+  SessionCaches.register(this)
+
+  private def releaseLive(s: SparkSession, v: V): Unit =
+    if (!s.sparkContext.isStopped) release(v)
+
+  def get(spark: SparkSession, k: K): Option[V] = lru.get((spark, k)).map(_._2)
+
+  /** Insert `v` unless `k` is already cached for `spark`; returns the
+    * value that won. A losing `v` is released.
+    */
+  def put(spark: SparkSession, k: K, v: V): V = {
+    SessionCaches.watch(spark)
+    val winner = lru.putIfAbsent((spark, k), (spark, v))._2
+    if (winner.asInstanceOf[AnyRef] ne v.asInstanceOf[AnyRef]) releaseLive(spark, v)
+    winner
+  }
+
+  /** The cached value, or `build`'s, inserted. `build` runs outside the
+    * lock, so a slow build never blocks other keys; two racing builds
+    * of one key both finish, one wins and the other is released.
+    */
+  def getOrBuild(spark: SparkSession, k: K)(build: => V): V =
+    get(spark, k).getOrElse(put(spark, k, build))
+
+  /** Drop the entries whose (session, key) match `p`. Their values are
+    * PARKED for one eviction generation ([[BoundedLruCache.removeIfDeferred]])
+    * rather than released inline, so a holder still mid-job on one
+    * keeps its blocks until the next turnover.
+    */
+  def removeIf(p: (SparkSession, K) => Boolean): Unit =
+    lru.removeIfDeferred { case (s, k) => p(s, k) }
+
+  /** The live keys of every session. */
+  private[graft] def keys: Seq[K] = lru.keys.map(_._2)
+
+  /** How many live entries `spark` holds. */
+  private[graft] def entries(spark: SparkSession): Int = lru.keys.count(_._1 eq spark)
+
+  private[graft] def evict(spark: SparkSession): Unit =
+    lru.removeIf(_._1 eq spark, releaseRemoved = true)
+
+  private[graft] def sweep(): Unit =
+    lru.removeIf(_._1.sparkContext.isStopped, releaseRemoved = false)
 }
 
 /** Session-scoped pool for TERMINAL localCheckpoints — frames the
@@ -76,20 +144,8 @@ object CheckpointPool {
   // an evicted entry's blocks are released under any caller still
   // holding the old frame (the BoundedLruCache contract), so the bound
   // sits well above any realistic concurrent working set
-  private val pool =
-    new BoundedLruCache[(SparkSession, String, Int, Long), DataFrame](
-      maxEntries = 64,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
-
-  locally {
-    SessionCaches.register(
-      evict = s => pool.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => pool.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
+  private val pool = new SessionCache[(String, Int, Long), DataFrame](
+    maxEntries = 64, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
   /** File-level generation stamp of every file-source leaf in `plan`:
     * Spark's `InMemoryFileIndex` equality (and therefore
@@ -129,62 +185,51 @@ object CheckpointPool {
   }
 
   /** Checkpoint `plan` once per (session, label, plan, file generation)
-    * and reuse. The build runs outside the lock; a lost putIfAbsent
-    * race releases the loser. Plans whose leaves are themselves
-    * checkpoints (unique LogicalRDD ids) get per-call keys — the pool
-    * then degrades to a bounded FIFO of block sets, which is the
-    * backstop this exists for.
+    * and reuse ([[SessionCache.getOrBuild]]). Plans whose leaves are
+    * themselves checkpoints (unique LogicalRDD ids) get per-call keys —
+    * the pool then degrades to a bounded FIFO of block sets, which is
+    * the backstop this exists for.
     *
-    * A winning insert also evicts any SUPERSEDED generation of the
-    * same (session, label, plan): a streaming consumer re-reading a
-    * growing directory mints a new generation per micro-batch, and the
-    * old ones can never be hit again (the file set only grows) — left
-    * to global LRU pressure they would pin up to the pool bound of
-    * corpus-sized block sets and evict other operators' live entries.
-    * The eviction PARKS the superseded entry for one turnover instead
-    * of releasing inline (a concurrent holder mid-job on the old
-    * generation keeps its blocks until the next supersession), so the
-    * steady-state footprint is live + ONE parked generation GLOBALLY:
-    * the deferred slot is shared across labels and with cap-overflow
-    * eviction, so a supersession on ANY label (or a cap overflow)
-    * releases the previously parked generation — the mid-job-holder
-    * cushion is one global turnover, which under concurrent labels can
-    * be shorter than a same-label turnover (best-effort by design; the
-    * real protection for long-held frames is the cap sizing).
-    * Same-label entries over DIFFERENT plans (other directories) are
-    * untouched, so alternating inputs under one label still coexist.
+    * A build also evicts any SUPERSEDED generation of the same
+    * (session, label, plan): a streaming consumer re-reading a growing
+    * directory mints a new generation per micro-batch, and the old ones
+    * can never be hit again (the file set only grows) — left to global
+    * LRU pressure they would pin up to the pool bound of corpus-sized
+    * block sets and evict other operators' live entries. The eviction
+    * PARKS the superseded entry for one turnover instead of releasing
+    * inline (a concurrent holder mid-job on the old generation keeps
+    * its blocks until the next supersession), so the steady-state
+    * footprint is live + ONE parked generation GLOBALLY: the deferred
+    * slot is shared across labels and with cap-overflow eviction, so a
+    * supersession on ANY label (or a cap overflow) releases the
+    * previously parked generation — the mid-job-holder cushion is one
+    * global turnover, which under concurrent labels can be shorter than
+    * a same-label turnover (best-effort by design; the real protection
+    * for long-held frames is the cap sizing). Same-label entries over
+    * DIFFERENT plans (other directories) are untouched, so alternating
+    * inputs under one label still coexist.
     */
   def cached(label: String)(plan: DataFrame): DataFrame = {
     val spark = plan.sparkSession
-    SessionCaches.watch(spark)
     val semHash = plan.queryExecution.analyzed.semanticHash()
     val gen = planGeneration(plan)
-    val key = (spark, label, semHash, gen)
-    pool.get(key).getOrElse {
+    pool.getOrBuild(spark, (label, semHash, gen)) {
       val built = plan.localCheckpoint()
-      val winner = pool.putIfAbsent(key, built)
-      if (winner ne built)
-        org.apache.spark.sql.GraftShims.uncheckpoint(built)
-      else
-        // PARK the superseded generation (one-turnover deferred release,
-        // the pool's release fn already no-ops on a stopped context) —
-        // an inline release here could yank blocks from under a
-        // concurrent consumer that fetched the old generation and is
-        // still mid-job on it
-        pool.removeIfDeferred(k => (k._1 eq spark) && k._2 == label &&
-          k._3 == semHash && k._4 != gen)
-      winner
+      pool.removeIf((s, k) => (s eq spark) && k._1 == label && k._2 == semHash && k._3 != gen)
+      built
     }
   }
 }
 
-/** Access-ordered LRU cache bounded at `maxEntries` — the storage-safety
-  * companion to [[SessionCaches]]: session-scoped caches of
-  * localCheckpoint'ed frames ([[operators.Similarity]] quantizer/PQ,
-  * [[operators.Dedup]] pair lists) previously grew without bound for the
-  * session's lifetime, pinning one set of checkpoint blocks per distinct
-  * (corpus, geometry) key. This bounds the footprint: inserting past the
-  * cap evicts the least-recently-used entry and hands it to `release`
+/** Access-ordered LRU cache bounded at `maxEntries` — the store behind
+  * every [[SessionCache]]. Caches whose values pin Spark blocks (the
+  * [[operators.Similarity]] quantizer and two-level assignments, the
+  * [[operators.Dedup]] pair lists and incremental index, the
+  * [[CheckpointPool]] frames, the `stocks` relation) would otherwise
+  * hold one block set per distinct key for the session's lifetime. The
+  * trained centroids and PQ codebooks are driver-local rows and hold no
+  * blocks; their bound caps driver memory only. Inserting past the cap
+  * evicts the least-recently-used entry and hands it to `release`
   * (uncheckpoint/unpersist), which runs OUTSIDE the lock.
   *
   * Eviction contract: a caller that still holds an evicted frame sees
@@ -253,15 +298,6 @@ final class BoundedLruCache[K, V](maxEntries: Int, release: V => Unit) {
     winner
   }
 
-  /** Remove entries whose key matches `p` — live AND parked: the
-    * deferred generation keeps its keys, so a session-end call releases
-    * exactly its own parked frames too (a session whose only pool state
-    * is a parked superseded frame must not stay pinned until an
-    * unrelated future turnover). `releaseRemoved` = false when the
-    * owning context already stopped (its blocks died with the
-    * executors; only the JVM references need dropping — matching parked
-    * references are dropped without a release for the same reason).
-    */
   /** [[removeIf]] that PARKS the removed values in the deferred
     * generation instead of releasing inline — for supersession
     * evictions of entries a concurrent holder may still be reading
@@ -293,6 +329,15 @@ final class BoundedLruCache[K, V](maxEntries: Int, release: V => Unit) {
     toRelease.foreach(release)
   }
 
+  /** Remove entries whose key matches `p` — live AND parked: the
+    * deferred generation keeps its keys, so a session-end call releases
+    * exactly its own parked frames too (a session whose only pool state
+    * is a parked superseded frame must not stay pinned until an
+    * unrelated future turnover). `releaseRemoved` = false when the
+    * owning context already stopped (its blocks died with the
+    * executors; only the JVM references need dropping — matching parked
+    * references are dropped without a release for the same reason).
+    */
   def removeIf(p: K => Boolean, releaseRemoved: Boolean): Unit = {
     var removed = List.empty[V]
     synchronized {

@@ -31,28 +31,23 @@ object Tables {
 
   /** `spark.read.parquet` runs a driver-side file-listing + footer
     * schema read on EVERY call — one extra job per query invocation,
-    * paid by every table the query touches. The testdata is immutable
-    * for the life of a session, so the resolved DataFrame handle (whose
-    * relation already holds the listed files and schema) is cached per
-    * (session, path) — the stocksCache precedent, minus the persist:
-    * only the plan handle is reused, every execution still scans the
-    * parquet. Evicted with the session like every other session cache.
+    * paid by every table the query touches. The resolved DataFrame
+    * handle (whose relation already holds the listed files and schema)
+    * is cached per (session, path): only the plan handle is reused,
+    * every execution still scans the parquet.
+    *
+    * Contract: the input tables are immutable for the life of a
+    * session. The key is the path alone, so a table rewritten under the
+    * same path inside a live session is served the OLD file listing
+    * until the session is evicted ([[SessionCaches.evictSession]]).
+    * Callers that rewrite a table read it through `spark.read` instead.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    SessionCaches.watch(spark)
-    tableCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    val path = s"$dir/$name.parquet"
+    tableCache.getOrBuild(spark, path)(spark.read.parquet(path))
   }
 
-  private val tableCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  locally {
-    SessionCaches.register(
-      evict = s => { tableCache.filterInPlace((k, _) => !(k._1 eq s)): Unit },
-      sweep = () =>
-        { tableCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped): Unit })
-  }
+  private val tableCache = new SessionCache[String, DataFrame](maxEntries = 256)
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
@@ -106,31 +101,16 @@ object Tables {
     * sorted by date in-file); the in-memory persist is the local[n]
     * stand-in.
     */
-  def stocks(spark: SparkSession, dir: String): DataFrame = {
-    SessionCaches.watch(spark)
-    stocksCache.getOrElseUpdate((spark, dir), {
+  def stocks(spark: SparkSession, dir: String): DataFrame =
+    stocksCache.getOrBuild(spark, dir) {
       deriveStocks(spark, dir)
         .repartition(col("symbol"))
         .sortWithinPartitions("symbol", "date")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
-  // keyed by the session itself (the cached frame references it anyway);
-  // SessionCaches evicts entries — with an unpersist while the context
-  // is alive — on tenant eviction or context stop
-  private val stocksCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  locally {
-    SessionCaches.register(
-      evict = s => stocksCache.keys.filter(_._1 eq s).toSeq.foreach { k =>
-        stocksCache.remove(k).foreach { df =>
-          if (!s.sparkContext.isStopped) df.unpersist(blocking = false)
-        }
-      },
-      sweep = () => stocksCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped))
-  }
+  private val stocksCache = new SessionCache[String, DataFrame](
+    maxEntries = 16, release = _.unpersist(blocking = false): Unit)
 
   /** The raw (unmaterialized) derivation. */
   def deriveStocks(spark: SparkSession, dir: String): DataFrame =

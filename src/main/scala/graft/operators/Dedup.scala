@@ -261,81 +261,53 @@ object Dedup {
     * see [[cappedBandCandidates]]) verified with exact Jaccard;
     * output = verified near-dup pairs.
     */
-  /** Session-scoped cache of the verified MinHash pair list, keyed by
-    * a caller-supplied corpus tag (the sf dir) — the trained-quantizer
-    * precedent: the pair list, the estimator gate, and PageRank all
-    * consume the IDENTICAL chain, so compute it once per (session,
-    * corpus, threshold). Entries are localCheckpoint'd; SessionCaches
-    * releases the blocks on tenant eviction or context stop.
+  /** What a [[pairsCache]] entry holds: one case per mined family,
+    * each with the caller's corpus tag (the sf dir) and the parameters
+    * its result depends on.
     */
-  private val pairsCache =
-    new graft.BoundedLruCache[(SparkSession, String, String), DataFrame](
-      maxEntries = 16,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => pairsCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => pairsCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
+  private sealed trait PairsKey
+  private object PairsKey {
+    final case class Minhash(corpus: String, threshold: Double) extends PairsKey
+    final case class ShingleHash(corpus: String, n: Int) extends PairsKey
+    final case class Simhash(corpus: String, maxDist: Int) extends PairsKey
+    final case class SuffixHits(corpus: String, minLen: Int, maxLen: Int,
+        bucketCap: Int) extends PairsKey
   }
 
-  /** [[minhashLshPairs]] through the session pair cache. The chain runs
-    * OUTSIDE the map lock; a lost putIfAbsent race costs one redundant
-    * computation, never a wrong result.
+  /** Session-scoped cache of the mined dedup frames — the
+    * trained-quantizer precedent: the pair list, the estimator gate,
+    * and PageRank all consume the IDENTICAL chain, so compute it once
+    * per (session, [[PairsKey]]). Entries are localCheckpoint'd and
+    * released on eviction.
     */
+  private val pairsCache = new graft.SessionCache[PairsKey, DataFrame](
+    maxEntries = 16, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
+
+  private def minedCached(docs: DataFrame, key: PairsKey)(mine: => DataFrame): DataFrame =
+    pairsCache.getOrBuild(docs.sparkSession, key)(mine.localCheckpoint())
+
+  /** [[minhashLshPairs]] through the session pair cache. */
   def minhashLshPairsCached(docs: DataFrame, corpusKey: String,
-      threshold: Double = 0.5): DataFrame = {
-    graft.SessionCaches.watch(docs.sparkSession)
-    val key = (docs.sparkSession, corpusKey, threshold.toString)
-    pairsCache.get(key).getOrElse {
-      val pairs = minhashLshPairs(docs, threshold).localCheckpoint()
-      val winner = pairsCache.putIfAbsent(key, pairs)
-      if (winner ne pairs)  // lost the race: release the loser's blocks
-        org.apache.spark.sql.GraftShims.uncheckpoint(pairs)
-      winner
-    }
-  }
+      threshold: Double = 0.5): DataFrame =
+    minedCached(docs, PairsKey.Minhash(corpusKey, threshold))(minhashLshPairs(docs, threshold))
 
   /** Distinct (doc_id, md5(n-gram)) frame through the same session
-    * cache (key tag distinguishes it) — the containment chain reads it
-    * four times, so it materializes once per (session, corpus, n).
+    * cache — the containment chain reads it four times, so it
+    * materializes once per (session, corpus, n).
     */
   private def shingleHashCached(docs: DataFrame, n: Int,
-      corpusKey: String): DataFrame = {
-    graft.SessionCaches.watch(docs.sparkSession)
-    val key = (docs.sparkSession, corpusKey + "#shinglehash", n.toString)
-    pairsCache.get(key).getOrElse {
-      val sh = shingles(docs, n)
-        .select(col("doc_id"), md5(col("s")).as("h")).localCheckpoint()
-      val winner = pairsCache.putIfAbsent(key, sh)
-      if (winner ne sh)
-        org.apache.spark.sql.GraftShims.uncheckpoint(sh)
-      winner
-    }
-  }
+      corpusKey: String): DataFrame =
+    minedCached(docs, PairsKey.ShingleHash(corpusKey, n))(
+      shingles(docs, n).select(col("doc_id"), md5(col("s")).as("h")))
 
-  /** [[simhashNearDups]] through the same session pair cache (key tag
-    * distinguishes the families): the verified simhash pair list is
-    * consumed by both the pair query and cluster resolution — in
-    * production you compute the pair list ONCE and cluster it, you
-    * don't re-mine pairs per consumer.
+  /** [[simhashNearDups]] through the same session pair cache: the
+    * verified simhash pair list is consumed by both the pair query and
+    * cluster resolution — in production you compute the pair list ONCE
+    * and cluster it, you don't re-mine pairs per consumer.
     */
   def simhashNearDupsCached(docs: DataFrame, corpusKey: String,
-      maxDist: Int = 3): DataFrame = {
-    graft.SessionCaches.watch(docs.sparkSession)
-    val key = (docs.sparkSession, corpusKey + "#simhash", maxDist.toString)
-    pairsCache.get(key).getOrElse {
-      val pairs = simhashNearDups(docs, maxDist).localCheckpoint()
-      val winner = pairsCache.putIfAbsent(key, pairs)
-      if (winner ne pairs)
-        org.apache.spark.sql.GraftShims.uncheckpoint(pairs)
-      winner
-    }
-  }
+      maxDist: Int = 3): DataFrame =
+    minedCached(docs, PairsKey.Simhash(corpusKey, maxDist))(simhashNearDups(docs, maxDist))
 
   def minhashLshPairs(docs: DataFrame, threshold: Double = 0.5,
       fullRecall: Boolean = false): DataFrame = {
@@ -438,24 +410,10 @@ object Dedup {
     * increment cost O(corpus), which is exactly what incremental dedup
     * exists to avoid. Bounded LRU; blocks released on eviction.
     */
-  private val incIndexCache = new graft.BoundedLruCache[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)](
+  private val incIndexCache = new graft.SessionCache[String, (DataFrame, DataFrame, DataFrame)](
     maxEntries = 8,
     release = { case (fp, sh, bands) =>
-      if (!fp.sparkSession.sparkContext.isStopped) {
-        org.apache.spark.sql.GraftShims.uncheckpoint(fp)
-        org.apache.spark.sql.GraftShims.uncheckpoint(sh)
-        org.apache.spark.sql.GraftShims.uncheckpoint(bands)
-      }
-    })
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => incIndexCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => incIndexCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
+      Seq(fp, sh, bands).foreach(org.apache.spark.sql.GraftShims.uncheckpoint(_)) })
 
   /** Content fingerprint rows (fp, doc_id) — the raw form of the exact
     * store. The cached index aggregates to fp → min(doc_id) up front;
@@ -540,19 +498,7 @@ object Dedup {
     }
     val (exFp, exSh, exCapped) = existingKey match {
       case None => buildIndex()
-      case Some(ck) =>
-        graft.SessionCaches.watch(existing.sparkSession)
-        val key = (existing.sparkSession, ck)
-        incIndexCache.get(key).getOrElse {
-          val built = buildIndex()
-          val winner = incIndexCache.putIfAbsent(key, built)
-          if (winner ne built) {  // lost the race: release the loser
-            org.apache.spark.sql.GraftShims.uncheckpoint(built._1)
-            org.apache.spark.sql.GraftShims.uncheckpoint(built._2)
-            org.apache.spark.sql.GraftShims.uncheckpoint(built._3)
-          }
-          winner
-        }
+      case Some(ck) => incIndexCache.getOrBuild(existing.sparkSession, ck)(buildIndex())
     }
     val bFp = batch.select(col("doc_id"), md5(col("text")).as("fp"))
     val bSh = shingles(batch).localCheckpoint()
@@ -1288,18 +1234,9 @@ object Dedup {
     * stream — one bucket-sort pass per (session, corpus, params).
     */
   private def suffixHitsCached(docs: DataFrame, minLen: Int, maxLen: Int,
-      corpusKey: String, bucketCap: Int): DataFrame = {
-    graft.SessionCaches.watch(docs.sparkSession)
-    val key = (docs.sparkSession, corpusKey + "#suffixhits",
-      s"$minLen:$maxLen:$bucketCap")
-    pairsCache.get(key).getOrElse {
-      val hits = suffixHits(docs, minLen, maxLen, bucketCap).localCheckpoint()
-      val winner = pairsCache.putIfAbsent(key, hits)
-      if (winner ne hits)
-        org.apache.spark.sql.GraftShims.uncheckpoint(hits)
-      winner
-    }
-  }
+      corpusKey: String, bucketCap: Int): DataFrame =
+    minedCached(docs, PairsKey.SuffixHits(corpusKey, minLen, maxLen, bucketCap))(
+      suffixHits(docs, minLen, maxLen, bucketCap))
 
   private def suffixHitsMaybeCached(docs: DataFrame, minLen: Int,
       maxLen: Int, corpusKey: Option[String], bucketCap: Int): DataFrame =

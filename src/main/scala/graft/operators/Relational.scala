@@ -112,24 +112,11 @@ object Relational {
     * superseded ones release on eviction/session end instead of pinning
     * storage for the session lifetime.
     */
-  private val rfCache =
-    new graft.BoundedLruCache[(SparkSession, String), DataFrame](
-      maxEntries = 8,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => rfCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => rfCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
+  private val rfCache = new graft.SessionCache[String, DataFrame](
+    maxEntries = 8, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
   def customerRfm(spark: SparkSession, dir: String): DataFrame = {
-    graft.SessionCaches.watch(spark)
-    val f = rfCache.get((spark, dir)).getOrElse {
+    val f = rfCache.getOrBuild(spark, dir) {
       val agg = Tables.orders(spark, dir)
         .groupBy(col("o_custkey").as("custkey"))
         .agg(
@@ -151,10 +138,7 @@ object Relational {
         Seq(desc("frequency"), col("custkey")), "__grtotal", 5, "f_score")
         .localCheckpoint()
       org.apache.spark.sql.GraftShims.uncheckpoint(r)
-      val winner = rfCache.putIfAbsent((spark, dir), built)
-      if (winner ne built)
-        org.apache.spark.sql.GraftShims.uncheckpoint(built)
-      winner
+      built
     }
     val m = GlobalRank.chunkedNtile(f, -floor(col("monetary") / lit(1000.0)).cast("long"),
       Seq(desc("monetary"), col("custkey")), "__grtotal", 5, "m_score")

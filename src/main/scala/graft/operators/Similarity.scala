@@ -653,8 +653,7 @@ object Similarity {
     * index.
     */
   private val centroidCache =
-    new graft.BoundedLruCache[(SparkSession, String, Int, Int, Int), DataFrame](
-      maxEntries = 16, release = _ => ())
+    new graft.SessionCache[(String, Int, Int, Int), DataFrame](maxEntries = 16)
 
   /** The corpus-sized assignment derived from [[centroidCache]]'s
     * centroids, same keying, materialized once because its consumers
@@ -663,25 +662,17 @@ object Similarity {
     * equals a fresh training's. Entries are session-scoped because
     * checkpointed blocks die with their session.
     */
-  private val quantizerCache =
-    new graft.BoundedLruCache[(SparkSession, String, Int, Int, Int), DataFrame](
-      maxEntries = 16,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
+  private val quantizerCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
+    maxEntries = 16, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
   /** Corpus row counts per (session, corpusKey): [[semDedupSized]]'s
     * cell geometry needs N, and an unconditional driver-side
     * `emb.count()` is one extra full-corpus scan per stage invocation
-    * at 100 TB. Values are plain Longs — nothing to release — but
-    * entries hold session references, so the cache joins the
-    * evict/sweep registration below. Same staleness contract as the
-    * quantizer cache: data changing under a key mid-session is the
-    * caller's count-under-a-new-key problem.
+    * at 100 TB. Values are plain Longs — nothing to release. Same
+    * staleness contract as the quantizer cache: data changing under a
+    * key mid-session is the caller's count-under-a-new-key problem.
     */
-  private val corpusCountCache =
-    new graft.BoundedLruCache[(SparkSession, String), java.lang.Long](
-      maxEntries = 64, release = _ => ())
+  private val corpusCountCache = new graft.SessionCache[String, Long](maxEntries = 64)
 
   /** N for sized-geometry derivation: one column-pruned count on the
     * keyless path, cached per corpusKey otherwise (the repeated-stage
@@ -691,42 +682,20 @@ object Similarity {
   private[graft] def corpusCount(emb: DataFrame,
       corpusKey: Option[String]): Long = corpusKey match {
     case None => emb.count()
-    case Some(ck) =>
-      graft.SessionCaches.watch(emb.sparkSession)
-      val key = (emb.sparkSession, ck)
-      corpusCountCache.get(key).map(_.longValue()).getOrElse(
-        corpusCountCache.putIfAbsent(key, emb.count()).longValue())
+    case Some(ck) => corpusCountCache.getOrBuild(emb.sparkSession, ck)(emb.count())
   }
 
   /** Test hook: the cached N for a (session, corpusKey), if any. */
   private[graft] def cachedCorpusCount(s: SparkSession,
       ck: String): Option[Long] =
-    corpusCountCache.get((s, ck)).map(_.longValue())
+    corpusCountCache.get(s, ck)
 
   /** Test hook: whether a trained assignment is cached for a
     * (session, corpusKey, k, iters) at the auto training sample.
     */
   private[graft] def cachedAssignment(s: SparkSession, ck: String, k: Int,
       iters: Int): Boolean =
-    quantizerCache.get((s, ck, k, iters, resolveSample(AutoTrainSample, k))).isDefined
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => {
-        quantizerCache.removeIf(_._1 eq s,
-          releaseRemoved = !s.sparkContext.isStopped)
-        centroidCache.removeIf(_._1 eq s, releaseRemoved = false)
-        corpusCountCache.removeIf(_._1 eq s, releaseRemoved = false)
-      },
-      sweep = () => {
-        quantizerCache.removeIf(_._1.sparkContext.isStopped,
-          releaseRemoved = false)
-        centroidCache.removeIf(_._1.sparkContext.isStopped,
-          releaseRemoved = false)
-        corpusCountCache.removeIf(_._1.sparkContext.isStopped,
-          releaseRemoved = false)
-      })
-  }
+    quantizerCache.get(s, (ck, k, iters, resolveSample(AutoTrainSample, k))).isDefined
 
   /** [[kmeansAssign]] through the session caches: the assignment
     * derives from the key's cached centroids
@@ -741,23 +710,19 @@ object Similarity {
   /** The trained centroid table of [[kmeansCentroids]]: through
     * [[centroidCache]] when the caller names the corpus, trained fresh
     * otherwise — the entry point of an index write, which stores
-    * centroids and derives every cell in its own scan. Training runs
-    * OUTSIDE the map lock (multi-job Lloyd's must not block unrelated
-    * keys in the same hash bin); a lost putIfAbsent race costs one
-    * redundant training, never a wrong result. Returns a
-    * [[driverLocal]] frame.
+    * centroids and derives every cell in its own scan. A lost build
+    * race costs one redundant training, never a wrong result. Returns
+    * a [[driverLocal]] frame.
     */
   private[operators] def kmeansCentroidsCached(emb: DataFrame, k: Int,
       iters: Int, corpusKey: Option[String],
       sampleRows: Int = AutoTrainSample): DataFrame = corpusKey match {
     case None => kmeansCentroids(emb, k, iters, sampleRows)
     case Some(ck) =>
-      graft.SessionCaches.watch(emb.sparkSession)
       // key on the RESOLVED cap so auto and an equal explicit value share
       // one training (auto is pure in (k), so the key stays deterministic)
-      val key = (emb.sparkSession, ck, k, iters, resolveSample(sampleRows, k))
-      centroidCache.get(key).getOrElse(
-        centroidCache.putIfAbsent(key, kmeansCentroids(emb, k, iters, sampleRows)))
+      centroidCache.getOrBuild(emb.sparkSession, (ck, k, iters, resolveSample(sampleRows, k)))(
+        kmeansCentroids(emb, k, iters, sampleRows))
   }
 
   /** The cached assignment with the centroids it derives from
@@ -769,14 +734,9 @@ object Similarity {
       iters: Int, corpusKey: String,
       sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = {
     val cent = kmeansCentroidsCached(emb, k, iters, Some(corpusKey), sampleRows)
-    val key = (emb.sparkSession, corpusKey, k, iters, resolveSample(sampleRows, k))
-    val assigned = quantizerCache.get(key).getOrElse {
-      val trained = nearestAssignment(emb, cent).orderBy("vec_id").localCheckpoint()
-      val winner = quantizerCache.putIfAbsent(key, trained)
-      if (winner ne trained)  // lost the race: release the loser
-        org.apache.spark.sql.GraftShims.uncheckpoint(trained)
-      winner
-    }
+    val assigned = quantizerCache.getOrBuild(emb.sparkSession,
+        (corpusKey, k, iters, resolveSample(sampleRows, k)))(
+      nearestAssignment(emb, cent).orderBy("vec_id").localCheckpoint())
     (assigned, cent)
   }
 
@@ -1129,19 +1089,8 @@ object Similarity {
     * skips both Lloyd's passes entirely).
     */
   private val twoLevelCache =
-    new graft.BoundedLruCache[(SparkSession, Int, Int, Int, Int, Long, Int, Int), DataFrame](
-      maxEntries = 8,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => twoLevelCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => twoLevelCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
+    new graft.SessionCache[(Int, Int, Int, Int, Long, Int, Int), DataFrame](
+      maxEntries = 8, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
   /** The k lowest-vec_id rows of each `group` of a training sample,
     * numbered rn = 1..k — the per-group init.
@@ -1165,28 +1114,23 @@ object Similarity {
   private def twoLevelAssign(emb: DataFrame, coarseCells: Int,
       fineCells: Int, iters: Int,
       sampleRows: Int = AutoTrainSample): DataFrame = {
-    graft.SessionCaches.watch(emb.sparkSession)
     // each level resolves the auto cap against ITS OWN cell count
     val (srCoarse, srFine) =
       (resolveSample(sampleRows, coarseCells), resolveSample(sampleRows, fineCells))
     // semanticHash compares file sources by ROOT PATH only — fold the
     // file-level generation in so a same-path rewrite misses
-    val key = (emb.sparkSession, emb.queryExecution.analyzed.semanticHash(),
+    val key = (emb.queryExecution.analyzed.semanticHash(),
       coarseCells, fineCells, iters,
       graft.CheckpointPool.planGeneration(emb), srCoarse, srFine)
-    twoLevelCache.get(key).getOrElse {
+    twoLevelCache.getOrBuild(emb.sparkSession, key) {
       val e = withNearest(vectors(emb), kmeansCentroids(emb, coarseCells, iters, srCoarse), Nil)
         .select(col("vec_id"), col("v"), col("m.cell").as("pcell"))
       val fine = trainOn(trainSample(e, srFine, Seq("pcell")), Seq("pcell"), iters)(
         lowestIds(_, "pcell", fineCells)
           .select(col("pcell"), (col("rn") - 1).as("cell"), col("v").as("c")))
-      val out = withNearest(e, fine, Seq("pcell"))
+      withNearest(e, fine, Seq("pcell"))
         .select(col("vec_id"), col("pcell"), col("m.cell").as("cell"), col("m.d").as("d"))
         .localCheckpoint()
-      val winner = twoLevelCache.putIfAbsent(key, out)
-      if (winner ne out)
-        org.apache.spark.sql.GraftShims.uncheckpoint(out)
-      winner
     }
   }
 
@@ -1203,15 +1147,8 @@ object Similarity {
     * (sub, cell, c) codebooks; codes derive from them in each
     * consumer's own scan ([[pqCodesColumn]]).
     */
-  private val pqCache = new graft.BoundedLruCache[
-    (SparkSession, String, Int, Int, Int, Int), DataFrame](maxEntries = 8, release = _ => ())
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => pqCache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => pqCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
+  private val pqCache =
+    new graft.SessionCache[(String, Int, Int, Int, Int), DataFrame](maxEntries = 8)
 
   /** Train (or fetch) the PQ codebooks, (sub, cell, c) held on the
     * driver. The m subspace quantizers are the m groups of ONE Lloyd's
@@ -1230,10 +1167,7 @@ object Similarity {
       lowestIds(_, "sub", k).select(col("sub"), col("vec_id").as("cell"), col("v").as("c")))
     corpusKey match {
       case None => train()
-      case Some(ck) =>
-        graft.SessionCaches.watch(emb.sparkSession)
-        val key = (emb.sparkSession, ck, m, subDim, k, iters)
-        pqCache.get(key).getOrElse(pqCache.putIfAbsent(key, train()))
+      case Some(ck) => pqCache.getOrBuild(emb.sparkSession, (ck, m, subDim, k, iters))(train())
     }
   }
 

@@ -449,47 +449,30 @@ object Sink {
   }
 
   /** Cache key of the stored table at `path` (one level under its index
-    * dir): (session, path, [[artifactGeneration]], the index manifest's
+    * dir): (path, [[artifactGeneration]], the index manifest's
     * `write_id` — "" for a legacy index, which falls back to the stamp
-    * alone). Every per-index driver cache below keys on it, so each
-    * misses when its source table changes.
+    * alone); the session is the [[graft.SessionCache]]'s own key part.
+    * Every per-index driver cache below keys on it, so each misses when
+    * its source table changes.
     */
-  private type GenKey = (SparkSession, String, Long, String)
+  private type GenKey = (String, Long, String)
 
   private def genKey(spark: SparkSession, path: String): GenKey = {
-    graft.SessionCaches.watch(spark)
     val indexDir = new org.apache.hadoop.fs.Path(path).getParent.toString
     val writeId = readIndexManifest(spark, indexDir)
       .flatMap(_.get("write_id")).getOrElse("")
-    (spark, path, artifactGeneration(spark, path), writeId)
+    (path, artifactGeneration(spark, path), writeId)
   }
 
-  /** Every [[genCache]], for [[dropGenerations]]. Declared before the
-    * first cache so the object initializer can register them.
+  /** A [[GenKey]]-keyed driver cache. Values are driver-side (maps,
+    * local relations), so nothing is released.
     */
-  private val genCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[graft.BoundedLruCache[GenKey, _]]()
+  private def genCache[V]: graft.SessionCache[GenKey, V] =
+    new graft.SessionCache[GenKey, V](maxEntries = 32)
 
-  /** A [[GenKey]]-keyed driver cache, LRU-bounded and registered with
-    * [[graft.SessionCaches]] for per-session eviction and the
-    * stopped-context sweep. Values are driver-side (maps, local
-    * relations), so eviction releases nothing.
-    */
-  private def genCache[V](maxEntries: Int): graft.BoundedLruCache[GenKey, V] = {
-    val cache = new graft.BoundedLruCache[GenKey, V](maxEntries, _ => ())
-    genCaches.add(cache)
-    graft.SessionCaches.register(
-      evict = s => cache.removeIf(_._1 eq s, releaseRemoved = false),
-      sweep = () => cache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-    cache
-  }
-
-  private def cachedByGen[V](cache: graft.BoundedLruCache[GenKey, V],
-      spark: SparkSession, path: String)(compute: => V): V = {
-    val key = genKey(spark, path)
-    cache.get(key).getOrElse(cache.putIfAbsent(key, compute))
-  }
+  /** Every [[genCache]], for [[dropGenerations]]. */
+  private lazy val genCaches: Seq[graft.SessionCache[GenKey, _]] =
+    Seq(artifactLoadCache, cellCountCache, centroidCellCache, codeCountCache, pqGridCache)
 
   /** Drop every generation any [[genCache]] holds for a table under
     * `dir`, in every session: a full index write (or a retrain swapped
@@ -498,16 +481,14 @@ object Sink {
     */
   private def dropGenerations(dir: String): Unit = {
     val under = dir + "/"
-    genCaches.forEach(_.removeIf(_._2.startsWith(under), releaseRemoved = false))
+    genCaches.foreach(_.removeIf((_, k) => k._1.startsWith(under)))
   }
 
   /** Test hook: the manifest `write_id` of every generation any
     * [[genCache]] holds for a table under `dir` ("" for a legacy index).
     */
-  private[graft] def cachedWriteIds(dir: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    genCaches.asScala.flatMap(_.keys).filter(_._2.startsWith(dir + "/")).map(_._4).toSet
-  }
+  private[graft] def cachedWriteIds(dir: String): Set[String] =
+    genCaches.flatMap(_.keys).filter(_._1.startsWith(dir + "/")).map(_._3).toSet
 
   /** A stored model-sized artifact (IVF centroids, PQ codebooks, BPE
     * merges) held on the driver: `rows` is a local relation — what the
@@ -528,12 +509,11 @@ object Sink {
     * index write seeds the generation it creates ([[seedArtifact]]),
     * so the append and search that follow it miss nothing.
     */
-  private val artifactLoadCache = genCache[Artifact](maxEntries = 32)
+  private val artifactLoadCache = genCache[Artifact]
 
   private def cachedArtifactLoad(spark: SparkSession, path: String)(
-      read: => DataFrame): Artifact = {
-    val key = genKey(spark, path)
-    artifactLoadCache.get(key).getOrElse {
+      read: => DataFrame): Artifact =
+    artifactLoadCache.getOrBuild(spark, genKey(spark, path)) {
       val df = read
       val rows = df.collect()
       // once per artifact generation (cache misses only): an index
@@ -544,17 +524,15 @@ object Sink {
         throw new IllegalArgumentException(
           s"stored index artifact at $path is empty — zero-row table " +
             "or missing data files (partial restore / failed rewrite?)")
-      artifactLoadCache.putIfAbsent(key,
-        new Artifact(Similarity.localRelation(spark, rows, df.schema)))
+      new Artifact(Similarity.localRelation(spark, rows, df.schema))
     }
-  }
 
   /** Cache `art` as the current generation of the artifact at `path` —
     * called by the writer right after its manifest write, with the
     * rows it just stored.
     */
   private def seedArtifact(spark: SparkSession, path: String, art: Artifact): Unit =
-    artifactLoadCache.putIfAbsent(genKey(spark, path), art): Unit
+    artifactLoadCache.put(spark, genKey(spark, path), art): Unit
 
   /** Append the nearest-cell column as a NARROW per-row argmin over the
     * broadcast centroid table ([[Similarity.nearestCell]], the kernel
@@ -669,12 +647,12 @@ object Sink {
     * once. Footer-equivalent physical counts: tombstones stay
     * invisible to it by design.
     */
-  private val cellCountCache = genCache[Map[Long, Long]](maxEntries = 32)
+  private val cellCountCache = genCache[Map[Long, Long]]
 
   private[graft] def storedCellCounts(spark: SparkSession, dir: String,
       cells: Long): Map[Long, Long] = {
     requireDriverMapFits(dir, cells, "storedCellCounts")
-    cachedByGen(cellCountCache, spark, s"$dir/assignment") {
+    cellCountCache.getOrBuild(spark, genKey(spark, s"$dir/assignment")) {
       // partition-column inference reads `cell=` path values as INT —
       // normalize to the centroid table's LONG before collecting
       spark.read.parquet(s"$dir/assignment")
@@ -688,12 +666,12 @@ object Sink {
     * the drift verdict's grid, collected once per index generation
     * instead of once per micro-batch. Cells-sized.
     */
-  private val centroidCellCache = genCache[Seq[Long]](maxEntries = 32)
+  private val centroidCellCache = genCache[Seq[Long]]
 
   private[graft] def centroidCellIds(spark: SparkSession, dir: String,
       cells: Long): Seq[Long] = {
     requireDriverMapFits(dir, cells, "centroidCellIds")
-    cachedByGen(centroidCellCache, spark, s"$dir/centroids") {
+    centroidCellCache.getOrBuild(spark, genKey(spark, s"$dir/centroids")) {
       loadIvfCentroids(spark, dir).select("cell")
         .collect().map(_.getLong(0)).toSeq.sorted
     }
@@ -1483,11 +1461,9 @@ object Sink {
         // compaction above rewrote physical rows — its generation is
         // left unseeded and the next pre-flight rescans once.)
         storedMapOpt.foreach(m =>
-          cellCountCache.putIfAbsent(genKey(spark, assignPath),
-            addCounts(m, incomingMap)))
+          cellCountCache.put(spark, genKey(spark, assignPath), addCounts(m, incomingMap)))
         code.foreach(c =>
-          codeCountCache.putIfAbsent(genKey(spark, assignPath),
-            addCounts(c.stored, c.incoming)))
+          codeCountCache.put(spark, genKey(spark, assignPath), addCounts(c.stored, c.incoming)))
         ("append", appended)
       }
     }
@@ -1543,11 +1519,11 @@ object Sink {
     * the code-drift pre-flight otherwise re-explodes the whole codes
     * column per drop. m×k-sized driver map.
     */
-  private val codeCountCache = genCache[Map[(Int, Long), Long]](maxEntries = 32)
+  private val codeCountCache = genCache[Map[(Int, Long), Long]]
 
   private[graft] def storedCodeCounts(spark: SparkSession,
       dir: String): Map[(Int, Long), Long] =
-    cachedByGen(codeCountCache, spark, s"$dir/assignment") {
+    codeCountCache.getOrBuild(spark, genKey(spark, s"$dir/assignment")) {
       spark.read.parquet(s"$dir/assignment")
         .select(posexplode(col("codes")).as(Seq("sub", "code")))
         .groupBy("sub", "code").agg(count(lit(1)).as("n"))
@@ -1558,11 +1534,11 @@ object Sink {
     * pq_centroids generation — [[centroidCellIds]]'s compressed-tier
     * sibling, m×k-sized.
     */
-  private val pqGridCache = genCache[Map[Int, Seq[Long]]](maxEntries = 32)
+  private val pqGridCache = genCache[Map[Int, Seq[Long]]]
 
   private[graft] def pqCodeGrid(spark: SparkSession,
       dir: String): Map[Int, Seq[Long]] =
-    cachedByGen(pqGridCache, spark, s"$dir/pq_centroids") {
+    pqGridCache.getOrBuild(spark, genKey(spark, s"$dir/pq_centroids")) {
       loadPqCentroids(spark, dir).select("sub", "cell")
         .collect().map(r => r.getInt(0) -> r.getLong(1))
         .groupBy(_._1).map { case (s, cs) => s -> cs.map(_._2).toSeq.sorted }

@@ -282,48 +282,30 @@ object TextOps {
     * block set and superseded ones are released on eviction/session end
     * rather than accumulating for the session lifetime.
     */
-  private val vocabPruneCache =
-    new graft.BoundedLruCache[(org.apache.spark.sql.SparkSession, Int, Long, Long, Long), DataFrame](
-      maxEntries = 8,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
-
-  locally {
-    graft.SessionCaches.register(
-      evict = s => vocabPruneCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => vocabPruneCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
+  private val vocabPruneCache = new graft.SessionCache[(Int, Long, Long, Long), DataFrame](
+    maxEntries = 8, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
   def vocabPrune(docs: DataFrame, minDf: Long = 5,
       maxDfFrac: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    graft.SessionCaches.watch(spark)
     // semanticHash compares file sources by ROOT PATH only — fold the
     // file-level generation in so a same-path rewrite misses (see
     // CheckpointPool.planGeneration)
-    val key = (spark, docs.queryExecution.analyzed.semanticHash(), minDf,
+    val key = (docs.queryExecution.analyzed.semanticHash(), minDf,
       java.lang.Double.doubleToLongBits(maxDfFrac),
       graft.CheckpointPool.planGeneration(docs))
     // vocabulary-sized (one row per kept word) — checkpointed because
     // chunkedRowNumber references its input three times (offsets,
     // guard, final join); un-checkpointed that re-runs the corpus-sized
     // explode+distinct 3x
-    val dfreq = vocabPruneCache.get(key).getOrElse {
+    val dfreq = vocabPruneCache.getOrBuild(docs.sparkSession, key) {
       val nDocs = docs.count()
       val maxDf = math.floor(maxDfFrac * nDocs).toLong
-      val built = spread(docs)
+      spread(docs)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .distinct()
         .groupBy("word").agg(count(lit(1)).as("df"))
         .filter(col("df") >= minDf && col("df") <= maxDf)
         .localCheckpoint()
-      val winner = vocabPruneCache.putIfAbsent(key, built)
-      if (winner ne built)
-        org.apache.spark.sql.GraftShims.uncheckpoint(built)
-      winner
     }
     // exact global rank without the single-partition sort: the df value
     // itself (negated — sort is desc) is the monotone coarse bucket
@@ -778,35 +760,12 @@ object TextOps {
     * (text_lm_score, ccnet_buckets). Bounded LRU; blocks released on
     * eviction/session end.
     */
-  private val lmCache =
-    new graft.BoundedLruCache[(org.apache.spark.sql.SparkSession, String), DataFrame](
-      maxEntries = 8,
-      release = df =>
-        if (!df.sparkSession.sparkContext.isStopped)
-          org.apache.spark.sql.GraftShims.uncheckpoint(df))
+  private val lmCache = new graft.SessionCache[String, DataFrame](
+    maxEntries = 8, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
-  locally {
-    graft.SessionCaches.register(
-      evict = s => lmCache.removeIf(_._1 eq s,
-        releaseRemoved = !s.sparkContext.isStopped),
-      sweep = () => lmCache.removeIf(_._1.sparkContext.isStopped,
-        releaseRemoved = false))
-  }
-
-  /** [[lmScore]] through the session model cache (compute outside the
-    * lock; a lost race releases the loser).
-    */
-  def lmScoreCached(docs: DataFrame, corpusKey: String): DataFrame = {
-    graft.SessionCaches.watch(docs.sparkSession)
-    val key = (docs.sparkSession, corpusKey)
-    lmCache.get(key).getOrElse {
-      val scored = lmScore(docs).localCheckpoint()
-      val winner = lmCache.putIfAbsent(key, scored)
-      if (winner ne scored)
-        org.apache.spark.sql.GraftShims.uncheckpoint(scored)
-      winner
-    }
-  }
+  /** [[lmScore]] through the session model cache. */
+  def lmScoreCached(docs: DataFrame, corpusKey: String): DataFrame =
+    lmCache.getOrBuild(docs.sparkSession, corpusKey)(lmScore(docs).localCheckpoint())
 
   def lmScore(docs: DataFrame): DataFrame = {
     val words = spread(docs)

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Eviction mechanics of [[BoundedLruCache]] — the bound that keeps the
-  * session-scoped checkpoint caches (Similarity quantizer/PQ, Dedup
-  * pairs) from pinning one block set per distinct key forever. Release
+/** Eviction mechanics of [[BoundedLruCache]] — the bound behind every
+  * [[SessionCache]] that keeps the checkpoint caches (Similarity
+  * quantizer, Dedup pairs) from pinning one block set per distinct key
+  * forever. Release
   * is deferred by ONE eviction generation (the get-then-evicted race
   * cushion): generation g's evictees are released when generation g+1
   * evicts.

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.storage.StorageLevel
 import graft.operators.Similarity
 
-/** Cache lifecycle: the session-scoped stocks and trained-quantizer
-  * caches must evict per tenant (releasing blocks while the context
-  * lives) and must not let one tenant's eviction touch another's
-  * entries — the multi-tenant JVM contract.
+/** Cache lifecycle: every session-scoped cache must evict per tenant
+  * (releasing blocks while the context lives) and must not let one
+  * tenant's eviction touch another's entries — the multi-tenant JVM
+  * contract.
   */
 class SessionCachesSpec extends SparkSpec {
 
@@ -166,5 +166,124 @@ class SessionCachesSpec extends SparkSpec {
     SessionCaches.sweepStopped()
     assert(Tables.stocks(s, sfDir) eq a)
     SessionCaches.evictSession(s)
+  }
+
+  test("tenant eviction empties every session cache for that tenant only") {
+    import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+    import graft.operators.{Dedup, Relational, Sink, TextOps}
+    val index = java.nio.file.Files.createTempDirectory("graft-evict-all").toString
+    // one entry in every cache family: the table handles, stocks, the
+    // checkpoint pool, Similarity's centroid / quantizer / corpus-count
+    // / two-level / PQ caches, TextOps' vocabPrune and LM caches,
+    // Dedup's pairs and incremental-index caches, the RFM cache and
+    // Sink's five generation caches. Returns the frames whose blocks
+    // eviction must release.
+    def fill(s: SparkSession): Seq[DataFrame] = {
+      val emb = Tables.embeddings(s, sfDir)
+      val docs = s.createDataFrame(Seq(
+        (0L, "alpha beta gamma delta epsilon zeta"),
+        (1L, "alpha beta gamma delta epsilon eta"),
+        (2L, "theta iota kappa lambda mu nu"))).toDF("doc_id", "text")
+      val stocks = Tables.stocks(s, sfDir)
+      val pooled = CheckpointPool.cached("spec-evict-all")(docs)
+      val assigned = Similarity.kmeansAssignCached(emb, 4, 2, "spec-evict-all")
+      Similarity.corpusCount(emb, Some("spec-evict-all"))
+      Similarity.semDedupTwoLevel(emb, 0.95, 2, 2, 2)
+      Similarity.pqTrained(emb, 4, 16, 8, 2, Some("spec-evict-all"))
+      TextOps.vocabPrune(docs, minDf = 1, maxDfFrac = 1.0)
+      val lm = TextOps.lmScoreCached(docs, "spec-evict-all")
+      val pairs = Dedup.minhashLshPairsCached(docs, "spec-evict-all")
+      Dedup.incrementalDedup(docs, docs, existingKey = Some("spec-evict-all"))
+      Relational.customerRfm(s, sfDir)
+      if (!new java.io.File(s"$index/centroids").exists)
+        Sink.writeIvfIndex(emb, index, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
+      Sink.loadIvfCentroids(s, index)
+      Sink.loadPqCentroids(s, index)
+      Sink.storedCellCounts(s, index, 8)
+      Sink.centroidCellIds(s, index, 8)
+      Sink.storedCodeCounts(s, index)
+      Sink.pqCodeGrid(s, index)
+      Seq(stocks, pooled, assigned, lm, pairs)
+    }
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    val held = fill(s1)
+    fill(s2)
+    def counts(s: SparkSession) = SessionCaches.all.map(_.entries(s))
+    val (before1, before2) = (counts(s1), counts(s2))
+    assert(before1.count(_ > 0) == 18,
+      s"every one of the 18 session caches must hold an s1 entry: $before1")
+    SessionCaches.evictSession(s1)
+    assert(counts(s1).forall(_ == 0), s"s1 entries survived eviction: ${counts(s1)}")
+    assert(counts(s2) == before2, "evicting s1 must not touch s2's entries")
+    assert(held.head.storageLevel == StorageLevel.NONE, "stocks must be unpersisted")
+    held.tail.foreach(df =>
+      assert(GraftShims.checkpointStorageLevel(df).contains(StorageLevel.NONE),
+        "eviction must release every checkpointed value"))
+    SessionCaches.evictSession(s2)
+  }
+
+  test("a lost build race returns the winner to both callers and releases the loser once") {
+    val released = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val cache = new SessionCache[String, AnyRef](maxEntries = 4, release = released.add(_): Unit)
+    val s = spark.newSession()
+    // both builds start before either inserts, so one must lose
+    val bothBuilding = new java.util.concurrent.CountDownLatch(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[AnyRef] {
+          def call(): AnyRef = cache.getOrBuild(s, "k") {
+            bothBuilding.countDown()
+            assert(bothBuilding.await(30, java.util.concurrent.TimeUnit.SECONDS))
+            new Object
+          }
+        })
+      }
+      val results = calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(results(0) eq results(1), "both callers must get the winner")
+      assert(cache.get(s, "k").exists(_ eq results(0)))
+      assert(released.size == 1, s"the loser must be released exactly once: $released")
+      assert(!(released.peek() eq results(0)), "the winner must not be released")
+    } finally pool.shutdown()
+    SessionCaches.evictSession(s)
+    assert(cache.entries(s) == 0 && released.size == 2)
+  }
+
+  test("a stopped context's entries are swept without a release") {
+    // stopping a context needs a JVM of its own: the specs share one
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
+      "java.net", "java.nio", "java.util", "java.util.concurrent",
+      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
+      "sun.security.action", "sun.util.calendar")
+      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
+    val cmd = Seq(java, "-Xmx1g") ++ opens ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.StoppedContextProbe")
+    val out = new StringBuilder
+    val code = scala.sys.process.Process(cmd).!(
+      scala.sys.process.ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    assert(code == 0, s"probe failed:\n$out")
+    assert(out.toString.contains("swept 1 entry, 0 releases; 0 left"), out.toString)
+  }
+}
+
+/** Child-JVM half of the stopped-context spec: one cached entry, then
+  * the context stops. The application-end listener that
+  * [[SessionCache.getOrBuild]] installs must sweep the entry, and
+  * neither the sweep nor a later eviction may call `release`.
+  */
+object StoppedContextProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    var releases = 0
+    val cache = new SessionCache[String, String](maxEntries = 4, release = _ => releases += 1)
+    cache.getOrBuild(spark, "k")("v")
+    val held = cache.entries(spark)
+    spark.stop()  // drains the listener bus, so the sweep has run
+    val left = cache.entries(spark)
+    SessionCaches.evictSession(spark)
+    println(s"swept $held entry, $releases releases; $left left")
+    sys.exit(if (held == 1 && left == 0 && releases == 0) 0 else 1)
   }
 }
