@@ -263,7 +263,7 @@ object Similarity {
     * DSIR-style reweighting).
     *
     * Shape at scale: one assignment pass (broadcast centroids via the
-    * session quantizer cache) + one window ranked per cell —
+    * session centroid cache) + one window ranked per cell —
     * parallelism = cells (∝ √N under the [[semdedupAuto]] rung rule),
     * each partition corpus/cells sized, top-cap rows survive.
     */
@@ -378,10 +378,16 @@ object Similarity {
     * cell id. Returns (vec_id, cell, d) — each vector's cell and its
     * rounded squared distance to the final centroid.
     *
-    * Scale: each round is one broadcast of k×dims centroids against a
+    * Scale: training has two branches with one result ([[trainOn]]).
+    * When the sample's rows × dims fit [[Sink.maxDriverMapEntries]],
+    * it is collected once and every round runs on the driver
+    * ([[DriverLloyds]]; one Spark job on a sub-cap corpus). Above that
+    * budget each round is one broadcast of k×dims centroids against a
     * sample scan (no shuffle of the sample) plus one k×dims-sized
     * aggregate for the update, collected to the driver — the textbook
-    * distributed Lloyd's ([[lloyds]]). The final assignment is one
+    * distributed Lloyd's ([[lloyds]]). At 64 dims the budget holds
+    * 262,144 sample rows, so the auto cap (256 rows a cell) trains on
+    * the driver up to about 1,000 cells. The final assignment is one
     * narrow pass over the corpus ([[nearestCell]]).
     */
   def kmeansAssign(emb: DataFrame, k: Int = 8, iters: Int = 2,
@@ -443,7 +449,10 @@ object Similarity {
     * corpora keep EVERY row and training degenerates to the exact
     * full-corpus Lloyd's. Expected sample size ≈ sampleRows above the
     * cap (binomial concentration — the cap is a target, not an exact
-    * rank).
+    * rank). The driver training branch relies on that identity: on a
+    * corpus of at most sampleRows rows it collects the rows with a
+    * `limit`, with no count job, and builds this frame only above the
+    * cap ([[DriverLloyds]]).
     */
   private[graft] def trainSample(e: DataFrame, sampleRows: Int,
       groups: Seq[String] = Nil): DataFrame = {
@@ -471,32 +480,67 @@ object Similarity {
     */
   private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
       sampleRows: Int = AutoTrainSample): DataFrame =
-    trainOn(trainSample(vectors(emb), resolveSample(sampleRows, k)), Nil, iters)(
-      _.orderBy("vec_id").limit(k).select(col("vec_id").as("cell"), col("v").as("c")))
+    trainOn(Training(vectors(emb), Nil, resolveSample(sampleRows, k), k, iters))
 
-  /** [[lloyds]] over `sample`, materialized once because the init and
-    * every round read it (the checkpoint is sample-sized and released
-    * before return), starting from the driver-held `init` of it.
+  /** One k-means training problem. `rows` holds (vec_id, v, groups…);
+    * each group keeps its [[trainSample]] at `sampleRows`. With `split`
+    * = (m, subDim) every sampled vector is cut into its m subvectors,
+    * `sub` 0..m−1 joining the groups (PQ). Each training group starts
+    * from its k lowest vec_ids, each cell numbered by its vec_id or,
+    * with `rankCells`, by its rank 0..k−1; then `iters` − 1 Lloyd's
+    * rounds run.
     */
-  private def trainOn(sample: DataFrame, groups: Seq[String], iters: Int)(
-      init: DataFrame => DataFrame): DataFrame = {
-    val smp = sample.localCheckpoint()
-    try lloyds(smp, driverLocal(init(smp)), groups, iters)
-    finally org.apache.spark.sql.GraftShims.uncheckpoint(smp)
+  private[operators] final case class Training(rows: DataFrame, groups: Seq[String],
+      sampleRows: Int, k: Int, iters: Int, rankCells: Boolean = false,
+      split: Option[(Int, Int)] = None) {
+    /** The groups Lloyd's trains independently: `groups`, then `sub`. */
+    def trainGroups: Seq[String] = groups ++ split.map(_ => "sub")
+
+    /** (groups…, vec_id, [sub,] v): `df`'s rows as Lloyd's reads them. */
+    def shape(df: DataFrame): DataFrame = split match {
+      case None => df
+      case Some((m, subDim)) => df.select(groups.map(col) :+ col("vec_id") :+
+        posexplode(subVectors(col("v"), m, subDim)).as(Seq("sub", "v")): _*)
+    }
+
+    /** The starting centroids (trainGroups…, cell, c) of a shaped sample. */
+    def init(smp: DataFrame): DataFrame =
+      if (trainGroups.isEmpty)
+        smp.orderBy("vec_id").limit(k).select(col("vec_id").as("cell"), col("v").as("c"))
+      else smp.withColumn("rn", row_number().over(
+          Window.partitionBy(trainGroups.map(col): _*).orderBy("vec_id")))
+        .filter(col("rn") <= k).select(trainGroups.map(col) :+
+          (if (rankCells) col("rn") - 1 else col("vec_id")).as("cell") :+ col("v").as("c"): _*)
   }
 
-  /** The one Lloyd's loop. `smp` holds (vec_id, v, groups…) rows, one
-    * per vector and group; `init` the driver-held starting centroids
-    * (groups…, cell, c). Every group trains independently in the same
-    * pass: flat training is the no-group case, the per-parent rung
-    * groups by parent cell, PQ by subspace. Each of the `iters` − 1
-    * rounds assigns the sample through [[nearestCell]] (a narrow
-    * projection: the sample is unique per vector, so no argmin
-    * aggregate), averages each (group, cell, dimension) through a
-    * map-side-combined avg rounded to 6dp, and collects those
-    * groups×k×dims means; the driver packs them into the next round's
-    * centroid table. A cell that wins no sample row drops out. Returns
-    * a [[driverLocal]]-shaped table.
+  /** The one training seam flat, per-parent and PQ training share, with
+    * two branches. When the sample fits the driver budget
+    * ([[Sink.maxDriverMapEntries]] doubles, rows × dims), it is
+    * collected once and every round runs there ([[DriverLloyds]]: one
+    * Spark job on a sub-cap corpus). Above the budget [[lloyds]] runs
+    * over the sample materialized once, because the init and every
+    * round read it (the checkpoint is released before return). Both
+    * return the same [[driverLocal]]-shaped table, bit for bit.
+    */
+  private def trainOn(t: Training): DataFrame =
+    DriverLloyds.train(t).getOrElse {
+      val smp = t.shape(trainSample(t.rows, t.sampleRows, t.groups)).localCheckpoint()
+      try lloyds(smp, driverLocal(t.init(smp)), t.trainGroups, t.iters)
+      finally org.apache.spark.sql.GraftShims.uncheckpoint(smp)
+    }
+
+  /** The Spark Lloyd's loop, the branch above the driver budget. `smp`
+    * holds (vec_id, v, groups…) rows, one per vector and group; `init`
+    * the driver-held starting centroids (groups…, cell, c). Every group
+    * trains independently in the same pass: flat training is the
+    * no-group case, the per-parent rung groups by parent cell, PQ by
+    * subspace. Each of the `iters` − 1 rounds assigns the sample
+    * through [[nearestCell]] (a narrow projection: the sample is unique
+    * per vector, so no argmin aggregate), averages each (group, cell,
+    * dimension) through a map-side-combined avg rounded to 6dp, and
+    * collects those groups×k×dims means; the driver packs them into the
+    * next round's centroid table. A cell that wins no sample row drops
+    * out. Returns a [[driverLocal]]-shaped table.
     */
   private def lloyds(smp: DataFrame, init: DataFrame, groups: Seq[String],
       iters: Int): DataFrame =
@@ -655,12 +699,12 @@ object Similarity {
   private val centroidCache =
     new graft.SessionCache[(String, Int, Int, Int), DataFrame](maxEntries = 16)
 
-  /** The corpus-sized assignment derived from [[centroidCache]]'s
-    * centroids, same keying, materialized once because its consumers
-    * (both sides of an IVF search join, the SemDeDup ranking) read it
-    * repeatedly. Lloyd's is deterministic, so the derived assignment
-    * equals a fresh training's. Entries are session-scoped because
-    * checkpointed blocks die with their session.
+  /** [[kmeansAssignCached]]'s corpus-sized assignment, derived from
+    * [[centroidCache]]'s centroids, same keying, materialized once in
+    * vec_id order for the caller that asks for the assignment itself.
+    * Lloyd's is deterministic, so the derived assignment equals a fresh
+    * training's. Entries are session-scoped because checkpointed blocks
+    * die with their session.
     */
   private val quantizerCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
     maxEntries = 16, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
@@ -698,14 +742,18 @@ object Similarity {
     quantizerCache.get(s, (ck, k, iters, resolveSample(AutoTrainSample, k))).isDefined
 
   /** [[kmeansAssign]] through the session caches: the assignment
-    * derives from the key's cached centroids
-    * ([[kmeansAssignCachedWithCentroids]]), so a key trains once
-    * whichever of its consumers runs first.
+    * derives from the key's cached centroids ([[kmeansCentroidsCached]]),
+    * so a key trains once whichever of its consumers runs first. A
+    * missing assignment is one narrow pass over the corpus in vec_id
+    * order, materialized into [[quantizerCache]].
     */
   def kmeansAssignCached(emb: DataFrame, k: Int, iters: Int,
       corpusKey: String,
-      sampleRows: Int = AutoTrainSample): DataFrame =
-    kmeansAssignCachedWithCentroids(emb, k, iters, corpusKey, sampleRows)._1
+      sampleRows: Int = AutoTrainSample): DataFrame = {
+    val cent = kmeansCentroidsCached(emb, k, iters, Some(corpusKey), sampleRows)
+    quantizerCache.getOrBuild(emb.sparkSession, (corpusKey, k, iters, resolveSample(sampleRows, k)))(
+      nearestAssignment(emb, cent).orderBy("vec_id").localCheckpoint())
+  }
 
   /** The trained centroid table of [[kmeansCentroids]]: through
     * [[centroidCache]] when the caller names the corpus, trained fresh
@@ -725,34 +773,19 @@ object Similarity {
         kmeansCentroids(emb, k, iters, sampleRows))
   }
 
-  /** The cached assignment with the centroids it derives from
-    * ([[kmeansCentroidsCached]]). A missing assignment is one narrow
-    * pass over the corpus in vec_id order, materialized into
-    * [[quantizerCache]].
-    */
-  private def kmeansAssignCachedWithCentroids(emb: DataFrame, k: Int,
-      iters: Int, corpusKey: String,
-      sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = {
-    val cent = kmeansCentroidsCached(emb, k, iters, Some(corpusKey), sampleRows)
-    val assigned = quantizerCache.getOrBuild(emb.sparkSession,
-        (corpusKey, k, iters, resolveSample(sampleRows, k)))(
-      nearestAssignment(emb, cent).orderBy("vec_id").localCheckpoint())
-    (assigned, cent)
-  }
-
-  /** (assignment, centroids) for a search or a dedup pass: the cached
-    * pair when the caller names the corpus; otherwise freshly trained
-    * centroids and their assignment as an unmaterialized narrow pass,
-    * which each consumer re-derives from the driver-held centroids
-    * instead of pinning a corpus-sized checkpoint.
+  /** (assignment, centroids) for a search or a dedup pass: the key's
+    * cached centroids when the caller names the corpus, freshly trained
+    * ones otherwise, and their assignment as an unmaterialized narrow
+    * pass, which each consumer re-derives from the driver-held
+    * centroids instead of pinning a corpus-sized checkpoint. Training
+    * a sub-cap corpus is one Spark job, fewer than a sorted checkpoint
+    * of its assignment costs.
     */
   private def quantizer(emb: DataFrame, cells: Int, iters: Int,
       corpusKey: Option[String],
-      sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = corpusKey match {
-    case Some(key) => kmeansAssignCachedWithCentroids(emb, cells, iters, key, sampleRows)
-    case None =>
-      val cent = kmeansCentroids(emb, cells, iters, sampleRows)
-      (nearestAssignment(emb, cent), cent)
+      sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = {
+    val cent = kmeansCentroidsCached(emb, cells, iters, corpusKey, sampleRows)
+    (nearestAssignment(emb, cent), cent)
   }
 
   /** IVF top-k: brute-force restricted to the query's k-means cell —
@@ -1092,13 +1125,6 @@ object Similarity {
     new graft.SessionCache[(Int, Int, Int, Int, Long, Int, Int), DataFrame](
       maxEntries = 8, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
-  /** The k lowest-vec_id rows of each `group` of a training sample,
-    * numbered rn = 1..k — the per-group init.
-    */
-  private def lowestIds(smp: DataFrame, group: String, k: Int): DataFrame =
-    smp.withColumn("rn", row_number().over(Window.partitionBy(group).orderBy("vec_id")))
-      .filter(col("rn") <= k)
-
   /** The per-parent rung, (vec_id, pcell, cell, d): coarse
     * [[kmeansCentroids]] over the corpus, then the one Lloyd's loop
     * grouped by parent cell, so every parent trains its fine cells
@@ -1125,9 +1151,7 @@ object Similarity {
     twoLevelCache.getOrBuild(emb.sparkSession, key) {
       val e = withNearest(vectors(emb), kmeansCentroids(emb, coarseCells, iters, srCoarse), Nil)
         .select(col("vec_id"), col("v"), col("m.cell").as("pcell"))
-      val fine = trainOn(trainSample(e, srFine, Seq("pcell")), Seq("pcell"), iters)(
-        lowestIds(_, "pcell", fineCells)
-          .select(col("pcell"), (col("rn") - 1).as("cell"), col("v").as("c")))
+      val fine = trainOn(Training(e, Seq("pcell"), srFine, fineCells, iters, rankCells = true))
       withNearest(e, fine, Seq("pcell"))
         .select(col("vec_id"), col("pcell"), col("m.cell").as("cell"), col("m.d").as("d"))
         .localCheckpoint()
@@ -1160,11 +1184,8 @@ object Similarity {
   private[graft] def pqTrained(emb: DataFrame, m: Int, subDim: Int, k: Int,
       iters: Int, corpusKey: Option[String]): DataFrame = {
     require(iters >= 2, "PQ needs trained centroids (iters >= 2)")
-    def train(): DataFrame = trainOn(
-        trainSample(vectors(emb), resolveSample(AutoTrainSample, k)).select(col("vec_id"),
-          posexplode(subVectors(col("v"), m, subDim)).as(Seq("sub", "v"))),
-        Seq("sub"), iters)(
-      lowestIds(_, "sub", k).select(col("sub"), col("vec_id").as("cell"), col("v").as("c")))
+    def train(): DataFrame = trainOn(Training(vectors(emb), Nil,
+      resolveSample(AutoTrainSample, k), k, iters, split = Some((m, subDim))))
     corpusKey match {
       case None => train()
       case Some(ck) => pqCache.getOrBuild(emb.sparkSession, (ck, m, subDim, k, iters))(train())

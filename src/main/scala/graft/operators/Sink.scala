@@ -600,7 +600,12 @@ object Sink {
         pqCodebooks(spark, dir).pqSubs)
       .select(codec.columns.map(col): _*)
 
-  /** Hard bound on the DRIVER-SIDE index maps ([[storedCellCounts]],
+  /** Hard bound on driver-side state, read in two places. (1) The
+    * k-means training sample, read as rows × dims doubles: at or below
+    * it, training collects the sample and runs Lloyd's on the driver
+    * ([[DriverLloyds]]); above it, the Spark loop trains
+    * ([[Similarity.kmeansAssign]]). At 2²⁴ doubles that is 128 MiB of
+    * vector payload. (2) The index maps ([[storedCellCounts]],
     * [[centroidCellIds]]): "geometry-bounded, not data-bounded" is only
     * a guarantee while the geometry itself fits the driver — in the
     * sized layout cells = ⌈N/size⌉, so a 10¹⁰-vector / size-64 index
@@ -612,7 +617,7 @@ object Sink {
     * serves ≲10⁶-10⁷ cells, so the default (2²⁴ ≈ 1.7×10⁷ entries)
     * never bites on a sane geometry; override via the
     * `graft.maxDriverMapEntries` system property (specs lower it to
-    * pin the fallback).
+    * pin the fallbacks).
     */
   private[graft] def maxDriverMapEntries: Long =
     sys.props.get("graft.maxDriverMapEntries") match {

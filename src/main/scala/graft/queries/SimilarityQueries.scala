@@ -302,8 +302,8 @@ object SimilarityQueries {
       embedTopkOracle(nQueries = 10, k = 3, bucketed = true)),
     // real IVF: deterministic Lloyd's k-means coarse quantizer (fixed
     // init from the first k vec_ids, 2 rounds, rounded distances) and
-    // cell-restricted search. Both go through the per-session trained-
-    // quantizer cache keyed by the table dir — train once, search many.
+    // cell-restricted search. Both go through the per-session centroid
+    // cache keyed by the table dir — train once, search many.
     QuerySpec("embed_kmeans_cells", (s, d) =>
       Similarity.kmeansAssignCached(emb(s, d), 8, 2, d).orderBy("vec_id"),
       s"$kmeansCte SELECT vec_id, cell, d FROM a2 ORDER BY vec_id"),

@@ -45,6 +45,16 @@ object GraftShims {
     case _ => ()
   }
 
+  /** `ds`'s rows as the engine's internal rows, collected the way
+    * `Dataset.collect` collects them (one tracked SQL execution) but
+    * not converted to external values: an array<double> column stays
+    * one packed buffer per row instead of one boxed Double per element.
+    */
+  def collectInternal(ds: Dataset[_]): Array[catalyst.InternalRow] = {
+    val qe = ds.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
   /** Storage level of the RDD behind a checkpointed frame — None for
     * non-checkpoint plans. Lets specs assert block release for a
     * SPECIFIC frame instead of diffing the context-global persistent-RDD

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, Sink}
 
@@ -413,12 +414,90 @@ class SimilaritySpec extends SparkSpec {
       "semDedupTwoLevel" -> jobsOf(Similarity.semDedupTwoLevel(e.filter(col("vec_id") =!= 7L),
         0.95, 3, 3, 2).collect()),
       "pqCodes" -> jobsOf(Similarity.pqCodes(e, 4, 16, 8, 2).collect()))
-    // the two-loop trainer with checkpointed centroids ran 15, 19, 46, 61
-    val budget = Map("kmeansAssign" -> 11, "ivfMultiProbeTopK cold keyed build" -> 13,
-      "semDedupTwoLevel" -> 30, "pqCodes" -> 12)
+    // the two-loop trainer with checkpointed centroids ran 15, 19, 46,
+    // 61; the Spark Lloyd's loop alone 11, 13, 30, 12
+    val budget = Map("kmeansAssign" -> 5, "ivfMultiProbeTopK cold keyed build" -> 3,
+      "semDedupTwoLevel" -> 17, "pqCodes" -> 5)
     used.foreach { case (step, n) =>
       assert(n <= budget(step), s"$step ran $n Spark jobs, budget ${budget(step)}")
     }
+    // keyless training on the driver branch leaves no Spark block: the
+    // check covers the RDDs created from here on, since the context is
+    // shared by every spec in the JVM
+    val marker = spark.sparkContext.emptyRDD[Int].id
+    Similarity.kmeansCentroids(e, 8, 2).collect()
+    Similarity.kmeansAssign(e, 8, 2).collect()
+    val held = spark.sparkContext.getRDDStorageInfo.filter(_.id > marker)
+    assert(held.isEmpty, s"keyless training left blocks: ${held.map(_.name).mkString(", ")}")
+  }
+
+  test("k-means exactness: the driver and Spark training branches train the same " +
+      "centroids, bit for bit, on every k-means fixture") {
+    def e(s: SparkSession) = Tables.embeddings(s, "/root/testdata/sf0.001")
+    def vs(s: SparkSession, rows: Seq[(Long, Seq[Float])]) =
+      s.createDataFrame(rows).toDF("vec_id", "embedding")
+    // vector 9 ties cells 0 and 1 exactly (see the two-cluster test)
+    def tie(s: SparkSession) = vs(s, Seq((0L, 11f, 1f), (1L, 1f, 11f), (2L, 8f, 2f),
+      (3L, 8f, 0f), (4L, 2f, 5f), (5L, 0f, 5f), (9L, 1f, 1f))
+      .map { case (id, x, y) => (id, Seq(x, y, x, y)) })
+    // init cells 0 and 1 are the same vector, so every row ties and
+    // cell 0 wins it: cell 1 wins no row and drops out
+    def twins(s: SparkSession) = vs(s, Seq((0L, Seq(1f, 0f)), (1L, Seq(1f, 0f)),
+      (2L, Seq(0f, 1f)), (3L, Seq(0.5f, 0.5f))))
+    val fixtures: Seq[(String, SparkSession => DataFrame)] = Seq(
+      "flat IVF" -> (s => Similarity.kmeansCentroids(e(s), 8, 2)),
+      "flat IVF over 5 source partitions" ->
+        (s => Similarity.kmeansCentroids(e(s).repartition(5), 8, 3)),
+      "flat IVF, vector-9 tie" -> (s => Similarity.kmeansCentroids(tie(s), 2, 2)),
+      "SQ8 search" -> (s => Similarity.ivfSq8TopK(e(s), 10, 3, 8, 2, 2)),
+      "PQ, all subspaces" -> (s => Similarity.pqTrained(e(s), 4, 16, 8, 2, None)),
+      "PQ, vector-9 tie" -> (s => Similarity.pqTrained(tie(s), 2, 2, 2, 2, None)),
+      "per-parent rung" -> (s => Similarity.semDedupTwoLevel(e(s), 0.95, 3, 3, 2)),
+      "per-parent rung, vector-9 tie" ->
+        (s => Similarity.semDedupTwoLevel(tie(s), 0.9999, 2, 1, 2)),
+      "clusterBalancedSample" -> (s => Similarity.clusterBalancedSample(e(s), 8, 2, 5)),
+      "clusterBalancedSample, two-level rung" ->
+        (s => Similarity.clusterBalancedSample(e(s), 9, 2, 5, maxFlatCells = 4)),
+      "iters = 1" -> (s => Similarity.kmeansCentroids(e(s), 8, 1)),
+      "a cell that wins no row" -> (s => Similarity.kmeansCentroids(twins(s), 2, 2)),
+      "capped sample" -> (s => Similarity.kmeansCentroids(e(s), 8, 3, sampleRows = 64)),
+      "per-parent rung, capped sample" ->
+        (s => Similarity.semDedupTwoLevel(e(s), 0.95, 3, 3, 2, sampleRows = 40)))
+    // doubles compared by their bits: equal means bit-identical
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case r: Row => r.toSeq.map(bits)
+      case xs: scala.collection.Seq[_] => xs.map(bits)
+      case other => other
+    }
+    // each branch in a fresh session, so no session cache serves it; a
+    // one-double driver budget forces the Spark branch
+    def run(onSpark: Boolean, f: SparkSession => DataFrame) = {
+      val s = spark.newSession()
+      val prev = sys.props.get("graft.maxDriverMapEntries")
+      if (onSpark) sys.props("graft.maxDriverMapEntries") = "1"
+      try {
+        var out: (org.apache.spark.sql.types.StructType, Seq[Any]) = null
+        val jobs = jobsOf { val df = f(s); out = (df.schema, df.collect().toSeq.map(bits)) }
+        (out._1, out._2, jobs)
+      } finally {
+        prev match {
+          case Some(v) => sys.props("graft.maxDriverMapEntries") = v
+          case None => sys.props.remove("graft.maxDriverMapEntries")
+        }
+        graft.SessionCaches.evictSession(s)
+      }
+    }
+    fixtures.foreach { case (name, f) =>
+      val (dSchema, dRows, dJobs) = run(onSpark = false, f)
+      val (sSchema, sRows, sJobs) = run(onSpark = true, f)
+      assert(dSchema == sSchema, s"$name: schemas differ")
+      assert(dRows.length == sRows.length && dRows.toSet == sRows.toSet,
+        s"$name: the branches trained different centroids")
+      // the driver branch really ran: it skips the Spark loop's jobs
+      assert(dJobs < sJobs, s"$name: driver branch ran $dJobs jobs, Spark branch $sJobs")
+    }
+    assert(run(onSpark = false, fixtures.find(_._1 == "a cell that wins no row").get._2)._2.length == 1)
   }
 
   /** 8-dim fixture with planted near-dups for the banded pair search:

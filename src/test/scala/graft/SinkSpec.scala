@@ -654,16 +654,17 @@ class SinkSpec extends SparkSpec {
       if (codec.isInstanceOf[Sink.Pq]) Sink.loadPqCentroids(spark, dir)
     }
     // (write, append, maintain on its append branch, search), each at
-    // the count it runs: the centroid array is packed on the driver, the
+    // the count it runs: training collects its sample once and runs on
+    // the driver, the centroid array is packed on the driver, the
     // loads after a write hit the artifacts it seeded, and the probe
     // ranks narrowly over a read with a recorded schema. The keyed row
     // is the benchmark's path; its first write trains on a fresh key
     val corpusKey = s"job-budget-${System.nanoTime()}"
     val budgets = Seq(
-      (Sink.Flat, None, Seq(11, 4, 10, 8)),
-      (Sink.Sq8, None, Seq(11, 4, 10, 8)),
-      (Sink.Pq(4, 16, 8), None, Seq(21, 5, 16, 13)),
-      (Sink.Flat, Some(corpusKey), Seq(11, 4, 10, 8)))
+      (Sink.Flat, None, Seq(5, 4, 10, 8)),
+      (Sink.Sq8, None, Seq(5, 4, 10, 8)),
+      (Sink.Pq(4, 16, 8), None, Seq(8, 5, 16, 13)),
+      (Sink.Flat, Some(corpusKey), Seq(5, 4, 10, 8)))
     budgets.foreach { case (codec, key, budget) =>
       val dir = Files.createTempDirectory("graft-jobbudget").toString
       val write = jobsOf(Sink.writeIvfIndex(base, dir, codec, Sink.Cells(8), iters = 2,
