@@ -15,11 +15,13 @@ import Similarity.Training
 /** The driver branch of k-means training ([[Similarity.trainOn]]): when
   * the training sample fits [[Sink.maxDriverMapEntries]] doubles (rows ×
   * dims), collect it once and run the init and every Lloyd's round on
-  * the driver. On a corpus at or below the sample cap that is one Spark
-  * job (a `limit(cap + 1)` collect returns every row, which is exactly
-  * the sample [[Similarity.trainSample]] keeps), where the Spark loop
-  * runs a checkpoint, an init and one argmin-and-means job per round.
-  * Above the cap the collect is the sample itself.
+  * the driver. On a corpus at or below the sample cap that is one
+  * limited collect (a `limit(cap + 1)`, which Spark runs as an
+  * incremental take: one job per round of partitions it scans) that
+  * returns every row, exactly the sample [[Similarity.trainSample]]
+  * keeps, where the Spark loop runs a checkpoint, an init and one
+  * argmin-and-means job per round. Above the cap the collect is the
+  * sample itself.
   *
   * The result is the Spark loop's ([[Similarity.lloyds]]) bit for bit,
   * because each decision uses the engine's own arithmetic in the order
@@ -74,7 +76,10 @@ private[operators] object DriverLloyds {
     * each. At most cap rows, all carried, is the whole sample. Else a
     * second collect sized by the widest vector seen takes the corpus
     * (a vector wider than its share was withheld) or, above the cap,
-    * [[Similarity.trainSample]].
+    * [[Similarity.trainSample]], unless the sample's rows (the
+    * corpus's, or the expected sampleRows above the cap) × dims already
+    * exceed the budget: then the Spark loop trains without a second
+    * collect.
     */
   private def collectSample(t: Training): Option[Array[InternalRow]] = {
     val budget = Sink.maxDriverMapEntries
@@ -89,11 +94,13 @@ private[operators] object DriverLloyds {
         .getOrElse(0)
       // (lim + 1) rows of `dims` doubles stay within the budget
       val lim = if (dims > 0) budget / dims - 1 else -1L
-      val src =
-        if (first.length <= cap) Some(t.rows)
-        else if (t.sampleRows <= budget) Some(Similarity.trainSample(t.rows, t.sampleRows, t.groups))
-        else None
-      src.filter(_ => lim >= 0).map(grab(_, t.groups, lim + 1, dims)).filter(carried(_, lim))
+      val underCap = first.length <= cap
+      val rows = if (underCap) first.length.toLong else t.sampleRows.toLong
+      if (rows > lim) None
+      else {
+        val src = if (underCap) t.rows else Similarity.trainSample(t.rows, t.sampleRows, t.groups)
+        Some(grab(src, t.groups, lim + 1, dims)).filter(carried(_, lim))
+      }
     }
   }
 

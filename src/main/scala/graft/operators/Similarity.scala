@@ -381,8 +381,9 @@ object Similarity {
     * Scale: training has two branches with one result ([[trainOn]]).
     * When the sample's rows × dims fit [[Sink.maxDriverMapEntries]],
     * it is collected once and every round runs on the driver
-    * ([[DriverLloyds]]; one Spark job on a sub-cap corpus). Above that
-    * budget each round is one broadcast of k×dims centroids against a
+    * ([[DriverLloyds]]; one limited collect on a sub-cap corpus, an
+    * incremental take of one or more jobs). Above that budget each
+    * round is one broadcast of k×dims centroids against a
     * sample scan (no shuffle of the sample) plus one k×dims-sized
     * aggregate for the update, collected to the driver — the textbook
     * distributed Lloyd's ([[lloyds]]). At 64 dims the budget holds
@@ -517,7 +518,7 @@ object Similarity {
     * two branches. When the sample fits the driver budget
     * ([[Sink.maxDriverMapEntries]] doubles, rows × dims), it is
     * collected once and every round runs there ([[DriverLloyds]]: one
-    * Spark job on a sub-cap corpus). Above the budget [[lloyds]] runs
+    * limited collect on a sub-cap corpus). Above the budget [[lloyds]] runs
     * over the sample materialized once, because the init and every
     * round read it (the checkpoint is released before return). Both
     * return the same [[driverLocal]]-shaped table, bit for bit.
@@ -701,12 +702,22 @@ object Similarity {
 
   /** [[kmeansAssignCached]]'s corpus-sized assignment, derived from
     * [[centroidCache]]'s centroids, same keying, materialized once in
-    * vec_id order for the caller that asks for the assignment itself.
-    * Lloyd's is deterministic, so the derived assignment equals a fresh
-    * training's. Entries are session-scoped because checkpointed blocks
-    * die with their session.
+    * vec_id order for the caller that asks for the assignment itself
+    * (a keyed search reuses it when present). Lloyd's is
+    * deterministic, so the derived assignment equals a fresh training's.
+    * Entries are session-scoped because checkpointed blocks die with
+    * their session.
     */
   private val quantizerCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
+    maxEntries = 16, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
+
+  /** The keyed searches' and dedup passes' assignment ([[quantizer]]),
+    * same keying: a lazy local checkpoint in no particular order. The
+    * first search of a key computes it inside its own jobs and stores
+    * its blocks; every later search of the key reads them instead of
+    * re-running the corpus × cells distance pass.
+    */
+  private val searchAssignmentCache = new graft.SessionCache[(String, Int, Int, Int), DataFrame](
     maxEntries = 16, release = org.apache.spark.sql.GraftShims.uncheckpoint(_))
 
   /** Corpus row counts per (session, corpusKey): [[semDedupSized]]'s
@@ -773,19 +784,25 @@ object Similarity {
         kmeansCentroids(emb, k, iters, sampleRows))
   }
 
-  /** (assignment, centroids) for a search or a dedup pass: the key's
-    * cached centroids when the caller names the corpus, freshly trained
-    * ones otherwise, and their assignment as an unmaterialized narrow
-    * pass, which each consumer re-derives from the driver-held
-    * centroids instead of pinning a corpus-sized checkpoint. Training
-    * a sub-cap corpus is one Spark job, fewer than a sorted checkpoint
-    * of its assignment costs.
+  /** (assignment, centroids) for a search or a dedup pass. When the
+    * caller names the corpus: the key's cached centroids and
+    * [[kmeansAssignCached]]'s assignment if it ran, else
+    * [[searchAssignmentCache]]'s, so a key trains once and is assigned
+    * once however often it is searched. Otherwise: freshly trained
+    * centroids and their assignment as an unmaterialized narrow pass,
+    * which each consumer re-derives from the driver-held centroids
+    * instead of pinning a corpus-sized checkpoint.
     */
   private def quantizer(emb: DataFrame, cells: Int, iters: Int,
       corpusKey: Option[String],
       sampleRows: Int = AutoTrainSample): (DataFrame, DataFrame) = {
     val cent = kmeansCentroidsCached(emb, cells, iters, corpusKey, sampleRows)
-    (nearestAssignment(emb, cent), cent)
+    val assigned = nearestAssignment(emb, cent)
+    (corpusKey.fold(assigned) { ck =>
+      val key = (ck, cells, iters, resolveSample(sampleRows, cells))
+      quantizerCache.get(emb.sparkSession, key).getOrElse(searchAssignmentCache.getOrBuild(
+        emb.sparkSession, key)(assigned.localCheckpoint(eager = false)))
+    }, cent)
   }
 
   /** IVF top-k: brute-force restricted to the query's k-means cell —

@@ -187,6 +187,7 @@ class SessionCachesSpec extends SparkSpec {
       val stocks = Tables.stocks(s, sfDir)
       val pooled = CheckpointPool.cached("spec-evict-all")(docs)
       val assigned = Similarity.kmeansAssignCached(emb, 4, 2, "spec-evict-all")
+      Similarity.ivfTopK(emb, 10, 3, 8, 2, corpusKey = Some("spec-evict-all"))
       Similarity.corpusCount(emb, Some("spec-evict-all"))
       Similarity.semDedupTwoLevel(emb, 0.95, 2, 2, 2)
       Similarity.pqTrained(emb, 4, 16, 8, 2, Some("spec-evict-all"))
@@ -210,8 +211,8 @@ class SessionCachesSpec extends SparkSpec {
     fill(s2)
     def counts(s: SparkSession) = SessionCaches.all.map(_.entries(s))
     val (before1, before2) = (counts(s1), counts(s2))
-    assert(before1.count(_ > 0) == 18,
-      s"every one of the 18 session caches must hold an s1 entry: $before1")
+    assert(before1.count(_ > 0) == 19,
+      s"every one of the 19 session caches must hold an s1 entry: $before1")
     SessionCaches.evictSession(s1)
     assert(counts(s1).forall(_ == 0), s"s1 entries survived eviction: ${counts(s1)}")
     assert(counts(s2) == before2, "evicting s1 must not touch s2's entries")

@@ -415,8 +415,11 @@ class SimilaritySpec extends SparkSpec {
         0.95, 3, 3, 2).collect()),
       "pqCodes" -> jobsOf(Similarity.pqCodes(e, 4, 16, 8, 2).collect()))
     // the two-loop trainer with checkpointed centroids ran 15, 19, 46,
-    // 61; the Spark Lloyd's loop alone 11, 13, 30, 12
-    val budget = Map("kmeansAssign" -> 5, "ivfMultiProbeTopK cold keyed build" -> 3,
+    // 61; the Spark Lloyd's loop alone 11, 13, 30, 12. The keyed build
+    // is training, the probe ranking and the lazy checkpoint of the
+    // key's assignment, whose centroid broadcast runs at build (a job
+    // the search itself then skips)
+    val budget = Map("kmeansAssign" -> 5, "ivfMultiProbeTopK cold keyed build" -> 4,
       "semDedupTwoLevel" -> 17, "pqCodes" -> 5)
     used.foreach { case (step, n) =>
       assert(n <= budget(step), s"$step ran $n Spark jobs, budget ${budget(step)}")
@@ -463,41 +466,67 @@ class SimilaritySpec extends SparkSpec {
       "capped sample" -> (s => Similarity.kmeansCentroids(e(s), 8, 3, sampleRows = 64)),
       "per-parent rung, capped sample" ->
         (s => Similarity.semDedupTwoLevel(e(s), 0.95, 3, 3, 2, sampleRows = 40)))
-    // doubles compared by their bits: equal means bit-identical
-    def bits(v: Any): Any = v match {
-      case d: Double => java.lang.Double.doubleToRawLongBits(d)
-      case r: Row => r.toSeq.map(bits)
-      case xs: scala.collection.Seq[_] => xs.map(bits)
-      case other => other
-    }
-    // each branch in a fresh session, so no session cache serves it; a
-    // one-double driver budget forces the Spark branch
-    def run(onSpark: Boolean, f: SparkSession => DataFrame) = {
-      val s = spark.newSession()
-      val prev = sys.props.get("graft.maxDriverMapEntries")
-      if (onSpark) sys.props("graft.maxDriverMapEntries") = "1"
-      try {
-        var out: (org.apache.spark.sql.types.StructType, Seq[Any]) = null
-        val jobs = jobsOf { val df = f(s); out = (df.schema, df.collect().toSeq.map(bits)) }
-        (out._1, out._2, jobs)
-      } finally {
-        prev match {
-          case Some(v) => sys.props("graft.maxDriverMapEntries") = v
-          case None => sys.props.remove("graft.maxDriverMapEntries")
-        }
-        graft.SessionCaches.evictSession(s)
-      }
-    }
+    // a one-double driver budget forces the Spark branch
     fixtures.foreach { case (name, f) =>
-      val (dSchema, dRows, dJobs) = run(onSpark = false, f)
-      val (sSchema, sRows, sJobs) = run(onSpark = true, f)
+      val (dSchema, dRows, dJobs) = underBudget(None, f)
+      val (sSchema, sRows, sJobs) = underBudget(Some(1L), f)
       assert(dSchema == sSchema, s"$name: schemas differ")
       assert(dRows.length == sRows.length && dRows.toSet == sRows.toSet,
         s"$name: the branches trained different centroids")
       // the driver branch really ran: it skips the Spark loop's jobs
       assert(dJobs < sJobs, s"$name: driver branch ran $dJobs jobs, Spark branch $sJobs")
     }
-    assert(run(onSpark = false, fixtures.find(_._1 == "a cell that wins no row").get._2)._2.length == 1)
+    assert(underBudget(None, fixtures.find(_._1 == "a cell that wins no row").get._2)._2.length == 1)
+  }
+
+  test("k-means above the driver budget: the Spark loop trains after one probe collect, " +
+      "without collecting a sample that cannot fit") {
+    // 64 sample rows of the 500 64-dim vectors are 4,096 doubles. At a
+    // 4,000-double budget the probe collect (65 rows, every vector
+    // withheld as wider than its share) finds the corpus above the cap
+    // and the expected sample over the budget, so the Spark loop trains
+    // at once: the same jobs as under a one-double budget, whose probe
+    // collect is 2 rows
+    val f = (s: SparkSession) =>
+      Similarity.kmeansCentroids(Tables.embeddings(s, "/root/testdata/sf0.001"), 8, 3,
+        sampleRows = 64)
+    val (_, driver, _) = underBudget(None, f)
+    val (_, over, overJobs) = underBudget(Some(4000L), f)
+    val (_, forced, forcedJobs) = underBudget(Some(1L), f)
+    assert(over.length == driver.length && over.toSet == driver.toSet,
+      "the Spark loop trained different centroids")
+    assert(over.toSet == forced.toSet)
+    assert(overJobs == forcedJobs,
+      s"over the budget training ran $overJobs jobs, forced onto the Spark loop $forcedJobs")
+  }
+
+  /** (schema, rows with doubles as their IEEE bits, Spark jobs) of `f`
+    * in a fresh session, so no session cache serves it, under a driver
+    * budget of `budget` doubles (None: the default); the budget is
+    * restored afterwards.
+    */
+  private def underBudget(budget: Option[Long], f: SparkSession => DataFrame)
+      : (org.apache.spark.sql.types.StructType, Seq[Any], Int) = {
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case r: Row => r.toSeq.map(bits)
+      case xs: scala.collection.Seq[_] => xs.map(bits)
+      case other => other
+    }
+    val s = spark.newSession()
+    val prev = sys.props.get("graft.maxDriverMapEntries")
+    budget.foreach(b => sys.props("graft.maxDriverMapEntries") = b.toString)
+    try {
+      var out: (org.apache.spark.sql.types.StructType, Seq[Any]) = null
+      val jobs = jobsOf { val df = f(s); out = (df.schema, df.collect().toSeq.map(bits)) }
+      (out._1, out._2, jobs)
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.maxDriverMapEntries") = v
+        case None => sys.props.remove("graft.maxDriverMapEntries")
+      }
+      graft.SessionCaches.evictSession(s)
+    }
   }
 
   /** 8-dim fixture with planted near-dups for the banded pair search:
