@@ -380,29 +380,6 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Incremental ingest dedup — the production dedup shape at 100 TB:
-    * the corpus is never re-deduped per ingest; each NEW batch is
-    * classified against the EXISTING corpus. Verdict per batch doc:
-    * 'exact' (verbatim copy of an existing doc), 'near' (verified
-    * n-gram Jaccard ≥ threshold against an existing doc, found via
-    * asymmetric MinHash-LSH banding), or 'new'. `dup_of` is the min
-    * existing doc for exact copies, else the best verified partner
-    * (max rounded jaccard, min doc_id); `jaccard` is reported for near
-    * verdicts only (exact is 1.0 by definition).
-    *
-    * Shape — everything scales with the BATCH, not the corpus:
-    * exact is one md5 left join against the fp → min(doc_id) store;
-    * near joins batch band rows against existing band rows on
-    * (band, bv) — never batch×batch or existing×existing — and only
-    * collision pairs reach the Jaccard verification. Existing-side
-    * buckets are capped at [[lshBucketCap]] members (lowest doc_ids —
-    * deterministic and oracle-mirrorable): a batch doc colliding with a
-    * corpus-scale template cluster verifies against its cap lowest
-    * members instead of the whole island, which still finds the
-    * verdict (template members are mutually similar) at O(cap) cost.
-    * A deployment persists the fp/signature/band tables and appends
-    * each accepted batch; here they derive from `existing` per call.
-    */
   /** The existing-corpus dedup index (exact-fingerprint store, shingle
     * table, capped band table), cached per (session, corpusKey). In
     * production this is a PERSISTED index the increment loop appends to
@@ -415,21 +392,45 @@ object Dedup {
     release = { case (fp, sh, bands) =>
       Seq(fp, sh, bands).foreach(org.apache.spark.sql.GraftShims.uncheckpoint(_)) })
 
-  /** Content fingerprint rows (fp, doc_id) — the raw form of the exact
-    * store. The cached index aggregates to fp → min(doc_id) up front;
-    * the STORED index ([[Sink.writeDedupIndex]]) keeps the raw rows so
-    * appends stay append-only and the min folds at classify time,
-    * scoped to the batch's fingerprints.
+  /** One doc set's dedup-index rows, from [[docIndex]]: fingerprints
+    * `fp` (doc_id, fp), distinct shingles `sh` (doc_id, s) and UNCAPPED
+    * MinHash band rows `bands` (doc_id, band, bv). Every row derives
+    * from its own doc alone, so [[only]] equals deriving the subset.
     */
-  private[graft] def exactFpRows(docs: DataFrame): DataFrame =
-    docs.select(md5(col("text")).as("fp"), col("doc_id"))
+  private[graft] final case class DocIndex(fp: DataFrame, sh: DataFrame,
+      bands: DataFrame) {
+    /** The rows of the docs in `ids` (doc_id: one batch's, broadcast). */
+    def only(ids: DataFrame): DocIndex = {
+      def keep(t: DataFrame) = t.join(broadcast(ids), Seq("doc_id"), "left_semi")
+      DocIndex(keep(fp), keep(sh), keep(bands))
+    }
+  }
 
-  /** MinHash band rows (doc_id, band, bv) from a distinct shingle
-    * table — the probe-side unit both the cached and stored index
-    * paths band with.
+  /** Derive `docs`' [[DocIndex]] in one shingling pass, pinned by the
+    * one checkpoint: its consumers (the band rows' signature aggregate,
+    * Jaccard verification, the stored shingle table) run in later
+    * queries than the shuffle-deduped shingling.
     */
-  private[graft] def bandRowsOf(sh: DataFrame): DataFrame =
-    minhashBandRows(minhashSignaturesFrom(sh)).drop("ext")
+  private[graft] def docIndex(docs: DataFrame): DocIndex = {
+    val sh = shingles(docs).localCheckpoint()
+    DocIndex(docs.select(col("doc_id"), md5(col("text")).as("fp")), sh,
+      minhashBandRows(minhashSignaturesFrom(sh)).drop("ext"))
+  }
+
+  /** [[docIndex]] for the span of `use`: the checkpoint is released
+    * when `use` returns, so `use` materializes what it returns. */
+  private[graft] def withDocIndex[T](docs: DataFrame)(use: DocIndex => T): T = {
+    val d = docIndex(docs)
+    try use(d) finally org.apache.spark.sql.GraftShims.uncheckpoint(d.sh)
+  }
+
+  /** LSH collision candidates (doc_a from `probe`, doc_b from
+    * `stored`) sharing a (band, bv) bucket — never probe × probe. */
+  private[graft] def bandCandidates(probe: DataFrame, stored: DataFrame): DataFrame =
+    probe.as("q").join(stored.as("e"),
+        col("q.band") === col("e.band") && col("q.bv") === col("e.bv"))
+      .select(col("q.doc_id").as("doc_a"), col("e.doc_id").as("doc_b"))
+      .distinct()
 
   /** The [[lshBucketCap]] population cap over band rows: keep the cap
     * lowest doc_ids per (band, bv) bucket — deterministic, so the cap
@@ -450,8 +451,11 @@ object Dedup {
     * distinct shingle set of every doc_b in `cands`. Verdicts are
     * per-doc independent given the index, so any partition of the
     * batch (micro-batch replay included) composes to the same result.
-    * Returns an eagerly materialized frame (batch-sized) so callers
-    * can release their transient inputs immediately.
+    * Returns a checkpointed frame (batch-sized, tiny next to the
+    * index): its consumers — the caller's read of the verdicts and
+    * maintain's accepted-id filter of each appended table — would each
+    * re-run the classification, and callers release their transient
+    * inputs at once instead of pinning them until the RDDs are GC'd.
     */
   private[graft] def classifyCore(bFp: DataFrame, exFp: DataFrame,
       bSh: DataFrame, exSh: DataFrame, cands: DataFrame,
@@ -476,47 +480,53 @@ object Dedup {
         when(col("ex_exact").isNull, col("near_jaccard")))
       .select("doc_id", "verdict", "dup_of", "jaccard")
       .orderBy("doc_id")
-      // eager: the verdict frame is batch-sized (tiny next to the index);
-      // materializing it here lets every transient block behind it be
-      // released NOW instead of pinning three block sets per keyless
-      // call until the RDDs are GC'd
       .localCheckpoint()
   }
 
+  /** Incremental ingest dedup — the production dedup shape at 100 TB:
+    * the corpus is never re-deduped per ingest; each NEW batch is
+    * classified against the EXISTING corpus. Verdict per batch doc:
+    * 'exact' (verbatim copy of an existing doc), 'near' (verified
+    * n-gram Jaccard ≥ threshold against an existing doc, found via
+    * asymmetric MinHash-LSH banding), or 'new'. `dup_of` is the min
+    * existing doc for exact copies, else the best verified partner
+    * (max rounded jaccard, min doc_id); `jaccard` is reported for near
+    * verdicts only (exact is 1.0 by definition).
+    *
+    * Shape — everything scales with the BATCH, not the corpus:
+    * exact is one md5 left join against the fp → min(doc_id) store;
+    * near joins batch band rows against existing band rows on
+    * (band, bv) — never batch×batch or existing×existing — and only
+    * collision pairs reach the Jaccard verification. Existing-side
+    * buckets are capped at [[lshBucketCap]] members (lowest doc_ids —
+    * deterministic and oracle-mirrorable): a batch doc colliding with a
+    * corpus-scale template cluster verifies against its cap lowest
+    * members instead of the whole island, which still finds the
+    * verdict (template members are mutually similar) at O(cap) cost.
+    * A deployment persists the fp/signature/band tables and appends
+    * each accepted batch; here they derive from `existing` per call.
+    */
   def incrementalDedup(existing: DataFrame, batch: DataFrame,
       threshold: Double = 0.5, existingKey: Option[String] = None): DataFrame = {
     // the existing-corpus index: exact store (content hash → min doc),
     // shingle table (feeds signatures AND Jaccard verification — min is
     // duplicate-insensitive), capped band table the batch probes
     def buildIndex(): (DataFrame, DataFrame, DataFrame) = {
-      val fp = exactFpRows(existing)
-        .groupBy("fp").agg(min("doc_id").as("ex_exact"))
-        .localCheckpoint()
-      val sh = shingles(existing).localCheckpoint()
-      val capped = capBandRows(bandRowsOf(sh)).localCheckpoint()
-      (fp, sh, capped)
+      val ex = docIndex(existing)
+      (ex.fp.groupBy("fp").agg(min("doc_id").as("ex_exact")).localCheckpoint(),
+        ex.sh, capBandRows(ex.bands).localCheckpoint())
     }
     val (exFp, exSh, exCapped) = existingKey match {
       case None => buildIndex()
       case Some(ck) => incIndexCache.getOrBuild(existing.sparkSession, ck)(buildIndex())
     }
-    val bFp = batch.select(col("doc_id"), md5(col("text")).as("fp"))
-    val bSh = shingles(batch).localCheckpoint()
-    val bBands = bandRowsOf(bSh)
-    val cands = bBands.as("q").join(exCapped.as("e"),
-        col("q.band") === col("e.band") && col("q.bv") === col("e.bv"))
-      .select(col("q.doc_id").as("doc_a"), col("e.doc_id").as("doc_b"))
-      .distinct()
-    val result = classifyCore(bFp, exFp, bSh, exSh, cands, threshold)
-    org.apache.spark.sql.GraftShims.uncheckpoint(bSh)
-    if (existingKey.isEmpty) {
-      // keyless path: the index was built for this one call — release
-      // it (the cached path's index belongs to the LRU, which releases
-      // on eviction)
-      org.apache.spark.sql.GraftShims.uncheckpoint(exFp)
-      org.apache.spark.sql.GraftShims.uncheckpoint(exSh)
-      org.apache.spark.sql.GraftShims.uncheckpoint(exCapped)
+    val result = withDocIndex(batch) { b =>
+      classifyCore(b.fp, exFp, b.sh, exSh, bandCandidates(b.bands, exCapped), threshold)
     }
+    // keyless path: the index was built for this one call — release it
+    // (the cached path's index belongs to the LRU, which releases on eviction)
+    if (existingKey.isEmpty)
+      Seq(exFp, exSh, exCapped).foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
     result
   }
 

@@ -1805,8 +1805,8 @@ object Sink {
   //
   // Layout (declared once as shinglesTable, fingerprintsTable and
   // bandsTable; all three partitioned so classify prunes):
-  //  - fingerprints/fpb=XX/  (fp, doc_id)    — RAW rows, fpb = first two
-  //    hex chars of the md5 (256 buckets). Raw instead of the cached
+  //  - fingerprints/fpb=N/   (fp, doc_id)    — RAW rows, fpb =
+  //    pmod(crc32(fp), 256) (256 buckets). Raw instead of the cached
   //    path's pre-aggregated fp → min(doc_id) so appends stay
   //    append-only; the min folds at classify time, scoped to the
   //    batch's fingerprint space.
@@ -1823,13 +1823,13 @@ object Sink {
   //    build + appends, in ANY append order. (The cached path caps at
   //    build because its corpus is fixed for the session.)
   //
-  // Cost model per classify: batch-side shingling/hashing is
-  // batch-proportional; index reads are one fingerprint-bucket-pruned
-  // scan, one band scan semi-joined to the batch's buckets, and one
-  // shingle scan pruned to candidate doc buckets — columnar slim-row
-  // scans with rowgroup stats (tables are written sorted), never a
-  // recompute of the corpus. Verification fan-in stays bounded by the
-  // read-time cap exactly as in the cached path.
+  // Cost model per classify: the batch's rows derive once
+  // (Dedup.docIndex; a maintain appends them); index reads are one
+  // fingerprint-bucket-pruned scan, one band scan semi-joined to the
+  // batch's buckets, and one shingle scan pruned to candidate doc
+  // buckets — columnar slim-row scans with rowgroup stats (tables are
+  // written sorted), never a recompute of the corpus. Verification
+  // fan-in stays bounded by the read-time cap as in the cached path.
   //
   // Append contract: append each accepted doc EXACTLY once (classify
   // already says which docs are new — the caller appends that split).
@@ -1849,18 +1849,20 @@ object Sink {
   private def dedupDocBucket(docId: org.apache.spark.sql.Column) =
     pmod(docId, lit(256L))
 
+  // the build-time geometry the manifest records and classify checks
+  private def dedupGeometry = Seq("shingle_n" -> 3L,
+    "bands" -> (Dedup.minhashSeeds / Dedup.minhashBandSize).toLong,
+    "band_cap" -> Dedup.lshBucketCap.toLong)
+
   private def dedupIndexManifest(spark: SparkSession, dir: String): Unit =
-    writeIndexManifest(spark, dir, Seq(
-      "kind" -> "dedup_text",
-      "shingle_n" -> "3",
-      "bands" -> (Dedup.minhashSeeds / Dedup.minhashBandSize).toString,
-      "band_cap" -> Dedup.lshBucketCap.toString))
+    writeIndexManifest(spark, dir,
+      ("kind" -> "dedup_text") +: dedupGeometry.map { case (k, v) => k -> v.toString })
 
   /** Build the stored dedup index at `dir` from the accepted corpus
     * ([[saveDedupTables]] in overwrite mode).
     */
   def writeDedupIndex(existing: DataFrame, dir: String): Unit =
-    saveDedupTables(existing, dir, SaveMode.Overwrite)
+    Dedup.withDocIndex(existing)(saveDedupTables(_, dir, SaveMode.Overwrite))
 
   /** Append an accepted batch to the stored dedup index — three
     * batch-proportional appends, no stored row rewritten. After the
@@ -1870,14 +1872,14 @@ object Sink {
     */
   def appendToDedupIndex(batch: DataFrame, dir: String): Unit = {
     openForMutation(batch.sparkSession, dir, dedupIndex, "appendToDedupIndex")
-    saveDedupTables(batch, dir, SaveMode.Append)
+    Dedup.withDocIndex(batch)(saveDedupTables(_, dir, SaveMode.Append))
   }
 
-  /** The one dedup-table writer behind [[writeDedupIndex]] and
-    * [[appendToDedupIndex]]: one shingling pass feeds both the shingle
-    * table and the band rows, and each table lands one file per
-    * partition ([[TableLayout.save]]). A full overwrite is a new
-    * generation, so it clears the tombstones: stale tombstones from
+  /** The one dedup-table writer behind [[writeDedupIndex]],
+    * [[appendToDedupIndex]] and [[maintainDedupIndex]]: it writes rows
+    * [[Dedup.docIndex]] derived, each table one file per partition
+    * ([[TableLayout.save]]). A full overwrite is a new generation, so
+    * it clears the tombstones: stale tombstones from
     * the previous index must not mask docs the new corpus legitimately
     * contains (the rule every IVF-family build follows) — without
     * this, a rebuilt-over index classifies exact copies of
@@ -1885,19 +1887,16 @@ object Sink {
     * manifest is rewritten, so any generation-keyed consumer of the
     * index misses its cache (fresh write_id).
     */
-  private def saveDedupTables(docs: DataFrame, dir: String,
+  private def saveDedupTables(rows: Dedup.DocIndex, dir: String,
       mode: SaveMode): Unit = {
-    val spark = docs.sparkSession
-    val sh = Dedup.shingles(docs)
-      .withColumn("db", dedupDocBucket(col("doc_id"))).localCheckpoint()
-    def put(t: TableLayout, rows: DataFrame): Unit = t.save(rows, t.path(dir), mode)
-    put(shinglesTable, sh)
-    put(fingerprintsTable,
-      Dedup.exactFpRows(docs).withColumn("fpb", dedupFpBucket(col("fp"))))
-    put(bandsTable, Dedup.bandRowsOf(sh.drop("db")))
+    val spark = rows.sh.sparkSession
+    def put(t: TableLayout, r: DataFrame): Unit = t.save(r, t.path(dir), mode)
+    put(shinglesTable, rows.sh.withColumn("db", dedupDocBucket(col("doc_id"))))
+    put(fingerprintsTable, rows.fp.select(col("fp"), col("doc_id"),
+      dedupFpBucket(col("fp")).as("fpb")))
+    put(bandsTable, rows.bands)
     if (mode == SaveMode.Overwrite) clearTombstones(spark, dir)
     dedupIndexManifest(spark, dir)
-    org.apache.spark.sql.GraftShims.uncheckpoint(sh)
   }
 
   /** Takedown-delete from the stored dedup index: the doc ids land as
@@ -1935,7 +1934,13 @@ object Sink {
     * exactly as a rebuild on the filtered corpus would.
     */
   def classifyWithDedupIndex(spark: SparkSession, batch: DataFrame,
-      dir: String, threshold: Double = 0.5): DataFrame = {
+      dir: String, threshold: Double = 0.5): DataFrame =
+    classifyStored(spark, batch, dir, threshold)((v, _) => v)
+
+  /** Classify `batch`, then hand the verdicts and the batch's rows to
+    * `use` before those rows are released. */
+  private def classifyStored[T](spark: SparkSession, batch: DataFrame,
+      dir: String, threshold: Double)(use: (DataFrame, Dedup.DocIndex) => T): T = {
     requireIndex(spark, dir, dedupIndex, "classifyWithDedupIndex")
     // version-skew guard: the batch is shingled/banded with THIS
     // binary's constants — if they differ from the build-time geometry
@@ -1943,17 +1948,13 @@ object Sink {
     // and every near-dup silently classifies 'new'. Fail loudly
     // instead (legacy manifests without the fields skip the check).
     readIndexManifest(spark, dir).foreach { m =>
-      def chk(k: String, cur: Long): Unit = m.get(k).foreach(v =>
+      dedupGeometry.foreach { case (k, cur) => m.get(k).foreach(v =>
         require(v.toLong == cur,
           s"classifyWithDedupIndex: index at $dir was built with $k=$v " +
             s"but this binary uses $k=$cur — rebuild the index or run " +
-            "the matching engine version"))
-      chk("shingle_n", 3L)
-      chk("bands", (Dedup.minhashSeeds / Dedup.minhashBandSize).toLong)
-      chk("band_cap", Dedup.lshBucketCap.toLong)
+            "the matching engine version")) }
     }
-    val bFp = batch.select(col("doc_id"), md5(col("text")).as("fp"))
-      .localCheckpoint()
+    val b = Dedup.docIndex(batch)
     // takedown masking: identity when no delete ever happened; else a
     // broadcast anti-join on the tiny tombstone set, applied to the
     // stored side of BOTH match paths (below) before any fold or cap
@@ -1963,27 +1964,23 @@ object Sink {
     // scoped to the batch's exact fingerprints before the min fold so
     // the aggregate is collision-sized, not bucket-sized (the mask
     // rides the collision-sized set too)
-    val fpbs = bFp.select(dedupFpBucket(col("fp")).as("fpb")).distinct()
+    val fpbs = b.fp.select(dedupFpBucket(col("fp")).as("fpb")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val exFp = tombs.mask(spark.read.parquet(fingerprintsTable.path(dir))
         .filter(col("fpb").isin(fpbs: _*))
-        .join(bFp.select("fp").distinct(), Seq("fp"), "left_semi"))
+        .join(b.fp.select("fp").distinct(), Seq("fp"), "left_semi"))
       .groupBy("fp").agg(min("doc_id").as("ex_exact"))
-    val bSh = Dedup.shingles(batch).localCheckpoint()
-    val bBands = Dedup.bandRowsOf(bSh).localCheckpoint()
     // stored band rows in batch-touched buckets only, MASKED before
     // the read-time population cap (== the build-time cap a rebuild
     // on the filtered corpus would apply to these rows: a deleted doc
     // that held a capped slot frees it for the next lowest doc_id)
     val exCapped = Dedup.capBandRows(
       tombs.mask(spark.read.parquet(bandsTable.path(dir))
-        .join(bBands.select("band", "bv").distinct(), Seq("band", "bv"),
+        .join(b.bands.select("band", "bv").distinct(), Seq("band", "bv"),
           "left_semi")))
-    val cands = bBands.as("q").join(exCapped.as("e"),
-        col("q.band") === col("e.band") && col("q.bv") === col("e.bv"))
-      .select(col("q.doc_id").as("doc_a"), col("e.doc_id").as("doc_b"))
-      .distinct()
-      .localCheckpoint() // two consumers: bucket collect + verification
+    // consumers: the doc-bucket collect below and classifyCore's
+    // verification, two queries that would each re-run the band join
+    val cands = Dedup.bandCandidates(b.bands, exCapped).localCheckpoint()
     // shingle store pruned to candidate partners' doc buckets (≤256
     // literal partition values), then to the candidate docs themselves;
     // each kept doc keeps its FULL shingle set (classifyCore contract).
@@ -1991,48 +1988,39 @@ object Sink {
     // band rows above, so a deleted doc can never appear as a doc_b
     val dbs = cands.select(dedupDocBucket(col("doc_b")).as("db")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val shStore = spark.read.parquet(shinglesTable.path(dir))
-    val exSh = (if (dbs.isEmpty) shStore.filter(lit(false))
-                else shStore.filter(col("db").isin(dbs: _*)))
-      .select("doc_id", "s")
+    val exSh = spark.read.parquet(shinglesTable.path(dir))
+      .filter(col("db").isin(dbs: _*)).select("doc_id", "s")
       .join(cands.select(col("doc_b").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
-    val result = Dedup.classifyCore(bFp, exFp, bSh, exSh, cands, threshold)
-    Seq(bFp, bSh, bBands, cands)
-      .foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
-    result
+    val verdicts = Dedup.classifyCore(b.fp, exFp, b.sh, exSh, cands, threshold)
+    org.apache.spark.sql.GraftShims.uncheckpoint(cands)
+    try use(verdicts, b) finally org.apache.spark.sql.GraftShims.uncheckpoint(b.sh)
   }
 
   /** The production ingest loop as ONE operator: classify the batch
     * against the stored index, append the ACCEPTED split (verdict
     * 'new' — exact and near dups are dropped, the whole point of
-    * ingest-time dedup), return the per-doc verdicts. Sequencing is
+    * ingest-time dedup), return the per-doc verdicts. The append writes
+    * classify's own batch rows, filtered to the accepted doc_ids (equal
+    * to re-deriving those docs: every row is per doc). Sequencing is
     * safe because [[Dedup.classifyCore]] materializes the verdict
-    * frame eagerly (localCheckpoint) — the append below cannot leak
-    * into the classification that decided it. Called per micro-batch
-    * this GROWS the index between triggers, so a later batch's copy
-    * of an earlier batch's accepted doc classifies exact/near — the
-    * sequential semantics the ingest-loop oracle unrolls batch by
-    * batch. Cost per call: classify (batch-proportional probes of the
-    * pruned index) + an accepted-sized append; never a corpus scan.
+    * frame eagerly — the append cannot leak into the classification
+    * that decided it. Called per micro-batch this GROWS the index
+    * between triggers, so a later batch's copy of an earlier batch's
+    * accepted doc classifies exact/near — the sequential semantics the
+    * ingest-loop oracle unrolls batch by batch. Cost per call:
+    * classify plus an accepted-sized append; never a corpus scan.
     */
   def maintainDedupIndex(spark: SparkSession, batch: DataFrame,
       dir: String, threshold: Double = 0.5): DataFrame = {
     openForMutation(spark, dir, dedupIndex, "maintainDedupIndex")
-    val verdicts = classifyWithDedupIndex(spark, batch, dir, threshold)
-    // materialized once: the semi-join otherwise re-runs for the
-    // emptiness check AND each of the append's table derivations,
-    // tripling the batch scan the per-trigger cost model bills once
-    val accepted = batch
-      .join(verdicts.filter(col("verdict") === "new").select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    // an all-dup batch appends nothing — and must not touch the
-    // manifest either (the index content did not change)
-    if (!accepted.isEmpty)
-      appendToDedupIndex(accepted.select("doc_id", "text"), dir)
-    org.apache.spark.sql.GraftShims.uncheckpoint(accepted)
-    verdicts
+    classifyStored(spark, batch, dir, threshold) { (verdicts, b) =>
+      val accepted = verdicts.filter(col("verdict") === "new").select("doc_id")
+      // an all-dup batch appends nothing — and must not touch the
+      // manifest either (the index content did not change)
+      if (!accepted.isEmpty) saveDedupTables(b.only(accepted), dir, SaveMode.Append)
+      verdicts
+    }
   }
 
   /** Compact the stored dedup index with the shared routine

@@ -1068,17 +1068,80 @@ class SinkSpec extends SparkSpec {
     assert(ex.getMessage.contains("bands=999"))
   }
 
+  /** The dedup budget fixture: the sf0.001 documents (doc_id, text). */
+  private def budgetDocs = Tables.documents(spark, "/root/testdata/sf0.001").select("doc_id", "text")
+
+  /** The docs in [lo, hi) plus verbatim and near copies of stored docs,
+    * so the exact, near and new paths all run.
+    */
+  private def planted(lo: Long, hi: Long, shift: Long) = {
+    val all = budgetDocs
+    all.filter(col("doc_id") >= lo && col("doc_id") < hi)
+      .unionByName(all.filter(col("doc_id") < 10)
+        .select((col("doc_id") + shift).as("doc_id"), col("text")))
+      .unionByName(all.filter(col("doc_id") >= 10 && col("doc_id") < 20)
+        .select((col("doc_id") + shift + 1000).as("doc_id"),
+          concat(col("text"), lit(" zq1 zq2 zq3")).as("text")))
+  }
+
+  /** A dedup index at a fresh dir over the fixture's docs below 300. */
+  private def budgetIndex(tag: String): String = {
+    val dir = Files.createTempDirectory(tag).toString + "/idx"
+    Sink.writeDedupIndex(budgetDocs.filter(col("doc_id") < 300), dir)
+    dir
+  }
+
+  /** Every row of each dedup table, partition column included, sorted. */
+  private def dedupTableRows(dir: String): Map[String, Seq[String]] =
+    Seq("shingles", "fingerprints", "bands").map { t =>
+      t -> spark.read.parquet(s"$dir/$t").collect().map(_.toString).toSeq.sorted
+    }.toMap
+
+  test("dedup index: maintain equals classify plus an append of the accepted split") {
+    val a = budgetIndex("graft-dedupmaint-a")
+    val b = budgetIndex("graft-dedupmaint-b")
+    val batch = planted(450, 500, 20000)
+    val viaMaintain = Sink.maintainDedupIndex(spark, batch, a)
+      .collect().map(_.toSeq).toSeq
+    val classified = Sink.classifyWithDedupIndex(spark, batch, b)
+    val viaTwoSteps = classified.collect().map(_.toSeq).toSeq
+    Sink.appendToDedupIndex(batch.join(
+      classified.filter(col("verdict") === "new").select("doc_id"),
+      Seq("doc_id"), "left_semi"), b)
+    assert(viaMaintain == viaTwoSteps)
+    assert(viaMaintain.map(_(1)).toSet == Set("exact", "near", "new"),
+      "the planted batch must exercise all three verdicts")
+    val (rowsA, rowsB) = (dedupTableRows(a), dedupTableRows(b))
+    rowsA.foreach { case (t, rows) =>
+      assert(rows.nonEmpty && rows == rowsB(t), s"$t differs after maintain vs two steps")
+    }
+    val next = planted(400, 450, 10000)
+    assert(Sink.classifyWithDedupIndex(spark, next, a).collect().map(_.toSeq).toSeq ==
+      Sink.classifyWithDedupIndex(spark, next, b).collect().map(_.toSeq).toSeq)
+  }
+
+  test("dedup index: an all-duplicate maintain writes nothing and keeps the manifest") {
+    val dir = budgetIndex("graft-dedupmaint-dup")
+    def files(t: String) = {
+      import scala.jdk.CollectionConverters._
+      org.apache.commons.io.FileUtils.listFiles(new java.io.File(s"$dir/$t"), null, true)
+        .asScala.map(f => (f.getPath, f.length, f.lastModified)).toSet
+    }
+    def state() = (Sink.readIndexManifest(spark, dir).flatMap(_.get("write_id")),
+      Seq("shingles", "fingerprints", "bands").map(files))
+    val before = state()
+    // verbatim copies of stored docs under fresh ids: every verdict is exact
+    val copies = budgetDocs.filter(col("doc_id") < 20)
+      .select((col("doc_id") + 30000).as("doc_id"), col("text"))
+    val verdicts = Sink.maintainDedupIndex(spark, copies, dir)
+      .collect().map(_.getString(1)).toSet
+    assert(verdicts == Set("exact"))
+    assert(before._1.isDefined)
+    assert(state() == before, "an all-duplicate batch must leave the index untouched")
+  }
+
   test("job budget: the dedup index's write, append, classify, maintain, delete and compact stay within their Spark job counts") {
-    val all = Tables.documents(spark, "/root/testdata/sf0.001").select("doc_id", "text")
-    // the docs in [lo, hi) plus verbatim and near copies of stored
-    // docs, so the exact, near and new paths all run
-    def planted(lo: Long, hi: Long, shift: Long) =
-      all.filter(col("doc_id") >= lo && col("doc_id") < hi)
-        .unionByName(all.filter(col("doc_id") < 10)
-          .select((col("doc_id") + shift).as("doc_id"), col("text")))
-        .unionByName(all.filter(col("doc_id") >= 10 && col("doc_id") < 20)
-          .select((col("doc_id") + shift + 1000).as("doc_id"),
-            concat(col("text"), lit(" zq1 zq2 zq3")).as("text")))
+    val all = budgetDocs
     val dir = Files.createTempDirectory("graft-dedupbudget").toString + "/idx"
     val used = Seq(
       jobsOf(Sink.writeDedupIndex(all.filter(col("doc_id") < 300), dir)),
@@ -1093,14 +1156,17 @@ class SinkSpec extends SparkSpec {
       jobsOf(Sink.classifyWithDedupIndex(spark, planted(400, 450, 10000), dir)
         .collect(): Unit),
       jobsOf(Sink.compactDedupIndex(spark, dir)))
-    // the counts before the two families shared one lifecycle core —
-    // sharing it must not add a job
-    val budget = Seq(10, 10, 44, 62, 4, 48, 21)
-    Seq("write", "append", "classify", "maintain", "delete",
-        "classify (masked)", "compact").zip(used.zip(budget))
-      .foreach { case (step, (n, max)) =>
-        assert(n <= max, s"dedup $step ran $n Spark jobs, budget $max")
-      }
+    // the measured counts, the max over repeated runs: AQE moves
+    // classify (40-41), maintain (52-53) and the masked classify (44-45)
+    // by one job between runs
+    val budget = Seq(10, 10, 41, 53, 4, 45, 20)
+    val steps = Seq("write", "append", "classify", "maintain", "delete",
+      "classify (masked)", "compact")
+    val report = steps.zip(used.zip(budget))
+      .map { case (step, (n, max)) => s"$step $n/$max" }.mkString(", ")
+    info(s"dedup Spark jobs used/budget: $report")
+    assert(used.zip(budget).forall { case (n, max) => n <= max },
+      s"a dedup step ran over its Spark job budget: $report")
   }
 
   // ---- stored BPE tokenizer artifact -------------------------------
