@@ -351,7 +351,7 @@ object ScaleProbe {
           graft.operators.Sink.writeIvfIndex(emb, dir,
             graft.operators.Sink.Sq8, graft.operators.Sink.Cells(8 * factor), iters = 2)
           time("ivfsq8_stored_search") {
-            graft.operators.Sink.searchIvfSq8Index(spark, emb, dir, 10, 3,
+            graft.operators.Sink.searchIvfIndex(spark, emb, dir, 10, 3,
               nprobe = 2)
           }
         } else None
@@ -369,7 +369,7 @@ object ScaleProbe {
             graft.operators.Sink.Sq8, graft.operators.Sink.CellSize(250), iters = 2)
           System.err.println(s"[probe] ivfsq8_sized cells=$nc")
           time("ivfsq8_sized_search") {
-            graft.operators.Sink.searchIvfSq8Index(spark, emb, dir, 10, 3,
+            graft.operators.Sink.searchIvfIndex(spark, emb, dir, 10, 3,
               nprobe = 2)
           }
         } else None

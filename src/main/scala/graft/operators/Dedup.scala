@@ -26,13 +26,13 @@ import graft.Tables
   */
 object Dedup {
 
+  private def spread(docs: DataFrame): DataFrame = Spread.spread(docs)
+
   /** Word-n-gram shingles per doc: (doc_id, s). `distinct = false`
     * skips the dedup shuffle — correct for duplicate-insensitive
     * consumers (min-aggregates: MinHash signatures, winnowing minima);
     * set semantics (Jaccard counting) need the default distinct.
     */
-  private def spread(docs: DataFrame): DataFrame = Spread.spread(docs)
-
   def shingles(docs: DataFrame, n: Int = 3, distinct: Boolean = true): DataFrame = {
     val words = split(col("text"), " ")
     val grams = expr(
@@ -257,10 +257,6 @@ object Dedup {
       .distinct()
   }
 
-  /** LSH candidate pairs (same band value in any band, bucket-capped —
-    * see [[cappedBandCandidates]]) verified with exact Jaccard;
-    * output = verified near-dup pairs.
-    */
   /** What a [[pairsCache]] entry holds: one case per mined family,
     * each with the caller's corpus tag (the sf dir) and the parameters
     * its result depends on.
@@ -309,6 +305,10 @@ object Dedup {
       maxDist: Int = 3): DataFrame =
     minedCached(docs, PairsKey.Simhash(corpusKey, maxDist))(simhashNearDups(docs, maxDist))
 
+  /** LSH candidate pairs (same band value in any band, bucket-capped —
+    * see [[cappedBandCandidates]]) verified with exact Jaccard;
+    * output = verified near-dup pairs.
+    */
   def minhashLshPairs(docs: DataFrame, threshold: Double = 0.5,
       fullRecall: Boolean = false): DataFrame = {
     // the signature table is materialized eagerly (localCheckpoint, not

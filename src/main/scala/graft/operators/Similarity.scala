@@ -42,36 +42,58 @@ object Similarity {
     round(dot(da, db) / (sqrt(dot(da, da)) * sqrt(dot(db, db))), 4)
   }
 
+  /** The query side of every top-k: the first `nQueries` vec_ids of
+    * `rows` as `qid`, with `cols` beside it.
+    */
+  private[operators] def queryRows(rows: DataFrame, nQueries: Int, cols: Column*): DataFrame =
+    rows.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid") +: cols: _*)
+
+  /** The one per-query ranking every top-k ends in: each qid's rows
+    * ranked by `order`, ties broken by the `id` column ascending, the
+    * best `k` kept as `rnk` 1..k, projected to `cols` in (qid, rnk)
+    * order.
+    */
+  private[operators] def topK(scored: DataFrame, order: Column, k: Int,
+      cols: Seq[String], id: String = "vec_id"): DataFrame =
+    scored.withColumn("rnk", row_number().over(Window.partitionBy("qid").orderBy(order, col(id))))
+      .filter(col("rnk") <= k)
+      .select(cols.map(col): _*)
+      .orderBy("qid", "rnk")
+
+  /** [[topK]] by exact [[cosine]], as `cos`, of each candidate row's
+    * query vector `qe` against its `embedding`.
+    */
+  private[operators] def rankByCosine(cands: DataFrame, k: Int, cols: Seq[String]): DataFrame =
+    topK(cands.withColumn("cos", cosine(col("qe"), col("embedding"))), desc("cos"), k, cols)
+
+  /** The exact-cosine rerank every two-stage search ends in: each
+    * (qid, vec_id) candidate of `cands` (nQueries × depth rows) joins
+    * its `embedding` in `vectors` and re-scores by [[cosine]] against
+    * its query's `qe` (`queries`: qid, qe, broadcast); the best `k` per
+    * query are kept as (qid, rnk, vec_id, cos). Only the candidates'
+    * vectors are scored.
+    */
+  private[operators] def rerankTopK(cands: DataFrame, queries: DataFrame,
+      vectors: DataFrame, k: Int): DataFrame =
+    rankByCosine(cands.select("qid", "vec_id")
+      .join(vectors.select("vec_id", "embedding"), "vec_id")
+      .join(broadcast(queries), "qid"),
+      k, Seq("qid", "rnk", "vec_id", "cos"))
+
   /** Brute-force cosine top-k: the first `nQueries` vec_ids against the
     * whole corpus (self excluded).
     */
-  def bruteForceTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val scored = q.join(emb, col("qid") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
+  def bruteForceTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame =
+    rankByCosine(queryRows(emb, nQueries, col("embedding").as("qe"))
+      .join(emb, col("qid") =!= col("vec_id")), k, Seq("qid", "rnk", "vec_id", "cos"))
 
   /** IVF-style bucketed top-k: candidates restricted to the query's
     * coarse bucket (label column as cell id).
     */
-  def bucketedTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("label").as("qlabel"))
-    val scored = q.join(emb,
-        col("qlabel") === col("label") && col("qid") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "label", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
+  def bucketedTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame =
+    rankByCosine(queryRows(emb, nQueries, col("embedding").as("qe"), col("label").as("qlabel"))
+      .join(emb, col("qlabel") === col("label") && col("qid") =!= col("vec_id")),
+      k, Seq("qid", "label", "rnk", "vec_id", "cos"))
 
   /** Hard-negative mining (the contrastive-training data op): per
     * query vector, the top-k most-similar corpus vectors carrying a
@@ -83,18 +105,10 @@ object Similarity {
     * pruned candidates — the plan here IS that filter + ranking,
     * with brute-force candidates as the recall ceiling.
     */
-  def hardNegatives(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("label").as("qlabel"))
-    val scored = q.join(emb, col("qlabel") =!= col("label"))
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "qlabel", "rnk", "vec_id", "label", "cos")
-      .orderBy("qid", "rnk")
-  }
+  def hardNegatives(emb: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame =
+    rankByCosine(queryRows(emb, nQueries, col("embedding").as("qe"), col("label").as("qlabel"))
+      .join(emb, col("qlabel") =!= col("label")),
+      k, Seq("qid", "qlabel", "rnk", "vec_id", "label", "cos"))
 
   /** Binary-embedding retrieval: 1-bit-per-dimension sign signatures
     * (64-char bit strings) searched by Hamming distance through the
@@ -108,21 +122,12 @@ object Similarity {
     val sig = emb.select(col("vec_id"),
       array_join(transform(col("embedding"),
         x => when(x >= lit(0.0f), lit("1")).otherwise(lit("0"))), "").as("sig"))
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("sig").as("qsig"))
-    val scored = broadcast(q).join(sig, col("qid") =!= col("vec_id"))
+    val scored = broadcast(queryRows(sig, nQueries, col("sig").as("qsig")))
+      .join(sig, col("qid") =!= col("vec_id"))
       .withColumn("hd", graft.functions.HammingDistance.hamming(col("qsig"), col("sig")))
-    val w = Window.partitionBy("qid").orderBy(col("hd"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "hd")
-      .orderBy("qid", "rnk")
+    topK(scored, col("hd"), k, Seq("qid", "rnk", "vec_id", "hd"))
   }
 
-  /** int8 codes + exact integer squared norm per vector, the shared
-    * projection behind [[sq8TopK]]/[[sq8Recall]] — the [[quantizeInt8]]
-    * scheme kept as a typed array instead of the export CSV.
-    */
   /** Append the SQ8 code columns (ma, q, n2) to `emb` as narrow
     * per-row expressions — the ONE quantization scheme every SQ8
     * consumer shares. Column-appending form so an index write can keep
@@ -139,8 +144,34 @@ object Similarity {
         aggregate(col("q"), lit(0L), (acc, x) => acc + x.cast("long") * x.cast("long")))
   }
 
+  /** int8 codes + exact integer squared norm per vector, the shared
+    * projection behind [[sq8TopK]]/[[sq8Recall]] — the [[quantizeInt8]]
+    * scheme kept as a typed array instead of the export CSV.
+    */
   private[operators] def sq8Codes(emb: DataFrame): DataFrame =
     withSq8Codes(emb).select("vec_id", "ma", "q", "n2")
+
+  /** (qid, qq, qn2): the SQ8 codes of the first `nQueries` vectors. */
+  private[operators] def sq8Queries(emb: DataFrame, nQueries: Int): DataFrame =
+    queryRows(sq8Codes(emb), nQueries, col("q").as("qq"), col("n2").as("qn2"))
+
+  /** [[topK]] by the SQ8 quantized cosine, as `qcos`, of each candidate
+    * row's query codes (qq, qn2) against its codes (q, n2). All three
+    * inner sums (q·d, q·q, d·d) are exact 64-bit integers, so both
+    * engines divide IDENTICAL operands: the one double expression (an
+    * IEEE div/sqrt tree) is bit-equal, rounded once at 4dp. An all-zero
+    * vector quantizes to zeros and scores NULL (cosine undefined).
+    */
+  private[operators] def rankBySq8(cands: DataFrame, k: Int, cols: Seq[String]): DataFrame = {
+    val dotInt = aggregate(
+      zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
+      lit(0L), (acc, x) => acc + x)
+    topK(cands.withColumn("qcos",
+      when(col("qn2") === 0L || col("n2") === 0L, lit(null).cast("double"))
+        .otherwise(round(dotInt.cast("double") /
+          (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0))),
+      desc("qcos"), k, cols)
+  }
 
   /** SQ8 quantized-cosine top-k — the serving tier between
     * full-precision floats and PQ codes: 4× smaller storage, integer
@@ -149,32 +180,14 @@ object Similarity {
     * ScalarQuantizer QT_8bit idea re-expressed as one codegen'd
     * projection + the [[bruteForceTopK]] plan shape over 4×-less data.
     *
-    * Cross-engine determinism: all three inner sums (q·d, q·q, d·d)
-    * are exact 64-bit integer aggregates — both engines divide
-    * IDENTICAL operands, so the one double expression (an IEEE
-    * div/sqrt tree) is bit-equal, rounded once at 4dp with a vec_id
-    * tiebreak, never an ORDER BY over a raw float. An all-zero vector
-    * quantizes to zeros and scores NULL (cosine undefined) — mirrored
+    * Cross-engine determinism ([[rankBySq8]]): exact integer sums under
+    * one rounded IEEE tree with a vec_id tiebreak, never an ORDER BY
+    * over a raw float; the NULL score of an all-zero vector is mirrored
     * as CASE in the oracle.
     */
-  def sq8TopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
-    val codes = sq8Codes(emb)
-    val q = codes.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
-    val dotInt = aggregate(
-      zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val scored = broadcast(q).join(codes, col("qid") =!= col("vec_id"))
-      .withColumn("qcos",
-        when(col("qn2") === 0L || col("n2") === 0L, lit(null).cast("double"))
-          .otherwise(round(dotInt.cast("double") /
-            (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0)))
-    val w = Window.partitionBy("qid").orderBy(desc("qcos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "qcos")
-      .orderBy("qid", "rnk")
-  }
+  def sq8TopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame =
+    rankBySq8(broadcast(sq8Queries(emb, nQueries))
+      .join(sq8Codes(emb), col("qid") =!= col("vec_id")), k, Seq("qid", "rnk", "vec_id", "qcos"))
 
   /** IVF × SQ8 — the composed serving shape (FAISS
     * IndexIVFScalarQuantizer QT_8bit, public API/docs): the coarse
@@ -189,28 +202,12 @@ object Similarity {
       corpusKey: Option[String] = None): DataFrame = {
     require(iters >= 2, "IVF-SQ8 needs trained centroids (iters >= 2)")
     val (assignedAll, centroids) = quantizer(emb, cells, iters, corpusKey)
-    val assigned = assignedAll.select("vec_id", "cell")
-    val codes = sq8Codes(emb)
-    val qCodes = codes.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
     val probes = rankProbes(emb, nQueries, centroidArray(centroids), nprobe)
-    val withCell = codes.join(assigned, "vec_id")
-    val dotInt = aggregate(
-      zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val scored = probes
-      .join(broadcast(qCodes), "qid")
+    val withCell = sq8Codes(emb).join(assignedAll.select("vec_id", "cell"), "vec_id")
+    rankBySq8(probes
+      .join(broadcast(sq8Queries(emb, nQueries)), "qid")
       .join(withCell, "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .withColumn("qcos",
-        when(col("qn2") === 0L || col("n2") === 0L, lit(null).cast("double"))
-          .otherwise(round(dotInt.cast("double") /
-            (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0)))
-    val w = Window.partitionBy("qid").orderBy(desc("qcos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
-      .orderBy("qid", "rnk")
+      .filter(col("qid") =!= col("vec_id")), k, Seq("qid", "rnk", "vec_id", "cell", "pn", "qcos"))
   }
 
   /** Recall@k of the SQ8 tier against the exact-cosine ground truth —
@@ -238,20 +235,9 @@ object Similarity {
     * applies to the answer.
     */
   def sq8RerankTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3,
-      cand: Int = 10): DataFrame = {
-    val candidates = sq8TopK(emb, nQueries, cand).select("qid", "vec_id")
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val rer = candidates
-      .join(emb.select("vec_id", "embedding"), "vec_id")
-      .join(broadcast(q), "qid")
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
+      cand: Int = 10): DataFrame =
+    rerankTopK(sq8TopK(emb, nQueries, cand),
+      queryRows(emb, nQueries, col("embedding").as("qe")), emb, k)
 
   /** Cluster-balanced (diversity-preserving) downsampling: cap each
     * k-means cell at `cap` vectors, picked by a content-keyed md5
@@ -656,12 +642,13 @@ object Similarity {
     * (distance, cell) gives, without its shuffle). The ≤
     * nQueries×nprobe (qid, cell, pn) rows are collected into a
     * [[localRelation]], so the serving join broadcasts them without
-    * re-running the ranking.
+    * re-running the ranking. `nprobe` < 1 is refused: it would probe no
+    * cell and silently return no rows.
     */
   private[operators] def rankProbes(emb: DataFrame, nQueries: Int,
       cs: DataFrame, nprobe: Int): DataFrame = {
-    val ranked = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qv"))
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val ranked = queryRows(emb, nQueries, toDouble(col("embedding")).as("qv"))
       .crossJoin(broadcast(cs))
       .select(col("qid"), posexplode(slice(
         array_sort(cellDistances(col("qv"), col("cs"))), 1, nprobe)).as(Seq("p", "probe")))
@@ -816,16 +803,9 @@ object Similarity {
     val cellOf = quantizer(emb, cells, iters, corpusKey, sampleRows)._1
       .select("vec_id", "cell")
     val withCell = emb.join(cellOf, "vec_id")
-    val q = withCell.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cell").as("qcell"))
-    val scored = q.join(withCell,
-        col("qcell") === col("cell") && col("qid") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "cell", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
+    rankByCosine(queryRows(withCell, nQueries, col("embedding").as("qe"), col("cell").as("qcell"))
+      .join(withCell, col("qcell") === col("cell") && col("qid") =!= col("vec_id")),
+      k, Seq("qid", "cell", "rnk", "vec_id", "cos"))
   }
 
   /** Multi-probe IVF top-k: each query searches its `nprobe` NEAREST
@@ -849,21 +829,12 @@ object Similarity {
       corpusKey: Option[String] = None): DataFrame = {
     require(iters >= 2, "multi-probe IVF needs trained centroids (iters >= 2)")
     val (assignedAll, centroids) = quantizer(emb, cells, iters, corpusKey)
-    val assigned = assignedAll.select("vec_id", "cell")
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val probes = rankProbes(emb, nQueries, centroidArray(centroids), nprobe)
-    val withCell = emb.join(assigned, "vec_id")
-    val scored = probes
-      .join(broadcast(q), "qid")
+    val withCell = emb.join(assignedAll.select("vec_id", "cell"), "vec_id")
+    rankByCosine(probes
+      .join(broadcast(queryRows(emb, nQueries, col("embedding").as("qe"))), "qid")
       .join(withCell, "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cell", "pn", "cos")
-      .orderBy("qid", "rnk")
+      .filter(col("qid") =!= col("vec_id")), k, Seq("qid", "rnk", "vec_id", "cell", "pn", "cos"))
   }
 
   /** Embedding-cosine near-dup pairs above a threshold, found via
@@ -1254,11 +1225,36 @@ object Similarity {
     pqCodeRows(emb, pqTrained(emb, m, subDim, k, iters, corpusKey), subDim)
       .orderBy("sub", "vec_id")
 
+  /** Per-query ADC lookup tables (qid, sub, code, dist): the [[l2sq]]
+    * distance from each query's m subvectors (its `qe` cut into
+    * `subDim`-wide slices) to every codeword of its subspace in the
+    * (sub, cell, c) `codebooks` — nQueries × m × k rows, tiny.
+    */
+  private[operators] def pqLookup(queries: DataFrame, codebooks: DataFrame,
+      m: Int, subDim: Int): DataFrame =
+    queries.select(col("qid"),
+        posexplode(subVectors(toDouble(col("qe")), m, subDim)).as(Seq("sub", "qv")))
+      .join(codebooks, "sub")
+      .select(col("qid"), col("sub"), col("cell").as("code"), l2sq(col("qv"), col("c")).as("dist"))
+
+  /** ADC distances (qid, vec_id, adist): `codeRows` (one row per
+    * vector and subspace, carrying sub, code and vec_id) joined on
+    * `keys` to the broadcast [[pqLookup]] table, self excluded; adist
+    * is the exact DECIMAL sum of a vector's m table entries, so ranking
+    * never touches a folded double. Only ints move on the code side.
+    */
+  private[operators] def adcDistances(codeRows: DataFrame, lut: DataFrame,
+      keys: Seq[String]): DataFrame =
+    codeRows.join(broadcast(lut), keys)
+      .filter(col("qid") =!= col("vec_id"))
+      .groupBy("qid", "vec_id")
+      .agg(sum(col("dist").cast("decimal(18,6)")).as("adist"))
+
   /** Asymmetric-distance (ADC) PQ top-k: per query, a lookup table of
     * squared L2 distances from its raw subvectors to every subspace
-    * centroid (nQueries × m × k rows — tiny, broadcast), then each
-    * database vector's approximate distance is the exact DECIMAL sum of
-    * its m table entries. The corpus side of the join moves only
+    * centroid ([[pqLookup]]), then each database vector's approximate
+    * distance is the exact DECIMAL sum of its m table entries
+    * ([[adcDistances]]). The corpus side of the join moves only
     * (sub, code, vec_id) ints — never embeddings — which is the whole
     * point of PQ at scale; ranking ties break by vec_id on exact
     * decimal distances.
@@ -1267,47 +1263,24 @@ object Similarity {
       m: Int = 4, subDim: Int = 16, k: Int = 8, iters: Int = 2,
       corpusKey: Option[String] = None): DataFrame = {
     val cents = pqTrained(emb, m, subDim, k, iters, corpusKey)
-    val qsub = emb.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"),
-      posexplode(subVectors(toDouble(col("embedding")), m, subDim)).as(Seq("sub", "qv")))
-    val luts = qsub.join(cents, "sub")
-      .select(col("sub"), col("qid"), col("cell").as("code"),
-        l2sq(col("qv"), col("c")).as("dist"))
-    val scored = pqCodeRows(emb, cents, subDim).join(broadcast(luts), Seq("sub", "code"))
-      .filter(col("qid") =!= col("vec_id"))
-      .groupBy("qid", "vec_id")
-      .agg(sum(col("dist").cast("decimal(18,6)")).as("adist"))
-    val w = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= kTop)
-      .select(col("qid"), col("rnk"), col("vec_id"),
-        col("adist").cast("double").as("adc_dist"))
-      .orderBy("qid", "rnk")
+    val lut = pqLookup(queryRows(emb, nQueries, col("embedding").as("qe")), cents, m, subDim)
+    topK(adcDistances(pqCodeRows(emb, cents, subDim), lut, Seq("sub", "code"))
+      .withColumn("adc_dist", col("adist").cast("double")),
+      col("adist"), kTop, Seq("qid", "rnk", "vec_id", "adc_dist"))
   }
 
   /** Two-stage retrieval, the production ANN serving shape: cheap PQ
     * ADC candidates (top `cand` per query) re-ranked by EXACT cosine
-    * over the raw vectors to the final top `k`. Only candidates×dims
-    * floats are touched in stage two — the full corpus never leaves
-    * its int codes — and the rerank join is broadcast on the tiny
-    * query/candidate side.
+    * over the raw vectors to the final top `k` ([[rerankTopK]]). Only
+    * candidates×dims floats are touched in stage two — the full corpus
+    * never leaves its int codes — and the rerank join is broadcast on
+    * the tiny query/candidate side.
     */
   def pqRerankTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3,
       cand: Int = 10, m: Int = 4, subDim: Int = 16, kc: Int = 8,
-      iters: Int = 2, corpusKey: Option[String] = None): DataFrame = {
-    val candidates = pqAdcTopK(emb, nQueries, cand, m, subDim, kc, iters, corpusKey)
-      .select(col("qid"), col("vec_id"))
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val rer = candidates
-      .join(emb.select("vec_id", "embedding"), "vec_id")
-      .join(broadcast(q), "qid")
-      .withColumn("cos", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
+      iters: Int = 2, corpusKey: Option[String] = None): DataFrame =
+    rerankTopK(pqAdcTopK(emb, nQueries, cand, m, subDim, kc, iters, corpusKey),
+      queryRows(emb, nQueries, col("embedding").as("qe")), emb, k)
 
   /** Matryoshka-style truncated search (Kusupati et al. 2022, "MRL"):
     * cosine top-k over only the first `dims` dimensions — the cheap
@@ -1526,15 +1499,8 @@ object Similarity {
     * recall gate (cosine [[bruteForceTopK]] ranks a different metric).
     */
   def l2TopK(emb: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val scored = e.join(broadcast(q), col("qid") =!= col("vec_id"))
-      .withColumn("dist", l2sq(col("qv"), col("v")))
-    val w = Window.partitionBy("qid").orderBy(col("dist"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "dist")
-      .orderBy("qid", "rnk")
+    val e = vectors(emb)
+    topK(e.join(broadcast(queryRows(e, nQueries, col("v").as("qv"))), col("qid") =!= col("vec_id"))
+      .withColumn("dist", l2sq(col("qv"), col("v"))), col("dist"), k, Seq("qid", "rnk", "vec_id", "dist"))
   }
 }

@@ -208,7 +208,7 @@ object Sink {
     private[Sink] def encode(rows: DataFrame, subs: => DataFrame): DataFrame = rows
   }
 
-  /** Float vectors only — exact-cosine serving ([[searchIvfIndex]]). */
+  /** Float vectors only — exact-cosine serving. */
   case object Flat extends IvfCodec {
     val kind = "ivf"
     private[Sink] val columns = Seq("vec_id", "embedding", "cell")
@@ -216,7 +216,8 @@ object Sink {
 
   /** The int8 tier: per-vector max-abs codes from the ONE quantization
     * scheme ([[Similarity.sq8Codes]], shared with the in-memory tier),
-    * so stored serving ([[searchIvfSq8Index]]) cannot diverge from
+    * and stored serving ([[searchIvfIndex]]) scores them with the
+    * in-memory tier's scorer, so it cannot diverge from
     * [[Similarity.ivfSq8TopK]]. No trained artifact, so nothing to
     * drift beyond the coarse cells.
     */
@@ -230,7 +231,7 @@ object Sink {
   /** The FAISS-style compressed tier: m subspaces of `subDim` dims, `k`
     * codewords each. The codes and the raw vectors share the cell
     * files, so the ADC candidate stage and the exact rerank of
-    * [[searchIvfPqIndex]] are two column projections of the same
+    * [[searchIvfIndex]] are two column projections of the same
     * probed partitions. The codebook geometry is subspace-shaped, not
     * corpus-shaped: a sized build resizes only the coarse cells.
     */
@@ -954,7 +955,21 @@ object Sink {
   private[graft] def storedGeometry(spark: SparkSession,
       dir: String): StoredGeometry = {
     val mf = readIndexManifest(spark, dir).getOrElse(Map.empty)
-    val codec = mf.get("kind") match {
+    val codec = storedCodec(spark, dir, mf)
+    val cells = mf.get("cells").map(_.toInt).getOrElse(
+      spark.read.parquet(s"$dir/centroids")
+        .agg(countDistinct(col("cell"))).head().getLong(0).toInt)
+    StoredGeometry(codec, cells, mf.get("target_cell_size").map(_.toInt))
+  }
+
+  /** The codec of [[storedGeometry]], from the already-read manifest
+    * `mf` (empty for a legacy index): the manifest kind, or for a
+    * legacy index the artifacts and payload columns that exist. A
+    * non-IVF kind fails loudly, naming its operator family.
+    */
+  private def storedCodec(spark: SparkSession, dir: String,
+      mf: Map[String, String]): IvfCodec =
+    mf.get("kind") match {
       case Some(Flat.kind) => Flat
       case Some(Sq8.kind) => Sq8
       case Some("ivfpq") => storedPq(spark, dir, mf)
@@ -968,11 +983,6 @@ object Sink {
         else if (spark.read.parquet(s"$dir/assignment").columns.contains("q")) Sq8
         else Flat
     }
-    val cells = mf.get("cells").map(_.toInt).getOrElse(
-      spark.read.parquet(s"$dir/centroids")
-        .agg(countDistinct(col("cell"))).head().getLong(0).toInt)
-    StoredGeometry(codec, cells, mf.get("target_cell_size").map(_.toInt))
-  }
 
   /** PQ codebook geometry: manifest fields when present, else derived
     * from the stored codebooks (m = distinct subspaces, k = codewords
@@ -1560,7 +1570,7 @@ object Sink {
     * vectors live. Everything after the two grouped counts is
     * m×k-sized; the PSI carrier mirrors [[ivfAppendDrift]]. The
     * codebook geometry is read from the index, as in
-    * [[searchIvfPqIndex]].
+    * [[searchIvfIndex]].
     */
   def ivfPqCodeDrift(spark: SparkSession, batch: DataFrame, dir: String,
       threshold: Double = 0.25): DataFrame = {
@@ -1607,27 +1617,28 @@ object Sink {
       .orderBy("sub", "code")
   }
 
-  /** The probe stage every stored search shares: the nQueries query
-    * rows rank the STORED centroids ([[Similarity.rankProbes]], the
-    * ranking the in-memory multi-probe searches use) and each keeps its
-    * `nprobe` nearest cells — ≤ nQueries×nprobe rows, bounded by the
+  /** The probe stage of the stored search, for every codec: the
+    * nQueries query rows rank the STORED centroids
+    * ([[Similarity.rankProbes]], the ranking the in-memory multi-probe
+    * searches use) and each keeps its `nprobe` nearest cells — ≤ nQueries×nprobe rows, bounded by the
     * query batch, never by data, held on the driver. They serve twice:
     * as the literal probed-cell list [[readProbedCells]] turns into a
     * per-subdirectory read (Spark's dynamic partition pruning
     * degenerates to `dynamicpruningexpression(true)` on this join
     * shape, which would silently scan EVERY cell), and as the local
     * (qid, cell, pn) relation the serving join broadcasts. Returns that
-    * relation and the tombstone-masked scan of the probed cells.
+    * relation and the tombstone-masked scan of the probed cells, read
+    * with the data schema the index manifest `mf` records.
     */
   private def probeStoredCells(spark: SparkSession, emb: DataFrame, dir: String,
-      nQueries: Int, nprobe: Int): (DataFrame, DataFrame) = {
+      mf: Option[Map[String, String]], nQueries: Int, nprobe: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val probes = Similarity.rankProbes(emb, nQueries, ivfCentroids(spark, dir).centroidArray, nprobe)
       .collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue, r.getInt(2)))
       .toSeq
     (probes.toDF("qid", "cell", "pn"),
-      tombstones(spark, dir, ivfIndex).mask(readProbedCells(spark, dir, probes.map(_._2))))
+      tombstones(spark, dir, ivfIndex).mask(
+        readProbedCells(spark, dir, mf.flatMap(_.get("schema")), probes.map(_._2))))
   }
 
   /** Read ONLY the probed cell partitions of an index's assignment, as
@@ -1651,7 +1662,7 @@ object Sink {
     * output it. A legacy manifest without the field infers.
     */
   private def readProbedCells(spark: SparkSession, dir: String,
-      cells: Seq[Long]): DataFrame = {
+      schema: Option[String], cells: Seq[Long]): DataFrame = {
     val assignPath = s"$dir/assignment"
     val base = new org.apache.hadoop.fs.Path(assignPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1661,9 +1672,8 @@ object Sink {
       spark.read.parquet(assignPath).filter(lit(false))
     else {
       val reader = spark.read.option("basePath", assignPath)
-      readIndexManifest(spark, dir).flatMap(_.get("schema"))
-        .fold(reader)(ddl => reader.schema(
-          StructType.fromDDL(ddl).add("cell", inferredCellType(spark, present))))
+      schema.fold(reader)(ddl => reader.schema(
+        StructType.fromDDL(ddl).add("cell", inferredCellType(spark, present))))
         .parquet(present.map(c => new org.apache.hadoop.fs.Path(base, s"cell=$c").toString): _*)
     }
   }
@@ -1678,120 +1688,60 @@ object Sink {
     else if (cells.forall(_.isValidInt)) IntegerType
     else LongType
 
-  /** Search a stored IVF index by exact cosine over the probed cells'
-    * co-located vectors ([[probeStoredCells]]) — a probe never joins
-    * the corpus-sized embedding table; the only scan of `emb` is the
-    * nQueries-bounded query side. `nprobe` is the serving-time recall
-    * knob, the stored twin of [[Similarity.ivfMultiProbeTopK]]'s:
-    * result-identical to the in-memory multiprobe at the same nprobe
-    * (spec-proven), nprobe=1 reduces to [[Similarity.ivfTopK]].
+  /** ADC candidates per query that the stored IVF-PQ search reranks by
+    * exact cosine.
+    */
+  private val PqRerankDepth = 10
+
+  /** Search a stored IVF index of any codec, read from the index
+    * itself: the manifest the probed-cell read needs for its data
+    * schema also names the codec ([[storedCodec]]), so only the write
+    * names it. Every codec runs the one probe stage
+    * ([[probeStoredCells]]), so a probe never joins the corpus-sized
+    * embedding table (the only scan of `emb` is the nQueries-bounded
+    * query side), then scores the probed cells' co-located payload with
+    * the in-memory tier's scorer and ranker:
+    *  - [[Flat]]: exact cosine, (qid, cell, rnk, vec_id, cos) —
+    *    result-identical to [[Similarity.ivfMultiProbeTopK]] at the
+    *    same nprobe, nprobe=1 reducing to [[Similarity.ivfTopK]].
+    *  - [[Sq8]]: the int8 codes (vec_id, q, n2 — the embedding column is
+    *    never read) against the on-the-fly-quantized query codes,
+    *    (qid, rnk, vec_id, cell, pn, qcos) — result-identical to
+    *    [[Similarity.ivfSq8TopK]].
+    *  - [[Pq]]: ADC over the codes column against each query's lookup
+    *    table on the stored codebooks, then the top [[PqRerankDepth]]
+    *    per query rerank by exact cosine against the embedding column of
+    *    the same probed cells, (qid, rnk, vec_id, cos) — with every cell
+    *    probed, [[Similarity.pqRerankTopK]].
+    * `nprobe` is the serving-time recall knob.
     */
   def searchIvfIndex(spark: SparkSession, emb: DataFrame, dir: String,
       nQueries: Int = 10, k: Int = 3, nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
-    // ≤ nQueries×nprobe (qid, cell, qe) rows — THE broadcast side: the
-    // cell-partitioned index scan streams against it (hash join), so
-    // the big side never shuffles
-    val cand = probes.select("qid", "cell")
-      .join(emb.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe")), "qid")
-    val scored = assignment
-      .join(broadcast(cand), "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .withColumn("cos", Similarity.cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "cell", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
-
-  /** Two-stage search over a stored IVF-PQ index, its codebook
-    * geometry read from the index: (1) probe ([[probeStoredCells]]);
-    * (2) ADC — each query builds its m×k lookup table against the
-    * stored codebooks (broadcast both ways), and every vector in the
-    * probed cells is scored as the exact DECIMAL sum of its m table
-    * entries, reading ONLY the codes column of the pruned partitions;
-    * (3) rerank — the top `cand` per query re-score by exact cosine
-    * against the embedding column of the same pruned partitions
-    * (broadcast candidate list). The full-width embedding column is
-    * only decoded for candidates' cells.
-    */
-  def searchIvfPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
-      nQueries: Int = 10, k: Int = 3, cand: Int = 10,
-      nprobe: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val Pq(m, subDim, _) = storedPqCodec(spark, dir, "searchIvfPqIndex")
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    // per-query ADC lookup tables: nQueries × m × k rows — tiny
-    val pqc = loadPqCentroids(spark, dir)
-    val qsub = (0 until m).map { s0 =>
-      q.select(col("qid"),
-        lit(s0).as("sub"),
-        Similarity.toDouble(slice(col("qe"), s0 * subDim + 1, subDim)).as("qsv"))
-    }.reduce(_ unionByName _)
-    val lut = qsub.join(pqc, "sub")
-      .select(col("qid"), col("sub"), col("cell").as("code"),
-        Similarity.l2sq(col("qsv"), col("c")).as("dist"))
-    val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
-    // stage 2: codes-only projection of the probed cells; the ADC sum
-    // is exact DECIMAL so ranking never touches a folded double
-    val adc = assignment.select("vec_id", "codes", "cell")
-      .join(broadcast(probes.select("qid", "cell")), "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
-      .join(broadcast(lut), Seq("qid", "sub", "code"))
-      .groupBy("qid", "vec_id")
-      .agg(sum(col("dist").cast("decimal(18,6)")).as("adist"))
-    val cw = Window.partitionBy("qid").orderBy(col("adist"), col("vec_id"))
-    val candidates = adc.withColumn("crnk", row_number().over(cw))
-      .filter(col("crnk") <= cand)
-      .select("qid", "vec_id")
-    // stage 3: exact rerank from the co-located vectors, broadcast on
-    // the (nQueries × cand)-sized candidate list
-    val rer = assignment.select("vec_id", "embedding")
-      .join(broadcast(candidates.join(q, "qid")), "vec_id")
-      .withColumn("cos", Similarity.cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("vec_id"))
-    rer.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cos")
-      .orderBy("qid", "rnk")
-  }
-
-  /** Search a stored IVF-SQ8 index: the int8 codes of ONLY the probed
-    * cell partitions ([[probeStoredCells]]) score against the
-    * on-the-fly-quantized query codes — exact 64-bit integer sums
-    * under one rounded IEEE tree, the [[Similarity.ivfSq8TopK]] math
-    * verbatim, so stored serving is result-identical to the in-memory
-    * tier at the same nprobe (spec-proven; the two share one oracle).
-    * The scan projects (vec_id, q, n2) — the embedding column of the
-    * index is never read.
-    */
-  def searchIvfSq8Index(spark: SparkSession, emb: DataFrame, dir: String,
-      nQueries: Int = 10, k: Int = 3, nprobe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    requireIndexKind(spark, dir, "searchIvfSq8Index", Sq8.kind)
-    val qCodes = Similarity.sq8Codes(emb.filter(col("vec_id") < nQueries))
-      .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn2"))
-    val (probes, assignment) = probeStoredCells(spark, emb, dir, nQueries, nprobe)
-    val dotInt = aggregate(
-      zip_with(col("qq"), col("q"), (a, b) => a.cast("long") * b.cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val scored = assignment.select("vec_id", "q", "n2", "cell")
-      .join(broadcast(probes.join(qCodes, "qid")), "cell")
-      .filter(col("qid") =!= col("vec_id"))
-      .withColumn("qcos",
-        when(col("qn2") === 0L || col("n2") === 0L, lit(null).cast("double"))
-          .otherwise(round(dotInt.cast("double") /
-            (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0)))
-    val w = Window.partitionBy("qid").orderBy(desc("qcos"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
-      .orderBy("qid", "rnk")
+    val mf = readIndexManifest(spark, dir)
+    val codec = storedCodec(spark, dir, mf.getOrElse(Map.empty))
+    val (probes, assignment) = probeStoredCells(spark, emb, dir, mf, nQueries, nprobe)
+    val q = Similarity.queryRows(emb, nQueries, col("embedding").as("qe"))
+    codec match {
+      case Flat =>
+        // ≤ nQueries×nprobe (qid, cell, qe) rows — THE broadcast side:
+        // the cell-partitioned index scan streams against it (hash
+        // join), so the big side never shuffles
+        Similarity.rankByCosine(assignment
+          .join(broadcast(probes.select("qid", "cell").join(q, "qid")), "cell")
+          .filter(col("qid") =!= col("vec_id")), k, Seq("qid", "cell", "rnk", "vec_id", "cos"))
+      case Sq8 =>
+        Similarity.rankBySq8(assignment.select("vec_id", "q", "n2", "cell")
+          .join(broadcast(probes.join(Similarity.sq8Queries(emb, nQueries), "qid")), "cell")
+          .filter(col("qid") =!= col("vec_id")), k, Seq("qid", "rnk", "vec_id", "cell", "pn", "qcos"))
+      case Pq(m, subDim, _) =>
+        val codes = assignment.select("vec_id", "codes", "cell")
+          .join(broadcast(probes.select("qid", "cell")), "cell")
+          .select(col("qid"), col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
+        val adc = Similarity.adcDistances(codes,
+          Similarity.pqLookup(q, loadPqCentroids(spark, dir), m, subDim), Seq("qid", "sub", "code"))
+        Similarity.rerankTopK(
+          Similarity.topK(adc, col("adist"), PqRerankDepth, Seq("qid", "rnk", "vec_id")), q, assignment, k)
+    }
   }
 
   // ==== stored incremental-dedup text index ==========================

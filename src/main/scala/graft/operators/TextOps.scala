@@ -542,11 +542,7 @@ object TextOps {
       .join(n2, "doc_id")
       .withColumn("cos", round(col("dot").cast("double") /
         (sqrt(col("qn2").cast("double")) * sqrt(col("n2").cast("double"))), 4) + lit(0.0))
-    val w = Window.partitionBy("qid").orderBy(desc("cos"), col("doc_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "doc_id", "cos")
-      .orderBy("qid", "rnk")
+    Similarity.topK(scored, desc("cos"), k, Seq("qid", "rnk", "doc_id", "cos"), id = "doc_id")
   }
 
   /** RAKE keyphrase extraction (Rose et al. 2010, "Automatic Keyword

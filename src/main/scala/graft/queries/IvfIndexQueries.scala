@@ -526,7 +526,7 @@ object IvfIndexQueries {
       val all = emb(s, d)
       val dir = ivfPqDir
       Sink.writeIvfIndex(all, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2, corpusKey = Some(d))
-      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10)
+      Sink.searchIvfIndex(s, all, dir, 10, 3)
     },
       ivfPqStoredOracle),
     // incremental maintenance of the compressed tier: train+store the
@@ -540,7 +540,7 @@ object IvfIndexQueries {
       Sink.writeIvfIndex(all.filter(col("vec_id") < 400), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2,
         corpusKey = Some(d + "#pqbase400"))
       Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), dir)
-      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10)
+      Sink.searchIvfIndex(s, all, dir, 10, 3)
     },
       ivfPqAppendOracle),
     // the delete stage on the COMPRESSED tier: tombstoned ids are
@@ -557,7 +557,7 @@ object IvfIndexQueries {
       Sink.appendToIvfIndex(all.filter(col("vec_id") >= 400), dir)
       Sink.deleteFromIvfIndex(s, dir,
         all.filter(pmod(col("vec_id"), lit(17L)) === 3).select("vec_id"))
-      Sink.searchIvfPqIndex(s, all, dir, 10, 3, 10)
+      Sink.searchIvfIndex(s, all, dir, 10, 3)
     },
       ivfPqDeleteOracle),
     // code-level drift pre-flight for the compressed tier: per
@@ -592,7 +592,7 @@ object IvfIndexQueries {
       }
       graft.streaming.IvfStream.runAppendReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt")
-      Sink.searchIvfPqIndex(s, all, s"$dir/index", 10, 3, 10)
+      Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3)
     },
       // streamed drop-at-a-time PQ ingestion ≡ one-shot append: shares
       // the oracle verbatim (order-invariant against frozen artifacts)
@@ -622,7 +622,7 @@ object IvfIndexQueries {
       // calibration removed the hack). Retrain path: IvfAppendSpec.
       graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
-      Sink.searchIvfPqIndex(s, all, s"$dir/index", 10, 3, 10)
+      Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3)
     },
       // maintained PQ ingestion with no drifted drop ≡ one-shot append —
       // same oracle verbatim (and the cadence compaction changed nothing)
@@ -649,7 +649,7 @@ object IvfIndexQueries {
       graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
       graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
-      Sink.searchIvfSq8Index(s, all, s"$dir/index", 10, 3, nprobe = 2)
+      Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3, nprobe = 2)
     },
       ivfSq8BaseSearchOracle),
     // the sized-layout twin of the replay above — the PRODUCTION
@@ -675,7 +675,7 @@ object IvfIndexQueries {
       graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
       graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
-      Sink.searchIvfSq8Index(s, all, s"$dir/index", 10, 3, nprobe = 2)
+      Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3, nprobe = 2)
     },
       // sized-layout streaming maintain: the same append-regime identity
       // with the quantizer's k DERIVED from the base count (the sized
@@ -974,7 +974,7 @@ object IvfIndexQueries {
       val all = emb(s, d)
       val dir = ivfSq8Dir
       Sink.writeIvfIndex(all, dir, Sink.Sq8, Sink.Cells(8), 2, corpusKey = Some(d))
-      Sink.searchIvfSq8Index(s, all, dir, 10, 3, nprobe = 2)
+      Sink.searchIvfIndex(s, all, dir, 10, 3, nprobe = 2)
     },
       // stored-path serving at nprobe 2 is result-identical to the
       // in-memory composed tier (one quantization scheme, one training,
@@ -992,7 +992,7 @@ object IvfIndexQueries {
       val dir = ivfSq8SizedDir
       Sink.writeIvfIndex(all, dir, Sink.Sq8, Sink.CellSize(64), iters = 2,
         corpusKey = Some(d))
-      Sink.searchIvfSq8Index(s, all, dir, 10, 3, nprobe = 2)
+      Sink.searchIvfIndex(s, all, dir, 10, 3, nprobe = 2)
     },
       ivfSq8SizedOracle),
     // the end-to-end "retrieval stack reads the artifact" shape: the

@@ -298,7 +298,7 @@ class IvfAppendSpec extends SparkSpec {
     assert(log2.getAs[Double]("psi_coarse") > 0.25)
     assert(log2.getAs[Long]("n_after") == 40)
     assert(spark.read.parquet(s"$dir/assignment").count() == 40)
-    assert(Sink.searchIvfPqIndex(spark, base, dir, 5, 3, 10).count() == 15)
+    assert(Sink.searchIvfIndex(spark, base, dir, 5, 3).count() == 15)
     assert(!new java.io.File(dir + "__retrain").exists() &&
       !new java.io.File(dir + "__old").exists())
   }
@@ -365,7 +365,7 @@ class IvfAppendSpec extends SparkSpec {
     // the retrain rebuilt the INT8 layout (codes + norms), not the
     // float one, and the final index serves through the SQ8 path
     assert(Seq("q", "n2", "ma").forall(stored.columns.contains))
-    assert(Sink.searchIvfSq8Index(spark, base, s"$root/index", 5, 3).count() == 15)
+    assert(Sink.searchIvfIndex(spark, base, s"$root/index", 5, 3, nprobe = 2).count() == 15)
   }
 
   test("drift pre-flight: skewed batch flags retrain, balanced does not") {
@@ -438,12 +438,10 @@ class IvfAppendSpec extends SparkSpec {
       Sink.appendToIvfIndex(batch, dirText) }
     assert(e2.getMessage.contains("kind 'dedup_text'"), e2.getMessage)
     assert(!new java.io.File(s"$dirText/assignment").exists())
-    // the PQ search refuses a layout without codes
-    val dirIvf = Files.createTempDirectory("graft-kindivf").toString + "/index"
-    Sink.writeIvfIndex(base, dirIvf, Sink.Flat, Sink.Cells(2), iters = 2)
+    // and refused by the search, which reads the codec from the index
     val e3 = intercept[IllegalArgumentException] {
-      Sink.searchIvfPqIndex(spark, base, dirIvf, 5, 3, 10) }
-    assert(e3.getMessage.contains("kind 'ivf'"), e3.getMessage)
+      Sink.searchIvfIndex(spark, base, dirText, 5, 3) }
+    assert(e3.getMessage.contains("kind 'dedup_text'"), e3.getMessage)
   }
 
   test("legacy PQ index: maintenance derives the written geometry instead of defaulting") {
@@ -460,11 +458,7 @@ class IvfAppendSpec extends SparkSpec {
       // field existed) serves the same rows, with the same types,
       // through schema inference
       def served() = {
-        val df = codec match {
-          case Sink.Flat => Sink.searchIvfIndex(spark, base, dir, 5, 3, nprobe = 2)
-          case Sink.Sq8 => Sink.searchIvfSq8Index(spark, base, dir, 5, 3)
-          case _ => Sink.searchIvfPqIndex(spark, base, dir, 5, 3, 10, nprobe = 2)
-        }
+        val df = Sink.searchIvfIndex(spark, base, dir, 5, 3, nprobe = 2)
         (df.schema, df.collect().map(_.toSeq).toSeq)
       }
       val withSchema = served()
@@ -546,10 +540,10 @@ class IvfAppendSpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-pqdel").toString + "/index"
     Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
-    val before = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10).collect()
+    val before = Sink.searchIvfIndex(spark, e, dir, 10, 3).collect()
     val dead = before.map(_.getAs[Long]("vec_id")).distinct.take(3)
     Sink.deleteFromIvfIndex(spark, dir, dead.toSeq.toDF("vec_id"))
-    val after = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10).collect()
+    val after = Sink.searchIvfIndex(spark, e, dir, 10, 3).collect()
     assert(!after.exists(r => dead.contains(r.getAs[Long]("vec_id"))),
       s"tombstoned ids ${dead.toSeq} still served by the PQ path")
     assert(after.count(_.getAs[Long]("qid") == 0L) == 3,

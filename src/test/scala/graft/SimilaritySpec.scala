@@ -99,6 +99,16 @@ class SimilaritySpec extends SparkSpec {
     assert(h2 >= h1)
   }
 
+  test("multi-probe searches refuse nprobe = 0 instead of returning no rows") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    Seq[() => DataFrame](
+      () => Similarity.ivfMultiProbeTopK(e, 10, 3, 8, 2, nprobe = 0),
+      () => Similarity.ivfSq8TopK(e, 10, 3, 8, 2, nprobe = 0)).foreach { search =>
+      val ex = intercept[IllegalArgumentException](search())
+      assert(ex.getMessage.contains("nprobe must be >= 1"), ex.getMessage)
+    }
+  }
+
   test("pcaPowerTop recovers a planted dominant axis and its variance") {
     val spark2 = spark
     import spark2.implicits._

@@ -211,7 +211,7 @@ class SinkSpec extends SparkSpec {
       "array_max(codes) AS hi", "array_min(codes) AS lo").collect()
     assert(codeStats.forall(r => r.getAs[Int]("m") == 4 &&
       r.getAs[Long]("hi") < 8 && r.getAs[Long]("lo") >= 0))
-    val got = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10).collect()
+    val got = Sink.searchIvfIndex(spark, e, dir, 10, 3).collect()
     assert(got.length == 30)
     // recall gates: on the structure-free gaussian fixture nprobe=1
     // IVF-PQ with cand=10 must hold the PLAIN-PQ floor (the cell
@@ -227,6 +227,21 @@ class SinkSpec extends SparkSpec {
     assert(rIvfPq >= 0.3, s"IVF-PQ recall $rIvfPq below the PQ floor")
     assert(rIvfPq >= rPlain - 0.1,
       s"IVF-PQ recall $rIvfPq fell below corpus-wide PQ $rPlain")
+  }
+
+  test("stored IVF-PQ search probing every cell equals the in-memory PQ rerank") {
+    // both train the codebooks through pqTrained and code each vector
+    // through nearestCell, so with all 8 cells probed the stored ADC and
+    // rerank see the in-memory tier's candidates and must rank them alike
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.01")
+    val dir = Files.createTempDirectory("graft-ivfpqall").toString
+    Sink.writeIvfIndex(e, dir, Sink.Pq(4, 16, 8), Sink.Cells(8), iters = 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rnk", "vec_id", "cos").collect().map(_.toSeq).toSeq
+    val stored = rows(Sink.searchIvfIndex(spark, e, dir, 10, 3, nprobe = 8))
+    assert(stored.size == 30, s"${stored.size} rows served")
+    assert(stored == rows(graft.operators.Similarity.pqRerankTopK(e, 10, 3, 10, 4, 16, 8, 2)),
+      "stored IVF-PQ search over every cell != in-memory pqRerankTopK")
   }
 
   test("stored-index search equals in-memory multiprobe at nprobe 2 and 4") {
@@ -255,7 +270,7 @@ class SinkSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
       .collect().map(_.toSeq).toSeq
-    assert(rows(Sink.searchIvfSq8Index(spark, e, dir, 10, 3, nprobe = 2)) ==
+    assert(rows(Sink.searchIvfIndex(spark, e, dir, 10, 3, nprobe = 2)) ==
       rows(Similarity.ivfSq8TopK(e, 10, 3, 8, 2, nprobe = 2)),
       "stored SQ8 search != in-memory IVF×SQ8")
 
@@ -263,14 +278,14 @@ class SinkSpec extends SparkSpec {
     val dir2 = Files.createTempDirectory("graft-ivfsq8a").toString
     Sink.writeIvfIndex(e.filter(col("vec_id") < 250), dir2, Sink.Sq8, Sink.Cells(8), 2)
     Sink.appendToIvfIndex(e.filter(col("vec_id") >= 250), dir2)
-    val served = Sink.searchIvfSq8Index(spark, e, dir2, 10, 500, nprobe = 8)
+    val served = Sink.searchIvfIndex(spark, e, dir2, 10, 500, nprobe = 8)
       .select("vec_id").distinct().count()
     assert(served > 400, s"append path lost rows: $served ids served")
 
     // delete masks immediately; the dead id still queries
     Sink.deleteFromIvfIndex(spark, dir2, e.filter(col("vec_id") === 3)
       .select("vec_id"))
-    val post = Sink.searchIvfSq8Index(spark, e, dir2, 10, 500, nprobe = 8)
+    val post = Sink.searchIvfIndex(spark, e, dir2, 10, 500, nprobe = 8)
     assert(post.filter(col("vec_id") === 3).count() == 0,
       "tombstoned id still served as a neighbor")
     assert(post.filter(col("qid") === 3).count() > 0,
@@ -284,15 +299,14 @@ class SinkSpec extends SparkSpec {
       .collect().head
     assert(log.getAs[String]("action") == "append",
       s"no-drift batch must append, got ${log.getAs[String]("action")}")
-    val afterMaintain = Sink.searchIvfSq8Index(spark, e, dir, 10, 600, nprobe = 8)
+    val afterMaintain = Sink.searchIvfIndex(spark, e, dir, 10, 600, nprobe = 8)
       .filter(col("vec_id") >= 100000L).count()
     assert(afterMaintain > 0, "maintained batch invisible to serving")
 
-    // wrong-kind guard: the PQ search must refuse this layout
-    val ex = intercept[IllegalArgumentException] {
-      Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10)
-    }
-    assert(ex.getMessage.contains("ivfsq8"))
+    // the one search reads the codec from the index: this layout
+    // serves the SQ8 columns
+    assert(Sink.searchIvfIndex(spark, e, dir, 10, 3).columns.toSeq ==
+      Seq("qid", "rnk", "vec_id", "cell", "pn", "qcos"))
   }
 
   test("driver-side drift verdict is bit-identical to the ivfAppendDrift " +
@@ -411,8 +425,8 @@ class SinkSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("qid", "rnk", "vec_id", "cell", "pn", "qcos")
       .collect().map(_.toSeq).toSeq
-    assert(rows(Sink.searchIvfSq8Index(spark, e, dirA, 10, 3, nprobe = 2)) ==
-      rows(Sink.searchIvfSq8Index(spark, e, dirB, 10, 3, nprobe = 2)),
+    assert(rows(Sink.searchIvfIndex(spark, e, dirA, 10, 3, nprobe = 2)) ==
+      rows(Sink.searchIvfIndex(spark, e, dirB, 10, 3, nprobe = 2)),
       "sized layout must serve byte-identically to the explicit-cells twin")
     // the manifest records the RESOLVED cells — maintenance reads it back
     val mf = Sink.readIndexManifest(spark, dirA)
@@ -460,7 +474,7 @@ class SinkSpec extends SparkSpec {
     assert(mf2.exists(_.get("target_cell_size").contains(sz.toString)),
       "the retrain must re-record target_cell_size")
     // the resized index still serves
-    assert(Sink.searchIvfSq8Index(spark, e, dir, 10, 3, nprobe = 3)
+    assert(Sink.searchIvfIndex(spark, e, dir, 10, 3, nprobe = 3)
       .count() == 30)
   }
 
@@ -510,8 +524,7 @@ class SinkSpec extends SparkSpec {
     assert(mfP.exists(m => m.get("m").contains("4") &&
       m.get("subDim").contains("16") && m.get("k").contains("8")),
       "sized resize must leave the PQ codebook geometry unchanged")
-    assert(Sink.searchIvfPqIndex(spark, e, dirP, 10, 3, 10,
-      nprobe = 3).count() == 30)
+    assert(Sink.searchIvfIndex(spark, e, dirP, 10, 3, nprobe = 3).count() == 30)
   }
 
   test("searchIvfPqIndex: nprobe=2 recall holds the nprobe=1 floor") {
@@ -521,7 +534,7 @@ class SinkSpec extends SparkSpec {
     val truth = graft.operators.Similarity.bruteForceTopK(e, 10, 3).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"))).toSet
     def recall(np: Int): Double = {
-      val mine = Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10, nprobe = np)
+      val mine = Sink.searchIvfIndex(spark, e, dir, 10, 3, nprobe = np)
         .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"))).toSet
       mine.intersect(truth).size.toDouble / truth.size
     }
@@ -642,11 +655,8 @@ class SinkSpec extends SparkSpec {
     val base = e.filter(col("vec_id") < 400)
     val batch1 = e.filter(col("vec_id") >= 400 && col("vec_id") < 450)
     val batch2 = e.filter(col("vec_id") >= 450)
-    def search(codec: Sink.IvfCodec, dir: String) = codec match {
-      case Sink.Flat => Sink.searchIvfIndex(spark, e, dir, 10, 3)
-      case Sink.Sq8 => Sink.searchIvfSq8Index(spark, e, dir, 10, 3)
-      case _: Sink.Pq => Sink.searchIvfPqIndex(spark, e, dir, 10, 3, 10)
-    }
+    def search(codec: Sink.IvfCodec, dir: String) =
+      Sink.searchIvfIndex(spark, e, dir, 10, 3, nprobe = if (codec == Sink.Sq8) 2 else 1)
     // the artifact loads the append and search below start: none, since
     // the write seeded what it stored and an append never touches it
     def artifactLoads(codec: Sink.IvfCodec, dir: String): Int = jobsOf {
