@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
-  StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
+  IntegerType, LongType, StringType, StructField, StructType}
 
 /** Parquet sink operators (SURVEY.md §2.1 S5/S6) — the engine
   * equivalents of the reference's row-at-a-time insert
@@ -601,7 +601,7 @@ object Sink {
         pqCodebooks(spark, dir).pqSubs)
       .select(codec.columns.map(col): _*)
 
-  /** Hard bound on driver-side state, read in two places. (1) The
+  /** Hard bound on driver-side state, read in three places. (1) The
     * k-means training sample, read as rows × dims doubles: at or below
     * it, training collects the sample and runs Lloyd's on the driver
     * ([[DriverLloyds]]); above it, the Spark loop trains
@@ -611,14 +611,15 @@ object Sink {
     * a guarantee while the geometry itself fits the driver — in the
     * sized layout cells = ⌈N/size⌉, so a 10¹⁰-vector / size-64 index
     * is ~1.5×10⁸ cells, past what a driver map should hold. Above this
-    * bound the collects REFUSE (loud, actionable) and the maintain
-    * pre-flight falls back to ONE distributed aggregate over the
-    * assignment per drop ([[maintainIvfIndex]]'s fallback branch —
-    * bit-identical verdict, index-proportional cost). Production IVF
-    * serves ≲10⁶-10⁷ cells, so the default (2²⁴ ≈ 1.7×10⁷ entries)
-    * never bites on a sane geometry; override via the
-    * `graft.maxDriverMapEntries` system property (specs lower it to
-    * pin the fallbacks).
+    * bound the collects REFUSE (loud, actionable). (3) The coarse
+    * drift path, which needs those maps: at or below the bound the
+    * verdict is the driver-side [[drift]]; above it [[ivfAppendDrift]]
+    * returns, and [[maintainIvfIndex]] reads its verdict off, ONE
+    * distributed frame ([[distributedDrift]] — bit-identical verdict,
+    * index-proportional cost). Production IVF serves ≲10⁶-10⁷ cells,
+    * so the default (2²⁴ ≈ 1.7×10⁷ entries) never bites on a sane
+    * geometry; override via the `graft.maxDriverMapEntries` system
+    * property (specs lower it to pin the fallbacks).
     */
   private[graft] def maxDriverMapEntries: Long =
     sys.props.get("graft.maxDriverMapEntries") match {
@@ -660,11 +661,8 @@ object Sink {
     requireDriverMapFits(dir, cells, "storedCellCounts")
     cellCountCache.getOrBuild(spark, genKey(spark, s"$dir/assignment")) {
       // partition-column inference reads `cell=` path values as INT —
-      // normalize to the centroid table's LONG before collecting
-      spark.read.parquet(s"$dir/assignment")
-        .groupBy(col("cell").cast("long").as("cell"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // countsBy normalizes them to the centroid table's LONG
+      countsBy(spark.read.parquet(s"$dir/assignment"), col("cell"))
     }
   }
 
@@ -690,140 +688,109 @@ object Sink {
     (a.keySet ++ b.keySet).iterator
       .map(c => c -> (a.getOrElse(c, 0L) + b.getOrElse(c, 0L))).toMap
 
-  /** Driver-side twin of [[ivfAppendDrift]]'s verdict — the maintain
-    * loop's per-micro-batch decision without the cells-sized DataFrame
-    * chain (multi-join + window + broadcast = a dozen tiny driver jobs
-    * per drop, the replay storm's fixed cost). Same smoothed-PSI
-    * arithmetic on the SAME operands: Spark divides two longs by
-    * casting both to double, `round(x, n)` on a double is
-    * BigDecimal.valueOf(x).setScale(n, HALF_UP) (the Catalyst Round
-    * kernel), the term sum is an exact scale-8 decimal sum (fold-order
-    * free — iteration order can't move it), and `log` is Math.log on
-    * the same JVM — so the verdict is BIT-IDENTICAL to the DataFrame
-    * form (spec-pinned, and every maintain-log oracle re-verifies it).
-    * Returns (psi, psi_null, retrain_due).
+  /** Per-key row counts of `df` grouped by `key` (cast to long) — one
+    * collected job. Batch- or index-cells-sized.
     */
-  private[graft] def driftVerdictDriverSide(gridCells: Seq[Long],
-      stored: Map[Long, Long], incoming: Map[Long, Long],
-      threshold: Double): (Double, Double, Boolean) = {
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    val nCells = gridCells.size.toLong
-    val tS = gridCells.iterator.map(stored.getOrElse(_, 0L)).sum
-    val tN = gridCells.iterator.map(incoming.getOrElse(_, 0L)).sum
-    var sum = JBD.ZERO
-    gridCells.foreach { c =>
-      val nS = stored.getOrElse(c, 0L)
-      val nN = incoming.getOrElse(c, 0L)
-      val pS = (nS + 1L).toDouble / (tS + nCells).toDouble
-      val pN = (nN + 1L).toDouble / (tN + nCells).toDouble
-      val term = (pN - pS) * math.log(pN / pS)
-      sum = sum.add(JBD.valueOf(term).setScale(8, RoundingMode.HALF_UP))
-    }
-    psiFromTermSum(sum, nCells, tS, tN, threshold)
+  private def countsBy(df: DataFrame, key: Column): Map[Long, Long] =
+    df.groupBy(key.cast("long")).agg(count(lit(1)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** One drift key's smoothed PSI term, unrounded: the key's stored and
+    * incoming shares, each add-one smoothed over the grid's `nKeys`
+    * keys, divided as Spark divides two longs (both cast to double).
+    * `StrictMath.log` is the function Catalyst's `Log` evaluates, so
+    * the term is bit-identical to the distributed frame's before any
+    * rounding (spec-pinned over random counts).
+    */
+  private[graft] def psiTerm(nS: Long, nN: Long, tS: Long, tN: Long,
+      nKeys: Long): Double = {
+    val pS = (nS + 1L).toDouble / (tS + nKeys).toDouble
+    val pN = (nN + 1L).toDouble / (tN + nKeys).toDouble
+    (pN - pS) * StrictMath.log(pN / pS)
   }
 
-  /** The verdict's FINAL arithmetic, factored so the driver-map path
-    * above and the distributed fallback below share it verbatim: input
-    * is the exact scale-8 decimal term sum plus the three totals —
-    * identical JBD roundings either way, so the two paths cannot
-    * diverge by construction.
+  /** A drift verdict over one grid: per key (key, n_stored, n_new,
+    * psi_term) in grid order, the smoothed PSI, its null floor and the
+    * retrain flag.
     */
-  private def psiFromTermSum(sum: java.math.BigDecimal, nCells: Long,
-      tS: Long, tN: Long,
-      threshold: Double): (Double, Double, Boolean) = {
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    val psi = JBD.valueOf(sum.doubleValue)
-      .setScale(6, RoundingMode.HALF_UP).doubleValue
-    val psiNull = JBD.valueOf((nCells - 1L).toDouble *
-        (1.0 / math.max(tN, 1L).toDouble + 1.0 / math.max(tS, 1L).toDouble))
-      .setScale(6, RoundingMode.HALF_UP).doubleValue
-    (psi, psiNull, psi > threshold + psiNull)
+  private[graft] final case class Drift(keys: Seq[(Long, Long, Long, Double)],
+      psi: Double, psiNull: Double, due: Boolean) {
+    def tStored: Long = keys.iterator.map(_._2).sum
   }
 
-  /** The maintain pre-flight ABOVE [[maxDriverMapEntries]]: one
-    * distributed aggregate over the stored assignment — the same
-    * grid-left-join + smoothed-term chain as [[ivfAppendDrift]],
-    * reduced to ONE collected row (term sum as an exact scale-8
-    * decimal, plus the three totals), finished with the shared
-    * [[psiFromTermSum]]. Verdict is bit-identical to the driver-map
-    * path (spec-pinned); cost is index-proportional per drop, which is
-    * exactly the trade the bound exists to make.
-    * Returns (psi, retrain_due, t_stored_physical).
-    */
-  private def driftVerdictDistributed(spark: SparkSession,
-      cent: DataFrame, assignPath: String, incoming: Map[Long, Long],
-      threshold: Double): (Double, Boolean, Long) = {
-    val spark2 = spark
-    import spark2.implicits._
-    val stored = spark.read.parquet(assignPath)
-      .groupBy(col("cell").cast("long").as("cell"))
-      .agg(count(lit(1)).as("n_stored"))
-    val inc = incoming.toSeq.toDF("cell", "n_new")
-    val cells = cent.select("cell")
-      .join(stored, Seq("cell"), "left")
-      .join(broadcast(inc), Seq("cell"), "left")
-      .withColumn("n_stored", coalesce(col("n_stored"), lit(0L)))
-      .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
-    val totals = cells.agg(
-      count(lit(1)).as("n_cells"),
-      sum("n_stored").as("t_stored"), sum("n_new").as("t_new"))
-    val pS = (col("n_stored") + lit(1)) / (col("t_stored") + col("n_cells"))
-    val pN = (col("n_new") + lit(1)) / (col("t_new") + col("n_cells"))
-    val row = cells.crossJoin(broadcast(totals))
-      .withColumn("term",
-        round((pN - pS) * log(pN / pS), 8).cast("decimal(18,8)"))
-      .agg(sum("term").as("s"), max("n_cells").as("n_cells"),
-        max("t_stored").as("t_stored"), max("t_new").as("t_new"))
-      .head()
-    val termSum = Option(row.getDecimal(0))
-      .map(_.setScale(8)).getOrElse(java.math.BigDecimal.ZERO)
-    val (psi, _, due) = psiFromTermSum(termSum,
-      row.getLong(1), row.getLong(2), row.getLong(3), threshold)
-    (psi, due, row.getLong(2))
-  }
-
-  /** Pre-flight drift check for [[appendToIvfIndex]]: per cell, the
-    * stored population vs the incoming batch's would-be population
-    * (assigned with the STORED centroids, no retrain), a smoothed PSI
-    * between the two cell-share distributions, and a retrain_due flag.
-    * Everything is cells-sized after the two grouped counts — the
-    * windows and the one-row total joins run over ≤ cells rows.
+  /** THE drift verdict, on the driver: the stored and incoming
+    * populations of every grid key (a cell, or one subspace's PQ codes)
+    * compared by a smoothed PSI. Keys off the grid are ignored.
     *
     * The verdict is NULL-CALIBRATED: a finite batch drawn from the
     * exact stored distribution still reads a nonzero smoothed PSI —
-    * its expectation is ≈ (cells − 1)·(1/t_new + 1/t_stored) (the
-    * chi-square-style null floor), which DOMINATES when cells ≫ batch
+    * its expectation is ≈ (keys − 1)·(1/t_new + 1/t_stored) (the
+    * chi-square-style null floor), which DOMINATES when keys ≫ batch
     * (measured: a same-distribution 2020-vector batch against an
     * 800-cell ×100 index reads PSI ≈ 0.4 with NO drift — the raw
     * `psi > threshold` rule tripped a spurious 19-minute full retrain;
     * at ×10 the floor predicts 0.043 and the batch read 0.034). The
-    * flag therefore fires on `psi > threshold + psi_null`, with
-    * `psi_null` emitted as a column so the calibration is auditable.
+    * flag therefore fires on `psi > threshold + psi_null`.
     *
-    * PSI carrier mirrors [[Corpus.sourceDrift]]: per-cell term rounded
-    * to an 8dp DECIMAL so the sum is fold-order free, total rounded 6.
-    * The stored side is the generation-cached driver map when the
-    * geometry fits [[maxDriverMapEntries]], the raw distributed
-    * aggregate above it — so this works at ANY cell count.
+    * PSI carrier mirrors [[Corpus.sourceDrift]]: each [[psiTerm]] rounded
+    * HALF_UP to an 8dp decimal (what Catalyst's `round` does to a
+    * double), an exact decimal sum (fold-order free), `psi` and
+    * `psi_null` rounded to 6dp — the arithmetic of [[distributedDrift]]
+    * operation for operation, so the two agree bit for bit.
     */
-  def ivfAppendDrift(spark: SparkSession, batch: DataFrame, dir: String,
-      threshold: Double = 0.25): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark2 = spark
-    import spark2.implicits._
-    val cent = loadIvfCentroids(spark, dir)
-    val geomCells = storedGeometry(spark, dir).cells
-    val stored =
-      if (geomCells <= maxDriverMapEntries)
-        storedCellCounts(spark, dir, geomCells).toSeq.toDF("cell", "n_stored")
-      else spark.read.parquet(s"$dir/assignment")
-        .groupBy(col("cell").cast("long").as("cell"))
-        .agg(count(lit(1)).as("n_stored"))
-    val incoming = Similarity.assignWithCentroids(batch, cent)
-      .groupBy("cell").agg(count(lit(1)).as("n_new"))
-    val cells = cent.select("cell")
+  private[graft] def drift(grid: Seq[Long], stored: Map[Long, Long],
+      incoming: Map[Long, Long], threshold: Double): Drift = {
+    import java.math.{BigDecimal => JBD, RoundingMode}
+    def round6(x: Double) = JBD.valueOf(x).setScale(6, RoundingMode.HALF_UP).doubleValue
+    val counts = grid.map(k => (k, stored.getOrElse(k, 0L), incoming.getOrElse(k, 0L)))
+    val nKeys = grid.size.toLong
+    val tS = counts.iterator.map(_._2).sum
+    val tN = counts.iterator.map(_._3).sum
+    val terms = counts.map { case (_, nS, nN) =>
+      JBD.valueOf(psiTerm(nS, nN, tS, tN, nKeys)).setScale(8, RoundingMode.HALF_UP)
+    }
+    val psi = round6(terms.foldLeft(JBD.ZERO)(_ add _).doubleValue)
+    val psiNull = round6((nKeys - 1L).toDouble *
+      (1.0 / math.max(tN, 1L).toDouble + 1.0 / math.max(tS, 1L).toDouble))
+    Drift(counts.zip(terms).map { case ((k, nS, nN), t) => (k, nS, nN, round6(t.doubleValue)) },
+      psi, psiNull, psi > threshold + psiNull)
+  }
+
+  /** Verdicts as the drift pre-flights' local relation: `keyFields`
+    * (the last one names the grid key), then n_stored, n_new,
+    * psi_term, psi, psi_null, retrain_due — one row per grid key, each
+    * verdict's rows prefixed with its key values.
+    */
+  private def driftRelation(spark: SparkSession, keyFields: Seq[StructField],
+      verdicts: Seq[(Seq[Any], Drift)]): DataFrame =
+    Similarity.localRelation(spark,
+      verdicts.flatMap { case (prefix, d) =>
+        d.keys.map { case (k, nS, nN, t) =>
+          Row.fromSeq(prefix ++ Seq(k, nS, nN, t, d.psi, d.psiNull, d.due))
+        }
+      }.toArray,
+      StructType(keyFields ++ Seq(StructField("n_stored", LongType, nullable = false),
+        StructField("n_new", LongType, nullable = false)) ++
+        Seq("psi_term", "psi", "psi_null").map(StructField(_, DoubleType)) :+
+        StructField("retrain_due", BooleanType)))
+
+  /** The coarse drift verdict as ONE distributed frame, for an index
+    * whose cells exceed [[maxDriverMapEntries]]: the centroid grid
+    * left-joins the stored assignment's per-cell counts and the
+    * batch's, and the totals and the term sum join back as one-row
+    * broadcasts. The arithmetic of [[drift]], in Catalyst; cost is
+    * index-proportional, exactly the trade the bound exists to make.
+    * Columns: [[ivfAppendDrift]]'s, plus t_stored.
+    */
+  private def distributedDrift(spark: SparkSession, dir: String,
+      incoming: Map[Long, Long], threshold: Double): DataFrame = {
+    import spark.implicits._
+    val stored = spark.read.parquet(s"$dir/assignment")
+      .groupBy(col("cell").cast("long").as("cell"))
+      .agg(count(lit(1)).as("n_stored"))
+    val cells = loadIvfCentroids(spark, dir).select("cell")
       .join(stored, Seq("cell"), "left")
-      .join(incoming, Seq("cell"), "left")
+      .join(broadcast(incoming.toSeq.toDF("cell", "n_new")), Seq("cell"), "left")
       .withColumn("n_stored", coalesce(col("n_stored"), lit(0L)))
       .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
     val totals = cells.agg(
@@ -831,20 +798,43 @@ object Sink {
       sum("n_stored").as("t_stored"), sum("n_new").as("t_new"))
     val pS = (col("n_stored") + lit(1)) / (col("t_stored") + col("n_cells"))
     val pN = (col("n_new") + lit(1)) / (col("t_new") + col("n_cells"))
-    val wAll = Window.partitionBy() // cells-sized frame only
-    cells.crossJoin(broadcast(totals))
-      .withColumn("term",
-        round((pN - pS) * log(pN / pS), 8).cast("decimal(18,8)"))
-      .withColumn("psi", round(sum("term").over(wAll).cast("double"), 6))
-      .withColumn("psi_term", round(col("term").cast("double"), 6))
-      .withColumn("psi_null", round(
-        (col("n_cells") - 1).cast("double") *
+    val terms = cells.crossJoin(broadcast(totals))
+      .withColumn("term", round((pN - pS) * log(pN / pS), 8).cast("decimal(18,8)"))
+    terms.crossJoin(broadcast(terms.agg(sum("term").as("term_sum"))))
+      .select(col("cell"), col("n_stored"), col("n_new"),
+        round(col("term").cast("double"), 6).as("psi_term"),
+        round(col("term_sum").cast("double"), 6).as("psi"),
+        round((col("n_cells") - 1).cast("double") *
           (lit(1.0) / greatest(col("t_new"), lit(1L)) +
-            lit(1.0) / greatest(col("t_stored"), lit(1L))), 6))
+            lit(1.0) / greatest(col("t_stored"), lit(1L))), 6).as("psi_null"),
+        col("t_stored"))
       .withColumn("retrain_due", col("psi") > lit(threshold) + col("psi_null"))
-      .select("cell", "n_stored", "n_new", "psi_term", "psi", "psi_null",
-        "retrain_due")
-      .orderBy("cell")
+  }
+
+  /** Pre-flight drift check for [[appendToIvfIndex]]: per cell, the
+    * stored population vs the incoming batch's would-be population
+    * (deduped as an append dedupes it, assigned with the STORED
+    * centroids, no retrain), the smoothed PSI between the two
+    * cell-share distributions ([[drift]]) and the retrain_due flag,
+    * with `psi_null` emitted so the calibration is auditable. Ordered
+    * by cell; computed when called.
+    *
+    * The batch's counts cost one collected job; the stored counts and
+    * the grid are generation-cached driver maps, and the result is a
+    * local relation. Above [[maxDriverMapEntries]] cells the result is
+    * [[distributedDrift]]'s frame instead — so this works at ANY cell
+    * count.
+    */
+  def ivfAppendDrift(spark: SparkSession, batch: DataFrame, dir: String,
+      threshold: Double = 0.25): DataFrame = {
+    val cells = storedGeometry(spark, dir).cells
+    val incoming = countsBy(
+      withNearestCell(dedupBatch(batch), ivfCentroids(spark, dir).centroidArray), col("cell"))
+    if (cells > maxDriverMapEntries)
+      distributedDrift(spark, dir, incoming, threshold).drop("t_stored").orderBy("cell")
+    else driftRelation(spark, Seq(StructField("cell", LongType)), Seq(Nil ->
+      drift(centroidCellIds(spark, dir, cells), storedCellCounts(spark, dir, cells),
+        incoming, threshold)))
   }
 
   /** Reassemble the stored PQ codebooks: (sub, cell, c: array<double>)
@@ -1104,9 +1094,8 @@ object Sink {
   /** One deterministic row per vec_id: min embedding (arrays are
     * orderable) — a map-side-combinable aggregate over the batch, so
     * the dedup is batch-proportional. Keeps the appended rows, the
-    * drift pre-flight's counts (already per-id via the assignment
-    * window), and the decision log's n_batch/n_after all consistent
-    * when a batch carries a re-delivered vec_id.
+    * drift pre-flights' counts and the decision log's n_batch/n_after
+    * all consistent when a batch carries a re-delivered vec_id.
     */
   private def dedupBatch(newEmb: DataFrame): DataFrame =
     newEmb.select("vec_id", "embedding")
@@ -1381,28 +1370,22 @@ object Sink {
     val uniq = rows.select("vec_id", "embedding")
     // (incomingMap is BATCH-cells-sized — bounded by the micro-batch,
     // never the index — so it is collected on both branches below)
-    val incomingMap = rows.groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // DRIVER-SIDE drift verdict: the stored per-cell counts and the
-    // centroid grid are generation-cached driver maps, so the whole
-    // pre-flight costs ONE batch pass instead of the cells-sized
-    // DataFrame chain. GEOMETRY GUARD: the maps hold one entry per
-    // cell, so above maxDriverMapEntries the pre-flight takes the
-    // distributed branch — one aggregate over the assignment per drop
-    // (bit-identical verdict via the shared psiFromTermSum) and no
-    // generation seeding (there is no map to seed).
+    val incomingMap = countsBy(rows, col("cell"))
+    // the coarse verdict is the driver-side `drift` over the
+    // generation-cached grid and stored counts: ONE batch pass per
+    // drop. GEOMETRY GUARD: above maxDriverMapEntries cells there are
+    // no maps, so the verdict is read off `distributedDrift`'s frame
+    // — one aggregate over the assignment per drop — and nothing is
+    // seeded
     val (psi, coarseDue, tStoredPhys, storedMapOpt) =
       if (g.cells <= maxDriverMapEntries) {
-        val gridCells = centroidCellIds(spark, dir, g.cells)
         val storedMap = storedCellCounts(spark, dir, g.cells)
-        val (p, _, d) =
-          driftVerdictDriverSide(gridCells, storedMap, incomingMap, threshold)
-        (p, d, gridCells.iterator.map(storedMap.getOrElse(_, 0L)).sum,
-          Some(storedMap))
+        val d = drift(centroidCellIds(spark, dir, g.cells), storedMap, incomingMap, threshold)
+        (d.psi, d.due, d.tStored, Some(storedMap))
       } else {
-        val (p, d, tS) = driftVerdictDistributed(spark,
-          loadIvfCentroids(spark, dir), assignPath, incomingMap, threshold)
-        (p, d, tS, None)
+        val r = distributedDrift(spark, dir, incomingMap, threshold)
+          .select("psi", "retrain_due", "t_stored").head()
+        (r.getDouble(0), r.getBoolean(1), r.getLong(2), None)
       }
     val code = g.codec match {
       case pq: Pq => Some(pqCodeVerdict(spark, dir, rows, pq.m, threshold))
@@ -1496,36 +1479,41 @@ object Sink {
     else log.drop("psi_code_max")
   }
 
-  /** The PQ code tripwire over one maintained drop: max per-subspace
-    * PSI, whether any subspace is due, and the two count maps the
-    * post-append seed adds up.
+  /** The PQ code tripwire over one drop: one [[drift]] verdict per
+    * subspace, and the two count maps the post-append seed adds up.
     */
-  private final case class CodeVerdict(psiMax: Double, due: Boolean,
-      stored: Map[(Int, Long), Long], incoming: Map[(Int, Long), Long])
+  private final case class CodeVerdict(subs: Seq[Drift],
+      stored: Map[(Int, Long), Long], incoming: Map[(Int, Long), Long]) {
+    def psiMax: Double = subs.map(_.psi).max
+    def due: Boolean = subs.exists(_.due)
+  }
 
-  /** DRIVER-SIDE code verdict (the coarse verdict's discipline): stored
-    * per-(sub, code) counts and the codebook grid are generation-
-    * cached maps; the batch's codes (already encoded in `rows`) cost
-    * ONE collected job. The per-sub PSI is [[driftVerdictDriverSide]]
-    * verbatim with the sub's code set as the grid (k_sub plays
-    * n_cells) — bit-identical to [[ivfPqCodeDrift]]'s window form.
+  /** Per-(subspace, code) row counts of a `codes` column — one
+    * collected job, m×k-sized.
     */
-  private def pqCodeVerdict(spark: SparkSession, dir: String, rows: DataFrame,
+  private def codeCounts(coded: DataFrame): Map[(Int, Long), Long] =
+    coded.select(posexplode(col("codes")).as(Seq("sub", "code")))
+      .groupBy("sub", "code").agg(count(lit(1)))
+      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+
+  /** The code verdict of a batch already encoded against the STORED
+    * codebooks (`coded` carries `codes`): the batch's code counts cost
+    * ONE collected job, the stored counts and the codebook grid are
+    * generation-cached maps, and each subspace is one [[drift]] call
+    * with the sub's code set as the grid (k_sub plays n_cells), so the
+    * null floor is calibrated per sub.
+    */
+  private def pqCodeVerdict(spark: SparkSession, dir: String, coded: DataFrame,
       m: Int, threshold: Double): CodeVerdict = {
     val codeGrid = pqCodeGrid(spark, dir)
     val stored = storedCodeCounts(spark, dir)
-    val incoming = rows.select(posexplode(col("codes")).as(Seq("sub", "code")))
-      .groupBy("sub", "code").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val subVerdicts = (0 until m).map { s0 =>
-      driftVerdictDriverSide(codeGrid.getOrElse(s0, Seq.empty),
-        stored.collect { case ((s, c), n) if s == s0 => c -> n },
-        incoming.collect { case ((s, c), n) if s == s0 => c -> n },
+    val incoming = codeCounts(coded)
+    def ofSub(counts: Map[(Int, Long), Long], s0: Int) =
+      counts.collect { case ((s, c), n) if s == s0 => c -> n }
+    CodeVerdict((0 until m).map { s0 =>
+      drift(codeGrid.getOrElse(s0, Seq.empty), ofSub(stored, s0), ofSub(incoming, s0),
         threshold)
-    }
-    // null-calibrated per sub
-    CodeVerdict(subVerdicts.map(_._1).max, subVerdicts.exists(_._3),
-      stored, incoming)
+    }, stored, incoming)
   }
 
   /** [[cellCountCache]]'s compressed-tier sibling: per-(subspace, code)
@@ -1539,10 +1527,7 @@ object Sink {
   private[graft] def storedCodeCounts(spark: SparkSession,
       dir: String): Map[(Int, Long), Long] =
     codeCountCache.getOrBuild(spark, genKey(spark, s"$dir/assignment")) {
-      spark.read.parquet(s"$dir/assignment")
-        .select(posexplode(col("codes")).as(Seq("sub", "code")))
-        .groupBy("sub", "code").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+      codeCounts(spark.read.parquet(s"$dir/assignment"))
     }
 
   /** Per-subspace codebook grids (sub → its code ids), cached per
@@ -1562,59 +1547,23 @@ object Sink {
   /** Code-level drift pre-flight for a PQ [[appendToIvfIndex]] — the
     * compressed-tier sibling of [[ivfAppendDrift]]: per (subspace,
     * code), the stored population vs the incoming batch's would-be
-    * population (encoded with the STORED codebooks, no retrain), a
-    * smoothed PSI per subspace, and a per-subspace retrain_due flag.
+    * population (deduped as an append dedupes it, encoded with the
+    * STORED codebooks, no retrain), a smoothed PSI per subspace, and a
+    * per-subspace retrain_due flag — [[pqCodeVerdict]], the maintain
+    * path's verdict, as a local relation ordered by (sub, code).
     * Catches subvector-distribution shift that leaves the coarse
     * cells balanced (the coarse PSI would stay quiet) but degrades
     * ADC quality — the codebook no longer covers where the new
-    * vectors live. Everything after the two grouped counts is
-    * m×k-sized; the PSI carrier mirrors [[ivfAppendDrift]]. The
-    * codebook geometry is read from the index, as in
+    * vectors live. The codebook geometry is read from the index, as in
     * [[searchIvfIndex]].
     */
   def ivfPqCodeDrift(spark: SparkSession, batch: DataFrame, dir: String,
       threshold: Double = 0.25): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark2 = spark
-    import spark2.implicits._
-    val Pq(_, subDim, _) = storedPqCodec(spark, dir, "ivfPqCodeDrift")
-    val pqc = pqCodebooks(spark, dir)
-    val stored = storedCodeCounts(spark, dir).toSeq
-      .map { case ((s, c), n) => (s, c, n) }
-      .toDF("sub", "code", "n_stored")
-    // one row per vec_id (a re-delivered id counts once, as in the
-    // maintain path), coded against the STORED codebooks
-    val incoming = dedupBatch(batch).crossJoin(broadcast(pqc.pqSubs))
-      .select(posexplode(Similarity.pqCodesColumn(subDim)).as(Seq("sub", "code")))
-      .groupBy("sub", "code").agg(count(lit(1)).as("n_new"))
-    val grid = pqc.rows.select(col("sub"), col("cell").as("code"))
-    val cells = grid
-      .join(stored, Seq("sub", "code"), "left")
-      .join(incoming, Seq("sub", "code"), "left")
-      .withColumn("n_stored", coalesce(col("n_stored"), lit(0L)))
-      .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
-    val wSub = Window.partitionBy("sub") // m×k-sized frame only
-    val pS = (col("n_stored") + lit(1)) / (col("t_stored") + col("k_sub"))
-    val pN = (col("n_new") + lit(1)) / (col("t_new") + col("k_sub"))
-    cells
-      .withColumn("k_sub", count(lit(1)).over(wSub))
-      .withColumn("t_stored", sum("n_stored").over(wSub))
-      .withColumn("t_new", sum("n_new").over(wSub))
-      .withColumn("term",
-        round((pN - pS) * log(pN / pS), 8).cast("decimal(18,8)"))
-      .withColumn("psi", round(sum("term").over(wSub).cast("double"), 6))
-      .withColumn("psi_term", round(col("term").cast("double"), 6))
-      // null-calibrated per subspace (the ivfAppendDrift rule): a
-      // small batch against k codes reads (k−1)(1/t_new + 1/t_stored)
-      // of smoothed PSI with no drift at all
-      .withColumn("psi_null", round(
-        (col("k_sub") - 1).cast("double") *
-          (lit(1.0) / greatest(col("t_new"), lit(1L)) +
-            lit(1.0) / greatest(col("t_stored"), lit(1L))), 6))
-      .withColumn("retrain_due", col("psi") > lit(threshold) + col("psi_null"))
-      .select("sub", "code", "n_stored", "n_new", "psi_term", "psi",
-        "psi_null", "retrain_due")
-      .orderBy("sub", "code")
+    val pq = storedPqCodec(spark, dir, "ivfPqCodeDrift")
+    val v = pqCodeVerdict(spark, dir,
+      pq.encode(dedupBatch(batch), pqCodebooks(spark, dir).pqSubs), pq.m, threshold)
+    driftRelation(spark, Seq(StructField("sub", IntegerType), StructField("code", LongType)),
+      v.subs.zipWithIndex.map { case (d, s) => Seq(s) -> d })
   }
 
   /** The probe stage of the stored search, for every codec: the

@@ -317,19 +317,29 @@ class SinkSpec extends SparkSpec {
     val cent = Sink.loadIvfCentroids(spark, dir)
     val grid = cent.select("cell").collect().map(_.getLong(0)).toSeq.sorted
     val storedMap = Sink.storedCellCounts(spark, dir, 8)
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
     def check(batch: org.apache.spark.sql.DataFrame, thr: Double): Unit = {
-      val df = Sink.ivfAppendDrift(spark, batch, dir, thr)
-        .select("psi", "psi_null", "retrain_due").head()
+      // under the driver-map bound ivfAppendDrift IS the driver core:
+      // lower the bound so its DataFrame side is the distributed frame
+      val prev = sys.props.get("graft.maxDriverMapEntries")
+      val df =
+        try {
+          sys.props("graft.maxDriverMapEntries") = "1"
+          Sink.ivfAppendDrift(spark, batch, dir, thr).collect()
+        } finally prev match {
+          case Some(v) => sys.props("graft.maxDriverMapEntries") = v
+          case None => sys.props.remove("graft.maxDriverMapEntries")
+        }
       val incoming = graft.operators.Similarity.assignWithCentroids(batch, cent)
         .groupBy("cell").count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val (psi, psiNull, due) =
-        Sink.driftVerdictDriverSide(grid, storedMap, incoming, thr)
-      assert(java.lang.Double.doubleToLongBits(psi) ==
-        java.lang.Double.doubleToLongBits(df.getDouble(0)), "psi differs")
-      assert(java.lang.Double.doubleToLongBits(psiNull) ==
-        java.lang.Double.doubleToLongBits(df.getDouble(1)), "psi_null differs")
-      assert(due == df.getBoolean(2), "verdict differs")
+      val d = Sink.drift(grid, storedMap, incoming, thr)
+      assert(bits(d.psi) == bits(df.head.getAs[Double]("psi")), "psi differs")
+      assert(bits(d.psiNull) == bits(df.head.getAs[Double]("psi_null")), "psi_null differs")
+      assert(df.forall(_.getAs[Boolean]("retrain_due") == d.due), "verdict differs")
+      assert(df.map(r => (r.getAs[Long]("cell"), r.getAs[Long]("n_stored"),
+        r.getAs[Long]("n_new"), bits(r.getAs[Double]("psi_term")))).toSeq ==
+        d.keys.map { case (c, nS, nN, t) => (c, nS, nN, bits(t)) }, "per-cell rows differ")
     }
     // same-distribution batch (low PSI) and a one-cell skewed batch
     // (high PSI) at two thresholds — both branches of the verdict
@@ -338,6 +348,41 @@ class SinkSpec extends SparkSpec {
       .limit(40).select(col("vec_id"), col("embedding"))
     check(skew, 0.25)
     check(skew, 0.0001)
+  }
+
+  test("the driver-side PSI term is bit-identical to Spark's evaluated term, before rounding") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    val tuples = Seq.fill(4000) {
+      val nCells = 1L + rnd.nextInt(2000)
+      val tS = rnd.nextInt(1000000).toLong
+      val tN = rnd.nextInt(5000).toLong
+      (rnd.nextLong(tS + 1), rnd.nextLong(tN + 1), tS, tN, nCells)
+    }
+    val pS = (col("n_stored") + lit(1)) / (col("t_stored") + col("n_cells"))
+    val pN = (col("n_new") + lit(1)) / (col("t_new") + col("n_cells"))
+    val expected = tuples.map { case (nS, nN, tS, tN, k) =>
+      java.lang.Double.doubleToLongBits(Sink.psiTerm(nS, nN, tS, tN, k))
+    }
+    // the optimizer folds a projection over a local relation on the
+    // driver (interpreted Log); with that rule off the term runs in
+    // generated code — both must match the core
+    val fold = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    Seq(false, true).foreach { codegen =>
+      val prev = spark.conf.getOption("spark.sql.optimizer.excludedRules")
+      try {
+        if (codegen) spark.conf.set("spark.sql.optimizer.excludedRules", fold)
+        val got = tuples.toDF("n_stored", "n_new", "t_stored", "t_new", "n_cells")
+          .select((pN - pS) * log(pN / pS)).collect()
+          .map(r => java.lang.Double.doubleToLongBits(r.getDouble(0))).toSeq
+        val differing = got.zip(expected).count { case (a, b) => a != b }
+        assert(differing == 0, s"$differing of ${tuples.size} terms differ " +
+          s"(${if (codegen) "generated code" else "interpreted"})")
+      } finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.optimizer.excludedRules", v)
+        case None => spark.conf.unset("spark.sql.optimizer.excludedRules")
+      }
+    }
   }
 
   test("maxDriverMapEntries: malformed override is a loud config error, " +
@@ -712,6 +757,28 @@ class SinkSpec extends SparkSpec {
     assert(derived == trained, "the cached centroids must give the freshly trained rows")
     assert(derivedJobs < retrainJobs,
       s"deriving the assignment ran $derivedJobs Spark jobs, a retrain $retrainJobs")
+  }
+
+  test("job budget: the drift pre-flights stay within their Spark job counts, cold and warm") {
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val base = e.filter(col("vec_id") < 400)
+    val batch = e.filter(col("vec_id") >= 400)
+    // (cold, warm) for a collect of each pre-flight (12 and 9 each when
+    // the verdict was a DataFrame chain): the first call scans the
+    // stored counts once for the index generation, every call counts
+    // the deduped batch in one collected pass, and the verdict is a
+    // local relation whose collect runs no job
+    Seq[(Sink.IvfCodec, (String => Unit), (Int, Int))](
+      (Sink.Flat, dir => Sink.ivfAppendDrift(spark, batch, dir).collect(), (7, 4)),
+      (Sink.Pq(4, 16, 8), dir => Sink.ivfPqCodeDrift(spark, batch, dir).collect(), (7, 4)))
+      .foreach { case (codec, preflight, (coldMax, warmMax)) =>
+        val dir = Files.createTempDirectory("graft-driftbudget").toString
+        Sink.writeIvfIndex(base, dir, codec, Sink.Cells(8), iters = 2)
+        val cold = jobsOf(preflight(dir))
+        val warm = jobsOf(preflight(dir))
+        assert(cold <= coldMax, s"${codec.kind} drift: first call ran $cold Spark jobs, budget $coldMax")
+        assert(warm <= warmMax, s"${codec.kind} drift: repeat call ran $warm Spark jobs, budget $warmMax")
+      }
   }
 
   test("a keyed PQ write and a same-key ADC search leave no Spark block persisted") {
