@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -28,19 +28,38 @@ object Dedup {
 
   private def spread(docs: DataFrame): DataFrame = Spread.spread(docs)
 
-  /** Word-n-gram shingles per doc: (doc_id, s). `distinct = false`
-    * skips the dedup shuffle — correct for duplicate-insensitive
-    * consumers (min-aggregates: MinHash signatures, winnowing minima);
-    * set semantics (Jaccard counting) need the default distinct.
+  /** The word n-grams of a words array, in order: element i joins
+    * words i..i+n-1 with single spaces. Defined only where
+    * size(words) >= n — callers filter first (below that, `sequence`
+    * counts down and the grams are garbage).
+    */
+  def wordGrams(words: Column, n: Int): Column =
+    transform(sequence(lit(1), size(words) - (n - 1)),
+      i => concat_ws(" ", (0 until n).map(j => element_at(words, i + j)): _*))
+
+  /** Each doc's DISTINCT word n-grams as ONE row (doc_id, ss:
+    * array<string>) — a narrow projection, no shuffle. This set is the
+    * only input of the MinHash signature ([[minhashSigs]]) and of the
+    * exact Jaccard ([[jaccardVerify]]) on the batch, cached, stored and
+    * streaming near-dup paths. Docs under `n` words have no row.
+    */
+  def shingleSets(docs: DataFrame, n: Int = 3): DataFrame =
+    spread(docs).select(col("doc_id"), split(col("text"), " ").as("w"))
+      .filter(size(col("w")) >= n)
+      .select(col("doc_id"), array_distinct(wordGrams(col("w"), n)).as("ss"))
+
+  /** Word-n-gram shingles per doc, one row each: (doc_id, s) — the
+    * exploded form the gram-keyed joins need (contamination,
+    * containment, source overlap, the quadratic n-gram Jaccard).
+    * `distinct = false` skips the dedup shuffle, for consumers that
+    * re-aggregate by gram anyway; set semantics (Jaccard counting)
+    * need the default distinct. The near-dup paths read
+    * [[shingleSets]] instead.
     */
   def shingles(docs: DataFrame, n: Int = 3, distinct: Boolean = true): DataFrame = {
-    val words = split(col("text"), " ")
-    val grams = expr(
-      s"""transform(sequence(1, size(w) - ${n - 1}),
-         |  i -> concat_ws(' ', ${(0 until n).map(j => s"element_at(w, i + $j)").mkString(", ")}))""".stripMargin)
-    val raw = spread(docs).select(col("doc_id"), words.as("w"))
+    val raw = spread(docs).select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(grams).as("s"))
+      .select(col("doc_id"), explode(wordGrams(col("w"), n)).as("s"))
     if (distinct) {
       // fixed-width exchange + partition-local dedup instead of a plain
       // distinct(): hash partitioning on (doc_id, s) satisfies the
@@ -139,19 +158,24 @@ object Dedup {
     pmod(x.cast("long"), lit(minhashP))
   }
 
-  /** MinHash signatures: sig_k = min over shingles of h_k(base(s)).
-    * min is duplicate-insensitive → non-distinct shingles (no shuffle
-    * before the aggregate).
-    */
+  /** MinHash signatures (doc_id, h0..h11): sig_k = min over the doc's
+    * shingles of h_k(base(s)). */
   def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashSignaturesFrom(shingles(docs, distinct = false))
+    minhashSigs(shingleSets(docs))
 
-  private def minhashSignaturesFrom(sh: DataFrame): DataFrame = {
-    val withBase = sh.withColumn("x", shingleBase(col("s")))
-    val aggs = minhashParams.zipWithIndex.map { case ((a, b), k) =>
-      min(pmod(lit(a) * col("x") + lit(b), lit(minhashP))).as(s"h$k")
+  /** The one signature kernel, over [[shingleSets]] rows: each shingle
+    * hashes once through [[shingleBase]], and h_k is the `array_min`
+    * of the k-th universal hash over that array — a per-row
+    * projection, so it runs as a narrow map in a streaming
+    * micro-batch as well as in a batch plan.
+    */
+  private[graft] def minhashSigs(sets: DataFrame): DataFrame = {
+    val hashed = sets.withColumn("__xs", transform(col("ss"), shingleBase(_)))
+    val hCols = minhashParams.zipWithIndex.map { case ((a, b), k) =>
+      array_min(transform(col("__xs"),
+        x => pmod(lit(a) * x + lit(b), lit(minhashP)))).as(s"h$k")
     }
-    withBase.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+    hashed.select(col("doc_id") +: hCols: _*)
   }
 
   /** Max population of one (band, band-value) bucket before candidate
@@ -312,31 +336,27 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, threshold: Double = 0.5,
       fullRecall: Boolean = false): DataFrame = {
     // the signature table is materialized eagerly (localCheckpoint, not
-    // cache) — the band self-join and the candidate verification each
-    // read it from BOTH join sides, and concurrent stages racing a cold
-    // cache recompute the whole shingle+aggregate subtree per side.
-    // Signatures derive FROM the materialized distinct shingle table:
-    // min is duplicate-insensitive, so the distinct set gives the same
-    // minima as the raw multiset — and the verification needs the
-    // distinct table anyway, so one shingle chain feeds both instead of
-    // re-running the scan+split+md5 chain a second time
-    val sh = shingles(docs).localCheckpoint()
-    val sig = minhashSignaturesFrom(sh).localCheckpoint()
+    // cache) — the band self-join reads it from BOTH join sides, and
+    // concurrent stages racing a cold cache recompute the md5 chain per
+    // side. Signatures and the verification read the one checkpointed
+    // shingle-set table, so the scan+split chain runs once
+    val sets = shingleSets(docs).localCheckpoint()
+    val sig = minhashSigs(sets).localCheckpoint()
     val bands = minhashBandRows(sig)
-    val nBands = minhashSeeds / minhashBandSize
     val cands =
-      if (fullRecall) subSplitBandCandidates(bands, maxDepth = nBands - 1)
+      if (fullRecall) subSplitBandCandidates(bands, maxDepth = minhashSeeds / minhashBandSize - 1)
       else cappedBandCandidates(bands.drop("ext"))
-    // verify candidates with exact jaccard: shared shingles per pair
-    jaccardVerify(sh, cands, threshold)
+    jaccardVerify(sets, sets, cands, threshold)
   }
 
-  /** Banded rows (doc_id, band, bv, ext) from a MinHash signature table
-    * — one explode pass over sig, not a bands-way union: a union fans
-    * the plan into one AQE stage per branch per join side, and before
-    * the signature cache is materialized those stages race to recompute
-    * the whole signature subtree. `ext` carries the other bands' values
-    * for [[subSplitBandCandidates]].
+  /** Banded rows (…, band, bv, ext) from a MinHash signature table:
+    * every column but the signature's h0..h11 passes through (doc_id;
+    * the streaming path's `arrival`). One explode pass over sig, not a
+    * bands-way union: a union fans the plan into one AQE stage per
+    * branch per join side, and before the signature cache is
+    * materialized those stages race to recompute the whole signature
+    * subtree. `ext` carries the other bands' values for
+    * [[subSplitBandCandidates]].
     */
   private[graft] def minhashBandRows(sig: DataFrame): DataFrame = {
     val nBands = minhashSeeds / minhashBandSize
@@ -346,42 +366,32 @@ object Dedup {
       val others = (0 until nBands).filterNot(_ == b).map(bandValue)
       struct(lit(b).as("band"), bandValue(b).as("bv"), array(others: _*).as("ext"))
     }
-    sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"),
-        col("bb.ext").as("ext"))
+    val keep = sig.columns.filterNot(_.matches("h\\d+")).map(col)
+    sig.select(keep :+ explode(array(bandStructs: _*)).as("bb"): _*)
+      .select(keep :+ col("bb.*"): _*)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against a distinct
-    * shingle table `sh` (doc_id, s) — shared by the batch LSH path and
-    * the streaming near-dup runner so both verify through one plan.
+  /** The one exact-Jaccard kernel: candidate pairs (doc_a, doc_b)
+    * scored against [[shingleSets]] rows — doc_a resolves in `setsA`,
+    * doc_b in `setsB` (the same frame on the symmetric paths; batch vs
+    * stored corpus on the incremental ones). Each pair reads its two
+    * sets and intersects them in place: a candidate-sized join, no
+    * explode, no aggregate.
     */
-  private[graft] def jaccardVerify(sh: DataFrame, cands: DataFrame,
-      threshold: Double): DataFrame =
-    jaccardVerifyAsym(sh, sh, cands, threshold)
-
-  /** [[jaccardVerify]] with distinct per-side shingle tables — doc_a
-    * resolves in `shA`, doc_b in `shB` (the incremental batch-vs-corpus
-    * path, where the two id spaces come from different frames).
-    */
-  private[graft] def jaccardVerifyAsym(shA: DataFrame, shB: DataFrame,
-      cands: DataFrame, threshold: Double): DataFrame = {
-    val sizesA = shA.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("n"))
+  private[graft] def jaccardVerify(setsA: DataFrame, setsB: DataFrame,
+      cands: DataFrame, threshold: Double): DataFrame =
     cands
-      .join(shA.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-      .join(shB.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b", "s"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
-      .join(sizesA.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-      .join(sizesB.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-      .withColumn("jaccard",
-        round(col("n_common") / (col("na") + col("nb") - col("n_common")), 4))
+      .join(setsA.select(col("doc_id").as("doc_a"), col("ss").as("sa")), "doc_a")
+      .join(setsB.select(col("doc_id").as("doc_b"), col("ss").as("sb")), "doc_b")
+      .withColumn("n_common", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jaccard", round(col("n_common") /
+        (size(col("sa")) + size(col("sb")) - col("n_common")), 4))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
-  }
 
   /** The existing-corpus dedup index (exact-fingerprint store, shingle
-    * table, capped band table), cached per (session, corpusKey). In
+    * sets, capped band table), cached per (session, corpusKey). In
     * production this is a PERSISTED index the increment loop appends to
     * per batch — recomputing it for every incoming batch would make each
     * increment cost O(corpus), which is exactly what incremental dedup
@@ -389,39 +399,39 @@ object Dedup {
     */
   private val incIndexCache = new graft.SessionCache[String, (DataFrame, DataFrame, DataFrame)](
     maxEntries = 8,
-    release = { case (fp, sh, bands) =>
-      Seq(fp, sh, bands).foreach(org.apache.spark.sql.GraftShims.uncheckpoint(_)) })
+    release = { case (fp, ss, bands) =>
+      Seq(fp, ss, bands).foreach(org.apache.spark.sql.GraftShims.uncheckpoint(_)) })
 
   /** One doc set's dedup-index rows, from [[docIndex]]: fingerprints
-    * `fp` (doc_id, fp), distinct shingles `sh` (doc_id, s) and UNCAPPED
-    * MinHash band rows `bands` (doc_id, band, bv). Every row derives
-    * from its own doc alone, so [[only]] equals deriving the subset.
+    * `fp` (doc_id, fp), shingle sets `ss` (doc_id, ss — one row per
+    * doc, [[shingleSets]]) and UNCAPPED MinHash band rows `bands`
+    * (doc_id, band, bv). Every row derives from its own doc alone, so
+    * [[only]] equals deriving the subset.
     */
-  private[graft] final case class DocIndex(fp: DataFrame, sh: DataFrame,
+  private[graft] final case class DocIndex(fp: DataFrame, ss: DataFrame,
       bands: DataFrame) {
     /** The rows of the docs in `ids` (doc_id: one batch's, broadcast). */
     def only(ids: DataFrame): DocIndex = {
       def keep(t: DataFrame) = t.join(broadcast(ids), Seq("doc_id"), "left_semi")
-      DocIndex(keep(fp), keep(sh), keep(bands))
+      DocIndex(keep(fp), keep(ss), keep(bands))
     }
   }
 
   /** Derive `docs`' [[DocIndex]] in one shingling pass, pinned by the
-    * one checkpoint: its consumers (the band rows' signature aggregate,
-    * Jaccard verification, the stored shingle table) run in later
-    * queries than the shuffle-deduped shingling.
+    * one checkpoint: its consumers (the band rows' signatures, Jaccard
+    * verification, the stored shingle table) run in later queries.
     */
   private[graft] def docIndex(docs: DataFrame): DocIndex = {
-    val sh = shingles(docs).localCheckpoint()
-    DocIndex(docs.select(col("doc_id"), md5(col("text")).as("fp")), sh,
-      minhashBandRows(minhashSignaturesFrom(sh)).drop("ext"))
+    val ss = shingleSets(docs).localCheckpoint()
+    DocIndex(docs.select(col("doc_id"), md5(col("text")).as("fp")), ss,
+      minhashBandRows(minhashSigs(ss)).drop("ext"))
   }
 
   /** [[docIndex]] for the span of `use`: the checkpoint is released
     * when `use` returns, so `use` materializes what it returns. */
   private[graft] def withDocIndex[T](docs: DataFrame)(use: DocIndex => T): T = {
     val d = docIndex(docs)
-    try use(d) finally org.apache.spark.sql.GraftShims.uncheckpoint(d.sh)
+    try use(d) finally org.apache.spark.sql.GraftShims.uncheckpoint(d.ss)
   }
 
   /** LSH collision candidates (doc_a from `probe`, doc_b from
@@ -447,8 +457,8 @@ object Dedup {
     * verify the LSH collision candidates by exact Jaccard, pick the
     * best partner per batch doc, and classify exact/near/new. `exFp`
     * must cover (at least) the batch's fingerprint space as
-    * (fp, ex_exact=min existing doc); `exSh` must hold the FULL
-    * distinct shingle set of every doc_b in `cands`. Verdicts are
+    * (fp, ex_exact=min existing doc); `exSs` must hold the shingle
+    * set of every doc_b in `cands`. Verdicts are
     * per-doc independent given the index, so any partition of the
     * batch (micro-batch replay included) composes to the same result.
     * Returns a checkpointed frame (batch-sized, tiny next to the
@@ -458,9 +468,9 @@ object Dedup {
     * inputs at once instead of pinning them until the RDDs are GC'd.
     */
   private[graft] def classifyCore(bFp: DataFrame, exFp: DataFrame,
-      bSh: DataFrame, exSh: DataFrame, cands: DataFrame,
+      bSs: DataFrame, exSs: DataFrame, cands: DataFrame,
       threshold: Double): DataFrame = {
-    val verified = jaccardVerifyAsym(bSh, exSh, cands, threshold)
+    val verified = jaccardVerify(bSs, exSs, cands, threshold)
     // best partner per batch doc, on the ROUNDED jaccard (cross-engine
     // deterministic), doc_id ascending tiebreak
     val best = verified
@@ -509,24 +519,24 @@ object Dedup {
   def incrementalDedup(existing: DataFrame, batch: DataFrame,
       threshold: Double = 0.5, existingKey: Option[String] = None): DataFrame = {
     // the existing-corpus index: exact store (content hash → min doc),
-    // shingle table (feeds signatures AND Jaccard verification — min is
-    // duplicate-insensitive), capped band table the batch probes
+    // shingle sets (feed signatures AND Jaccard verification), capped
+    // band table the batch probes
     def buildIndex(): (DataFrame, DataFrame, DataFrame) = {
       val ex = docIndex(existing)
       (ex.fp.groupBy("fp").agg(min("doc_id").as("ex_exact")).localCheckpoint(),
-        ex.sh, capBandRows(ex.bands).localCheckpoint())
+        ex.ss, capBandRows(ex.bands).localCheckpoint())
     }
-    val (exFp, exSh, exCapped) = existingKey match {
+    val (exFp, exSs, exCapped) = existingKey match {
       case None => buildIndex()
       case Some(ck) => incIndexCache.getOrBuild(existing.sparkSession, ck)(buildIndex())
     }
     val result = withDocIndex(batch) { b =>
-      classifyCore(b.fp, exFp, b.sh, exSh, bandCandidates(b.bands, exCapped), threshold)
+      classifyCore(b.fp, exFp, b.ss, exSs, bandCandidates(b.bands, exCapped), threshold)
     }
     // keyless path: the index was built for this one call — release it
     // (the cached path's index belongs to the LRU, which releases on eviction)
     if (existingKey.isEmpty)
-      Seq(exFp, exSh, exCapped).foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
+      Seq(exFp, exSs, exCapped).foreach(org.apache.spark.sql.GraftShims.uncheckpoint)
     result
   }
 
@@ -591,13 +601,9 @@ object Dedup {
     */
   def winnowPairs(docs: DataFrame, n: Int = 5, w: Int = 4,
       minShared: Int = 2): DataFrame = {
-    val words = split(lower(col("text")), " ")
-    val grams = expr(
-      s"""transform(sequence(1, size(wds) - ${n - 1}),
-         |  i -> concat_ws(' ', ${(0 until n).map(j => s"element_at(wds, i + $j)").mkString(", ")}))""".stripMargin)
-    val hashed = spread(docs).select(col("doc_id"), words.as("wds"))
+    val hashed = spread(docs).select(col("doc_id"), split(lower(col("text")), " ").as("wds"))
       .filter(size(col("wds")) >= n)
-      .select(col("doc_id"), posexplode(grams).as(Seq("pos", "s")))
+      .select(col("doc_id"), posexplode(wordGrams(col("wds"), n)).as(Seq("pos", "s")))
       .select(col("doc_id"), col("pos"), md5(col("s")).as("h"))
     // window minimum per start position; starts whose window would run
     // past the end are dropped (both engines filter identically)
@@ -1145,13 +1151,9 @@ object Dedup {
     * + n − 1, dup_grams = number of flagged grams merged into the span.
     */
   def substringSpans(docs: DataFrame, n: Int = 8, minDf: Int = 2): DataFrame = {
-    val words = split(col("text"), " ")
-    val gramArr = expr(
-      s"""transform(sequence(1, size(w) - ${n - 1}),
-         |  i -> concat_ws(' ', ${(0 until n).map(j => s"element_at(w, i + $j)").mkString(", ")}))""".stripMargin)
-    val grams = spread(docs).select(col("doc_id"), words.as("w"))
+    val grams = spread(docs).select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), posexplode(gramArr).as(Seq("p0", "s")))
+      .select(col("doc_id"), posexplode(wordGrams(col("w"), n)).as(Seq("p0", "s")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), md5(col("s")).as("h"))
     val flagged = grams.select("h", "doc_id").distinct()
       .groupBy("h").agg(count(lit(1)).as("df"))

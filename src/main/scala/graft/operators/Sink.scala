@@ -371,7 +371,7 @@ object Sink {
 
   // the dedup index's three tables (see "stored incremental-dedup
   // text index" below)
-  private val shinglesTable = TableLayout("shingles", "db", "db", "doc_id", "s")
+  private val shinglesTable = TableLayout("shingles", "db", "db", "doc_id")
   private val fingerprintsTable = TableLayout("fingerprints", "fpb", "fpb", "fp", "doc_id")
   private val bandsTable = TableLayout("bands", "band", "band", "bv", "doc_id")
 
@@ -382,10 +382,12 @@ object Sink {
     * a maintenance retrain swaps the whole index dir as well.
     * `distinctRows`: every column is a key, so compaction restores the
     * distinct invariant (defense in depth against a violated append
-    * contract).
+    * contract). `geometry`: build-time constants the manifest records
+    * and every open of the index checks ([[requireIndex]]).
     */
   private final case class IndexFamily(kinds: Seq[String], idCol: String,
-      tables: Seq[TableLayout], swapsDir: Boolean, distinctRows: Boolean) {
+      tables: Seq[TableLayout], swapsDir: Boolean, distinctRows: Boolean,
+      geometry: Seq[(String, Long)] = Nil) {
     /** Every path a [[checkedSwap]] of this family replaces. */
     def trees(dir: String): Seq[String] =
       (if (swapsDir) Seq(dir) else Nil) ++ tables.map(_.path(dir))
@@ -396,7 +398,10 @@ object Sink {
 
   private val dedupIndex = IndexFamily(Seq("dedup_text"), "doc_id",
     Seq(shinglesTable, fingerprintsTable, bandsTable),
-    swapsDir = false, distinctRows = true)
+    swapsDir = false, distinctRows = true,
+    geometry = Seq("shingle_n" -> 3L,
+      "bands" -> (Dedup.minhashSeeds / Dedup.minhashBandSize).toLong,
+      "band_cap" -> Dedup.lshBucketCap.toLong, "layout" -> 2L))
 
   /** Fixed-cell-SIZE geometry: cells = ⌈N/targetCellSize⌉ (see
     * [[CellSize]]). One column-pruned count on the keyless path; with
@@ -1127,9 +1132,11 @@ object Sink {
     }
 
   /** The guard before any read of a family's index: a recorded kind the
-    * family owns, and the family's last-written table present (a
-    * typo'd dir fails loudly instead of silently no-opping beside the
-    * real index).
+    * family owns, the family's last-written table present (a typo'd
+    * dir fails loudly instead of silently no-opping beside the real
+    * index), and every geometry field recorded with this binary's
+    * value: under a skew a batch's band values never match stored ones
+    * (every near-dup silently 'new') and an append mixes schemas.
     */
   private def requireIndex(spark: SparkSession, dir: String,
       fam: IndexFamily, label: String): Unit = {
@@ -1137,6 +1144,12 @@ object Sink {
     val last = fam.tables.last
     require(pathExists(spark, last.path(dir)),
       s"$label: no index at $dir (missing ${last.name} table)")
+    lazy val m = readIndexManifest(spark, dir).getOrElse(Map.empty)
+    fam.geometry.foreach { case (k, cur) =>
+      val v = m.getOrElse(k, "(unrecorded)")
+      require(v == cur.toString, s"$label: index at $dir was built with $k=$v " +
+        s"but this binary uses $k=$cur — rebuild the index or run the matching engine version")
+    }
   }
 
   /** The preamble of every mutating entry point (append, delete,
@@ -1696,8 +1709,8 @@ object Sink {
   // ==== stored incremental-dedup text index ==========================
   //
   // The on-disk form of the existing-corpus index Dedup.incrementalDedup
-  // builds (exact fingerprints, distinct shingles, MinHash band rows) —
-  // the durability the session cache can't give: a restarted driver
+  // builds (exact fingerprints, shingle sets, MinHash band rows) — the
+  // durability the session cache can't give: a restarted driver
   // reloads the index from parquet instead of re-shingling and
   // re-hashing the full corpus before it can classify the next batch.
   // Same manifest/append/compact lifecycle as the IVF family.
@@ -1709,9 +1722,10 @@ object Sink {
   //    path's pre-aggregated fp → min(doc_id) so appends stay
   //    append-only; the min folds at classify time, scoped to the
   //    batch's fingerprint space.
-  //  - shingles/db=N/        (doc_id, s)     — distinct word n-grams,
-  //    db = doc_id mod 256. Verification reads ONLY the buckets holding
-  //    candidate partners (≤256 literal partition values, driver-safe).
+  //  - shingles/db=N/        (doc_id, ss)    — ONE row per doc, its
+  //    distinct word 3-grams (Dedup.shingleSets), db = doc_id mod 256.
+  //    Verification reads ONLY the buckets holding candidate partners
+  //    (≤256 literal partition values, driver-safe).
   //  - bands/band=B/         (bv, doc_id)    — UNCAPPED band rows (a
   //    fixed `bands` per doc — linear storage); the lshBucketCap
   //    population cap applies at CLASSIFY time over the probed buckets.
@@ -1721,20 +1735,23 @@ object Sink {
   //    set is the same whether computed over one build or over
   //    build + appends, in ANY append order. (The cached path caps at
   //    build because its corpus is fixed for the session.)
+  // The manifest records the geometry and `layout` 2; every entry point
+  // refuses other values or none (a pre-`layout` index stored one row
+  // per shingle and must be rebuilt).
   //
   // Cost model per classify: the batch's rows derive once
   // (Dedup.docIndex; a maintain appends them); index reads are one
   // fingerprint-bucket-pruned scan, one band scan semi-joined to the
-  // batch's buckets, and one shingle scan pruned to candidate doc
-  // buckets — columnar slim-row scans with rowgroup stats (tables are
-  // written sorted), never a recompute of the corpus. Verification
-  // fan-in stays bounded by the read-time cap as in the cached path.
+  // batch's buckets, and one shingle-set scan pruned to candidate doc
+  // buckets — columnar scans with rowgroup stats (tables are written
+  // sorted), never a recompute of the corpus. Verification fan-in
+  // stays bounded by the read-time cap as in the cached path.
   //
   // Append contract: append each accepted doc EXACTLY once (classify
   // already says which docs are new — the caller appends that split).
-  // A re-appended doc_id would double its stored shingle rows and
-  // corrupt its Jaccard sizes; compactDedupIndex restores the distinct
-  // invariants as defense in depth.
+  // A re-appended doc_id duplicates its rows; a duplicated band row
+  // takes a capped bucket slot. compactDedupIndex restores the
+  // distinct invariants as defense in depth.
 
   // INTEGER buckets on both partition grids, deliberately: parquet
   // partition-value type inference reads "00".."ff" STRING buckets back
@@ -1748,14 +1765,9 @@ object Sink {
   private def dedupDocBucket(docId: org.apache.spark.sql.Column) =
     pmod(docId, lit(256L))
 
-  // the build-time geometry the manifest records and classify checks
-  private def dedupGeometry = Seq("shingle_n" -> 3L,
-    "bands" -> (Dedup.minhashSeeds / Dedup.minhashBandSize).toLong,
-    "band_cap" -> Dedup.lshBucketCap.toLong)
-
   private def dedupIndexManifest(spark: SparkSession, dir: String): Unit =
     writeIndexManifest(spark, dir,
-      ("kind" -> "dedup_text") +: dedupGeometry.map { case (k, v) => k -> v.toString })
+      ("kind" -> "dedup_text") +: dedupIndex.geometry.map { case (k, v) => k -> v.toString })
 
   /** Build the stored dedup index at `dir` from the accepted corpus
     * ([[saveDedupTables]] in overwrite mode).
@@ -1788,9 +1800,9 @@ object Sink {
     */
   private def saveDedupTables(rows: Dedup.DocIndex, dir: String,
       mode: SaveMode): Unit = {
-    val spark = rows.sh.sparkSession
+    val spark = rows.ss.sparkSession
     def put(t: TableLayout, r: DataFrame): Unit = t.save(r, t.path(dir), mode)
-    put(shinglesTable, rows.sh.withColumn("db", dedupDocBucket(col("doc_id"))))
+    put(shinglesTable, rows.ss.withColumn("db", dedupDocBucket(col("doc_id"))))
     put(fingerprintsTable, rows.fp.select(col("fp"), col("doc_id"),
       dedupFpBucket(col("fp")).as("fpb")))
     put(bandsTable, rows.bands)
@@ -1841,18 +1853,6 @@ object Sink {
   private def classifyStored[T](spark: SparkSession, batch: DataFrame,
       dir: String, threshold: Double)(use: (DataFrame, Dedup.DocIndex) => T): T = {
     requireIndex(spark, dir, dedupIndex, "classifyWithDedupIndex")
-    // version-skew guard: the batch is shingled/banded with THIS
-    // binary's constants — if they differ from the build-time geometry
-    // the manifest records, batch band values never match stored ones
-    // and every near-dup silently classifies 'new'. Fail loudly
-    // instead (legacy manifests without the fields skip the check).
-    readIndexManifest(spark, dir).foreach { m =>
-      dedupGeometry.foreach { case (k, cur) => m.get(k).foreach(v =>
-        require(v.toLong == cur,
-          s"classifyWithDedupIndex: index at $dir was built with $k=$v " +
-            s"but this binary uses $k=$cur — rebuild the index or run " +
-            "the matching engine version")) }
-    }
     val b = Dedup.docIndex(batch)
     // takedown masking: identity when no delete ever happened; else a
     // broadcast anti-join on the tiny tombstone set, applied to the
@@ -1880,20 +1880,18 @@ object Sink {
     // consumers: the doc-bucket collect below and classifyCore's
     // verification, two queries that would each re-run the band join
     val cands = Dedup.bandCandidates(b.bands, exCapped).localCheckpoint()
-    // shingle store pruned to candidate partners' doc buckets (≤256
-    // literal partition values), then to the candidate docs themselves;
-    // each kept doc keeps its FULL shingle set (classifyCore contract).
-    // No tombstone mask needed here: candidates come from the MASKED
-    // band rows above, so a deleted doc can never appear as a doc_b
+    // shingle-set store pruned to candidate partners' doc buckets (≤256
+    // literal partition values); the verification join keeps only the
+    // candidate docs' rows. No tombstone mask needed here: candidates
+    // come from the MASKED band rows above, so a deleted doc can never
+    // appear as a doc_b
     val dbs = cands.select(dedupDocBucket(col("doc_b")).as("db")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val exSh = spark.read.parquet(shinglesTable.path(dir))
-      .filter(col("db").isin(dbs: _*)).select("doc_id", "s")
-      .join(cands.select(col("doc_b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_semi")
-    val verdicts = Dedup.classifyCore(b.fp, exFp, b.sh, exSh, cands, threshold)
+    val exSs = spark.read.parquet(shinglesTable.path(dir))
+      .filter(col("db").isin(dbs: _*)).select("doc_id", "ss")
+    val verdicts = Dedup.classifyCore(b.fp, exFp, b.ss, exSs, cands, threshold)
     org.apache.spark.sql.GraftShims.uncheckpoint(cands)
-    try use(verdicts, b) finally org.apache.spark.sql.GraftShims.uncheckpoint(b.sh)
+    try use(verdicts, b) finally org.apache.spark.sql.GraftShims.uncheckpoint(b.ss)
   }
 
   /** The production ingest loop as ONE operator: classify the batch

@@ -536,15 +536,12 @@ object Sketch {
     * the grouping column carried.
     */
   private def grams(docs: DataFrame, n: Int): DataFrame = {
-    val gramExpr = expr(
-      s"""transform(sequence(1, size(w) - ${n - 1}),
-         |  i -> concat_ws(' ', ${(0 until n).map(j => s"element_at(w, i + $j)").mkString(", ")}))""".stripMargin)
     // spread BEFORE the explode: a one-file documents scan otherwise
     // serializes the gram explode + per-gram hashing into one task
     // (Profile r9: a 5 s single-task stage under cms_heavy — the
     // embed_pca_power pathology from r8, same fix)
     Spread.spread(docs).select(col("source"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("source"), explode(gramExpr).as("s"))
+      .select(col("source"), explode(Dedup.wordGrams(col("w"), n)).as("s"))
   }
 }

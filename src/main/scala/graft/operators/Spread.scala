@@ -16,7 +16,8 @@ import org.apache.spark.sql.DataFrame
   *   of files and skips the shuffle — round-robin-moving the full text
   *   payload of a wide input is the biggest exchange in the pipeline
   *   for zero parallelism gain.
-  * - Non-file plans (in-memory test frames, pre-shuffled inputs) are
+  * - Non-file plans (in-memory test frames, pre-shuffled inputs) and
+  *   streaming frames (each micro-batch is planned by the stream) are
   *   returned untouched: they already carry their parallelism.
   *
   * Deliberately NO byte-size guard: every caller runs a CPU-heavy
@@ -29,7 +30,7 @@ import org.apache.spark.sql.DataFrame
 private[graft] object Spread {
   def spread(docs: DataFrame): DataFrame = {
     val np = docs.sparkSession.sparkContext.defaultParallelism
-    val nFiles = docs.inputFiles.length
+    val nFiles = if (docs.isStreaming) 0 else docs.inputFiles.length
     if (nFiles == 0 || nFiles >= np) docs else docs.repartition(np)
   }
 }

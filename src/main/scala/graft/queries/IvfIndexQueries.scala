@@ -613,7 +613,7 @@ object IvfIndexQueries {
           .select("vec_id", "embedding").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
-      graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
+      graft.streaming.Replay.deleteRecursively(s"$dir/log")
       // default threshold holds on ~33-vector drops BECAUSE the
       // verdict is null-calibrated: the +1-smoothed per-subspace PSI
       // reads ≈ (k−1)(1/t_new + 1/t_stored) ≈ 0.23 on an undrifted
@@ -646,7 +646,7 @@ object IvfIndexQueries {
           .select("vec_id", "embedding").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
-      graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
+      graft.streaming.Replay.deleteRecursively(s"$dir/log")
       graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
       Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3, nprobe = 2)
@@ -672,7 +672,7 @@ object IvfIndexQueries {
           .select("vec_id", "embedding").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
-      graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
+      graft.streaming.Replay.deleteRecursively(s"$dir/log")
       graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
       Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3, nprobe = 2)
@@ -856,7 +856,7 @@ object IvfIndexQueries {
           .write.mode("overwrite").parquet(s"$dir/drops/drop=$tag")
       }
       // fresh decision log per evaluation (append-only during a replay)
-      graft.streaming.IvfStream.deleteRecursively(s"$dir/log")
+      graft.streaming.Replay.deleteRecursively(s"$dir/log")
       graft.streaming.IvfStream.runMaintainReplay(
         s, s"$dir/drops/drop=*", s"$dir/index", s"$dir/ckpt", s"$dir/log")
       Sink.searchIvfIndex(s, all, s"$dir/index", 10, 3)

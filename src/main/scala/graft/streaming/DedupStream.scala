@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -83,52 +83,6 @@ object DedupStream {
   /** An emitted candidate pair, doc_a < doc_b. */
   case class CandPair(doc_a: Long, doc_b: Long)
 
-  private val shingleN = 3
-
-  /** Per-doc MinHash signature as a PURE PROJECTION — no shuffle, so it
-    * runs inside a streaming micro-batch as a narrow map: the shingle
-    * multiset becomes an array column, each shingle hashes through the
-    * same md5 polynomial as the batch path
-    * ([[Dedup.shingleBase]]), and sig_k = array_min of the k-th
-    * universal hash over that array. `min` over the same multiset ⇒
-    * signatures are bit-identical to the batch explode+groupBy plan —
-    * the projection is how a batch rewrite would also look if window
-    * parallelism mattered more than partial aggregation.
-    *
-    * Output: one row per (doc, band) with the band value string built
-    * exactly like the batch `bandValue` concat, carrying `arrival` for
-    * the watermark. Docs under `shingleN` words have no shingles and are
-    * dropped — same as the batch signature groupBy seeing no rows.
-    */
-  private[graft] def minhashSigProjection(df: DataFrame): DataFrame = {
-    val grams = expr(
-      s"""transform(sequence(1, size(__w) - ${shingleN - 1}),
-         |  i -> concat_ws(' ', ${(0 until shingleN).map(j => s"element_at(__w, i + $j)").mkString(", ")}))""".stripMargin)
-    val hashed = df
-      .withColumn("__w", split(col("text"), " "))
-      .filter(size(col("__w")) >= shingleN)
-      .withColumn("__xs", transform(grams, s => Dedup.shingleBase(s)))
-    val hCols = Dedup.minhashParams.zipWithIndex.map { case ((a, b), k) =>
-      array_min(transform(col("__xs"),
-        x => pmod(lit(a) * x + lit(b), lit(Dedup.minhashP)))).as(s"h$k")
-    }
-    hashed.select(col("doc_id") +: col("arrival") +: hCols: _*)
-  }
-
-  private[graft] def minhashBands(df: DataFrame): DataFrame = {
-    val sig = minhashSigProjection(df)
-    val nBands = Dedup.minhashSeeds / Dedup.minhashBandSize
-    def bandValue(bIdx: Int): Column = concat_ws("_",
-      (0 until Dedup.minhashBandSize)
-        .map(j => col(s"h${bIdx * Dedup.minhashBandSize + j}")): _*)
-    val bandStructs = (0 until nBands).map(b =>
-      struct(lit(b).as("band"), bandValue(b).as("bv")))
-    sig.select(col("doc_id"), col("arrival"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bv").as("bv"),
-        col("doc_id"), col("arrival"))
-  }
-
   /** The stateful pair emitter: a new doc in a bucket pairs with every
     * doc already in that bucket's state (classic banding, exact while
     * the bucket stays at or under `cap`); once the population crosses
@@ -164,8 +118,12 @@ object DedupStream {
     out.iterator
   }
 
-  /** Streaming near-dup CANDIDATE pairs: signature projection → band
-    * explode → watermark → per-(band, bv) stateful pairing. Candidates
+  /** Streaming near-dup CANDIDATE pairs: the batch path's shingle-set,
+    * signature and band kernels ([[Dedup.shingleSets]],
+    * [[Dedup.minhashSigs]], [[Dedup.minhashBandRows]] — all narrow
+    * projections, so each micro-batch runs them as a map and band
+    * values are bit-identical to the batch ones) → watermark →
+    * per-(band, bv) stateful pairing. Candidates
     * still need the exact-Jaccard verify (a batch join against the doc
     * store — [[runBoundedNearDups]] — or a downstream signature-estimate
     * filter); the streaming stage owns exactly the part that needs
@@ -182,7 +140,8 @@ object DedupStream {
       cap: Int = Dedup.lshBucketCap): Dataset[CandPair] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    minhashBands(stream.withColumn("arrival", current_timestamp()))
+    Dedup.minhashBandRows(Dedup.minhashSigs(Dedup.shingleSets(stream))
+        .withColumn("arrival", current_timestamp())).drop("ext")
       .withWatermark("arrival", watermark)
       .as[BandDoc]
       .groupByKey(r => (r.band, r.bv))
@@ -214,9 +173,8 @@ object DedupStream {
     // the batch reader can't re-read, or just saving the disk roundtrip)
     val docs = staticDocs.getOrElse(
       spark.read.schema(schema).parquet(dir).select("doc_id", "text").distinct())
-    Dedup.jaccardVerify(
-      graft.CheckpointPool.cached("stream-verify-shingles")(Dedup.shingles(docs)),
-      cands, threshold)
+    val sets = graft.CheckpointPool.cached("stream-verify-shingles")(Dedup.shingleSets(docs))
+    Dedup.jaccardVerify(sets, sets, cands, threshold)
   }
 
   // ---------------------------------------------------------------- //

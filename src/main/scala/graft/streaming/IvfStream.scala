@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import graft.operators.Sink
 
@@ -27,14 +26,6 @@ object IvfStream {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  /** Recursive delete for the per-run checkpoint: the replay must
-    * re-process every drop on each evaluation (a stale checkpoint
-    * would silently skip them after the index reset). Shared with the
-    * other replay families ([[Replay.deleteRecursively]]).
-    */
-  private[graft] def deleteRecursively(path: String): Unit =
-    Replay.deleteRecursively(path)
-
   /** Bounded replay: process every vector drop (one file per trigger),
     * appending each micro-batch into the stored index at `indexDir`
     * through [[Sink.appendToIvfIndex]] — any codec: cells and payload
@@ -43,7 +34,7 @@ object IvfStream {
     */
   def runAppendReplay(spark: SparkSession, dropGlob: String,
       indexDir: String, checkpointDir: String): Unit =
-    replayWith(spark, dropGlob, checkpointDir)(
+    Replay.replayWith(spark, dropGlob, checkpointDir, schema)(
       (batch, _) => Sink.appendToIvfIndex(batch, indexDir))
 
   /** Drift-AWARE streaming maintenance — the full production control
@@ -64,7 +55,7 @@ object IvfStream {
   def runMaintainReplay(spark: SparkSession, dropGlob: String,
       indexDir: String, checkpointDir: String, logDir: String,
       threshold: Double = 0.25, compactFilesPerCell: Int = 4): Unit =
-    replayWith(spark, dropGlob, checkpointDir) { (batch, id) =>
+    Replay.replayWith(spark, dropGlob, checkpointDir, schema) { (batch, id) =>
       Sink.maintainIvfIndex(spark, batch, indexDir,
           threshold = threshold, compactFilesPerCell = compactFilesPerCell)
         .withColumn(
@@ -88,8 +79,4 @@ object IvfStream {
     Replay.cdcReplayWith(spark, dropGlob, checkpointDir, schema)(
       add = b => Sink.appendToIvfIndex(b.select("vec_id", "embedding"), indexDir),
       delete = b => Sink.deleteFromIvfIndex(spark, indexDir, b.select("vec_id")))
-
-  private def replayWith(spark: SparkSession, dropGlob: String,
-      checkpointDir: String)(append: (DataFrame, Long) => Unit): Unit =
-    Replay.replayWith(spark, dropGlob, checkpointDir, schema)(append)
 }

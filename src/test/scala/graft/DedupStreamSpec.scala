@@ -50,11 +50,19 @@ class DedupStreamSpec extends SparkSpec {
       1L -> "the quick brown fox jumps over the lazy cat",
       2L -> "completely different words about spark engines here today",
       3L -> "x y").toDF("doc_id", "text")
-    val streamSide = DedupStream.minhashSigProjection(
-        docs.withColumn("arrival", current_timestamp()))
-      .drop("arrival").collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
-    val batchSide = Dedup.minhashSignatures(docs)
+    // the shared per-row kernel the streaming path projects…
+    val streamSide = Dedup.minhashSigs(Dedup.shingleSets(docs))
       .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+    // …against a reference built the other way: one row per shingle
+    // occurrence, min-aggregated per doc
+    val mins = Dedup.minhashParams.zipWithIndex.map { case ((a, b), k) =>
+      min(pmod(lit(a) * col("x") + lit(b), lit(Dedup.minhashP))).as(s"h$k")
+    }
+    val batchSide = Dedup.shingles(docs, distinct = false)
+      .withColumn("x", Dedup.shingleBase(col("s")))
+      .groupBy("doc_id").agg(mins.head, mins.tail: _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+    assert(streamSide.keySet == Set(0L, 1L, 2L))
     assert(streamSide == batchSide)
     // the 2-word doc has no 3-shingles: absent from BOTH signature sets
     assert(!streamSide.contains(3L) && !batchSide.contains(3L))

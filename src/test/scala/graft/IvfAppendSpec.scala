@@ -43,7 +43,7 @@ class IvfAppendSpec extends SparkSpec {
     assert(stored == expected && stored.size == all.count())
   }
 
-  test("appendToIvfPqIndex == assignment + encoding with the stored artifacts") {
+  test("appendToIvfIndex (PQ) == assignment + encoding with the stored artifacts") {
     val all = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = Files.createTempDirectory("graft-ivfpqapp").toString
     Sink.writeIvfIndex(all.filter(col("vec_id") < 40), dir, Sink.Pq(4, 16, 8), Sink.Cells(8), 2)
@@ -272,7 +272,7 @@ class IvfAppendSpec extends SparkSpec {
       s"cell isin must partition-prune:\n${plan.take(1200)}")
   }
 
-  test("maintainIvfPqIndex: manifest-driven geometry, append and retrain branches") {
+  test("maintainIvfIndex (PQ): manifest-driven geometry, append and retrain branches") {
     val base = twoClusters(0L until 20L, id => if (id % 2 == 0) 1 else -1)
     val dir = Files.createTempDirectory("graft-ivfpqmaint").toString + "/index"
     Sink.writeIvfIndex(base, dir, Sink.Pq(4, 16, 8), Sink.Cells(2), iters = 2)
