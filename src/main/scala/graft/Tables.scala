@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   * scalar multiplications are single IEEE ops on identical inputs. Spark
   * and DuckDB therefore agree bit-for-bit on every stocks column.
   *
-  * Scale: the groupBy shuffles once on (symbol, date); downstream
-  * window/indicator passes re-shuffle on symbol only. At 100 TB the
+  * Scale: the groupBy shuffles once on (symbol, date) and the persist
+  * range-shuffles once on symbol ([[stocks]]); downstream window and
+  * indicator passes read that layout without a shuffle. At 100 TB the
   * derivation would be a partitioned-parquet materialization
   * (PARTITIONED BY symbol-bucket, sorted by date within files) so the
   * per-symbol window passes read co-located, pre-sorted input.
@@ -93,18 +94,32 @@ object Tables {
     *
     * Materialized once per (session, dir) — the reference's analytics
     * read a stored MySQL `stocks` table, not the raw feed, so the
-    * engine equivalent is a persisted derivation. It is hash-partitioned
-    * by symbol and sorted by (symbol, date) within partitions, which is
-    * exactly the distribution + ordering every indicator window needs —
-    * downstream window queries run with no exchange and no sort. At
-    * 100 TB this is a bucketed parquet table (BUCKET BY symbol-hash,
-    * sorted by date in-file); the in-memory persist is the local[n]
-    * stand-in.
+    * engine equivalent is a persisted derivation. It is range-partitioned
+    * by symbol and sorted by (symbol, date) within partitions. That one
+    * layout serves both kinds of read: a range partitioning on symbol
+    * clusters each symbol in one partition, so per-symbol windows run
+    * with no exchange, and it orders the partitions, so a trailing
+    * `orderBy("symbol", "date")` needs neither a range shuffle nor its
+    * boundary-sampling job, and the sort itself is dropped because the
+    * rows are already in order. An ordered indicator query is therefore
+    * one job: a Window over the cached scan. The layout is visible to
+    * queries planned after the cache is first built; before that the
+    * cached plan is still adaptive and reports no partitioning, so a
+    * query planned earlier shuffles like an uncached one.
+    *
+    * What the layout does not reach: a `Union` of two stocks-derived
+    * children reports an unknown partitioning (Spark keeps only
+    * hash-like child partitionings across a union), so `Merge.upsert`
+    * followed by an `orderBy` still range-shuffles. At 100 TB this is
+    * the bucketed parquet table `Sink.writeStocksBucketed` (BUCKET BY
+    * symbol-hash, sorted by date in-file), which stays hash-bucketed:
+    * its windows read with no exchange, but an ordered read of it still
+    * sorts. The in-memory persist is the local[n] stand-in.
     */
   def stocks(spark: SparkSession, dir: String): DataFrame =
     stocksCache.getOrBuild(spark, dir) {
       deriveStocks(spark, dir)
-        .repartition(col("symbol"))
+        .repartitionByRange(col("symbol"))
         .sortWithinPartitions("symbol", "date")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }

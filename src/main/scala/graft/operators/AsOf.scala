@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * time axis, and carry the latest right-side values forward to each
   * left row with an unbounded-preceding window.
   *
-  * Cost model: one shuffle on the partition key + one sort on
+  * Cost model: one range shuffle on the partition key + one sort on
   * (key, ts, side) — identical to what a dedicated merge-join-based
   * as-of operator needs, so there is nothing to gain from a custom
   * SparkPlan here; Catalyst's window machinery already gives the
@@ -26,6 +26,47 @@ import org.apache.spark.sql.functions._
   */
 object AsOf {
 
+  /** Both sides tagged (`__side` 0 = right/reference, 1 = left/probe)
+    * on one schema — keys, ts, side, the value columns (null on the left),
+    * the left's other columns (null on the right) — unioned and
+    * range-partitioned on the keys. A union drops its children's
+    * partitioning, so one shuffle is paid here either way; a range one
+    * clusters each key for the window and also orders the partitions,
+    * so a trailing `orderBy(keys…, ts)` needs no further exchange.
+    */
+  private def tagged(left: DataFrame, right: DataFrame, keys: Seq[String],
+      ts: String, valueCols: Seq[String]): DataFrame = {
+    val rest = left.columns.filterNot(c => keys.contains(c) || c == ts)
+    val taggedLeft = left
+      .withColumn("__side", lit(1))
+      .select(keys.map(col) ++ Seq(col(ts), col("__side")) ++
+        valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(c)) ++
+        rest.map(col): _*)
+    val taggedRight = right
+      .withColumn("__side", lit(0))
+      .select(keys.map(col) ++ Seq(col(ts), col("__side")) ++ valueCols.map(col) ++
+        rest.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
+    taggedLeft.unionByName(taggedRight).repartitionByRange(keys.map(col): _*)
+  }
+
+  // backward: at equal ts the reference row sorts first, so last() sees
+  // it (inclusive match)
+  private def backward(keys: Seq[String], ts: String) = Window
+    .partitionBy(keys.map(col): _*)
+    .orderBy(col(ts).asc, col("__side").asc)
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  // forward: left (1) sorts before right (0) at equal ts; the FOLLOWING
+  // frame starts at the current row, so the equal-ts reference still
+  // matches
+  private def forward(keys: Seq[String], ts: String) = Window
+    .partitionBy(keys.map(col): _*)
+    .orderBy(col(ts).asc, col("__side").desc)
+    .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+
+  private def probeRows(carried: DataFrame): DataFrame =
+    carried.filter(col("__side") === 1).drop("__side")
+
   /** Left rows enriched with the most recent right-side values at or
     * before each left row's timestamp.
     *
@@ -37,27 +78,10 @@ object AsOf {
     */
   def joinAsOf(left: DataFrame, right: DataFrame, keys: Seq[String], ts: String,
       valueCols: Seq[String]): DataFrame = {
-    val leftCols = left.columns
-    // side 0 = right/reference, 1 = left/probe: at equal ts the
-    // reference row sorts first, so last() sees it (inclusive match)
-    val taggedLeft = left
-      .withColumn("__side", lit(1))
-      .select(keys.map(col) ++ Seq(col(ts), col("__side")) ++
-        valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(c)) ++
-        leftCols.filterNot(c => keys.contains(c) || c == ts).map(col): _*)
-    val taggedRight = right
-      .withColumn("__side", lit(0))
-      .select(keys.map(col) ++ Seq(col(ts), col("__side")) ++ valueCols.map(col) ++
-        leftCols.filterNot(c => keys.contains(c) || c == ts)
-          .map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(ts).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = valueCols.foldLeft(taggedLeft.unionByName(taggedRight)) {
+    val w = backward(keys, ts)
+    probeRows(valueCols.foldLeft(tagged(left, right, keys, ts, valueCols)) {
       (df, c) => df.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
-    carried.filter(col("__side") === 1).drop("__side")
+    })
   }
 
   /** Forward as-of: left rows enriched with the EARLIEST right-side
@@ -71,27 +95,26 @@ object AsOf {
     */
   def joinAsOfForward(left: DataFrame, right: DataFrame, keys: Seq[String],
       ts: String, valueCols: Seq[String]): DataFrame = {
-    val leftCols = left.columns
-    val taggedLeft = left
-      .withColumn("__side", lit(1))
-      .select(keys.map(col) ++ Seq(col(ts), col("__side")) ++
-        valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(c)) ++
-        leftCols.filterNot(c => keys.contains(c) || c == ts).map(col): _*)
-    val taggedRight = right
-      .withColumn("__side", lit(0))
-      .select(keys.map(col) ++ Seq(col(ts), col("__side")) ++ valueCols.map(col) ++
-        leftCols.filterNot(c => keys.contains(c) || c == ts)
-          .map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    // left (1) sorts before right (0) at equal ts; the FOLLOWING frame
-    // starts at the current row, so the equal-ts reference still matches
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(ts).asc, col("__side").desc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val carried = valueCols.foldLeft(taggedLeft.unionByName(taggedRight)) {
+    val w = forward(keys, ts)
+    probeRows(valueCols.foldLeft(tagged(left, right, keys, ts, valueCols)) {
       (df, c) => df.withColumn(c, first(col(c), ignoreNulls = true).over(w))
+    })
+  }
+
+  /** [[joinAsOf]] and [[joinAsOfForward]] in one pass over one tagged
+    * union: each value column `c` comes back as `b_c` (backward match)
+    * and `f_c` (forward match). One shuffle instead of two, and no join
+    * to pair the two results up.
+    */
+  def joinAsOfBothWays(left: DataFrame, right: DataFrame, keys: Seq[String],
+      ts: String, valueCols: Seq[String]): DataFrame = {
+    val (bw, fw) = (backward(keys, ts), forward(keys, ts))
+    val both = valueCols.foldLeft(tagged(left, right, keys, ts, valueCols)) {
+      (df, c) => df
+        .withColumn(s"b_$c", last(col(c), ignoreNulls = true).over(bw))
+        .withColumn(s"f_$c", first(col(c), ignoreNulls = true).over(fw))
     }
-    carried.filter(col("__side") === 1).drop("__side")
+    probeRows(both.drop(valueCols: _*))
   }
 
   /** [[joinAsOf]] with hot-key time-bucket salting — the 100 TB path for

@@ -1346,14 +1346,16 @@ object Dedup {
       maxLen: Int = 20, corpusKey: Option[String] = None,
       bucketCap: Int = suffixBucketCap): DataFrame = {
     val flagged = suffixHitsMaybeCached(docs, minLen, maxLen, corpusKey, bucketCap)
-      .select(col("doc_id"),
+      .select(col("doc_id").as("f_doc"),
         explode(expr("sequence(pos, pos + rep_len - 1)")).as("fp"))
       .distinct()
     val words = spread(docs)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).as("wpos"), col("col").as("word"))
+    // distinct key names: both sides descend from `docs`, so a
+    // `doc_id === doc_id` condition would be the same expression twice
     val kept = words.join(flagged,
-      words("doc_id") === flagged("doc_id") && col("wpos") === col("fp"),
+      col("doc_id") === col("f_doc") && col("wpos") === col("fp"),
       "left_anti")
     val rebuilt = kept.groupBy("doc_id").agg(
       count(lit(1)).as("n_kept"),

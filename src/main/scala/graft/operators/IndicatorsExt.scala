@@ -284,8 +284,9 @@ object IndicatorsExt {
     * sides. mad4 = 0 (a symbol with ≥50% identical deviations)
     * null-safes the division via nullif.
     *
-    * Shape: two per-symbol rank windows + two co-partitioned joins, all
-    * keyed on symbol — the symbol shuffle is reused throughout. At
+    * Shape: two per-symbol rank windows, each followed by a
+    * whole-partition sum that puts the median on every row; no join, so
+    * the input's symbol partitioning serves every step. At
     * 100 TB the rank window materializes each group's returns (bounded:
     * days per symbol), the same trade as any exact per-group quantile.
     */
@@ -302,18 +303,19 @@ object IndicatorsExt {
     // keeps scale 8 — a ~5e-7 divergence that can cross the 4dp
     // rounding boundary. Per-row folding keeps the whole chain ≤38
     // digits at scale 8 on both engines, so med2/mad4 stay exact.
-    def doubledMedian(in: DataFrame, valCol: String, out: String): DataFrame = {
-      val ranked = in
+    // Added as a whole-partition window column (not an aggregate joined
+    // back), so every step stays on the input's symbol partitioning.
+    def withDoubledMedian(in: DataFrame, valCol: String, out: String): DataFrame =
+      in
         .withColumn("rn", row_number().over(
           Window.partitionBy("symbol").orderBy(valCol)))
         .withColumn("n", count(lit(1)).over(wAll))
         .withColumn("lo", floor((col("n") + lit(1)) / lit(2.0)).cast("int"))
         .withColumn("hi", floor((col("n") + lit(2)) / lit(2.0)).cast("int"))
-      ranked.groupBy("symbol").agg(
-        sum(when(col("rn").between(col("lo"), col("hi")),
+        .withColumn(out, sum(when(col("rn").between(col("lo"), col("hi")),
           col(valCol) * when(col("lo") === col("hi"), lit(2))
-            .otherwise(lit(1)).cast("decimal(1,0)"))).as(out))
-    }
+            .otherwise(lit(1)).cast("decimal(1,0)"))).over(wAll))
+        .drop("rn", "n", "lo", "hi")
     // DECIMAL(18,8) carrier: 10 integer digits, so even a 1e10-percent
     // single-day return cannot overflow the cast (a (12,8) carrier
     // NULLed-and-dropped such rows on Spark under ANSI-off while DuckDB
@@ -324,25 +326,23 @@ object IndicatorsExt {
         .cast("decimal(18,8)"))
       .filter(col("ret").isNotNull)
       .select("symbol", "date", "ret")
-    val med2 = doubledMedian(base, "ret", "med2")
     // dev2 ≤ 2·|ret| + |med2| ≤ ~3e10 for a ret at the (18,8) carrier's
     // edge — the carrier must be at least as wide as what feeds it, or
     // the overflow the (18,8) ret cast was widened to avoid just moves
     // one step later (Spark ANSI-off NULLs, DuckDB errors). (20,8):
     // 12 integer digits hold 4·10^10; the second median's sum chain is
     // 20+1+1 per-row +10 for the sum = 32 digits, exact at scale 8.
-    val dev = base.join(med2, Seq("symbol"))
+    val dev = withDoubledMedian(base, "ret", "med2")
       .withColumn("dev2",
         abs(col("ret") * lit(2).cast("decimal(1,0)") - col("med2"))
           .cast("decimal(20,8)"))
-    val mad4 = doubledMedian(dev.select("symbol", "date", "dev2"), "dev2", "mad4")
     // `+ 0.0` normalizes IEEE signed zero: Spark's round goes through
     // BigDecimal (never −0.0) while DuckDB's round preserves the sign of
     // a tiny negative quotient — the r6 one-bit hash mismatch.
     val z = round(lit(0.6745) *
       (col("ret") * lit(2) - col("med2")).cast("double") * lit(2.0) /
       expr("nullif(cast(mad4 as double), 0.0)"), scale) + lit(0.0)
-    dev.join(mad4, Seq("symbol"))
+    withDoubledMedian(dev, "dev2", "mad4")
       .withColumn("rob_z", z)
       .withColumn("is_outlier", abs(col("rob_z")) > lit(3.5))
       .select(col("symbol"), col("date"), col("ret").cast("double").as("ret"),

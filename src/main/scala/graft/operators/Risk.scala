@@ -33,14 +33,16 @@ object Risk {
     * VaR = the 5th percentile of daily returns (exact interpolation),
     * CVaR = mean of the returns at or below it. The tail mean is an
     * exact DECIMAL sum over the filtered tail divided once — no
-    * order-dependent double accumulation.
+    * order-dependent double accumulation. The per-symbol VaR and day
+    * count are whole-partition windows rather than an aggregate joined
+    * back, so every step stays on the input's symbol partitioning.
     */
   def varCvar(df: DataFrame, alpha: Double = 0.05, scale: Int = 6): DataFrame = {
-    val rets = withRet(df)
-    val v = rets.groupBy("symbol")
-      .agg(round(expr(s"percentile(CAST(ret AS DOUBLE), $alpha)"), 8).as("var95"),
-        count(lit(1)).as("n_days"))
-    rets.join(v, Seq("symbol"))
+    val all = Window.partitionBy("symbol")
+    withRet(df)
+      .withColumn("var95",
+        round(expr(s"percentile(CAST(ret AS DOUBLE), $alpha)").over(all), 8))
+      .withColumn("n_days", count(lit(1)).over(all))
       .filter(col("ret").cast("double") <= col("var95"))
       .groupBy("symbol")
       .agg(

@@ -72,19 +72,24 @@ object WindowChunks {
       val plain = Window.partitionBy(col(key)).orderBy(col(time))
       return build(plain).foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
     }
-    // tail carryRows rows of each (key, chunk), re-tagged to feed the
-    // next chunk; itself a per-(key, chunk) window, so the whole plan
-    // stays at keys × chunks parallelism — no single-key stage anywhere
+    // every row feeds its own chunk, and the tail carryRows rows of each
+    // (key, chunk) also feed the next chunk as carry-in rows. The tail
+    // rank is itself a per-(key, chunk) window, so the whole plan needs
+    // no partitioning coarser than (key, chunk). One generator over one
+    // scan of `df`, not a union of two: a union drops its children's
+    // range partitioning, so an input already clustered by key (the
+    // stocks cache) would be shuffled again; Spark keeps such an input's
+    // partitioning, since it satisfies the (key, chunk) windows.
     val tailRank = Window.partitionBy(col(key), chunkExpr).orderBy(col(time).desc)
-    val carries = df
+    val fed = df
       .withColumn("__rn", row_number().over(tailRank))
-      .filter(col("__rn") <= carryRows)
+      .withColumn("__carry", explode(
+        when(col("__rn") <= carryRows, array(lit(false), lit(true)))
+          .otherwise(array(lit(false)))))
+      .withColumn("__chunk", chunkExpr + when(col("__carry"), 1).otherwise(0))
       .drop("__rn")
-      .withColumn("__chunk", chunkExpr + 1)
-      .withColumn("__carry", lit(true))
-    val own = df.withColumn("__chunk", chunkExpr).withColumn("__carry", lit(false))
     val w = Window.partitionBy(col(key), col("__chunk")).orderBy(col(time))
-    build(w).foldLeft(own.unionByName(carries)) {
+    build(w).foldLeft(fed) {
       case (d, (n, c)) => d.withColumn(n, c)
     }.filter(!col("__carry")).drop("__chunk", "__carry")
   }

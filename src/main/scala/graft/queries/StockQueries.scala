@@ -13,16 +13,6 @@ import Shared._
   */
 object StockQueries {
 
-  /** Total order for aggregate-sized outputs (≤ ~10^4 rows) via a
-    * single-partition sort. A global `orderBy` range-partitions, and its
-    * boundary-sampling pass re-executes the whole subtree as an extra
-    * job — pure waste when the result is tiny. Upstream stages keep
-    * their parallelism (repartition shuffles *after* the aggregate);
-    * large outputs keep the scalable range sort.
-    */
-  private[graft] def sortSmall(df: DataFrame, cols: String*): DataFrame =
-    df.repartition(1).sortWithinPartitions(cols.head, cols.tail: _*)
-
   /** One export directory per JVM, registered for exit cleanup. */
   private lazy val csvExportDir: String =
     TempDirs.create("graft_csv_export") + "/stocks_af"
@@ -688,12 +678,17 @@ object StockQueries {
          | FROM ret GROUP BY symbol ORDER BY symbol""".stripMargin),
 
     // ---- comparison pivot (J3)
+    // One partition from the window on: it satisfies the pivot's
+    // grouping on date, so the plan has no exchange (one job, one task),
+    // where a global `orderBy` would add a range shuffle and its
+    // boundary-sampling job. Sized for the stocks cache (~2.5k output
+    // rows); a table-sized input would want the parallel shape.
     QuerySpec("compare_pivot", (s, d) =>
-      sortSmall(
-        stocks(s, d)
-          .withColumn("norm", round(Indicators.normalizeBase100, 4))
-          .groupBy("date").pivot("symbol", Tables.symbols).agg(max(col("norm"))),
-        "date"),
+      stocks(s, d)
+        .withColumn("norm", round(Indicators.normalizeBase100, 4))
+        .coalesce(1)
+        .groupBy("date").pivot("symbol", Tables.symbols).agg(max(col("norm")))
+        .sortWithinPartitions("date"),
       s"""$S, norm AS (
          |   SELECT date, symbol,
          |     round(close / first_value(close) OVER (PARTITION BY symbol ORDER BY date ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 100.0, 4) AS n
@@ -1616,34 +1611,20 @@ object StockQueries {
          | ORDER BY symbol, valid_from""".stripMargin),
 
     // NEAREST as-of: closer of the backward and forward month-start
-    // anchors, ties to backward — composed from the two existing as-of
-    // joins, each carrying its anchor date for the distance compare
+    // anchors, ties to backward — both directions from one as-of pass,
+    // each carrying its anchor date for the distance compare
     QuerySpec("asof_nearest_ratio", (s, d) => {
       val st = Tables.stocks(s, d)
       val anchors = st.filter(dayofmonth(col("date")) === 1)
-        .select(col("symbol"), col("date"), col("close").as("anchor_close"))
-      val back = AsOf.joinAsOf(st.select("symbol", "date", "close"),
-          anchors.withColumn("bdate", col("date")),
-          Seq("symbol"), "date", Seq("anchor_close", "bdate"))
-        .withColumnRenamed("anchor_close", "b_close")
-      val fwd = AsOf.joinAsOfForward(st.select("symbol", "date", "close"),
-          anchors.withColumn("fdate", col("date")),
-          Seq("symbol"), "date", Seq("anchor_close", "fdate"))
-        .select(col("symbol"), col("date"),
-          col("anchor_close").as("f_close"), col("fdate"))
-      val nearest = when(col("f_close").isNull, col("b_close"))
-        .when(col("b_close").isNull, col("f_close"))
-        .when(datediff(col("date"), col("bdate")) <= datediff(col("fdate"), col("date")),
-          col("b_close"))
-        .otherwise(col("f_close"))
-      val dir = when(col("f_close").isNull, lit("backward"))
-        .when(col("b_close").isNull, lit("forward"))
-        .when(datediff(col("date"), col("bdate")) <= datediff(col("fdate"), col("date")),
-          lit("backward"))
-        .otherwise(lit("forward"))
-      back.join(fwd, Seq("symbol", "date"))
-        .withColumn("anchor_close", nearest)
-        .withColumn("direction", dir)
+        .select(col("symbol"), col("date"), col("close").as("close_a"),
+          col("date").as("date_a"))
+      val backward = col("f_close_a").isNull || (col("b_close_a").isNotNull &&
+        datediff(col("date"), col("b_date_a")) <= datediff(col("f_date_a"), col("date")))
+      AsOf.joinAsOfBothWays(st.select("symbol", "date", "close"), anchors,
+          Seq("symbol"), "date", Seq("close_a", "date_a"))
+        .withColumn("anchor_close",
+          when(backward, col("b_close_a")).otherwise(col("f_close_a")))
+        .withColumn("direction", when(backward, "backward").otherwise("forward"))
         .withColumn("ratio", round(col("close") / col("anchor_close"), 4))
         .select("symbol", "date", "close", "anchor_close", "direction", "ratio")
         .orderBy("symbol", "date")

@@ -55,6 +55,25 @@ class AsOfSpec extends SparkSpec {
       ("B", "2020-01-07", None))) // other key never sees A's anchors
   }
 
+  test("both-ways as-of returns the backward and forward matches from one pass") {
+    val left = tbl(
+      ("A", "2020-01-01", 1.0), ("A", "2020-01-05", 2.0),
+      ("A", "2020-01-10", 3.0), ("A", "2020-01-15", 4.0),
+      ("B", "2020-01-07", 9.0))
+    val right = tbl(("A", "2020-01-05", 50.0), ("A", "2020-01-12", 60.0))
+      .withColumnRenamed("v", "anchor")
+    val both = AsOf.joinAsOfBothWays(left, right, Seq("symbol"), "date", Seq("anchor"))
+    assert(both.columns.toSeq == Seq("symbol", "date", "v", "b_anchor", "f_anchor"))
+    val back = AsOf.joinAsOf(left, right, Seq("symbol"), "date", Seq("anchor"))
+    val fwd = AsOf.joinAsOfForward(left, right, Seq("symbol"), "date", Seq("anchor"))
+    val expected = back.withColumnRenamed("anchor", "b_anchor")
+      .join(fwd.select("symbol", "date", "anchor").withColumnRenamed("anchor", "f_anchor"),
+        Seq("symbol", "date"))
+      .select(both.columns.map(org.apache.spark.sql.functions.col): _*)
+    assert(both.count() == 5)
+    assert(both.exceptAll(expected).isEmpty && expected.exceptAll(both).isEmpty)
+  }
+
   test("property: time-bucket-salted as-of ≡ plain as-of, and partitions on (key, bucket)") {
     // deterministic pseudo-random data spanning 5 years, anchors sparse
     // relative to probes so bucket-boundary carry is exercised heavily

@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{ExplainMode, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Plan-shape regression tests: the physical properties the 100 TB
   * design claims (pushdown, pruning, broadcast dims, TakeOrdered
@@ -9,13 +14,82 @@ import org.apache.spark.sql.execution.ExplainMode
   * here instead of in a cluster bill. Plans are INSPECTED, not
   * executed — the suite runs in seconds.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+  }
+
+  /** A session of its own for the stocks-layout tests: in a full run
+    * the shared session's stocks handle can be left no longer cached by
+    * earlier specs, and its plan then recomputes the derivation.
+    */
+  private lazy val stocksSession = spark.newSession()
+
+  /** Exchanges (shuffle or broadcast) and global sorts in a query's
+    * physical plan, planned over the materialized stocks cache. Until
+    * the cache is built its plan is still adaptive and reports no
+    * partitioning, so a query planned earlier shuffles. The cached scan
+    * is a leaf here: the exchange inside its cached plan is paid once.
+    */
+  private def exchangesAndGlobalSorts(name: String): (Seq[SparkPlan], SparkPlan) = {
+    Tables.stocks(stocksSession, dir).count()
+    val p = SparkEntry.queries(name)(stocksSession, dir).queryExecution.executedPlan
+    (collect(p) {
+      case e: Exchange => e
+      case s: SortExec if s.global => s
+    }, p)
+  }
+
+  test("the stocks cache is range-partitioned on symbol") {
+    // the layout every ordered stocks read relies on: it clusters each
+    // symbol for the per-symbol windows and orders the partitions for a
+    // trailing orderBy("symbol", "date"). Read off the cached scan: the
+    // adaptive wrapper around it reports no partitioning until it runs.
+    val stocks = Tables.stocks(stocksSession, dir)
+    stocks.count()
+    val p = stocks.queryExecution.executedPlan
+    val scans = collect(p) { case s: InMemoryTableScanExec => s }
+    assert(scans.size == 1, p.treeString)
+    scans.head.outputPartitioning match {
+      case RangePartitioning(Seq(order), _) =>
+        assert(order.child.asInstanceOf[Attribute].name == "symbol" &&
+          order.isAscending, order)
+      case other => fail(s"stocks cache partitioning is $other:\n${p.treeString}")
+    }
+  }
+
+  test("ordered stocks indicators plan with no exchange and no global sort") {
+    // one job each: a Window over the cached scan, already in
+    // (symbol, date) order
+    Seq("sma", "ema_macd", "ingest_adaptive", "stocks_derive").foreach { q =>
+      val (found, p) = exchangesAndGlobalSorts(q)
+      assert(found.isEmpty, s"$q:\n${p.treeString}")
+    }
+  }
+
+  test("compare_pivot plans with at most one exchange") {
+    val (found, p) = exchangesAndGlobalSorts("compare_pivot")
+    assert(found.count(_.isInstanceOf[Exchange]) <= 1, p.treeString)
+  }
+
+  test("stocks operators stay on the cached layout instead of joining or unioning") {
+    // a join keyed on symbol or a union of stocks-derived frames loses
+    // the range partitioning; these operators avoid both
+    Seq("return_outliers_mad", "risk_var_cvar", "window_chunked_sma").foreach { q =>
+      val (found, p) = exchangesAndGlobalSorts(q)
+      assert(!found.exists(_.isInstanceOf[Exchange]), s"$q:\n${p.treeString}")
+    }
+    // an as-of join unions its sides, so it pays one range shuffle, and
+    // the trailing orderBy reuses it; both directions share that one
+    Seq("asof_anchor_ratio", "asof_nearest_ratio").foreach { q =>
+      val (found, p) = exchangesAndGlobalSorts(q)
+      assert(found.count(_.isInstanceOf[Exchange]) == 1 &&
+        !found.exists(_.isInstanceOf[SortExec]), s"$q:\n${p.treeString}")
+    }
   }
 
   test("events scan prunes unused columns (props never read)") {

@@ -180,8 +180,8 @@ class WindowChunksSpec extends SparkSpec {
     val chunked = WindowChunks
       .chunkedSmaGated(stocks, "symbol", "date", "close", smaN = 5, gatedN = 50)
     val plan = chunked.queryExecution.executedPlan.toString
-    // the Window operator and its exchange key on (symbol, __chunk):
-    // keys × years groups, far above the one-task-per-symbol ceiling
+    // the Window operator partitions on (symbol, __chunk): keys × years
+    // groups, far above the one-task-per-symbol ceiling
     assert(plan.contains("__chunk"), plan.take(2000))
     val years = stocks.select(year(col("date"))).distinct().count()
     val groups = chunked.select(col("symbol"), year(col("date"))).distinct().count()
